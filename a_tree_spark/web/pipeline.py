@@ -408,11 +408,10 @@ def fused_match_pages(
     (VERDICT round 4 item 5). Zero on the synthetic corpus.
     """
     import numpy as np
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..expr.vector import BatchEvaluator, _ListColumn, scalar_column
+    from ..expr.vector import BatchEvaluator, scalar_column
     from ..spatial.cells import cell_id as cell_id_np
     from .extract import extract_text
     from .synth import TLD_TABLE
@@ -469,14 +468,6 @@ def fused_match_pages(
 
     names = PAGE_ATTRIBUTES.names()
     idx = {name: i for i, name in enumerate(names)}
-    token_group = next(
-        (g for g in evaluator.member_groups if g.attr_index == idx["lead_tokens"]),
-        None,
-    )
-    tokens_have_generic_leaves = any(
-        evaluator.forest.leaves[i].attr_index == idx["lead_tokens"]
-        for i in evaluator.generic_leaves
-    )
     # The general extractor pattern is (?s)<p>(.*?)</p> — but lazy
     # dot-all costs 2.4x more RE2 time than the 'no tags inside' form,
     # and regex scanning over html is the kernel's single largest cost
@@ -564,19 +555,6 @@ def fused_match_pages(
             toks = pc.split_pattern(text, " ")
             n_tokens = pc.list_value_length(toks).to_numpy().astype(np.int64)
             lead = pc.list_slice(toks, 0, 8)
-            lead_lengths = pc.list_value_length(lead).to_numpy().astype(np.int64)
-            lead_offsets = np.concatenate([[0], np.cumsum(lead_lengths)])
-            flat_arr = pc.list_flatten(lead)
-            if token_group is not None and not tokens_have_generic_leaves:
-                # dictionary-encode: only UNIQUE tokens become Python
-                # strings; occurrences map through int indices
-                encoded = pc.dictionary_encode(flat_arr)
-                unique_vids = token_group.map_unique(encoded.dictionary.to_pylist())
-                lead_vids = unique_vids[encoded.indices.to_numpy()]
-                lead_flat = None
-            else:
-                lead_vids = None
-                lead_flat = flat_arr.to_numpy(zero_copy_only=False)
 
             has_geo = ~np.isnan(meta_lat)
             # centroid lookup over the UNIQUE tlds (a ~26-entry python
@@ -618,15 +596,13 @@ def fused_match_pages(
                     idx["n_tokens"]: scalar_column(none_mask[sl], n_tokens[sl]),
                     idx["has_geo"]: scalar_column(none_mask[sl], has_geo[sl]),
                     idx["lat_band"]: scalar_column(no_pos[sl], lat_band[sl]),
-                    idx["lead_tokens"]: _ListColumn.from_parts(
-                        none_mask[sl],
-                        lead_lengths[sl],
-                        None
-                        if lead_flat is None
-                        else lead_flat[lead_offsets[start]:lead_offsets[stop]],
-                        vids=None
-                        if lead_vids is None
-                        else lead_vids[lead_offsets[start]:lead_offsets[stop]],
+                    # the matcher's own list encoding: the lead tokens
+                    # encode once, in Arrow, into codes of the forest's
+                    # literal vocabulary, and the int64 codes feed both
+                    # the member group and the generic all of / none of
+                    # leaves (no token becomes a Python string)
+                    idx["lead_tokens"]: ev.list_column(
+                        lead.slice(start, stop - start), idx["lead_tokens"]
                     ),
                 }
                 rows, hits = ev.evaluate_prepared_roots(cache, stop - start)

@@ -99,7 +99,11 @@ def stream_arm(spark, path: str, workdir: str, out: dict) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(1800)
+    if not query.awaitTermination(1800):
+        # still running: stop it before anything reads a partial run or
+        # the caller's cleanup deletes the checkpoint under it
+        query.stop()
+        raise RuntimeError("flows_stream did not finish within 1800 s")
     wall = time.time() - t0
     progresses = query.recentProgress
     state_rows = [
@@ -136,17 +140,29 @@ def stream_arm(spark, path: str, workdir: str, out: dict) -> None:
         "emitted_move_rows": emitted["rows"],
         "batch_od_moves_rows": batch_rows,
         "batch_rows_over_final_wm_days": finalized_rows,
-        "state_rows_max": max(state_rows) if state_rows else None,
+        # recentProgress keeps only the last
+        # spark.sql.streaming.numRecentProgressUpdates triggers, so the
+        # state readings cover that window, not necessarily the whole run
+        "state_rows_max_in_recent_progress": max(state_rows) if state_rows else None,
         "state_rows_final": state_rows[-1] if state_rows else None,
-        "n_triggers": len(progresses),
+        "n_triggers_in_recent_progress": len(progresses),
     }
+
+
+def _at_least_two(text: str) -> int:
+    """--users: the hot-user arm spreads the other half of the events
+    over users 1..n-1, so it needs at least two users."""
+    value = int(text)
+    if value < 2:
+        raise argparse.ArgumentTypeError(f"must be at least 2, got {value}")
+    return value
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=16_000_000)
     ap.add_argument("--stream-rows", type=int, default=4_000_000)
-    ap.add_argument("--users", type=int, default=50_000)
+    ap.add_argument("--users", type=_at_least_two, default=50_000)
     ap.add_argument("--days", type=int, default=30)
     args = ap.parse_args()
 

@@ -279,3 +279,150 @@ def test_pull_block_trailing_empty_segment():
     assert cand[0, 0] == 0b0001
     assert cand[1, 0] == 0b0011  # BOTH parents (old clamp gave 0b0001)
     assert cand[2, 0] == 0  # parentless: counts mask zeroes the pad
+
+
+def _random_csr_block(rng, n_block, n_parents):
+    """Child->parents CSR over a block of ``n_block`` nodes whose parents
+    sit above it; some segments empty, the last one always empty."""
+    counts = rng.integers(0, 4, size=n_block + n_parents)
+    counts[n_block - 1] = 0
+    counts[n_block:] = 0
+    P_off = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
+    P_ids = rng.integers(n_block, n_block + n_parents, size=int(P_off[-1]))
+    return P_ids.astype(np.int64), P_off, counts
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_pull_block_words_equal_bytes(seed):
+    """The two-phase evaluator pulls on uint64 views of its packed
+    buffers; the result must equal the byte-wide pull bit for bit."""
+    from a_tree_spark.expr.vector import _pull_block
+
+    rng = np.random.default_rng(seed)
+    n_block, n_parents, nb = 40, 25, 24
+    P_ids, P_off, P_counts = _random_csr_block(rng, n_block, n_parents)
+    nn = n_block + n_parents
+    values = rng.integers(0, 256, size=(nn, nb), dtype=np.uint8)
+    cand = rng.integers(0, 256, size=(nn, nb), dtype=np.uint8)
+    cand[:n_block] = 0
+    as_bytes, as_words = cand.copy(), cand.copy()
+    _pull_block(as_bytes, values, P_ids, P_off, P_counts, 0, n_block)
+    _pull_block(as_words.view(np.uint64), values.view(np.uint64),
+                P_ids, P_off, P_counts, 0, n_block)
+    assert np.array_equal(as_bytes, as_words)
+    assert as_bytes[:n_block].any()
+
+
+def _tags_forest():
+    """Selective integer access predicates guarding lazy string-list
+    ``all of`` / ``none of`` leaves (a single ``none of`` leaf stays out
+    of the member group, so it is generic and lazy too)."""
+    from a_tree_spark.expr import AttributeDefinition as A, AttributeTable
+
+    attrs = AttributeTable([A.integer("k"), A.string_list("tags"),
+                            A.string("s")])
+    builder = ForestBuilder(attrs)
+    for i in range(8):
+        toks = ", ".join(f"'t{(i * 3 + j) % 12}'" for j in range(5))
+        builder.insert(i, f"k = {i} and tags all of [{toks}]")
+    builder.insert(8, "k = 2 and tags none of ['t1', 't3']")
+    builder.insert(9, "k = 5 and s = 'q'")
+    return builder.compile()
+
+
+def _tags_batch(n, seed):
+    """``n`` rows with null lists, empty lists and null elements."""
+    import pyarrow as pa
+
+    rng = random.Random(seed)
+    vocab = [f"t{i}" for i in range(12)]
+    tags = []
+    for _ in range(n):
+        r = rng.random()
+        if r < 0.08:
+            tags.append(None)
+        elif r < 0.16:
+            tags.append([])
+        else:
+            row = rng.sample(vocab, rng.randint(1, 4))
+            if rng.random() < 0.1:
+                row.insert(rng.randint(0, len(row)), None)
+            tags.append(row)
+    return pa.record_batch({
+        "k": pa.array([rng.choice([None] + list(range(16))) for _ in range(n)],
+                      type=pa.int64()),
+        "tags": pa.array(tags, type=pa.list_(pa.string())),
+        "s": pa.array([rng.choice(["q", "r", None]) for _ in range(n)]),
+    })
+
+
+@pytest.mark.parametrize("n", [1, 63, 64, 65, 4095, 4097])
+def test_pruned_equals_dense_on_string_list_lazy_leaves(n, monkeypatch):
+    """Access pruning on ``all of`` / ``none of`` string-list leaves,
+    through ``arrow_columns``: row counts around the 64-bit word and the
+    partial last byte, with null lists, empty lists and null elements.
+    Both must also agree with the single-event oracle."""
+    forest = _tags_forest()
+    dense = BatchEvaluator(forest)
+    pruned = BatchEvaluator(forest, access_pruning=True)
+    lazy_ops = {forest.leaves[i].op.name for i in pruned.lazy_leaf_idxs}
+    assert {"ALL_OF", "NONE_OF"} <= lazy_ops
+
+    subsets = []
+    real_subset = pruned._subset_col
+
+    def counting_subset(col, idx):
+        subsets.append(len(idx))
+        return real_subset(col, idx)
+
+    monkeypatch.setattr(pruned, "_subset_col", counting_subset)
+    batch = _tags_batch(n, seed=n)
+    want = sorted(zip(*map(np.ndarray.tolist, dense.evaluate_arrow(batch))))
+    got = sorted(zip(*map(np.ndarray.tolist, pruned.evaluate_arrow(batch))))
+    assert got == want
+    if n >= 64:
+        assert subsets and len(want) > 0  # lazy leaves ran on subsets
+
+    oracle = sorted(
+        (r, sub)
+        for r, event in enumerate(batch.to_pylist())
+        for sub in evaluate_event(forest, event)
+    )
+    assert got == oracle
+
+
+def test_subset_columns_share_one_dictionary_map():
+    """Lazy-leaf subsets of one prepared column must reuse the parent's
+    {value -> code} map, not rebuild it per subset: both subsets (and
+    the parent) hold the same map object once leaves have read it. A
+    string list has no per-batch map at all: its flat-op literals are
+    coded once, at plan time, and subsets evaluate like the parent."""
+    forest = _tags_forest()
+    ev = BatchEvaluator(forest, access_pruning=True)
+    cache = ev.arrow_columns(_tags_batch(200, seed=3))
+    attrs = forest.attributes
+    subset_idx = [np.arange(0, 200, 3), np.arange(1, 200, 7)]
+
+    s_col = cache[attrs.index_of("s")]
+    s_leaves = [i for i in ev.generic_leaves
+                if forest.leaves[i].attr_index == attrs.index_of("s")]
+    subsets = [ev._subset_col(s_col, idx) for idx in subset_idx]
+    for sub in subsets:
+        for i in s_leaves:
+            ev._eval_generic_leaf(i, sub, len(sub.mask))
+    built = s_col._uniq_map
+    assert built is not None
+    assert all(sub._uniq_map is built for sub in subsets)
+
+    tags_col = cache[attrs.index_of("tags")]
+    tags_leaves = [i for i in ev.generic_leaves
+                   if forest.leaves[i].attr_index == attrs.index_of("tags")]
+    assert tags_col.fcodes is not None
+    assert sorted(ev._flat_op_codes) == sorted(tags_leaves)
+    for idx in subset_idx:
+        sub = ev._subset_col(tags_col, idx)
+        for i in tags_leaves:
+            np.testing.assert_array_equal(
+                ev._eval_generic_leaf(i, sub, len(idx)),
+                ev._eval_generic_leaf(i, tags_col, 200)[idx],
+            )

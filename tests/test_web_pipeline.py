@@ -660,3 +660,54 @@ def test_auto_shards_matches_explicit(spark, monkeypatch):
         n_shards="auto",
     ).collect()))
     assert forced == single
+
+
+def _lead_token_lazy_subscriptions(n_pages_seen: int) -> dict[int, str]:
+    """Per page: ``n_tokens = <its count> and lead_tokens all of [its
+    lead tokens + 2 others]`` (fires on that page), plus ONE ``none of``
+    leaf (a lone one stays generic, hence lazy). The selective
+    ``n_tokens`` equality is the access predicate."""
+    pages = synth_batch(np.arange(n_pages_seen))
+    subs: dict[int, str] = {}
+    for p, text in enumerate(pages["text"]):
+        toks = text.split(" ")
+        listed = ", ".join(f"'{t}'" for t in toks[:8] + ["tok1", "tok2"])
+        subs[p] = f"n_tokens = {len(toks)} and lead_tokens all of [{listed}]"
+    first = pages["text"][0].split(" ")
+    subs[n_pages_seen] = (
+        f"n_tokens = {len(first)} and lead_tokens none of ['{first[0]}', 'tok1']"
+    )
+    return subs
+
+
+@pytest.mark.parametrize("n_pages", [1, 63, 64, 65, 4095, 4097])
+def test_fused_pruned_equals_dense_on_lead_token_lazy_leaves(spark, n_pages):
+    """The fused kernel's access-pruned path must emit exactly the dense
+    path's matches when the lazy leaves are string-list ``all of`` /
+    ``none of`` over dictionary-coded lead tokens, at batch sizes around
+    the 64-bit word and the partial last byte (4097 = one full Arrow
+    batch + one row)."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.expr import ForestBuilder
+    from a_tree_spark.expr.vector import BatchEvaluator
+    from a_tree_spark.web.pipeline import fused_match_pages
+
+    builder = ForestBuilder(PAGE_ATTRIBUTES)
+    for sub_id, expression in _lead_token_lazy_subscriptions(40).items():
+        builder.insert(sub_id, expression)
+    forest = builder.compile()
+    ev = BatchEvaluator(forest)
+    assert {"ALL_OF", "NONE_OF"} <= {
+        forest.leaves[i].op.name for i in ev.lazy_leaf_idxs
+    }
+
+    pages = synth_pages_df(spark, n_pages, partitions=1).withColumn(
+        "page_key", F.monotonically_increasing_id()
+    )
+    got = {}
+    for pruning in (True, False):
+        out = fused_match_pages(pages, builder, emit="matches", access_pruning=pruning)
+        got[pruning] = sorted(map(tuple, out.collect()))
+    assert got[True] == got[False]
+    assert len(got[True]) >= min(n_pages, 40)  # every page fires its own sub
