@@ -31,13 +31,15 @@ the caller does downstream with the matches.
 
 from __future__ import annotations
 
+import copy
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..expr.ast import Op
 from ..expr.compiler import CompiledForest, ForestBuilder
 from ..expr.schema import AttributeKind, AttributeTable
 from ..expr.sql import to_sql
-from ..expr.vector import DECIMAL_SCALE, BatchEvaluator
+from ..expr.vector import DECIMAL_SCALE, BatchEvaluator, planned_evaluator
 
 
 def _needed_attributes(forest: CompiledForest) -> list[str]:
@@ -112,6 +114,23 @@ def choose_access_pruning(evaluator: BatchEvaluator) -> bool:
     return density >= ACCESS_PRUNING_MIN_COST_DENSITY
 
 
+def broadcast_evaluator(
+    spark, forest: CompiledForest, access_pruning: bool | None = None
+):
+    """(evaluator, broadcast handle) for one Spark stage over ``forest``:
+    a shallow copy of the snapshot's shared plan (planned_evaluator)
+    that carries this caller's ``access_pruning`` (None = cost-model
+    auto, ``choose_access_pruning``). A stage over an already planned
+    snapshot plans nothing, and its flag never reaches the shared plan
+    or another caller's stage."""
+    plan = planned_evaluator(forest)
+    if access_pruning is None:
+        access_pruning = choose_access_pruning(plan)
+    evaluator = copy.copy(plan)
+    evaluator.access_pruning = access_pruning
+    return evaluator, spark.sparkContext.broadcast(evaluator)
+
+
 def match_events(
     events: DataFrame,
     matcher: ForestBuilder | CompiledForest,
@@ -182,11 +201,7 @@ def _match_vectorized(
                 name, (F.col(name) * (10**DECIMAL_SCALE)).cast("long")
             )
 
-    evaluator = BatchEvaluator(forest)
-    if access_pruning is None:
-        access_pruning = choose_access_pruning(evaluator)
-    evaluator.access_pruning = access_pruning
-    bc = spark.sparkContext.broadcast(evaluator)
+    _, bc = broadcast_evaluator(spark, forest, access_pruning)
     id_field = projected.schema[event_id_col]
     carry_fields = [projected.schema[c] for c in carry]
 

@@ -518,8 +518,9 @@ class BatchEvaluator:
           1e5 subs) disappears entirely.
 
         The ordering is deterministic (sorted levels, roots-first then
-        forest id), so two evaluators over the same compiled forest
-        agree on root indexing — root_subscription_map relies on that."""
+        forest id). Root ids in the fused kernel's partials and in
+        root_subscription_map index this order; both read it from the
+        one plan per snapshot (planned_evaluator)."""
         forest = self.forest
         is_root = set(forest.node_subs.keys())
 
@@ -1379,3 +1380,27 @@ class BatchEvaluator:
 
         self._sweep(values, gather_a, gather_b, leaf_bits)  # exact
         return self._decode_roots(values, n)
+
+
+#: the evaluator planned for the most recent snapshot (see
+#: planned_evaluator); a module slot rather than an attribute of the
+#: forest, so pickling an evaluator never drags it along
+_latest_plan: BatchEvaluator | None = None
+
+
+def planned_evaluator(forest: CompiledForest) -> BatchEvaluator:
+    """The BatchEvaluator planned for this compiled snapshot, planned
+    once. ``ForestBuilder.compile()`` returns the same CompiledForest
+    until the next insert/delete, so every consumer of one crawl step
+    (root map, fused kernel, matcher, shard root counts) shares one plan
+    instead of re-planning the same snapshot. One slot: a new snapshot
+    replaces the previous plan, which live forests never return to.
+
+    The plan is shared — callers that need a different
+    ``access_pruning`` flag take a shallow copy
+    (engine.matcher.broadcast_evaluator) rather than set it here."""
+    global _latest_plan
+    plan = _latest_plan
+    if plan is None or plan.forest is not forest:
+        plan = _latest_plan = BatchEvaluator(forest)
+    return plan

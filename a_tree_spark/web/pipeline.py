@@ -1,30 +1,37 @@
 """The fused north-star pipeline: pages -> extract -> geotag -> cells ->
-predicate match -> skew-aware per-cell aggregation.
+predicate match -> exact per-cell aggregation.
 
 This is the engine's flagship at scale (BASELINE.json north_star): web
 pages from an Iceberg/parquet table are eventized into the six-type
 attribute system, matched against a standing subscription forest, and
-aggregated per spatial cell. Stage layout (one Python stage, one
-broadcast, one shuffle):
+aggregated per spatial cell. Stage layout of the default fused path
+(``fused_match_pages`` + ``cell_stats_from_root_partials``):
 
-  scan -> mapInPandas(extract)          [Arrow batches, pandas kernels]
-       -> JVM geotag + cell encode      [whole-stage codegen + broadcast]
-       -> JVM attribute derivations     [codegen]
-       -> mapInPandas(match forest)     [broadcast forest, numpy sweep]
-       -> salted two-phase aggregation  [map-side combine + 1 shuffle]
+  scan -> mapInArrow(fused kernel)      [broadcast evaluator: RE2 extract,
+                                         geotag + cell, match, in-kernel
+                                         (cell, root) combine]
+       -> keyed shuffle on ckey         [map-side combined packed key]
+       -> broadcast join on root_id     [(root_id, n_subs) root map]
+       -> per-cell aggregate            [exact counts, AQE-coalesced]
 
-Skew: hot ccTLD centroids concentrate matches in a few cells; the
-per-cell aggregation salts the hot key space into SALT_BUCKETS partial
-groups before the final combine, and AQE skew-join handles any
-downstream joins (north_rule requirement).
+The evaluator is planned once per forest snapshot
+(``expr.vector.planned_evaluator``) and shared by the kernel's
+broadcast and the root map; the root map is built from Arrow columns,
+so its side of the join runs no Python job. Hot ccTLD centroids
+concentrate matches in a few cells; the in-kernel and map-side combines
+collapse them before the shuffle.
+
+The composable strategies (``eventize_pages`` -> ``match_pages`` ->
+``salted_cell_stats``) keep the salted HLL aggregation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..engine.matcher import match_events
+from ..engine.matcher import broadcast_evaluator, match_events
 from ..expr import AttributeDefinition as A, AttributeTable, ForestBuilder
+from ..expr.vector import planned_evaluator
 from ..spatial.cells import DEFAULT_LEVEL
 from .extract import with_page_features
 from .geotag import geotag_pages
@@ -296,14 +303,21 @@ def root_subscription_map(spark, forest: ForestBuilder) -> DataFrame:
     """Tiny (root_id, n_subs) DataFrame for the post-shuffle expansion
     of root-level partials — one row per DISTINCT expression root (CSE
     class), broadcastable at any subscription count (23k rows for the
-    100k-sub workload)."""
-    from ..expr.vector import BatchEvaluator
+    100k-sub workload).
 
-    ev = BatchEvaluator(forest.compile())
-    rows = [
-        (int(i), int(c)) for i, c in enumerate(ev.root_sub_counts)
-    ]
-    return spark.createDataFrame(rows, "root_id bigint, n_subs bigint")
+    Root ids index the snapshot's shared plan (planned_evaluator), the
+    same plan the fused kernel broadcasts. The table ships as two int64
+    Arrow columns: a list of Python tuples would become a Python-worker
+    RDD whose own job, scheduled beside the kernel's stage, held every
+    core to build a 10k-row broadcast."""
+    import numpy as np
+    import pyarrow as pa
+
+    counts = planned_evaluator(forest.compile()).root_sub_counts
+    return spark.createDataFrame(pa.table({
+        "root_id": np.arange(len(counts), dtype=np.int64),
+        "n_subs": counts,
+    }))
 
 
 def cell_stats_from_root_partials(
@@ -343,18 +357,6 @@ def cell_stats_from_root_partials(
     )
 
 
-def cell_stats_from_partials(partials: DataFrame) -> DataFrame:
-    """Per-cell statistics from in-kernel (cell, sub, n) partials: sums
-    are exact (integer, order-free); the distinct-subscription sketch
-    sees the same distinct (cell, sub) value set as the raw match
-    stream, so it is the standard approx_count_distinct, not a salted
-    under-estimate. One small shuffle keyed by cell_id."""
-    return partials.groupBy("cell_id").agg(
-        F.sum("n_matches").alias("n_matches"),
-        F.approx_count_distinct("sub_id").alias("approx_distinct_subs"),
-    )
-
-
 def exact_cell_sub_counts(matches: DataFrame) -> DataFrame:
     """Exact distinct-subscription count per cell via two-phase dedup:
     shuffle 1 on (cell_id, sub_id) — salt-free but skew-resistant since
@@ -391,13 +393,16 @@ def fused_match_pages(
     Output (emit="matches"): (page_key, cell_id, sub_id) — page_key is
     a caller-supplied unique id column (monotonically_increasing_id).
 
-    emit="cell_partials" pre-aggregates per batch to
-    (cell_id, sub_id, n_matches, n_pages) partial counts — at ~40
-    matches/page the raw match stream dominates the Arrow boundary and
-    the downstream shuffle; in-kernel combining is the classic map-side
-    combine pushed one level deeper (into Python), and per-cell
-    statistics (sum / distinct-sub sketches / page counts) stay exact
-    because the distinct (cell, sub) value set is preserved.
+    emit="cell_root_partials" combines in the kernel, per task, to
+    (ckey, n_matches) with ckey = (cell key << sub_width) | root_id: at
+    ~40 matches/page the raw match stream would dominate the Arrow
+    boundary and the shuffle. ``cell_stats_from_root_partials`` turns
+    the partials into exact per-cell statistics with the root map
+    (``root_subscription_map``).
+
+    The evaluator is the snapshot's shared plan; what ships is a copy
+    carrying this call's ``access_pruning`` (None = cost-model auto),
+    see ``engine.matcher.broadcast_evaluator``.
 
     ``fallback_counter`` (a ``sparkContext.accumulator(0)``) receives
     the number of rows whose html the fast RE2 pattern can't represent
@@ -411,49 +416,34 @@ def fused_match_pages(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..expr.vector import BatchEvaluator, scalar_column
+    from ..expr.vector import scalar_column
     from ..spatial.cells import cell_id as cell_id_np
     from .extract import extract_text
     from .synth import TLD_TABLE
 
-    spark = pages.sparkSession
-    evaluator = BatchEvaluator(forest.compile())
+    if emit not in ("matches", "cell_root_partials"):
+        raise ValueError(
+            f"emit must be 'matches' or 'cell_root_partials', got {emit!r}"
+        )
     # same cost-model default as match_events: two-phase access pruning
     # composes with the fused root-partials kernel (round 2 kept them
     # exclusive, VERDICT.md item 7) — evaluate_prepared_roots dispatches
     # on the flag either way
-    from ..engine.matcher import choose_access_pruning
-
-    evaluator.access_pruning = (
-        choose_access_pruning(evaluator)
-        if access_pruning is None
-        else access_pruning
+    evaluator, bc = broadcast_evaluator(
+        pages.sparkSession, forest.compile(), access_pruning
     )
-    bc = spark.sparkContext.broadcast(evaluator)
     if broadcast_out is not None:
         # hand the caller the broadcast handle so it can destroy it
         # once a materialized pass no longer needs it (the sharded
         # isolate mode's per-worker memory bound)
         broadcast_out.append(bc)
 
-    # (cell, sub) int64 packing contract for emit="cell_partials": the
-    # cell key (incl. the positionless sentinel 2^2L) needs 2*level+1
-    # bits, leaving sub_width bits for sub ids. Checked HERE, at plan
-    # time, so an oversized sub id fails loudly instead of silently
-    # merging counts under a wrong (cell, sub) (ADVICE.md round 1).
+    # (cell, root) int64 packing contract for emit="cell_root_partials":
+    # the cell key (incl. the positionless sentinel 2^2L) needs
+    # 2*level+1 bits, leaving sub_width bits for root ids. Checked HERE,
+    # at plan time, so an oversized root id fails loudly instead of
+    # silently merging counts under a wrong (cell, root).
     sub_width = 63 - (2 * level + 1)
-    if emit == "cell_partials":
-        # both bounds: a single negative sub id among positive ones would
-        # pass a max-only check and still corrupt the packed key
-        # (sign bits bleed into the cell field) — ADVICE.md round 2
-        sub_keys = forest.sub_ids()
-        max_sub = max(sub_keys, default=0)
-        min_sub = min(sub_keys, default=0)
-        if not (0 <= int(min_sub) and int(max_sub) < (1 << sub_width)):
-            raise ValueError(
-                f"sub ids must fit in [0, 2^{sub_width}) at level {level}; "
-                f"got sub_id range [{min_sub}, {max_sub}]"
-            )
     if emit == "cell_root_partials" and len(evaluator.root_nodes) >= (1 << sub_width):
         raise ValueError(
             f"root ids must fit in {sub_width} bits at level {level}"
@@ -633,32 +623,6 @@ def fused_match_pages(
                 task_keys.append(uniq)
                 task_counts.append(counts.astype(np.int64))
                 continue
-            if emit == "cell_partials":
-                # in-kernel combine: one row per (cell, sub) per batch.
-                # Pack (cell, sub) into one int64 for a single np.unique
-                # pass: cell ids need 2*level+1 bits (sentinel 2^2L for
-                # positionless pages included), so the cell key shifts by
-                # a FIXED sub_width = 63 - (2*level+1) bits and sub ids
-                # must fit below it (38 bits at level 12) — asserted at
-                # plan time in fused_match_pages; round 1 shifted by only
-                # 2*level+1, silently corrupting sub ids >= 2^25
-                # (ADVICE.md round 1).
-                sentinel = np.int64(1) << (2 * level)
-                cell_key = np.where(no_pos[rows], sentinel, cells[rows])
-                key = (cell_key << sub_width) | subs
-                uniq, counts = np.unique(key, return_counts=True)
-                u_cell = uniq >> sub_width
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.where(u_cell == sentinel, None, u_cell),
-                                 type=pa.int64()),
-                        pa.array(uniq & ((np.int64(1) << sub_width) - 1),
-                                 type=pa.int64()),
-                        pa.array(counts.astype(np.int64), type=pa.int64()),
-                    ],
-                    names=["cell_id", "sub_id", "n_matches"],
-                )
-                continue
             cell_out = np.where(no_pos[rows], None, cells[rows])
             yield pa.RecordBatch.from_arrays(
                 [
@@ -691,10 +655,6 @@ def fused_match_pages(
     pruned = pages.select("url", "html", "lang", "page_key")
     if emit == "cell_root_partials":
         return pruned.mapInArrow(run, schema="ckey long, n_matches long")
-    if emit == "cell_partials":
-        return pruned.mapInArrow(
-            run, schema="cell_id long, sub_id long, n_matches long"
-        )
     return pruned.mapInArrow(run, schema="page_key long, cell_id long, sub_id long")
 
 
@@ -924,15 +884,13 @@ def sharded_root_partials(
     partials alike."""
     from functools import reduce
 
-    from ..expr.vector import BatchEvaluator
-
     spark = keyed_pages.sparkSession
     sub_width = 63 - (2 * level + 1)
     parts: list[DataFrame] = []
     maps: list[DataFrame] = []
     offset = 0
     for forest in forests:
-        n_roots = len(BatchEvaluator(forest.compile()).root_nodes)
+        n_roots = len(planned_evaluator(forest.compile()).root_nodes)
         handles: list = []
         p = fused_match_pages(
             keyed_pages, forest, level, emit="cell_root_partials",

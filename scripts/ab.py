@@ -16,7 +16,10 @@ change won at least 9/10 of them, it failed no more runs than the
 parent did, and the medians differ by more than the distance between
 the parent's own quartiles. Wins count over every pair run: a pair
 whose change run reported no value counts as lost. Runs that failed a
-check are listed; their metrics still enter the medians.
+check are listed; their metrics still enter the medians. Below the
+metrics, a ``steal%`` row gives each side's median and quartiles of
+host CPU steal (each run's median over its steps, read from the run's
+artifact), so a pair that ran in a noisy window can be told apart.
 
     python scripts/ab.py HEAD~1 HEAD --workload crawl_skewed --pairs 10
 
@@ -58,6 +61,19 @@ def export(revision: str, dest: str) -> str:
     return sha
 
 
+def run_steal(tree: str, stdout: str) -> float | None:
+    """Median host steal% over a run's steps, from the artifact that
+    the run names on its ``# ... artifact=<path>`` line (the per-step
+    ``steal_pct`` behind its ``steal_pct_per_step``)."""
+    for line in stdout.splitlines():
+        if line.startswith("# ") and " artifact=" in line:
+            path = os.path.join(tree, line.rsplit(" artifact=", 1)[1].strip())
+            with open(path) as f:
+                steps = json.load(f)["steps"]
+            return statistics.median(s["steal_pct"] for s in steps) if steps else None
+    return None
+
+
 def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
     """One benchmark run in ``tree``: its last stdout line is the JSON
     result. A run that crashes counts as incorrect with no metrics."""
@@ -72,6 +88,7 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
     except (IndexError, json.JSONDecodeError):
         return {"correct": False, "metrics": {}, "error": proc.stderr[-2000:]}
     result["metrics"] = {k: v["value"] for k, v in result["metrics"].items()}
+    result["steal_pct"] = run_steal(tree, proc.stdout)
     return result
 
 
@@ -117,6 +134,20 @@ def summarize(pairs: list[dict], metric: str, higher_is_better: bool) -> dict | 
     }
 
 
+def steal_summary(pairs: list[dict]) -> dict | None:
+    """Each side's median and quartiles of per-run host steal%, over the
+    runs that reported it; None when a side has none."""
+    row = {}
+    for side in ("base", "change"):
+        values = [p[side]["steal_pct"] for p in pairs
+                  if p[side].get("steal_pct") is not None]
+        if not values:
+            return None
+        q1, median, q3 = quartiles(values)
+        row[side] = {"median": median, "q1": q1, "q3": q3}
+    return row
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("base", help="parent revision")
@@ -154,7 +185,9 @@ def main(argv=None) -> int:
             m["name"]: summarize(pairs, m["name"], m["better"] == "higher")
             for m in bench["end_to_end"]
         }
-        record["workloads"][workload] = {"pairs": pairs, "table": table}
+        steal = steal_summary(pairs)
+        record["workloads"][workload] = {"pairs": pairs, "table": table,
+                                         "steal_pct": steal}
 
         print(f"\n{workload}: base {shas['base'][:10]} vs change {shas['change'][:10]}, "
               f"{len(pairs)} pairs, {seconds:g} s runs")
@@ -170,6 +203,12 @@ def main(argv=None) -> int:
                   f"{c['median']:12.5g} [{c['q1']:.5g}, {c['q3']:.5g}] "
                   f"{ratio:>7s} {row['wins']:>2d}/{row['pairs']:<3d}  "
                   f"{'yes' if row['gain'] else 'no'}")
+        if steal is None:
+            print(f"{'steal%':24s} (not reported)")
+        else:
+            b, c = steal["base"], steal["change"]
+            print(f"{'steal%':24s} {b['median']:12.3g} [{b['q1']:.3g}, {b['q3']:.3g}] "
+                  f"{c['median']:12.3g} [{c['q1']:.3g}, {c['q3']:.3g}]")
         failed = [
             f"{side}@seed{p['seed']}"
             for p in pairs for side in ("base", "change") if not p[side]["correct"]

@@ -97,10 +97,10 @@ def main() -> int:
     for k, forests in forests_by_k.items():
         import pickle
 
-        from a_tree_spark.expr.vector import BatchEvaluator
+        from a_tree_spark.expr.vector import planned_evaluator
 
         sizes = [
-            len(pickle.dumps(BatchEvaluator(f.compile()))) for f in forests
+            len(pickle.dumps(planned_evaluator(f.compile()))) for f in forests
         ]
         broadcast_mb[f"shards_{k}"] = [round(s / 1e6, 2) for s in sizes]
 

@@ -23,7 +23,7 @@ def main() -> None:
     from a_tree_spark.engine.matcher import choose_access_pruning
     from a_tree_spark.engine.session import get_spark
     from a_tree_spark.expr import ForestBuilder
-    from a_tree_spark.expr.vector import BatchEvaluator
+    from a_tree_spark.expr.vector import planned_evaluator
     from a_tree_spark.web.pipeline import (
         PAGE_ATTRIBUTES,
         build_page_forest,
@@ -46,14 +46,14 @@ def main() -> None:
         skew_builder.insert(sub_id, expression)
     t_insert = round(time.time() - t0, 3)
     t0 = time.time()
-    skew_ev = BatchEvaluator(skew_builder.compile())
+    skew_ev = planned_evaluator(skew_builder.compile())
     t_compile = round(time.time() - t0, 3)
     uniform_builder = build_page_forest(n_subs)
 
     pruning = {
         "skewed": choose_access_pruning(skew_ev),
         "uniform": choose_access_pruning(
-            BatchEvaluator(uniform_builder.compile())
+            planned_evaluator(uniform_builder.compile())
         ),
     }
 

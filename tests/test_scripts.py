@@ -86,3 +86,26 @@ def test_bench_flows_rejects_fewer_than_two_users():
     assert bench_flows._at_least_two("2") == 2
     with pytest.raises(argparse.ArgumentTypeError):
         bench_flows._at_least_two("1")
+
+
+def test_ab_steal_summary_from_run_artifacts(tmp_path):
+    ab = _load("ab")
+    os.makedirs(tmp_path / ".bench_work")
+    artifact = tmp_path / ".bench_work" / "crawl_standing-seed1-trace0.json"
+    artifact.write_text('{"steps": [{"steal_pct": 4.0}, {"steal_pct": 0.5}, '
+                        '{"steal_pct": 1.0}]}')
+    stdout = ("# crawl_standing seed=1 steps=3 steal_pct_per_step=[4.0, 0.5, 1.0] "
+              "artifact=.bench_work/crawl_standing-seed1-trace0.json\n{}\n")
+    assert ab.run_steal(str(tmp_path), stdout) == 1.0
+    assert ab.run_steal(str(tmp_path), "{}\n") is None  # a crashed run
+
+    pairs = _pairs([10.0] * 4, [11.0] * 4)
+    for p, (b, c) in zip(pairs, [(1.0, 0.0), (2.0, 8.0), (3.0, 0.5), (4.0, None)]):
+        p["base"]["steal_pct"], p["change"]["steal_pct"] = b, c
+    row = ab.steal_summary(pairs)
+    assert row["base"]["median"] == 2.5 and row["change"]["median"] == 0.5
+    assert row["change"]["q1"] == 0.25 and row["change"]["q3"] == 4.25
+
+    for p in pairs:
+        p["change"]["steal_pct"] = None
+    assert ab.steal_summary(pairs) is None

@@ -107,3 +107,34 @@ def test_auto_strategy_cost_model():
     evaluator = BatchEvaluator(builder.compile())
     assert evaluator.lazy_leaf_idxs  # ALL_OF leaves actually deferred
     assert choose_access_pruning(evaluator)
+
+
+def test_match_events_shares_one_plan_across_pruning_flags(eventized, monkeypatch):
+    """Two vectorized passes over one snapshot, one pruned and one
+    dense, plan the evaluator once; each pass ships its own flag and the
+    shared plan keeps its own."""
+    from a_tree_spark.expr import vector
+    from a_tree_spark.expr.vector import BatchEvaluator, planned_evaluator
+
+    plans = []
+    init = BatchEvaluator.__init__
+
+    def counting_init(self, *args, **kwargs):
+        plans.append(1)
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(BatchEvaluator, "__init__", counting_init)
+    monkeypatch.setattr(vector, "_latest_plan", None)
+
+    fresh = ForestBuilder(EVENT_ATTRIBUTES)
+    for sub_id, expression in STANDING_SUBSCRIPTIONS.items():
+        fresh.insert(sub_id, expression)
+    pruned = sorted(map(tuple, match_events(
+        eventized, fresh, strategy="vectorized", access_pruning=True
+    ).collect()))
+    dense = sorted(map(tuple, match_events(
+        eventized, fresh, strategy="vectorized", access_pruning=False
+    ).collect()))
+    assert pruned == dense and len(dense) > 0
+    assert len(plans) == 1
+    assert not planned_evaluator(fresh.compile()).access_pruning

@@ -123,40 +123,6 @@ def test_fused_kernel_equals_composable_pipeline(spark):
     assert a == b and len(a) > 0
 
 
-def test_cell_partials_equal_raw_match_stats(spark):
-    """In-kernel (cell, sub, n) partial emission must yield exactly the
-    per-cell match counts and distinct-sub counts of the raw stream."""
-    from pyspark.sql import functions as F
-    from a_tree_spark.web.pipeline import (
-        cell_stats_from_partials,
-        fused_match_pages,
-    )
-
-    pages = synth_pages_df(spark, N_PAGES, partitions=4)
-    forest = build_page_forest(N_SUBS)
-    keyed = pages.withColumn("page_key", F.xxhash64("url"))
-
-    raw = fused_match_pages(keyed, forest, emit="matches")
-    partials = fused_match_pages(keyed, forest, emit="cell_partials")
-
-    got = {
-        r["cell_id"]: (r["n"], r["d"])
-        for r in partials.groupBy("cell_id")
-        .agg(F.sum("n_matches").alias("n"), F.countDistinct("sub_id").alias("d"))
-        .collect()
-    }
-    want = {
-        r["cell_id"]: (r["n"], r["d"])
-        for r in raw.groupBy("cell_id")
-        .agg(F.count("*").alias("n"), F.countDistinct("sub_id").alias("d"))
-        .collect()
-    }
-    assert got == want and len(want) > 0
-    # the aggregate entry point agrees on totals
-    stats = cell_stats_from_partials(partials)
-    assert stats.agg(F.sum("n_matches")).first()[0] == raw.count()
-
-
 def test_root_partials_equal_raw_match_stats(spark):
     """Root-level in-kernel partials + post-shuffle subscription
     expansion must reproduce EXACTLY the per-cell match counts and
@@ -224,50 +190,6 @@ def test_salted_cell_stats_matches_exact_counts(spark):
         assert n == exact_n[cell]
         # HLL union is a valid merge: tight even on the hottest cells
         assert abs(approx - exact_subs[cell]) <= max(1, 0.02 * exact_subs[cell])
-
-
-def test_cell_partials_packing_handles_wide_sub_ids(spark):
-    """ADVICE round 1: sub ids >= 2^(2*level+1) silently decoded to a
-    wrong (cell, sub). The fixed-width packing must round-trip sub ids
-    up to 2^38 and reject anything wider at plan time."""
-    from pyspark.sql import functions as F
-    from a_tree_spark.expr import ForestBuilder
-    from a_tree_spark.web.pipeline import (
-        PAGE_ATTRIBUTES,
-        fused_match_pages,
-        standing_page_subscriptions,
-    )
-
-    wide = ForestBuilder(PAGE_ATTRIBUTES)
-    for i, (_, expression) in enumerate(
-        sorted(standing_page_subscriptions(20).items())
-    ):
-        wide.insert((1 << 30) + i, expression)  # far beyond 2^25
-
-    pages = synth_pages_df(spark, 300, partitions=2).withColumn(
-        "page_key", F.monotonically_increasing_id()
-    )
-    raw = fused_match_pages(pages, wide, emit="matches")
-    partials = fused_match_pages(pages, wide, emit="cell_partials")
-    got = sorted(map(tuple, partials.groupBy("cell_id", "sub_id")
-                     .agg(F.sum("n_matches").alias("n")).collect()))
-    want = sorted(map(tuple, raw.groupBy("cell_id", "sub_id")
-                      .agg(F.count("*").alias("n")).collect()))
-    assert got == want and len(want) > 0
-    assert all(sub_id >= (1 << 30) for _, sub_id, _ in want)
-
-    oversized = ForestBuilder(PAGE_ATTRIBUTES)
-    oversized.insert(1 << 38, "lang = 'en'")
-    with pytest.raises(ValueError, match="sub ids must fit"):
-        fused_match_pages(pages, oversized, emit="cell_partials")
-
-    # ADVICE round 2: a negative id among valid ones passed the max-only
-    # bound check and corrupted the packed key silently
-    negative = ForestBuilder(PAGE_ATTRIBUTES)
-    negative.insert(5, "lang = 'en'")
-    negative.insert(-1, "lang = 'fr'")
-    with pytest.raises(ValueError, match="sub ids must fit"):
-        fused_match_pages(pages, negative, emit="cell_partials")
 
 
 def test_cell_skew_exists(spark):
@@ -711,3 +633,124 @@ def test_fused_pruned_equals_dense_on_lead_token_lazy_leaves(spark, n_pages):
         got[pruning] = sorted(map(tuple, out.collect()))
     assert got[True] == got[False]
     assert len(got[True]) >= min(n_pages, 40)  # every page fires its own sub
+
+
+def _crawl(spark, pages, builder):
+    """One crawl step as the flagship runs it: root map, fused root
+    partials, exact per-cell stats."""
+    from a_tree_spark.web.pipeline import (
+        cell_stats_from_root_partials,
+        fused_match_pages,
+        root_subscription_map,
+    )
+
+    root_map = root_subscription_map(spark, builder)
+    partials = fused_match_pages(pages, builder, emit="cell_root_partials")
+    stats = cell_stats_from_root_partials(partials, root_map)
+    return root_map, sorted(map(tuple, stats.collect()))
+
+
+def test_crawl_plans_one_evaluator_per_snapshot(spark, monkeypatch):
+    """The root map and the fused kernel share the snapshot's one plan:
+    a crawl plans once, and after an insert the next crawl plans once
+    more. The root map is still one (root_id, n_subs) row per root, in
+    the plan's root order."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.expr import vector
+    from a_tree_spark.expr.vector import BatchEvaluator, planned_evaluator
+
+    plans = []
+    init = BatchEvaluator.__init__
+
+    def counting_init(self, *args, **kwargs):
+        plans.append(args[0] if args else kwargs["forest"])
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(BatchEvaluator, "__init__", counting_init)
+    monkeypatch.setattr(vector, "_latest_plan", None)
+
+    builder = build_page_forest(N_SUBS)
+    pages = synth_pages_df(spark, N_PAGES, partitions=4).withColumn(
+        "page_key", F.monotonically_increasing_id()
+    )
+    root_map, stats = _crawl(spark, pages, builder)
+    assert len(plans) == 1 and plans[0] is builder.compile()
+    assert stats
+    assert root_map.schema.simpleString() == "struct<root_id:bigint,n_subs:bigint>"
+    counts = planned_evaluator(builder.compile()).root_sub_counts
+    assert sorted(map(tuple, root_map.collect())) == list(enumerate(counts.tolist()))
+
+    builder.insert(N_SUBS, "lang = 'en' and n_tokens >= 1")
+    _, after = _crawl(spark, pages, builder)
+    assert len(plans) == 2 and plans[1] is builder.compile()
+    assert after != stats  # the new subscription matches somewhere
+
+
+def test_pruning_flag_stays_with_its_caller(spark):
+    """On one snapshot, a pruned fused pass and then a dense
+    ``match_events`` pass both equal the single-row oracle, and neither
+    flag lands on the shared plan."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.engine.matcher import broadcast_evaluator, match_events
+    from a_tree_spark.expr import ForestBuilder
+    from a_tree_spark.expr.vector import planned_evaluator
+    from a_tree_spark.web.pipeline import fused_match_pages
+
+    builder = ForestBuilder(PAGE_ATTRIBUTES)
+    for sub_id, expression in _lead_token_lazy_subscriptions(40).items():
+        builder.insert(sub_id, expression)
+    forest = builder.compile()
+    plan = planned_evaluator(forest)
+    assert plan.lazy_leaf_idxs and not plan.access_pruning
+
+    pages = synth_pages_df(spark, 200, partitions=2).withColumn(
+        "page_key", F.xxhash64("url")
+    )
+    eventized = eventize_pages(pages).withColumn("page_key", F.xxhash64("url"))
+    want = set()
+    for row in eventized.collect():
+        event = {k: row[k] for k in PAGE_ATTRIBUTES.names()}
+        for sub in evaluate_event(forest, normalize_event(PAGE_ATTRIBUTES, event)):
+            want.add((row["page_key"], sub))
+    assert want
+
+    pruned = fused_match_pages(pages, builder, emit="matches", access_pruning=True)
+    assert {(r["page_key"], r["sub_id"]) for r in pruned.collect()} == want
+    assert planned_evaluator(builder.compile()) is plan and not plan.access_pruning
+
+    dense = match_events(eventized, builder, event_id_col="page_key",
+                         access_pruning=False)
+    assert {(r["event_id"], r["sub_id"]) for r in dense.collect()} == want
+    assert planned_evaluator(builder.compile()) is plan and not plan.access_pruning
+
+    shipped, bc = broadcast_evaluator(spark, forest, access_pruning=True)
+    assert shipped is not plan and shipped.access_pruning
+    assert not plan.access_pruning
+    bc.destroy()
+
+
+def test_empty_forest_crawl(spark):
+    """A forest with no subscriptions has no roots: the root map is
+    empty with the usual schema, and the crawl runs to an empty
+    result."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.expr import ForestBuilder
+
+    pages = synth_pages_df(spark, 50, partitions=2).withColumn(
+        "page_key", F.monotonically_increasing_id()
+    )
+    root_map, stats = _crawl(spark, pages, ForestBuilder(PAGE_ATTRIBUTES))
+    assert root_map.schema.simpleString() == "struct<root_id:bigint,n_subs:bigint>"
+    assert root_map.count() == 0
+    assert stats == []
+
+
+def test_fused_rejects_unknown_emit(spark):
+    from a_tree_spark.web.pipeline import fused_match_pages
+
+    pages = synth_pages_df(spark, 10, partitions=1)
+    with pytest.raises(ValueError, match="emit must be"):
+        fused_match_pages(pages, build_page_forest(10), emit="cell_partials")
