@@ -163,7 +163,7 @@ def match_events(
     candidate rows their access siblings admit. Semantics-invariant
     (hypothesis-pinned); pays off when lazy predicates are expensive
     relative to the packed sweep — long list operands, ALL_OF over wide
-    lists, object decimals.
+    lists.
     """
     forest = matcher.compile() if isinstance(matcher, ForestBuilder) else matcher
     if strategy == "codegen":
@@ -206,10 +206,10 @@ def _match_vectorized(
     carry_fields = [projected.schema[c] for c in carry]
 
     # mapInArrow, not mapInPandas: pandas conversion materializes every
-    # list cell as a python list object and _ListColumn.__init__ walks
-    # them row by row — the round-2 hot-path anti-pattern (VERDICT.md).
-    # Arrow batches keep list columns as (offsets, values) buffers that
-    # arrow_columns turns into _ListColumn.from_parts views zero-copy.
+    # list cell as a python list object to be walked row by row — the
+    # round-2 hot-path anti-pattern (VERDICT.md). Arrow batches keep
+    # list columns as (offsets, values) buffers that arrow_columns
+    # turns into list columns without a per-row loop.
     def match_batches(batches):
         import pyarrow as pa
         import pyarrow.compute as pc

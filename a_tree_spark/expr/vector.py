@@ -1,4 +1,4 @@
-"""Vectorized forest evaluator over Arrow/pandas record batches.
+"""Vectorized forest evaluator over Arrow record batches.
 
 This is the batch generalization of the reference's per-event search
 (/root/reference/src/atree.rs:255-311) and bitset memo
@@ -17,7 +17,7 @@ Execution strategy (SURVEY.md §4.8), measured on 32 concurrent workers:
   broadcast inverted index: each batch value occurrence scatters into
   exactly the leaves listing it — the vectorized analog of the
   reference's access-predicate work-list (src/atree.rs:530-591);
-  Arrow inputs encode strings once per batch as int64 codes: scalar
+  strings encode once per batch, in Arrow, as int64 codes: scalar
   strings by per-batch dictionary (only unique strings cross into
   Python), list elements into the forest's literal vocabulary
   (BatchEvaluator.list_column: none cross);
@@ -44,7 +44,6 @@ from decimal import Decimal
 from fractions import Fraction
 
 import numpy as np
-import pandas as pd
 
 from .ast import Op
 from .compiler import AND, LEAF, CompiledForest
@@ -66,27 +65,21 @@ def _true_mask(result: np.ndarray, null_mask: np.ndarray) -> np.ndarray:
 class _ScalarColumn:
     """Null-separated numpy view of one scalar attribute column.
 
-    String columns carry ONE of two representations:
-
-    - ``str_series``: a pandas object Series (the pandas ingest path
-      and fused kernels that already hold one);
-    - ``codes`` + ``uniques``: Arrow dictionary encoding — int64 codes
-      (-1 = null) into the batch-local ``uniques`` list. Every string
-      leaf op then runs as int64 numpy compares/gathers over the codes
-      with ONE tiny python lookup over the uniques, instead of pandas
-      object-array comparisons per leaf (profiled: object-dtype EQ/
-      isin/map were the dense sweep's largest line items — guide §4.2,
-      hand batches to vectorized kernels, encode strings once).
+    Non-string columns carry int64 or bool ``values``. String columns
+    carry an Arrow dictionary encoding instead: ``codes``, int64 codes
+    (-1 = null) into the batch-local ``uniques`` list. Every string
+    leaf op then runs as int64 numpy compares/gathers over the codes
+    with ONE tiny python lookup over the uniques, instead of
+    object-array comparisons per leaf (profiled: object-dtype EQ/
+    isin/map were the dense sweep's largest line items — guide §4.2,
+    hand batches to vectorized kernels, encode strings once).
     """
 
-    __slots__ = ("mask", "values", "str_series", "codes", "uniques",
-                 "_uniq_map")
+    __slots__ = ("mask", "values", "codes", "uniques", "_uniq_map")
 
-    def __init__(self, mask: np.ndarray, values, str_series=None,
-                 codes=None, uniques=None):
+    def __init__(self, mask: np.ndarray, values, codes=None, uniques=None):
         self.mask = mask
         self.values = values
-        self.str_series = str_series
         self.codes = codes
         self.uniques = uniques
         self._uniq_map = None
@@ -100,65 +93,34 @@ class _ScalarColumn:
 
 
 class _ListColumn:
-    """Flattened once-per-batch representation of a list column.
+    """Flattened once-per-batch representation of a list column, built
+    from an Arrow ListArray's pieces (``BatchEvaluator.list_column``):
+    per-row null ``mask`` and ``lengths``, and the elements aligned with
+    ``row_ids``.
 
-    ``vids`` (optional) carries pre-computed member-group vocabulary
-    codes aligned with the flat elements (-1 = not in any literal
-    list); ``fcodes`` (optional) carries string elements as codes into
-    the forest's literal vocabulary of this attribute (-1 = in no
-    literal list, or null). Both come from ``BatchEvaluator.list_column``, so no element string
-    becomes a Python object."""
+    String elements arrive only as int64 codes, so no element string
+    becomes a Python object: ``vids`` carries member-group vocabulary
+    codes (-1 = not in any literal list), ``fcodes`` codes into the
+    forest's literal vocabulary of this attribute (-1 = in no literal
+    list, or null). Integer elements arrive as numpy ``flat`` values.
+    Parts nothing reads stay None."""
 
     __slots__ = ("mask", "lengths", "row_ids", "flat", "n", "vids",
                  "_offsets", "fcodes")
 
-    def __init__(self, series: pd.Series):
-        n = len(series)
-        self.n = n
-        mask = np.zeros(n, dtype=bool)
-        lengths = np.zeros(n, dtype=np.int64)
-        chunks = []
-        raw = series.to_numpy()
-        for i in range(n):
-            v = raw[i]
-            if v is None or (isinstance(v, float) and np.isnan(v)):
-                mask[i] = True
-            else:
-                lengths[i] = len(v)
-                if len(v):
-                    chunks.append(np.asarray(v))
-        self.mask = mask
-        self.lengths = lengths
-        self.row_ids = np.repeat(np.arange(n, dtype=np.int64), lengths)
-        if chunks:
-            self.flat = np.concatenate(chunks)
-        else:
-            self.flat = np.empty(0, dtype=np.int64)
-        self.vids = None
-        self._offsets = None
-        self.fcodes = None
-
-    @classmethod
-    def from_parts(
-        cls, mask: np.ndarray, lengths: np.ndarray, flat: np.ndarray,
+    def __init__(
+        self, mask: np.ndarray, lengths: np.ndarray, flat: np.ndarray | None,
         vids: np.ndarray | None = None,
         fcodes: np.ndarray | None = None,
-    ) -> "_ListColumn":
-        """Zero-copy construction from an Arrow ListArray's pieces —
-        used by fused kernels that never materialize pandas lists.
-        ``fcodes`` optionally carries the string values as
-        literal-vocabulary codes, so generic flat ops run int64
-        membership instead of object-array isin."""
-        col = cls.__new__(cls)
-        col.n = len(mask)
-        col.mask = mask
-        col.lengths = lengths
-        col.row_ids = np.repeat(np.arange(col.n, dtype=np.int64), lengths)
-        col.flat = flat
-        col.vids = vids
-        col._offsets = None
-        col.fcodes = fcodes
-        return col
+    ):
+        self.n = len(mask)
+        self.mask = mask
+        self.lengths = lengths
+        self.row_ids = np.repeat(np.arange(self.n, dtype=np.int64), lengths)
+        self.flat = flat
+        self.vids = vids
+        self._offsets = None
+        self.fcodes = fcodes
 
     @property
     def offsets(self) -> np.ndarray:
@@ -173,12 +135,12 @@ class _ListColumn:
         return self._offsets
 
 
-def scalar_column(mask: np.ndarray, values=None, str_series=None,
+def scalar_column(mask: np.ndarray, values=None,
                   codes=None, uniques=None) -> _ScalarColumn:
     """Public constructor for prepared scalar columns (fused kernels).
-    String columns may pass dictionary ``codes`` (+ ``uniques``)
-    instead of a pandas ``str_series`` — see _ScalarColumn."""
-    return _ScalarColumn(mask, values, str_series, codes=codes, uniques=uniques)
+    String columns pass dictionary ``codes`` + ``uniques`` instead of
+    ``values`` — see _ScalarColumn."""
+    return _ScalarColumn(mask, values, codes=codes, uniques=uniques)
 
 
 def _scaled_int_from_decimal_literal(literal: Decimal) -> Fraction:
@@ -250,16 +212,10 @@ class _MemberGroup:
         self.vocab = vocab
 
     def _codes(self, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Map raw values -> (valid_mask, vids). Ints use searchsorted on
-        the sorted vocab; strings use a pandas hash map."""
+        """Map integer values -> (valid_mask, vids) by searchsorted on
+        the sorted vocab (strings arrive pre-coded)."""
         if len(values) == 0:
             return np.empty(0, dtype=bool), np.empty(0, dtype=np.int64)
-        sample = values[0]
-        if isinstance(sample, str) or values.dtype.kind in ("U", "O"):
-            mapped = pd.Series(values).map(self.vocab)
-            valid = mapped.notna().to_numpy()
-            vids = mapped.fillna(0).to_numpy(dtype=np.int64)
-            return valid, vids
         keys = np.fromiter(self.vocab.keys(), dtype=np.int64, count=len(self.vocab))
         vids_by_key = np.fromiter(self.vocab.values(), dtype=np.int64, count=len(self.vocab))
         order = np.argsort(keys)
@@ -284,21 +240,21 @@ class _MemberGroup:
         valid = vids >= 0
         return self._scatter(rows[valid], vids[valid], mask, n)
 
-    def evaluate(self, col, n: int) -> np.ndarray:
+    def evaluate_column(self, col, n: int) -> np.ndarray:
         """-> bool TRUE-mask matrix (n_leaves, n)."""
         if self.is_list:
-            if getattr(col, "vids", None) is not None:
+            if col.vids is not None:
                 return self.evaluate_codes(col.vids, col.row_ids, col.mask, n)
             values, rows = col.flat, col.row_ids
         else:
-            if getattr(col, "codes", None) is not None:
+            if col.codes is not None:
                 # dictionary path: vocab lookup over the few uniques,
                 # gather through the int codes (trailing -1 = null)
                 lookup = np.append(self.map_unique(col.uniques), -1)
                 return self.evaluate_codes(
                     lookup[col.codes], np.arange(n), col.mask, n
                 )
-            values, rows = col.values if col.str_series is None else col.str_series.to_numpy(), np.arange(n)
+            values, rows = col.values, np.arange(n)
         valid, vids = self._codes(np.asarray(values))
         return self._scatter(rows[valid], vids[valid], col.mask, n)
 
@@ -384,7 +340,7 @@ def adaptive_budget(num_nodes: int) -> int:
 
 
 class BatchEvaluator:
-    """Evaluates a CompiledForest over pandas record batches.
+    """Evaluates a CompiledForest over Arrow record batches.
 
     The forest and this evaluator are both picklable state that ships to
     executors via closure capture / broadcast; all heavy work happens in
@@ -660,79 +616,16 @@ class BatchEvaluator:
 
     # ------------------------------------------------------------ columns
 
-    def _scalar_column(self, series: pd.Series, kind) -> _ScalarColumn:
-        from .schema import AttributeKind
-
-        mask = series.isna().to_numpy()
-        if kind is AttributeKind.STRING:
-            return _ScalarColumn(mask, None, series)
-        if kind is AttributeKind.BOOLEAN:
-            values = series.astype("boolean").fillna(False).to_numpy(dtype=bool)
-            return _ScalarColumn(mask, values)
-        if kind is AttributeKind.FLOAT:
-            # Fast path: engine pre-scales decimals JVM-side to int64 at
-            # scale 6. Slow path (tests/oracle): object Decimals.
-            if series.dtype == object:
-                # HALF_UP quantize mirrors Spark's decimal(28,6) cast and
-                # normalize_event's scale-6 contract (plain int() would
-                # truncate 7-dp values toward zero and diverge)
-                from decimal import ROUND_HALF_UP
-
-                q = Decimal(1).scaleb(-DECIMAL_SCALE)
-                values = np.array(
-                    [
-                        0
-                        if v is None
-                        else int(
-                            Decimal(v)
-                            .quantize(q, rounding=ROUND_HALF_UP)
-                            .scaleb(DECIMAL_SCALE)
-                        )
-                        for v in series
-                    ],
-                    dtype=np.int64,
-                )
-            else:
-                values = series.fillna(0).to_numpy(dtype=np.int64)
-            return _ScalarColumn(mask, values)
-        # INTEGER: Arrow gives int64, or float64/object when nulls present
-        if series.dtype == np.int64:
-            values = series.to_numpy()
-        else:
-            if series.dtype == object:
-                series = pd.to_numeric(series)
-            values = series.fillna(0).to_numpy(dtype=np.int64)
-        return _ScalarColumn(mask, values)
-
-    def _columns(self, pdf: pd.DataFrame) -> dict[int, object]:
-        """Build per-attribute column caches for the attributes the forest
-        actually touches (column pruning at the Python layer too)."""
-        forest = self.forest
-        needed = {leaf.attr_index for leaf in forest.leaves}
-        cache: dict[int, object] = {}
-        for attr_index in needed:
-            definition = forest.attributes.definition(attr_index)
-            series = pdf[definition.name]
-            if definition.kind.is_list:
-                cache[attr_index] = _ListColumn(series)
-            else:
-                cache[attr_index] = self._scalar_column(series, definition.kind)
-        return cache
-
-    # --------------------------------------------------- arrow fast path
-
     #: generic ops that read the flattened element values (everything
     #: else on a list attribute — is empty / is null — needs only
     #: lengths/mask, so flat materialization can be skipped)
     _FLAT_OPS = (Op.ONE_OF, Op.NONE_OF, Op.ALL_OF, Op.NOT_ALL_OF)
 
     def arrow_columns(self, batch) -> dict[int, object]:
-        """Prepared column cache straight from an Arrow RecordBatch.
-
-        List attributes build through ``list_column`` — the per-row
-        python loop in ``_ListColumn.__init__`` never runs (VERDICT.md
-        round 2: that loop was the general matcher's hot-path
-        anti-pattern)."""
+        """Prepared column cache straight from an Arrow RecordBatch, for
+        the attributes the forest actually touches (column pruning at
+        the Python layer too). List attributes build through
+        ``list_column``, scalars through ``_scalar_from_arrow``."""
         forest = self.forest
         needed = {leaf.attr_index for leaf in forest.leaves}
         cache: dict[int, object] = {}
@@ -759,8 +652,10 @@ class BatchEvaluator:
         generic flat ops (``fcodes``: int64 isin instead of
         object-array hashing), and no element string becomes a Python
         object: converting even a batch's unique tokens to Python was
-        most of the encoding cost. Other element types hand their flat
-        values over as numpy. Parts nothing reads are not built."""
+        most of the encoding cost. A string list whose elements are not
+        typed string (e.g. ``list<null>``) is cast to string first.
+        Other element types hand their flat values over as numpy. Parts
+        nothing reads are not built."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -774,9 +669,9 @@ class BatchEvaluator:
         reads_flat = attr_index in self._flat_attrs
         flat = pc.list_flatten(arr)
         flat_np = vids = fcodes = None
-        if attr_index in self._list_vocab and (
-            pa.types.is_string(flat.type) or pa.types.is_large_string(flat.type)
-        ):
+        if attr_index in self._list_vocab:
+            if not (pa.types.is_string(flat.type) or pa.types.is_large_string(flat.type)):
+                flat = flat.cast(pa.string())
             codes = (
                 pc.fill_null(
                     pc.index_in(flat, value_set=self._value_set(attr_index, flat.type)),
@@ -791,9 +686,7 @@ class BatchEvaluator:
                 fcodes = codes
         elif group is not None or reads_flat:
             flat_np = flat.to_numpy(zero_copy_only=False)
-        return _ListColumn.from_parts(
-            mask, lengths, flat_np, vids=vids, fcodes=fcodes
-        )
+        return _ListColumn(mask, lengths, flat_np, vids=vids, fcodes=fcodes)
 
     def _value_set(self, attr_index: int, value_type):
         """An attribute's literal vocabulary as an Arrow array in code
@@ -846,14 +739,34 @@ class BatchEvaluator:
                 .astype(np.int64)
             )
             return _ScalarColumn(mask, values)
-        # anything else (object decimals, unexpected types): the pandas
-        # builder knows the slow exact conversions
-        return self._scalar_column(arr.to_pandas(), kind)
+        if kind is AttributeKind.FLOAT and pa.types.is_decimal(arr.type):
+            # exact decimals -> int64 fixed-point at scale 6, rounding
+            # ties away from zero like ROUND_HALF_UP in normalize_event
+            # and Spark's decimal(28,6) cast (Arrow's "half_up" rounds
+            # ties toward +inf, which differs on negative ties)
+            rounded = pc.round(
+                arr, ndigits=DECIMAL_SCALE, round_mode="half_towards_infinity"
+            )
+            scaled = pc.multiply(
+                pc.cast(rounded, pa.decimal128(30, DECIMAL_SCALE)),
+                pa.scalar(Decimal(10**DECIMAL_SCALE), pa.decimal128(7, 0)),
+            )
+            values = (
+                pc.fill_null(pc.cast(scaled, pa.int64()), 0)
+                .to_numpy(zero_copy_only=False)
+            )
+            return _ScalarColumn(mask, values)
+        raise TypeError(
+            f"{kind.value} attribute column of Arrow type {arr.type} is not "
+            f"supported (FLOAT takes decimal or int64 fixed-point at scale "
+            f"{DECIMAL_SCALE})"
+        )
 
     def evaluate_arrow(self, batch) -> tuple[np.ndarray, np.ndarray]:
-        """Arrow analog of ``evaluate``: (row_positions, sub_ids) pairs
-        for one RecordBatch, chunked to the memory budget via zero-copy
-        ``batch.slice`` (pc kernels honor slice offsets)."""
+        """(row_positions, sub_ids): one pair per (row, matching
+        subscription) of one RecordBatch. Rows are chunked to the memory
+        budget via zero-copy ``batch.slice`` (pc kernels honor slice
+        offsets)."""
         n_total = batch.num_rows
         if n_total == 0 or len(self.sub_ids) == 0:
             return np.empty(0, dtype=np.int64), self.sub_ids[:0]
@@ -905,17 +818,8 @@ class BatchEvaluator:
                     return _true_mask(result, col.mask)
                 values, literal, op = col.values, threshold, cmp_op
             elif isinstance(operand, str):
-                if col.codes is not None:
-                    code = col.uniq_map.get(operand, -2)  # -2: absent
-                    result = (
-                        col.codes == code if op is Op.EQ else col.codes != code
-                    )
-                    return _true_mask(result, col.mask)
-                series = col.str_series
-                if op is Op.EQ:
-                    result = (series == operand).to_numpy(dtype=bool)
-                else:
-                    result = (series != operand).to_numpy(dtype=bool)
+                code = col.uniq_map.get(operand, -2)  # -2: absent
+                result = col.codes == code if op is Op.EQ else col.codes != code
                 return _true_mask(result, col.mask)
             else:
                 values, literal = col.values, operand
@@ -935,14 +839,11 @@ class BatchEvaluator:
 
         if op in (Op.IN, Op.NOT_IN):
             if isinstance(operand[0], str):
-                if col.codes is not None:
-                    m = col.uniq_map
-                    op_codes = np.array(
-                        [m[v] for v in operand if v in m], dtype=np.int64
-                    )
-                    result = np.isin(col.codes, op_codes)
-                else:
-                    result = col.str_series.isin(operand).to_numpy(dtype=bool)
+                m = col.uniq_map
+                op_codes = np.array(
+                    [m[v] for v in operand if v in m], dtype=np.int64
+                )
+                result = np.isin(col.codes, op_codes)
             else:
                 result = np.isin(col.values, np.array(operand, dtype=np.int64))
             if op is Op.NOT_IN:
@@ -952,9 +853,6 @@ class BatchEvaluator:
         # list operators over the flattened column
         if col.fcodes is not None:
             member = np.isin(col.fcodes, self._flat_op_codes[leaf_idx])
-        elif isinstance(operand[0], str):
-            member = pd.Series(col.flat).isin(operand).to_numpy(dtype=bool) \
-                if len(col.flat) else np.empty(0, dtype=bool)
         else:
             member = np.isin(col.flat, np.array(operand, dtype=np.int64))
         n_rows = col.n
@@ -973,9 +871,6 @@ class BatchEvaluator:
             sub = _ScalarColumn(
                 col.mask[idx],
                 None if col.values is None else col.values[idx],
-                None
-                if col.str_series is None
-                else col.str_series.iloc[idx].reset_index(drop=True),
                 codes=None if col.codes is None else col.codes[idx],
                 uniques=col.uniques,
             )
@@ -996,14 +891,13 @@ class BatchEvaluator:
             )
         else:
             gather = np.empty(0, dtype=np.int64)
-        sub = _ListColumn.from_parts(
+        return _ListColumn(
             col.mask[idx],
             lengths,
             None if col.flat is None else col.flat[gather],
             vids=None if col.vids is None else col.vids[gather],
             fcodes=None if col.fcodes is None else col.fcodes[gather],
         )
-        return sub
 
     def _eval_leaves(self, cache: dict, n: int, lazy_true: bool = False) -> np.ndarray:
         forest = self.forest
@@ -1013,21 +907,12 @@ class BatchEvaluator:
         for attr_index, sorted_ops, leaf_idxs in self.eq_groups:
             col = cache[attr_index]
             if sorted_ops.dtype.kind in ("U", "O"):
-                if col.codes is not None:
-                    m = {v: i for i, v in enumerate(sorted_ops)}
-                    lookup = np.append(
-                        np.array(
-                            [m.get(u, -1) for u in col.uniques],
-                            dtype=np.int64,
-                        ),
-                        -1,   # trailing slot: null codes (-1) land here
-                    )
-                    pos = lookup[col.codes]
-                else:
-                    codes = pd.Series(col.str_series).map(
-                        {v: i for i, v in enumerate(sorted_ops)}
-                    )
-                    pos = codes.fillna(-1).to_numpy(dtype=np.int64)
+                m = {v: i for i, v in enumerate(sorted_ops)}
+                lookup = np.append(
+                    np.array([m.get(u, -1) for u in col.uniques], dtype=np.int64),
+                    -1,   # trailing slot: null codes (-1) land here
+                )
+                pos = lookup[col.codes]
                 hit = pos >= 0
             else:
                 pos = np.searchsorted(sorted_ops, col.values)
@@ -1042,7 +927,7 @@ class BatchEvaluator:
             leaf_values[leaf_idxs, :] = group_rows
 
         for group in self.member_groups:
-            leaf_values[group.leaf_idxs, :] = group.evaluate(
+            leaf_values[group.leaf_idxs, :] = group.evaluate_column(
                 cache[group.attr_index], n
             )
 
@@ -1063,27 +948,6 @@ class BatchEvaluator:
         # packed sweep: nodes x n/8 bytes per buffer
         chunk = (self.memory_budget * 8) // nodes
         return int(max(1024, min(32768, chunk, max(n_rows, 1))))
-
-    def evaluate(self, pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-        """Returns (row_positions, sub_ids): one pair per (row, matching
-        subscription). Row positions index into pdf."""
-        n_total = len(pdf)
-        if n_total == 0 or len(self.sub_ids) == 0:
-            return np.empty(0, dtype=np.int64), self.sub_ids[:0]
-
-        chunk = self._chunk_rows(n_total)
-        out_rows: list[np.ndarray] = []
-        out_subs: list[np.ndarray] = []
-        for start in range(0, n_total, chunk):
-            stop = min(start + chunk, n_total)
-            piece = pdf.iloc[start:stop] if (start, stop) != (0, n_total) else pdf
-            rows, subs = self._evaluate_chunk(piece)
-            out_rows.append(rows + start)
-            out_subs.append(subs)
-        return np.concatenate(out_rows), np.concatenate(out_subs)
-
-    def _evaluate_chunk(self, pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-        return self.evaluate_prepared(self._columns(pdf), len(pdf))
 
     def _buffers(self, nb: int):
         """Persistent per-chunk-size work buffers (nb = packed bytes per

@@ -1,4 +1,4 @@
-from .extract import extract_text, extract_text_series, with_extracted_text
+from .extract import extract_text
 from .geotag import centroid_df, geotag_pages
 from .pipeline import (
     PAGE_ATTRIBUTES,
@@ -25,7 +25,6 @@ __all__ = [
     "fused_match_pages",
     "root_subscription_map",
     "extract_text",
-    "extract_text_series",
     "geotag_pages",
     "match_pages",
     "run_pipeline",
@@ -34,5 +33,4 @@ __all__ = [
     "synth_batch",
     "synth_page",
     "synth_pages_df",
-    "with_extracted_text",
 ]

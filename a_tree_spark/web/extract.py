@@ -2,8 +2,10 @@
 
 input_hint requirement: "byte-identical extracted text per url; verify
 with pytest". ``extract_text`` is the reference implementation (pure
-Python, one row); ``extracted_text_column`` applies the same rule over
-Arrow batches with pandas string kernels (no row-at-a-time Spark UDF).
+Python, one row); ``page_features`` applies the same rule over Arrow
+arrays with pyarrow's RE2 kernels (no row-at-a-time Spark UDF), and is
+the one extraction block of ``with_page_features`` and the fused page
+kernel (web/pipeline.py).
 
 Extraction rule (documented contract): the text is the concatenation of
 the contents of all <p>...</p> spans, in document order, joined by a
@@ -13,13 +15,21 @@ single newline; no entity decoding, no whitespace normalization.
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
 _P_SPAN = re.compile(r"<p>(.*?)</p>", re.DOTALL)
+
+# The general extractor pattern is (?s)<p>(.*?)</p> — but lazy dot-all
+# costs 2.4x more RE2 time than the 'no tags inside' form, and regex
+# scanning over html is the fused kernel's single largest cost (69ms vs
+# 29ms per 8k batch). The fast pattern is exact whenever it matches the
+# unique <p>; rows it CAN'T represent (several <p>, or a paragraph
+# containing '<', or an unclosed tag) fall back to the python oracle,
+# keeping extraction byte-identical on ALL inputs.
+_P_FAST_PATTERN = r"<p>(?P<t>[^<]*)</p>"
+_GEO_PATTERN = r'geo\.position" content="(?P<glat>-?[0-9.]+);(?P<glon>-?[0-9.]+)"'
+_TLD_PATTERN = r"^https?://[^/]*\.(?P<tld>[a-z]+)/"
 
 
 def extract_text(html: bytes | str) -> str:
@@ -29,30 +39,51 @@ def extract_text(html: bytes | str) -> str:
     return "\n".join(_P_SPAN.findall(html))
 
 
-def extract_text_series(html: pd.Series) -> pd.Series:
-    """Vectorized (pandas string kernels over an Arrow batch)."""
-    decoded = html.str.decode("utf-8") if html.dtype == object and len(html) and isinstance(html.iloc[0], (bytes, bytearray)) else html
-    return decoded.str.findall(_P_SPAN).str.join("\n")
-
-
-_GEO_META = re.compile(r'geo\.position" content="(-?[0-9.]+);(-?[0-9.]+)"')
-_TLD = re.compile(r"^https?://[^/]*\.([a-z]+)/")
-
-
-def with_page_features(pages: DataFrame, keep: list[str] | None = None) -> DataFrame:
-    """One Arrow-native pass (mapInArrow + pyarrow RE2 kernels) adding
-    extracted_text + meta_lat/meta_lon + tld. No pandas, no per-row
-    Python: regex extraction runs in Arrow's C++ compute layer
-    (~10x faster than pandas .str, which object-loops).
+def page_features(html, url, fallback_counter=None):
+    """(text, meta_lat, meta_lon, tld) Arrow arrays for one batch's
+    ``html`` (binary or string) and ``url`` arrays.
 
     Multi-<p> pages can't use the single-shot RE2 extract (it returns
     the first match); those rows — detected with a vectorized count —
     fall back to the oracle ``extract_text`` row-wise, preserving the
-    byte-identical contract. ``keep`` prunes the output (default: drop
-    the heavy html payload — the extracted text is the content from
-    here on)."""
+    byte-identical contract. ``fallback_counter`` (an accumulator)
+    receives the number of such rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
+
+    html = pc.cast(html, pa.string())
+    text_fast = pc.struct_field(pc.extract_regex(html, _P_FAST_PATTERN), "t")
+    n_p = pc.count_substring(html, "<p>")
+    needs_py = pc.or_(
+        pc.greater(n_p, 1),
+        pc.and_(pc.equal(n_p, 1), pc.is_null(text_fast)),
+    )
+    text = pc.fill_null(text_fast, "")
+    if pc.any(needs_py).as_py():
+        if fallback_counter is not None:
+            fallback_counter.add(pc.sum(pc.cast(needs_py, pa.int64())).as_py())
+        py_text = text.to_pylist()
+        py_html = html.to_pylist()
+        for i, m in enumerate(needs_py.to_pylist()):
+            if m:
+                py_text[i] = extract_text(py_html[i])
+        text = pa.array(py_text, type=pa.string())
+
+    geo = pc.extract_regex(html, _GEO_PATTERN)
+    meta_lat = pc.cast(pc.struct_field(geo, "glat"), pa.float64())
+    meta_lon = pc.cast(pc.struct_field(geo, "glon"), pa.float64())
+    tld = pc.struct_field(pc.extract_regex(url, _TLD_PATTERN), "tld")
+    return text, meta_lat, meta_lon, tld
+
+
+def with_page_features(pages: DataFrame, keep: list[str] | None = None) -> DataFrame:
+    """One Arrow-native pass (mapInArrow + ``page_features``) adding
+    extracted_text + meta_lat/meta_lon + tld. No pandas, no per-row
+    Python: regex extraction runs in Arrow's C++ compute layer
+    (~10x faster than pandas .str, which object-loops). ``keep`` prunes
+    the output (default: drop the heavy html payload — the extracted
+    text is the content from here on)."""
+    import pyarrow as pa
 
     if keep is None:
         keep = [f.name for f in pages.schema.fields if f.name != "html"]
@@ -63,43 +94,14 @@ def with_page_features(pages: DataFrame, keep: list[str] | None = None) -> DataF
         f"meta_lon double, tld string"
     )
 
-    # fast single-<p> pattern (2.4x cheaper RE2 than lazy dot-all);
-    # rows it can't represent — several <p>, '<' inside the paragraph,
-    # unclosed tag — fall back to the oracle, so extraction stays
-    # byte-identical on ALL inputs (same scheme as the fused kernel)
-    p_fast_pattern = r"<p>(?P<t>[^<]*)</p>"
-    geo_pattern = r'geo\.position" content="(?P<glat>-?[0-9.]+);(?P<glon>-?[0-9.]+)"'
-    tld_pattern = r"^https?://[^/]*\.(?P<tld>[a-z]+)/"
-
     def run(batches):
         for batch in batches:
-            html = pc.cast(batch.column(batch.schema.get_field_index("html")), pa.string())
-            url = batch.column(batch.schema.get_field_index("url"))
-
-            text_fast = pc.struct_field(
-                pc.extract_regex(html, p_fast_pattern), "t"
+            features = page_features(
+                batch.column(batch.schema.get_field_index("html")),
+                batch.column(batch.schema.get_field_index("url")),
             )
-            n_p = pc.count_substring(html, "<p>")
-            needs_py = pc.or_(
-                pc.greater(n_p, 1),
-                pc.and_(pc.equal(n_p, 1), pc.is_null(text_fast)),
-            )
-            text = pc.fill_null(text_fast, "")
-            if pc.any(needs_py).as_py():
-                idx = [i for i, m in enumerate(needs_py.to_pylist()) if m]
-                py_text = text.to_pylist()
-                py_html = html.to_pylist()
-                for i in idx:
-                    py_text[i] = extract_text(py_html[i])
-                text = pa.array(py_text, type=pa.string())
-
-            geo = pc.extract_regex(html, geo_pattern)
-            meta_lat = pc.cast(pc.struct_field(geo, "glat"), pa.float64())
-            meta_lon = pc.cast(pc.struct_field(geo, "glon"), pa.float64())
-            tld = pc.struct_field(pc.extract_regex(url, tld_pattern), "tld")
-
             arrays = [batch.column(batch.schema.get_field_index(c)) for c in keep]
-            arrays += [text, meta_lat, meta_lon, tld]
+            arrays += features
             names = keep + ["extracted_text", "meta_lat", "meta_lon", "tld"]
             yield pa.RecordBatch.from_arrays(
                 [a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a for a in arrays],
@@ -107,19 +109,3 @@ def with_page_features(pages: DataFrame, keep: list[str] | None = None) -> DataF
             )
 
     return pages.mapInArrow(run, schema=schema)
-
-
-def with_extracted_text(pages: DataFrame, html_col: str = "html", out_col: str = "extracted_text") -> DataFrame:
-    """Adds the extracted-text column via mapInPandas (Arrow batches)."""
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in pages.schema.fields
-    )
-    schema = f"{fields}, {out_col} string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = extract_text_series(pdf[html_col])
-            yield pdf
-
-    return pages.mapInPandas(run, schema=schema)

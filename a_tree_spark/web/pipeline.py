@@ -418,7 +418,7 @@ def fused_match_pages(
 
     from ..expr.vector import scalar_column
     from ..spatial.cells import cell_id as cell_id_np
-    from .extract import extract_text
+    from .extract import page_features
     from .synth import TLD_TABLE
 
     if emit not in ("matches", "cell_root_partials"):
@@ -458,16 +458,6 @@ def fused_match_pages(
 
     names = PAGE_ATTRIBUTES.names()
     idx = {name: i for i, name in enumerate(names)}
-    # The general extractor pattern is (?s)<p>(.*?)</p> — but lazy
-    # dot-all costs 2.4x more RE2 time than the 'no tags inside' form,
-    # and regex scanning over html is the kernel's single largest cost
-    # (69ms vs 29ms per 8k batch). The fast pattern is exact whenever it
-    # matches the unique <p>; rows it CAN'T represent (several <p>, or a
-    # paragraph containing '<', or an unclosed tag) fall back to the
-    # python oracle, keeping extraction byte-identical on ALL inputs.
-    p_fast_pattern = r"<p>(?P<t>[^<]*)</p>"
-    geo_pattern = r'geo\.position" content="(?P<glat>-?[0-9.]+);(?P<glon>-?[0-9.]+)"'
-    tld_pattern = r"^https?://[^/]*\.(?P<tld>[a-z]+)/"
 
     def run(batches):
         ev = bc.value
@@ -484,45 +474,20 @@ def fused_match_pages(
             n = batch.num_rows
             if n == 0:
                 continue
-            html = pc.cast(batch.column(batch.schema.get_field_index("html")), pa.string())
-            url = batch.column(batch.schema.get_field_index("url"))
             page_key = batch.column(batch.schema.get_field_index("page_key")).to_numpy()
-
-            text_fast = pc.struct_field(
-                pc.extract_regex(html, p_fast_pattern), "t"
+            text, meta_lat, meta_lon, tld = page_features(
+                batch.column(batch.schema.get_field_index("html")),
+                batch.column(batch.schema.get_field_index("url")),
+                fallback_counter,
             )
-            n_p = pc.count_substring(html, "<p>")
-            needs_py = pc.or_(
-                pc.greater(n_p, 1),
-                pc.and_(pc.equal(n_p, 1), pc.is_null(text_fast)),
-            )
-            text = pc.fill_null(text_fast, "")
-            if pc.any(needs_py).as_py():
-                if fallback_counter is not None:
-                    fallback_counter.add(
-                        pc.sum(pc.cast(needs_py, pa.int64())).as_py()
-                    )
-                py_text = text.to_pylist()
-                py_html = html.to_pylist()
-                for i, m in enumerate(needs_py.to_pylist()):
-                    if m:
-                        py_text[i] = extract_text(py_html[i])
-                text = pa.array(py_text, type=pa.string())
-
-            geo = pc.extract_regex(html, geo_pattern)
-            meta_lat = pc.cast(pc.struct_field(geo, "glat"), pa.float64()).to_numpy(
-                zero_copy_only=False
-            )
-            meta_lon = pc.cast(pc.struct_field(geo, "glon"), pa.float64()).to_numpy(
-                zero_copy_only=False
-            )
+            meta_lat = meta_lat.to_numpy(zero_copy_only=False)
+            meta_lon = meta_lon.to_numpy(zero_copy_only=False)
             # dictionary-encode the string attribute columns ONCE per
             # batch: only the ~dozens of UNIQUE tld/lang values become
             # Python objects; per-row data crossing into the evaluator
             # is int64 codes (guide §2.3 narrower types / §4.2 — and
             # the round-7 DRAM-ceiling decomposition's first candidate:
             # cut bytes per doc crossing Arrow)
-            tld = pc.struct_field(pc.extract_regex(url, tld_pattern), "tld")
             tld_enc = pc.dictionary_encode(tld)
             tld_uniques = tld_enc.dictionary.to_pylist()
             tld_codes = (

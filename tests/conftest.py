@@ -25,6 +25,32 @@ def spark():
     spark.stop()
 
 
+def event_batch(attributes, events: list[dict]):
+    """Typed Arrow RecordBatch of ``events``, one column per attribute
+    of ``attributes`` (a missing key is null) — the evaluator's only
+    input format. FLOAT columns are decimals at scale 9, wider than the
+    evaluator's scale 6, so its own rounding is exercised."""
+    import pyarrow as pa
+
+    from a_tree_spark.expr.schema import AttributeKind as K
+
+    types = {
+        K.BOOLEAN: pa.bool_(),
+        K.INTEGER: pa.int64(),
+        K.FLOAT: pa.decimal128(28, 9),
+        K.STRING: pa.string(),
+        K.INTEGER_LIST: pa.list_(pa.int64()),
+        K.STRING_LIST: pa.list_(pa.string()),
+    }
+    return pa.record_batch(
+        [
+            pa.array([e.get(d.name) for e in events], type=types[d.kind])
+            for d in attributes
+        ],
+        names=attributes.names(),
+    )
+
+
 def duck_connection(sf_dir: str = SF_DIR) -> duckdb.DuckDBPyConnection:
     """Mirror the driver's harness: every table pre-registered as a view."""
     con = duckdb.connect()

@@ -6,8 +6,10 @@ disagreement (ADVICE r6: a lone fast outlier must not extend), and
 the per-query wall budget (VERDICT r6 item 6)."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# bench.py sits at the repository root, one level above this file
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bench import _min_of_n
 

@@ -6,7 +6,7 @@ on generated expressions/events."""
 
 from decimal import Decimal
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from a_tree_spark.expr import (
@@ -20,6 +20,7 @@ from a_tree_spark.expr import (
 )
 from a_tree_spark.expr.oracle import FALSE, TRUE, UNKNOWN
 from a_tree_spark.expr.vector import BatchEvaluator
+from tests.conftest import event_batch
 
 ATTRS = AttributeTable([
     A.integer("x"),
@@ -173,40 +174,28 @@ def test_vectorized_forest_equals_oracle(expressions, events):
         builder.insert(sub_id, expression)
     forest = builder.compile()
 
-    pdf = pd.DataFrame({
-        name: pd.Series([e[name] for e in events], dtype=object)
-        for name in ATTRS.names()
-    })
-    rows, subs = BatchEvaluator(forest).evaluate(pdf)
-    got: dict[int, set] = {}
-    for row, sub in zip(rows.tolist(), subs.tolist()):
-        got.setdefault(row, set()).add(sub)
+    def matches(evaluator, batch) -> dict[int, set]:
+        rows, subs = evaluator.evaluate_arrow(batch)
+        out: dict[int, set] = {}
+        for row, sub in zip(rows.tolist(), subs.tolist()):
+            out.setdefault(row, set()).add(sub)
+        return out
 
+    # FLOAT at scale 9: the evaluator rounds to scale 6 itself
+    batch = event_batch(ATTRS, events)
+    got = matches(BatchEvaluator(forest), batch)
     # two-phase access pruning must be semantics-invariant
-    p_rows, p_subs = BatchEvaluator(forest, access_pruning=True).evaluate(pdf)
-    pruned: dict[int, set] = {}
-    for row, sub in zip(p_rows.tolist(), p_subs.tolist()):
-        pruned.setdefault(row, set()).add(sub)
-
-    # the Arrow fast path (mapInArrow matcher, round 3) must agree too,
-    # including nulls, empty lists, and object-decimal fallback
-    import pyarrow as pa
-
-    batch = pa.record_batch({
-        "x": pa.array([e["x"] for e in events], type=pa.int64()),
-        "xs": pa.array([e["xs"] for e in events], type=pa.list_(pa.int64())),
-        "s": pa.array([e["s"] for e in events], type=pa.string()),
-        "ss": pa.array([e["ss"] for e in events], type=pa.list_(pa.string())),
-        "b": pa.array([e["b"] for e in events], type=pa.bool_()),
-        "f": pa.array([e["f"] for e in events], type=pa.decimal128(12, 4)),
-    })
-    a_rows, a_subs = BatchEvaluator(forest).evaluate_arrow(batch)
-    arrow: dict[int, set] = {}
-    for row, sub in zip(a_rows.tolist(), a_subs.tolist()):
-        arrow.setdefault(row, set()).add(sub)
+    pruned = matches(BatchEvaluator(forest, access_pruning=True), batch)
+    # FLOAT at scale 4, below the evaluator's scale 6; nulls and empty
+    # lists as above
+    f = ATTRS.index_of("f")
+    scale4 = matches(
+        BatchEvaluator(forest),
+        batch.set_column(f, "f", batch.column(f).cast(pa.decimal128(12, 4))),
+    )
 
     for i, event in enumerate(events):
         expected = set(evaluate_event(forest, event))
         assert got.get(i, set()) == expected, (expressions, event)
         assert pruned.get(i, set()) == expected, (expressions, event)
-        assert arrow.get(i, set()) == expected, (expressions, event)
+        assert scale4.get(i, set()) == expected, (expressions, event)

@@ -9,7 +9,6 @@ import random
 from decimal import Decimal
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from a_tree_spark.expr import (
@@ -17,8 +16,11 @@ from a_tree_spark.expr import (
     AttributeTable,
     ForestBuilder,
     evaluate_event,
+    normalize_event,
 )
+from a_tree_spark.expr.schema import AttributeKind
 from a_tree_spark.expr.vector import BatchEvaluator
+from tests.conftest import event_batch
 
 
 def attributes():
@@ -98,19 +100,6 @@ def random_expression(rng: random.Random) -> str:
     return text
 
 
-def events_to_pdf(events: list[dict]) -> pd.DataFrame:
-    return pd.DataFrame({
-        "private": pd.Series([e["private"] for e in events], dtype=object),
-        "exchange_id": pd.Series([e["exchange_id"] for e in events], dtype="Int64").astype(object),
-        "price": pd.Series([e["price"] for e in events], dtype=object),
-        "bidfloor": pd.Series([e["bidfloor"] for e in events], dtype=object),
-        "country": pd.Series([e["country"] for e in events], dtype=object),
-        "city": pd.Series([e["city"] for e in events], dtype=object),
-        "deals": pd.Series([e["deals"] for e in events], dtype=object),
-        "segment_ids": pd.Series([e["segment_ids"] for e in events], dtype=object),
-    })
-
-
 @pytest.mark.parametrize("seed", [1, 2, 3, 4, 5])
 def test_vectorized_matches_oracle_randomized(seed):
     rng = random.Random(seed)
@@ -122,8 +111,7 @@ def test_vectorized_matches_oracle_randomized(seed):
     evaluator = BatchEvaluator(forest)
 
     events = [random_event(rng) for _ in range(300)]
-    pdf = events_to_pdf(events)
-    rows, subs = evaluator.evaluate(pdf)
+    rows, subs = evaluator.evaluate_arrow(event_batch(attributes(), events))
 
     got: dict[int, set] = {}
     for row, sub in zip(rows.tolist(), subs.tolist()):
@@ -143,13 +131,13 @@ def test_small_chunking_equals_single_pass():
         builder.insert(sub_id, random_expression(rng))
     forest = builder.compile()
     events = [random_event(rng) for _ in range(100)]
-    pdf = events_to_pdf(events)
+    batch = event_batch(attributes(), events)
 
     big = BatchEvaluator(forest)
     # Force tiny chunks through the memory budget knob
     small = BatchEvaluator(forest, memory_budget_bytes=1)
-    rows_a, subs_a = big.evaluate(pdf)
-    rows_b, subs_b = small.evaluate(pdf)
+    rows_a, subs_a = big.evaluate_arrow(batch)
+    rows_b, subs_b = small.evaluate_arrow(batch)
     a = sorted(zip(rows_a.tolist(), subs_a.tolist()))
     b = sorted(zip(rows_b.tolist(), subs_b.tolist()))
     assert a == b
@@ -159,12 +147,12 @@ def test_empty_inputs():
     builder = ForestBuilder(attributes())
     forest = builder.compile()
     evaluator = BatchEvaluator(forest)
-    rows, subs = evaluator.evaluate(events_to_pdf([]))
+    rows, subs = evaluator.evaluate_arrow(event_batch(attributes(), []))
     assert len(rows) == 0 and len(subs) == 0
 
     builder.insert(1, "private")
     evaluator = BatchEvaluator(builder.compile())
-    rows, subs = evaluator.evaluate(events_to_pdf([]))
+    rows, subs = evaluator.evaluate_arrow(event_batch(attributes(), []))
     assert len(rows) == 0
 
 
@@ -175,11 +163,6 @@ def test_access_pruning_selective_workload_with_planted_matches():
     including planted rows engineered to fire specific subscriptions
     (6.6x faster measured at 400 subs x 20k rows — recorded in
     BENCH/PLANS.md)."""
-    import numpy as np
-    import pandas as pd
-
-    from a_tree_spark.expr import AttributeDefinition as A, AttributeTable
-
     attrs = AttributeTable([A.integer("k"), A.integer_list("xs")])
     builder = ForestBuilder(attrs)
     rng = np.random.RandomState(7)
@@ -191,31 +174,27 @@ def test_access_pruning_selective_workload_with_planted_matches():
     forest = builder.compile()
 
     n = 4000
-    ks = rng.randint(0, 50, size=n).astype(object)
+    ks = rng.randint(0, 50, size=n).tolist()
     xs = [sorted(rng.randint(0, 100000, size=8).tolist()) for _ in range(n)]
     for i in range(0, 60, 3):  # plant rows that DO satisfy sub i
         ks[i] = i % 50
         xs[i] = sorted(rng.choice(wides[i], size=5, replace=False).tolist())
-    pdf = pd.DataFrame({"k": pd.Series(ks, dtype=object),
-                        "xs": pd.Series(xs, dtype=object)})
+    batch = event_batch(attrs, [{"k": k, "xs": x} for k, x in zip(ks, xs)])
 
     dense = BatchEvaluator(forest)
     pruned = BatchEvaluator(forest, access_pruning=True)
     assert len(pruned.lazy_leaf_idxs) > 0  # pruning actually engaged
-    a = sorted(zip(*map(np.ndarray.tolist, dense.evaluate(pdf))))
-    b = sorted(zip(*map(np.ndarray.tolist, pruned.evaluate(pdf))))
+    a = sorted(zip(*map(np.ndarray.tolist, dense.evaluate_arrow(batch))))
+    b = sorted(zip(*map(np.ndarray.tolist, pruned.evaluate_arrow(batch))))
     assert a == b and len(a) >= 20  # planted matches found by both
 
 
-def test_evaluate_arrow_matches_pandas_and_skips_object_lists(monkeypatch):
+def test_evaluate_arrow_matches_oracle_on_null_and_empty_lists():
     """The Arrow path (the general matcher's hot path since round 3)
-    must agree with the pandas path exactly AND never run
-    _ListColumn.__init__'s per-row python loop — list columns build
-    zero-copy from the ListArray's offsets/values (VERDICT.md round 2)."""
+    must agree with the single-event oracle on every row, including a
+    null list element, an empty list and a null list — also when the
+    string list's elements are typed null (``list<null>``)."""
     import pyarrow as pa
-
-    from a_tree_spark.expr import AttributeDefinition as A, AttributeTable, ForestBuilder
-    from a_tree_spark.expr import vector as V
 
     attrs = AttributeTable([
         A.string_list("tags"), A.integer("x"), A.string("s"),
@@ -241,17 +220,18 @@ def test_evaluate_arrow_matches_pandas_and_skips_object_lists(monkeypatch):
                          type=pa.list_(pa.int64())),
         "flag": pa.array([True, True, None, True, False, True]),
     })
-    pdf = batch.to_pandas()
-    want = sorted(zip(*map(np.ndarray.tolist, ev.evaluate(pdf))))
-
-    monkeypatch.setattr(
-        V._ListColumn, "__init__",
-        lambda self, series: (_ for _ in ()).throw(
-            AssertionError("pandas object-list path used in arrow hot path")
-        ),
+    null_tags = batch.set_column(
+        0, "tags", pa.array([[None], None, [], [None], [], [None, None]])
     )
-    got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
-    assert got == want and len(got) > 0
+    assert null_tags.schema.field("tags").type == pa.list_(pa.null())
+    for b in (batch, null_tags):
+        want = sorted(
+            (r, sub)
+            for r, event in enumerate(b.to_pylist())
+            for sub in evaluate_event(ev.forest, event)
+        )
+        got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(b))))
+        assert got == want and len(got) > 0
 
 
 def test_pull_block_trailing_empty_segment():
@@ -426,3 +406,52 @@ def test_subset_columns_share_one_dictionary_map():
                 ev._eval_generic_leaf(i, sub, len(idx)),
                 ev._eval_generic_leaf(i, tags_col, 200)[idx],
             )
+
+
+def test_float_decimals_round_half_up_at_scale_six():
+    """FLOAT decimals finer than scale 6 round ties away from zero, as
+    ``normalize_event`` (ROUND_HALF_UP) does — on negative ties too,
+    where Arrow's "half_up" (toward +inf) would differ: -0.0000005
+    must become -0.000001, not 0."""
+    import pyarrow as pa
+
+    attrs = AttributeTable([A.float("f")])
+    builder = ForestBuilder(attrs)
+    for sub_id, expression in enumerate([
+        "f < 0.0", "f >= 0.0", "f = 0.0", "f > 0.0",
+        "f = 1.234568", "f > 1.234567", "f <= 1.234567", "f = 1.234567",
+    ]):
+        builder.insert(sub_id, expression)
+    forest = builder.compile()
+    events = [
+        {"f": Decimal(v)}
+        for v in ["-0.0000005", "-1.2345675", "1.2345675", "0.0000005",
+                  "1.2345665", "-0.0000004", "2"]
+    ] + [{"f": None}]
+    batch = pa.record_batch(
+        [pa.array([e["f"] for e in events], type=pa.decimal128(12, 7))],
+        names=["f"],
+    )
+    got = sorted(zip(*map(np.ndarray.tolist,
+                          BatchEvaluator(forest).evaluate_arrow(batch))))
+    want = sorted(
+        (r, sub)
+        for r, event in enumerate(events)
+        for sub in evaluate_event(forest, normalize_event(attrs, event))
+    )
+    assert got == want
+    assert (0, 0) in got  # -0.0000005 -> -0.000001 < 0
+
+
+def test_unsupported_arrow_column_type_raises():
+    """A float64 column for a FLOAT attribute has no exact scale-6
+    reading; it must fail loudly instead of truncating 1.5 to 1."""
+    import pyarrow as pa
+
+    builder = ForestBuilder(AttributeTable([A.float("f")]))
+    builder.insert(1, "f > 1.234567")
+    ev = BatchEvaluator(builder.compile())
+    with pytest.raises(TypeError, match="float.*double"):
+        ev._scalar_from_arrow(pa.array([1.5]), AttributeKind.FLOAT)
+    with pytest.raises(TypeError, match="float.*double"):
+        ev.evaluate_arrow(pa.record_batch({"f": pa.array([1.5])}))

@@ -12,7 +12,6 @@ compile of the surviving expression set.
 import time
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from a_tree_spark.expr import (
@@ -27,6 +26,7 @@ from a_tree_spark.expr.compiler import LEAF
 from a_tree_spark.expr.parser import parse
 from a_tree_spark.expr.vector import BatchEvaluator
 from a_tree_spark.web import PAGE_ATTRIBUTES, standing_page_subscriptions
+from tests.conftest import event_batch
 
 ATTRS = AttributeTable([
     A.boolean("private"),
@@ -137,7 +137,7 @@ def test_compaction_drops_dead_leaves_and_preserves_matches():
     check_refcount_invariant(b)
 
 
-def _page_events(n: int, seed: int = 11) -> pd.DataFrame:
+def _page_events(n: int, seed: int = 11):
     from a_tree_spark.web.pipeline import TLD_TABLE
 
     rng = np.random.RandomState(seed)
@@ -147,18 +147,22 @@ def _page_events(n: int, seed: int = 11) -> pd.DataFrame:
         [f"tok{t}" for t in rng.randint(0, 5000, size=rng.randint(0, 6))]
         for _ in range(n)
     ]
-    return pd.DataFrame({
-        "lang": pd.Series([langs[i % len(langs)] for i in rng.randint(0, 97, n)], dtype=object),
-        "tld": pd.Series([tlds[i % len(tlds)] for i in rng.randint(0, 97, n)], dtype=object),
-        "n_tokens": pd.Series(rng.randint(0, 90, n).tolist(), dtype=object),
-        "has_geo": pd.Series(rng.rand(n) < 0.4, dtype=object),
-        "lat_band": pd.Series(rng.randint(0, 18, n).tolist(), dtype=object),
-        "lead_tokens": pd.Series(toks, dtype=object),
-    })
+    columns = {
+        "lang": [langs[i % len(langs)] for i in rng.randint(0, 97, n)],
+        "tld": [tlds[i % len(tlds)] for i in rng.randint(0, 97, n)],
+        "n_tokens": rng.randint(0, 90, n).tolist(),
+        "has_geo": (rng.rand(n) < 0.4).tolist(),
+        "lat_band": rng.randint(0, 18, n).tolist(),
+        "lead_tokens": toks,
+    }
+    return event_batch(
+        PAGE_ATTRIBUTES,
+        [dict(zip(columns, row)) for row in zip(*columns.values())],
+    )
 
 
-def _match_set(forest, pdf) -> set:
-    rows, subs = BatchEvaluator(forest).evaluate(pdf)
+def _match_set(forest, batch) -> set:
+    rows, subs = BatchEvaluator(forest).evaluate_arrow(batch)
     return set(zip(rows.tolist(), subs.tolist()))
 
 

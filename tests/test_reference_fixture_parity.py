@@ -11,7 +11,6 @@ single-node oracle == vectorized batch evaluator == Spark matcher.
 import json
 import os
 
-import pandas as pd
 import pytest
 
 FIXTURE = "/root/reference/benches/data/search.json"
@@ -40,6 +39,7 @@ def load():
 def test_fixture_parses_and_matches_consistently():
     from a_tree_spark.expr import ForestBuilder, evaluate_event, normalize_event
     from a_tree_spark.expr.vector import BatchEvaluator
+    from tests.conftest import event_batch
 
     attributes, expressions, events = load()
     builder = ForestBuilder(attributes)
@@ -54,11 +54,9 @@ def test_fixture_parses_and_matches_consistently():
     ]
 
     # vectorized outcomes on the same two rows
-    pdf = pd.DataFrame({
-        name: pd.Series([e.get(name) for e in events], dtype=object)
-        for name in attributes.names()
-    })
-    rows, subs = BatchEvaluator(forest).evaluate(pdf)
+    rows, subs = BatchEvaluator(forest).evaluate_arrow(
+        event_batch(attributes, events)
+    )
     vectorized = [set() for _ in events]
     for row, sub in zip(rows.tolist(), subs.tolist()):
         vectorized[row].add(sub)

@@ -43,10 +43,10 @@ def test_extraction_byte_identical_oracle():
 
 def test_extraction_byte_identical_on_spark(spark):
     pages = synth_pages_df(spark, N_PAGES, partitions=4)
-    from a_tree_spark.web import with_extracted_text
+    from a_tree_spark.web.extract import with_page_features
 
     bad = (
-        with_extracted_text(pages)
+        with_page_features(pages, keep=["text"])
         .where("extracted_text <> text")
         .count()
     )
