@@ -27,77 +27,9 @@ by the band width, so AQE skew-join covers it).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, functions as F
 
-#: serializes the persistent-RDD snapshot-diff in duplicate_clusters
-#: (see _ckpt_tracked) against concurrent driver threads
-_CKPT_LOCK = threading.Lock()
-
-#: bounded FIFO of simhash signature checkpoint block-id sets. One slot
-#: (ADVICE r5) broke the driver's construct-then-execute pattern: the
-#: gate builds dedup_simhash_pairs / dedup_clusters / dedup_canonical /
-#: corpus_curation as LAZY frames before materializing any, so slot
-#: eviction on construction released storage whose consumer had not
-#: run yet, silently reintroducing the 4x double-compute (ADVICE r6).
-#: Round 8: the frames are TRACKED LOCALCHECKPOINTS, not .cache() —
-#: Spark's cache is PLAN-KEYED, so two calls caching the identical
-#: signature plan shared one InMemoryRelation and the FIFO's
-#: unpersist() of the OLD frame evicted the entry out from under the
-#: CURRENT query (measured in the round-8 suite run: dedup_simhash_
-#: pairs 18.9s after dedup_clusters/canonical had cycled the FIFO, vs
-#: 4.3s in isolation, steal 0.1%). localCheckpoint storage is RDD-
-#: private, so eviction frees exactly the evicted call's blocks; eight
-#: slots (the blocks are now actually freed, and each holds ~1e5
-#: 16-byte rows, so headroom is cheap). Mutation is lock-guarded (same
-#: concurrent-driver-threads concern as _CKPT_LOCK).
-_SIMHASH_SIG_CACHE: list = []
-_SIMHASH_SIG_SLOTS = 8
-_SIMHASH_SIG_LOCK = threading.Lock()
-
-
-def _persistent_rdd_ids(sc) -> set:
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _free_rdd_ids(sc, ids: set) -> None:
-    jmap = sc._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist(False)
-
-
-def _fifo_local_ckpt(df: DataFrame, spread: bool = False) -> DataFrame:
-    """Lazy localCheckpoint with its storage enrolled in the bounded
-    signature FIFO: per-call private blocks (no plan-keyed sharing),
-    freed when the slot ages out. The snapshot diff runs under
-    _CKPT_LOCK like duplicate_clusters' (ADVICE r5).
-
-    ``spread=True`` round-robins the relation over 2x the cluster's
-    default parallelism BEFORE checkpointing. AQE sizes the upstream
-    aggregate's partitions by BYTES, which coalesced the signature
-    table to ~10 partitions — but the downstream band self-join
-    amplifies output ~500x (29.4M pairs from 53k docs at sf1.0), and
-    the probe stage inherits the checkpoint's partitioning, so 10
-    partitions idled 2/3 of the cores (measured: 19s vs 4.8s for the
-    identical join at 64 partitions). Scale-adaptive (derived from
-    defaultParallelism, not a constant), and the extra round-robin
-    exchange moves only the signature-sized relation (guide §2.5:
-    partition for the work you fan OUT to, not the bytes you hold)."""
-    sc = df.sparkSession.sparkContext
-    if spread:
-        df = df.repartition(2 * sc.defaultParallelism)
-    with _CKPT_LOCK:
-        before = _persistent_rdd_ids(sc)
-        out = df.localCheckpoint(eager=False)
-        ids = _persistent_rdd_ids(sc) - before
-    with _SIMHASH_SIG_LOCK:
-        _SIMHASH_SIG_CACHE.append((sc, ids))
-        while len(_SIMHASH_SIG_CACHE) > _SIMHASH_SIG_SLOTS:
-            old_sc, old_ids = _SIMHASH_SIG_CACHE.pop(0)
-            _free_rdd_ids(old_sc, old_ids)
-    return out
+from .materialize import Held, retain, retained
 
 # 128 seeds in 16 bands of r=8: the LSH S-curve midpoint (1/b)^(1/r) =
 # (1/16)^(1/8) ≈ 0.707 sits exactly at the 0.7 Jaccard threshold — the
@@ -250,7 +182,7 @@ def ngram_jaccard_pairs(corpus: DataFrame) -> DataFrame:
     single big shuffle; AQE skew-join handles residual hot shingles) ->
     per-pair intersection counts -> join per-doc sizes -> integer filter.
     """
-    rare = _rare_shingles(corpus).cache()
+    rare = _rare_shingles(corpus)
     sizes = rare.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     left = rare.withColumnRenamed("doc_id", "doc_a")
     right = rare.withColumnRenamed("doc_id", "doc_b")
@@ -404,6 +336,9 @@ def minhash_lsh_pairs(
     """
     rare = _rare_shingles(corpus)
     hashed = rare.withColumn("h", F.expr(_shingle_h_fast()))
+    # not materialized, though two branches read it: a retained
+    # checkpoint would pin every doc's 128 mins and shingle array for
+    # RETAINED_CALLS calls
     signatures = (
         hashed.groupBy("doc_id")
         .agg(
@@ -411,7 +346,6 @@ def minhash_lsh_pairs(
             F.collect_list("shingle").alias("_shs"),
             F.count("*").alias("_n_sh"),
         )
-        .cache()
     )
     per_band = n_seeds // n_bands
     # ONE projection + posexplode for all band keys: a per-band union
@@ -650,12 +584,18 @@ def simhash_near_dup_pairs(
     join's ``MAX_SHINGLE_DF``)."""
     # checkpoint the signatures: the self-join references them on BOTH
     # sides, and without materialization Spark recomputes the
-    # signature aggregation pipeline twice. Tracked localCheckpoint,
-    # NOT .cache(): see _SIMHASH_SIG_CACHE — the plan-keyed cache let
-    # one call's FIFO eviction unpersist another call's identical-plan
-    # entry mid-query. At real scale signatures persist to a table
-    # instead.
-    sig = _fifo_local_ckpt(simhash_signatures(corpus), spread=True)
+    # signature aggregation pipeline twice. At real scale signatures
+    # persist to a table instead. Spread to 2x default parallelism
+    # first: AQE sizes the aggregate's partitions by bytes (~10), but
+    # the band self-join amplifies output ~500x (29.4M pairs from 53k
+    # docs at sf1.0) and inherits the checkpoint's partitioning
+    # (measured: 19 s vs 4.8 s for the identical join at 64
+    # partitions). simhash_duplicate_clusters spreads its signature
+    # groups for the same reason.
+    sc = corpus.sparkSession.sparkContext
+    sig = retained(
+        simhash_signatures(corpus).repartition(2 * sc.defaultParallelism)
+    )
     bands = sig.select(
         "doc_id",
         "simhash",
@@ -779,12 +719,6 @@ def simhash_oracle(text: str) -> int:
 #: any scale.
 DRIVER_RESOLVE_MAX_PAIRS = 1_000_000
 
-#: above the driver gate, the distributed loop ALWAYS contracts first:
-#: every graph measured past the gate won (29.4M-pair doc graph: 26s
-#: of full-edge re-joins without it; the 148k-pair signature graph ran
-#: ~2s/round uncontracted vs ~2 near-empty rounds contracted)
-CONTRACT_MIN_PAIRS = DRIVER_RESOLVE_MAX_PAIRS
-
 
 def duplicate_clusters(
     pairs: DataFrame, max_rounds: int = 25, stats: dict | None = None
@@ -808,7 +742,7 @@ def duplicate_clusters(
     map twice gives L^3 per round, cutting round count ~1.7x for one
     extra small join) plus one map-side-combined groupBy min, all on
     the same doc_id key — AQE coalesces the tiny tail as components
-    collapse. localCheckpoint after every round truncates the
+    collapse. A local checkpoint after every round truncates the
     iterative lineage (a cache-only variant was measured WORSE: plan
     depth grows per round and planning dominates). Convergence is the
     decimal label sum — labels only ever decrease, so an unchanged sum
@@ -820,77 +754,18 @@ def duplicate_clusters(
     claim is pinned by a 128-node path-graph test (worst diameter per
     edge count) finishing in <= 9 rounds, where plain neighbor
     propagation would need 127."""
-    sc = pairs.sparkSession.sparkContext
-
-    def _persistent_ids() -> set:
-        return {
-            int(k)
-            for k in sc._jsc.getPersistentRDDs().keySet().toArray()
-        }
-
-    def _ckpt_tracked(df: DataFrame) -> tuple[DataFrame, set]:
-        """localCheckpoint + the storage ids it created, so superseded
-        rounds can be freed eagerly. df.unpersist() does NOT release
-        localCheckpoint blocks (measured: the block survives), and the
-        ContextCleaner only frees them at some later GC — an iterative
-        loop would otherwise hold O(rounds x |V|) checkpoint storage.
-        The snapshot-diff is serialized under _CKPT_LOCK: a concurrent
-        driver thread persisting between the two snapshots would get
-        its (non-recomputable) localCheckpoint blocks attributed to —
-        and later freed by — this loop (ADVICE r5).
-
-        eager=False: every checkpoint here is followed by an action
-        that consumes it (the label-sum convergence scan, or the next
-        derivation job), so the lazy form halves the JOBS per loop
-        round — the eager checkpoint ran one job to materialize and the
-        sum ran a second over the same blocks (guide §1.2: per-round
-        fixed cost dominates once the relations are contracted)."""
-        with _CKPT_LOCK:
-            before = _persistent_ids()
-            out = df.localCheckpoint(eager=False)
-            return out, _persistent_ids() - before
-
-    def _free(ids: set) -> None:
-        jmap = sc._jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            if int(k) in ids:
-                jmap.get(k).unpersist(False)
-
     # checkpoint the PAIR relation itself, then derive both edge
     # directions from the checkpointed blocks: a union of two
     # projections of the raw `pairs` plan duplicates the whole upstream
     # pair pipeline (signature aggregation + band self-join) inside one
     # job — the two branches are separate subtrees, so exchange reuse
-    # does not collapse them (guide §2.4: remove duplicated subtrees)
-    pairs_ck, edge_ids = _ckpt_tracked(pairs.select("doc_a", "doc_b"))
-    edges_full = pairs_ck.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(
-        pairs_ck.select(
-            F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-        )
-    )
-    # ONE-ROUND GRAPH CONTRACTION before the loop, SIZE-GATED (guide
-    # §2.3: shuffle fewer bytes; measured sf1.0: 29.4M near-dup pairs
-    # over 52.8k nodes — near-clique components — made every loop round
-    # re-join the full 58.7M-row edge relation, 26s of the query wall;
-    # but for the few-thousand-pair graphs the OTHER consumers feed
-    # (cell adjacency, signature pairs, embedding near-dups) the two
-    # extra checkpoints + compose join are pure overhead, measured
-    # +0.7s on spatial_cluster). The count below is ~free: it performs
-    # the checkpoint materialization the next job needs first-touch
-    # anyway. The seed mapping rep(v) = min(v, neighbours(v)) collapses
-    # cliques and stars (the dominant dup shapes) in one pass;
-    # rewriting each pair modulo the mapping and dropping intra-class
-    # edges leaves only the edges BETWEEN seed classes, so the loop
-    # iterates over a relation sized by the residual graph, not the
-    # raw pair count. Correctness: contraction is component-preserving,
-    # the component minimum m maps to itself (it has no smaller
-    # neighbour), so the loop's labels on representatives are the true
-    # component minima, and composing final(v) =
-    # coalesce(loop_label(rep(v)), rep(v)) reproduces the exact
-    # min-reachable-id output (a class with no inter-class edge IS a
-    # whole component, and its rep is then that minimum).
+    # does not collapse them (guide §2.4: remove duplicated subtrees).
+    # One Held per relation frees each superseded round eagerly. Every
+    # checkpoint is lazy: an action consumes it next (the count, the
+    # label-sum scan or the next derivation), and the eager form cost
+    # a second job per round (guide §1.2: per-round fixed cost).
+    edges_held = Held()
+    pairs_ck = edges_held.checkpoint(pairs.select("doc_a", "doc_b"))
     n_pairs = pairs_ck.count()
     if n_pairs <= DRIVER_RESOLVE_MAX_PAIRS:
         # bounded driver-side resolution (see DRIVER_RESOLVE_MAX_PAIRS):
@@ -947,47 +822,66 @@ def duplicate_clusters(
             out_pdf = pd.DataFrame(
                 {"doc_id": uniq, "cluster_id": uniq[lbl]}
             )
-        _free(edge_ids)
+        edges_held.release()
         if stats is not None:
             stats["rounds"] = 0
         return pairs.sparkSession.createDataFrame(
             out_pdf, schema="doc_id long, cluster_id long"
         )
-    contract = n_pairs >= CONTRACT_MIN_PAIRS
-    if contract:
-        mapping, map_ids = _ckpt_tracked(
-            edges_full.groupBy(F.col("src").alias("id"))
-            .agg(F.min("dst").alias("mn"))
-            .select("id", F.least("id", "mn").alias("rep"))
+    # ONE-ROUND GRAPH CONTRACTION before the loop (guide §2.3: shuffle
+    # fewer bytes). Every graph measured past the driver gate won with
+    # it: at sf1.0, 29.4M near-dup pairs over 52.8k nodes made every
+    # uncontracted round re-join the full 58.7M-row edge relation (26 s
+    # of the query wall). The seed mapping rep(v) = min(v, neighbours(v))
+    # collapses cliques and stars (the dominant dup shapes) in one
+    # pass; rewriting each pair modulo the mapping and dropping
+    # intra-class edges leaves only the edges BETWEEN seed classes, so
+    # the loop iterates over a relation sized by the residual graph,
+    # not the raw pair count. Correctness: contraction is component-
+    # preserving, the component minimum m maps to itself (it has no
+    # smaller neighbour), so the loop's labels on representatives are
+    # the true component minima, and composing final(v) =
+    # coalesce(loop_label(rep(v)), rep(v)) reproduces the exact
+    # min-reachable-id output (a class with no inter-class edge IS a
+    # whole component, and its rep is then that minimum).
+    edges_full = pairs_ck.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).union(
+        pairs_ck.select(
+            F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
         )
-        cpairs = (
-            pairs_ck.join(
-                mapping.select(F.col("id").alias("doc_a"),
-                               F.col("rep").alias("ra")), "doc_a")
-            .join(
-                mapping.select(F.col("id").alias("doc_b"),
-                               F.col("rep").alias("rb")), "doc_b")
-            .where(F.col("ra") != F.col("rb"))
-            .select(
-                F.least("ra", "rb").alias("pa"),
-                F.greatest("ra", "rb").alias("pb"),
-            )
-            .distinct()
+    )
+    mapping_held = Held()
+    mapping = mapping_held.checkpoint(
+        edges_full.groupBy(F.col("src").alias("id"))
+        .agg(F.min("dst").alias("mn"))
+        .select("id", F.least("id", "mn").alias("rep"))
+    )
+    cpairs = (
+        pairs_ck.join(
+            mapping.select(F.col("id").alias("doc_a"),
+                           F.col("rep").alias("ra")), "doc_a")
+        .join(
+            mapping.select(F.col("id").alias("doc_b"),
+                           F.col("rep").alias("rb")), "doc_b")
+        .where(F.col("ra") != F.col("rb"))
+        .select(
+            F.least("ra", "rb").alias("pa"),
+            F.greatest("ra", "rb").alias("pb"),
         )
-        cpairs_ck, cpair_ids = _ckpt_tracked(cpairs)
-        edges = cpairs_ck.select(
-            F.col("pa").alias("src"), F.col("pb").alias("dst")
-        ).union(
-            cpairs_ck.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-        )
-    else:
-        mapping = None
-        map_ids = cpair_ids = set()
-        edges = edges_full
+        .distinct()
+    )
+    cpairs_ck = edges_held.checkpoint(cpairs)
+    edges = cpairs_ck.select(
+        F.col("pa").alias("src"), F.col("pb").alias("dst")
+    ).union(
+        cpairs_ck.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
+    )
     # seed with min(self, direct neighbours): star components (the
     # dominant near-dup shape) converge at init and exit after one
     # verification round instead of two
-    labels, label_ids = _ckpt_tracked(
+    labels_held = Held()
+    labels = labels_held.checkpoint(
         edges.groupBy(F.col("src").alias("id"))
         .agg(F.min("dst").alias("mn"))
         .select("id", F.least("id", "mn").alias("lbl"))
@@ -1001,9 +895,7 @@ def duplicate_clusters(
         ).collect()[0]["s"]
 
     prev_sum = _label_sum(labels)
-    rounds = 0
-    for _ in range(max_rounds):
-        rounds += 1
+    for rounds in range(1, max_rounds + 1):
         nbr = (
             edges.join(labels.withColumnRenamed("id", "dst"), "dst")
             .select(F.col("src").alias("id"), "lbl")
@@ -1017,7 +909,8 @@ def duplicate_clusters(
             .join(jmap, "lbl")
             .select("id", F.col("jlbl").alias("lbl"))   # L^3(id)
         )
-        new_labels, new_ids = _ckpt_tracked(
+        new_held = Held()
+        new_labels = new_held.checkpoint(
             labels.select("id", "lbl")
             .union(nbr)
             .union(jump)
@@ -1025,27 +918,26 @@ def duplicate_clusters(
             .agg(F.min("lbl").alias("lbl"))
         )
         new_sum = _label_sum(new_labels)
-        _free(label_ids)   # the superseded round's blocks, eagerly
-        labels, label_ids = new_labels, new_ids
+        labels_held.release()   # the superseded round's blocks, eagerly
+        labels, labels_held = new_labels, new_held
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
     else:
+        for held in (edges_held, mapping_held, labels_held):
+            held.release()
         raise RuntimeError(
             f"duplicate_clusters did not converge in {max_rounds} rounds"
         )
-    _free(edge_ids)
-    _free(cpair_ids)
+    edges_held.release()
     if stats is not None:
         stats["rounds"] = rounds
-    if not contract:
-        return labels.select(
-            F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id")
-        )
     # compose the loop's representative labels back through the seed
     # mapping; a rep with no loop row heads a class that is a whole
-    # component, whose minimum is the rep itself
-    out, out_ids = _ckpt_tracked(
+    # component, whose minimum is the rep itself. The caller runs
+    # `out` later, so it is retained.
+    out_held = Held()
+    out = out_held.checkpoint(
         mapping.join(
             labels.withColumnRenamed("id", "rep"), "rep", "left"
         ).select(
@@ -1053,8 +945,9 @@ def duplicate_clusters(
             F.coalesce("lbl", "rep").alias("cluster_id"),
         )
     )
-    _free(map_ids)
-    _free(label_ids)
+    retain(out_held)
+    mapping_held.release()
+    labels_held.release()
     return out
 
 
@@ -1085,12 +978,16 @@ def simhash_duplicate_clusters(
     sibling) or its class meets another class (a cross-signature pair)
     — exactly the ">= 1 pair" membership rule. Pinned against the
     generic pair-graph path by tests and the driver oracle."""
-    sig = _fifo_local_ckpt(simhash_signatures(corpus))
-    groups = _fifo_local_ckpt(
+    # one handle, one FIFO slot for both checkpoints
+    sc = corpus.sparkSession.sparkContext
+    held = Held()
+    sig = held.checkpoint(simhash_signatures(corpus))
+    groups = held.checkpoint(
         sig.groupBy("simhash")
-        .agg(F.min("doc_id").alias("mn"), F.count("*").alias("cnt")),
-        spread=True,
+        .agg(F.min("doc_id").alias("mn"), F.count("*").alias("cnt"))
+        .repartition(2 * sc.defaultParallelism)
     )
+    retain(held)
     # TWO-LEVEL PIGEONHOLE band keys (guide §2.3: shuffle/evaluate
     # fewer candidates). The single 16-bit band key left hot buckets:
     # measured sf1.0, 34.6k distinct signatures produced 25.9M band-

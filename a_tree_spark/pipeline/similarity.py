@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import _splitmix64
+from .materialize import retained
 
 EMBED_DIM = 64
 DEFAULT_K = 5
@@ -487,8 +488,9 @@ def embedding_near_dup_pairs(
     (|a|^2 |b|^2) with doubles evaluated in identical IEEE order."""
     # ROUND-8 SHAPE (same output, fewer shuffles): one WIDE row per
     # vector carrying its embedding AND all band keys, checkpointed
-    # once; per band, a broadcast self-join on that band's key with
-    # (a) the FIRST-MATCHING-BAND predicate replacing the old
+    # once (retained: the caller runs the frame later); per band, a
+    # broadcast self-join on that band's key with (a) the
+    # FIRST-MATCHING-BAND predicate replacing the old
     # .distinct() over multi-band candidate duplicates (an Exchange of
     # millions of rows at sf1.0), and (b) the exact cosine verify
     # evaluated in the join residual — both embeddings already ride
@@ -498,8 +500,6 @@ def embedding_near_dup_pairs(
     # never re-attach payloads through an extra shuffle.
     import numpy as np
     import pyarrow as pa
-
-    from .dedup import _fifo_local_ckpt
 
     emb_type = embeddings.schema["embedding"].dataType.simpleString()
 
@@ -524,7 +524,7 @@ def embedding_near_dup_pairs(
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     band_cols = ", ".join(f"b{b} long" for b in range(n_bands))
-    vecs = _fifo_local_ckpt(
+    vecs = retained(
         _spread(embeddings.select("vec_id", "embedding")).mapInArrow(
             gen, schema=f"vec_id long, embedding {emb_type}, {band_cols}"
         )

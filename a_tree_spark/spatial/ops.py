@@ -20,6 +20,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..pipeline.materialize import Held, retain, retained
 from .cells import (
     DEFAULT_LEVEL,
     cell_id_sql,
@@ -158,10 +159,12 @@ def knn_join(
     # The POINTS side keeps its (shallow) lineage: scan -> project ->
     # cell encode is a pruned columnar read, and re-running it per
     # expansion round beats eagerly materializing the big table —
-    # round 1 localCheckpoint()ed all of points per knn call, a scale-
-    # killer at 1e12 rows and the main source of knn bench variance
+    # round 1 checkpointed all of points per knn call, a scale-killer
+    # at 1e12 rows and the main source of knn bench variance
     # (VERDICT.md). Only the QUERY side — small, and shrinking every
     # round — is pinned to truncate the per-round anti-join lineage.
+    # The lazy result union reads every round's pending checkpoint.
+    held = Held()
     pts = with_cell_id(points, lat_col, lon_col, level).select(
         F.col(point_id_col),
         F.col(lat_col).alias("_p_lat"),
@@ -173,7 +176,8 @@ def knn_join(
         F.col(lat_col).alias("_q_lat"),
         F.col(lon_col).alias("_q_lon"),
         F.col("cell_id").alias("_q_cell"),
-    ).localCheckpoint()
+    )
+    pending = held.checkpoint(pending, eager=True)
 
     results = None
     radius = initial_radius
@@ -221,17 +225,18 @@ def knn_join(
         )
         results = finished if results is None else results.unionByName(finished)
 
-        pending = pending.join(
-            F.broadcast(done_ids), query_id_col, "left_anti"
-        ).localCheckpoint()
+        left = pending.join(F.broadcast(done_ids), query_id_col, "left_anti")
+        pending = held.checkpoint(left, eager=True)
         if grid_covered or pending.isEmpty():
             break
         radius *= 2
     else:
+        held.release()
         raise RuntimeError(
             f"knn_join did not converge in {max_rounds} rounds (radius={radius})"
         )
 
+    retain(held)
     return results
 
 
@@ -664,19 +669,19 @@ def grid_cluster(
     Output: (``id_col``, cell_id, cluster_id) for points in core cells.
 
     ``checkpoint``: DataFrame -> DataFrame hook that cuts the core
-    relation's lineage (VERDICT r7 item 6). Default is a lazy
-    ``localCheckpoint`` — right for the sandbox, but an executor loss
-    at scale recomputes the point-sized aggregation; on a real cluster
-    pass e.g. ``lambda df: df.checkpoint(eager=False)`` (reliable,
-    survives executor loss) after ``setCheckpointDir``.
+    relation's lineage (VERDICT r7 item 6). Default is a lazy local
+    checkpoint retained by ``pipeline.materialize`` — right for the
+    sandbox, but an executor loss at scale recomputes the point-sized
+    aggregation; on a real cluster pass e.g.
+    ``lambda df: df.checkpoint(eager=False)`` (reliable, survives
+    executor loss) after ``setCheckpointDir``.
     """
     from ..pipeline.dedup import duplicate_clusters
 
     if min_pts < 1:
         raise ValueError(f"min_pts must be >= 1, got {min_pts}")
     if checkpoint is None:
-        def checkpoint(df):
-            return df.localCheckpoint(eager=False)
+        checkpoint = retained
     n = grid_size(level)
     pts = points.selectExpr(
         id_col, f"{cell_id_sql(lat_col, lon_col, level)} AS cell_id"

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..engine.matcher import broadcast_evaluator, match_events
 from ..expr import AttributeDefinition as A, AttributeTable, ForestBuilder
 from ..expr.vector import planned_evaluator
+from ..pipeline.materialize import Held, retain
 from ..spatial.cells import DEFAULT_LEVEL
 from .extract import with_page_features
 from .geotag import geotag_pages
@@ -854,6 +855,7 @@ def sharded_root_partials(
     parts: list[DataFrame] = []
     maps: list[DataFrame] = []
     offset = 0
+    held = Held()
     for forest in forests:
         n_roots = len(planned_evaluator(forest.compile()).root_nodes)
         handles: list = []
@@ -879,17 +881,20 @@ def sharded_root_partials(
             # OOM at 32 workers). Output rows are identical: the union
             # is over the same per-shard relations, materialized or
             # not (pinned by test_sharded_isolate_equals_union).
-            p = p.localCheckpoint(eager=True)
+            p = held.checkpoint(p, eager=True)
             for h in handles:
                 h.destroy()
         parts.append(p)
         maps.append(m)
         offset += n_roots
     if offset >= (1 << sub_width):
+        held.release()
         raise ValueError(
             f"total distinct roots {offset} across {len(forests)} shards "
             f"must fit in {sub_width} bits at level {level}"
         )
+    if isolate_shards:
+        retain(held)
     return reduce(DataFrame.union, parts), reduce(DataFrame.union, maps)
 
 

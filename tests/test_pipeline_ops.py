@@ -648,7 +648,9 @@ def test_duplicate_clusters_log_round_convergence(spark, monkeypatch):
     """Pointer jumping must converge in O(log diameter): a 128-node
     path graph (diameter 127) resolves in <= 9 rounds where plain
     neighbor propagation needs 127. Forced onto the distributed loop
-    (round 8 resolves graphs this small driver-side by default)."""
+    (round 8 resolves graphs this small driver-side by default), which
+    contracts first: the seed mapping shifts the path by one node, so
+    the loop still runs over a 127-node path."""
     from a_tree_spark.pipeline import dedup
     from a_tree_spark.pipeline.dedup import duplicate_clusters
 
@@ -696,9 +698,9 @@ def test_duplicate_clusters_matches_union_find(spark, monkeypatch):
     """Third oracle for the CC operator (besides the crafted graphs and
     the DuckDB recursive CTE): a pure-python union-find over seeded
     random graphs — a different algorithm family, so a shared bug
-    can't hide. Forced onto the distributed loop; the default driver-
-    side path is union-find itself and is pinned by the equivalence
-    tests below."""
+    can't hide. Forced onto the distributed (contracted) loop; the
+    default driver-side path is union-find itself and is pinned by the
+    equivalence tests below."""
     import random
 
     from a_tree_spark.pipeline import dedup
@@ -995,9 +997,9 @@ def test_domain_stats_two_exchange_aggregate(spark):
 
 
 def test_contracted_clusters_match_direct_loop(spark, monkeypatch):
-    """Round-8 internals pin: duplicate_clusters gates its pre-loop
-    graph contraction on the measured pair count (CONTRACT_MIN_PAIRS).
-    Force contraction ON (gate=0) and OFF (gate=inf) over graphs mixing
+    """Round-8 internals pin: above the driver gate, duplicate_clusters
+    contracts the graph before its label loop. Force the distributed
+    path (gate=0) and the driver path (gate=inf) over graphs mixing
     cliques, chains, stars and singleton pairs — both paths must emit
     the identical (doc_id, cluster_id) relation."""
     import random
@@ -1020,18 +1022,16 @@ def test_contracted_clusters_match_direct_loop(spark, monkeypatch):
         "doc_a long, doc_b long, hamming long",
     )
 
-    def run(driver_gate, contract_gate):
+    def run(driver_gate):
         monkeypatch.setattr(dedup, "DRIVER_RESOLVE_MAX_PAIRS", driver_gate)
-        monkeypatch.setattr(dedup, "CONTRACT_MIN_PAIRS", contract_gate)
         return sorted(
             (r["doc_id"], r["cluster_id"])
             for r in dedup.duplicate_clusters(pairs).collect()
         )
 
-    driver = run(10**9, 10**9)      # driver-side union-find
-    contracted = run(0, 0)          # distributed, contraction forced
-    direct = run(0, 10**9)          # distributed, plain loop
-    assert driver == contracted == direct
+    driver = run(10**9)      # driver-side union-find
+    contracted = run(0)      # distributed, contracted loop
+    assert driver == contracted
 
 
 def test_simhash_signature_clusters_match_pair_graph_path(spark):
