@@ -169,9 +169,14 @@ def make_predicate(
     # Per-table memo: templated workloads repeat leaves heavily (3k
     # distinct across 1e5 subscriptions), and Predicate construction +
     # validation was ~12% of a full compile. Predicate is frozen, so
-    # sharing instances is safe; DSL operands are always hashable.
+    # sharing instances is safe; DSL operands are always hashable. The
+    # key carries the operand's type (a tuple's, its element type): 1,
+    # True and Decimal('1.0') are equal keys, and each must be validated.
     cache = attributes.__dict__.setdefault("_predicate_cache", {})
-    key = (name, op, operand)
+    typed = type(operand)
+    if typed is tuple and operand:
+        typed = (tuple, type(operand[0]))
+    key = (name, op, typed, operand)
     predicate = cache.get(key)
     if predicate is None:
         index = attributes.index_of(name)

@@ -1,4 +1,8 @@
-"""Tokenizer for the boolean-expression DSL.
+"""Tokenizer for the boolean-expression DSL: the exact tier's lexer.
+
+``parser.parse`` reads most expressions with its one-match-per-predicate
+scanner and comes here only when that scanner declines, so this lexer
+is the fallback and the source of every lexical and syntax error.
 
 Behavior-matched to the reference's logos lexer
 (/root/reference/src/lexer.rs:18-117):
@@ -22,7 +26,7 @@ from __future__ import annotations
 
 import re
 from decimal import Decimal
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
 from .errors import LexicalError
 
@@ -70,23 +74,6 @@ _KEYWORDS: list[tuple[str, str]] = sorted(
     ],
     key=lambda kv: -len(kv[0]),
 )
-
-_IDENT_RE = re.compile(r"[a-zA-Z_][a-zA-Z0-9_-]*")
-_INT_RE = re.compile(r"-?[0-9]+")
-_FLOAT_RE = re.compile(r"[0-9]+\.[0-9]*")
-_STRING_RE = re.compile(r"\"(\\.|[^\"\\])*\"|'(\\.|[^'\\])*'")
-_WS_RE = re.compile(r"[ \t\n\r\f]+")
-
-
-# first-character dispatch: only try the keywords that can start here
-# (compile-path hot loop — 1e5-expression forests lex ~1e7 tokens)
-_KW_BY_CHAR: dict = {}
-for _lit, _kind in _KEYWORDS:
-    _KW_BY_CHAR.setdefault(_lit[0], []).append((_lit, _kind))
-_IDENT_START = set("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ_")
-_NUM_START = set("0123456789-")
-_WS = set(" \t\n\r\f")
-
 
 # Single master regex (compile-path hot loop — 1e5-expression forests
 # lex ~1e7 tokens; one C-level match per token replaced a ~4-candidate
@@ -146,7 +133,3 @@ def lex(text: str) -> list[Token]:
         append(token(kind, value, pos))
         pos = m.end()
     return out
-
-
-def tokenize(text: str) -> Iterator[Token]:
-    return iter(lex(text))

@@ -22,10 +22,35 @@ compares interned StringIds, whose ordering can disagree with string
 ordering when expressions share literals (src/strings.rs:4-40) — a latent
 bug in sorted-merge membership. We compare actual string values, which
 matches the reference on its entire test suite and fixes the edge case.
+
+Two tiers. ``parse`` first runs a scanner that reads each whole
+``attr op literal`` predicate, plus the ``not``/``!``/``(`` before it and
+the ``)``/``and``/``or`` after it, in one match of one compiled regex; a
+``[..]`` list body takes one ``fullmatch`` and one ``findall``. It builds
+the same ``Node`` tree through ``make_predicate``. On any doubt it
+declines and ``parse`` runs the exact tier, ``lex`` + ``_Parser``,
+unchanged, so every error (class, message, position) comes from the
+exact tier. The scanner declines on:
+
+- a multi-word keyword at an operand position (the lexer matches
+  ``not in``, ``is null``, ... unguarded, so ``not inx`` is NOT_IN);
+- an attribute name that is a keyword word (``_KEYWORD_WORDS``);
+- a literal or null-op that runs on into an identifier character
+  (``= 30abc``, ``is nullable``);
+- a ``(..)`` list, a reversed comparison, a float in a list, or a
+  mixed, empty or trailing-comma list;
+- a string containing a quote or backslash (the lexer's
+  ``strip("'\"")`` semantics apply there);
+- any exception, ``MismatchingTypes`` and unknown attributes included.
+
+The scanner keeps its parentheses on an explicit stack, so nesting
+deeper than Python's recursion limit parses on the scanner tier where
+the exact tier would raise ``RecursionError``.
 """
 
 from __future__ import annotations
 
+import re
 from decimal import Decimal
 
 from .ast import Node, Op, make_predicate
@@ -244,9 +269,135 @@ class _Parser:
         return tuple(sorted(set(values)))
 
 
-def parse(text: str, attributes: AttributeTable) -> Node:
-    """Parse a DSL expression against a schema. Raises ParserError /
-    EventError subclasses exactly where the reference does."""
+# ---------------------------------------------------------------- scanner
+
+_WS = r"[ \t\n\r\f]*"  # the lexer's whitespace class, not \s
+_NO_IDENT = r"(?![a-zA-Z0-9_-])"
+_STR = r"'[^'\"\\]*'|\"[^'\"\\]*\""
+
+# One predicate between two operand boundaries. The lookaheads pin the
+# lexer's longest match. After a name, a prefix ``not`` and a joining
+# ``and``/``or`` they are what keeps backtracking from splitting a token
+# ("notx", "andy"). After a literal or null-op the continuation alone
+# would already decline "= 30abc"; the lookahead makes "= 30and x"
+# decline too, so any token running into an identifier goes exact.
+_PREDICATE_RE = re.compile(
+    rf"(?P<prefix>(?:{_WS}(?:not(?! in){_NO_IDENT}|!|\())*){_WS}"
+    rf"(?P<name>[a-zA-Z_][a-zA-Z0-9_-]*){_NO_IDENT}{_WS}"
+    r"(?:"
+    rf"(?P<cmp><=|>=|<>|<|>|=){_WS}"
+    r"(?:(?P<float>[0-9]+\.[0-9]*)|(?P<int>-?[0-9]+)"
+    rf"|'(?P<sq>[^'\"\\]*)'|\"(?P<dq>[^'\"\\]*)\"){_NO_IDENT}"
+    rf"|(?P<listy>not in|one of|none of|all of|in{_NO_IDENT}){_WS}"
+    r"\[(?P<body>[^\]]*)\]"
+    rf"|(?P<nully>is not empty|is not null|is empty|is null){_NO_IDENT}"
+    r")?"
+    rf"(?P<closes>(?:{_WS}\))*){_WS}"
+    rf"(?:(?P<join>(?:and|or){_NO_IDENT}|&&|\|\|)|\Z)"
+)
+_PREFIX_TOKEN_RE = re.compile(r"not|!|\(")
+_INT_LIST_RE = re.compile(rf"{_WS}-?[0-9]+(?:{_WS},{_WS}-?[0-9]+)*{_WS}")
+_STR_LIST_RE = re.compile(rf"{_WS}(?:{_STR})(?:{_WS},{_WS}(?:{_STR}))*{_WS}")
+_INT_RE = re.compile(r"-?[0-9]+")
+# only run on a body _STR_LIST_RE accepted: every quote opens or closes
+_STR_BODY_RE = re.compile(r"['\"]([^'\"]*)['\"]")
+
+# Names the scanner declines: single-word keywords (never a name to the
+# lexer) and the first words of multi-word ones (a name to the lexer
+# only when the rest of the keyword does not follow).
+_KEYWORD_WORDS = frozenset(
+    ["and", "or", "not", "in", "true", "false", "is", "one", "none", "all"]
+)
+_OP_BY_TEXT = {
+    "=": Op.EQ, "<>": Op.NE, "<": Op.LT, "<=": Op.LE, ">": Op.GT, ">=": Op.GE,
+    "in": Op.IN, "not in": Op.NOT_IN, "one of": Op.ONE_OF,
+    "none of": Op.NONE_OF, "all of": Op.ALL_OF,
+    "is null": Op.IS_NULL, "is not null": Op.IS_NOT_NULL,
+    "is empty": Op.IS_EMPTY, "is not empty": Op.IS_NOT_EMPTY,
+}
+_JOIN_BY_TEXT = {"and": "and", "&&": "and", "or": "or", "||": "or"}
+
+
+def _list_values(body: str) -> tuple | None:
+    """A ``[..]`` body as the exact tier's sorted, deduplicated tuple;
+    None if it is not a non-empty list of all-integer or all-plain-string
+    elements."""
+    if _INT_LIST_RE.fullmatch(body):
+        return tuple(sorted(set(map(int, _INT_RE.findall(body)))))
+    if _STR_LIST_RE.fullmatch(body):
+        return tuple(sorted(set(_STR_BODY_RE.findall(body))))
+    return None
+
+
+def _scan(text: str, attributes: AttributeTable) -> Node | None:
+    """The scanner tier: the exact tier's tree, or None to decline."""
+    match = _PREDICATE_RE.match
+    stack: list[tuple] = []
+    acc: Node | None = None
+    join = "and"
+    nots = 0
+    pos = 0
+    while True:
+        m = match(text, pos)
+        if m is None:
+            return None
+        prefix, name, cmp, number, integer, sq, dq, listy, body, nully, closes, joined = (
+            m.groups()
+        )
+        if prefix:
+            for token in _PREFIX_TOKEN_RE.findall(prefix):
+                if token == "(":
+                    stack.append((acc, join, nots))
+                    acc, nots = None, 0
+                else:
+                    nots += 1
+        if name in _KEYWORD_WORDS:
+            return None
+
+        if cmp is not None:
+            if integer is not None:
+                operand = int(integer)
+            elif number is not None:
+                operand = Decimal(number)
+            elif cmp == "=" or cmp == "<>":
+                operand = sq if sq is not None else dq
+            else:
+                return None  # the exact tier rejects a string comparison
+            predicate = make_predicate(attributes, name, _OP_BY_TEXT[cmp], operand)
+        elif listy is not None:
+            values = _list_values(body)
+            if values is None:
+                return None
+            predicate = make_predicate(attributes, name, _OP_BY_TEXT[listy], values)
+        elif nully is not None:
+            predicate = make_predicate(attributes, name, _OP_BY_TEXT[nully])
+        else:
+            predicate = make_predicate(attributes, name, Op.VAR)
+
+        # fold the operand into its level; each ")" folds the closed
+        # group into the level below as that level's operand
+        node = Node("value", None, None, predicate)
+        for _ in range(nots):
+            node = Node("not", node)
+        acc = node if acc is None else Node(join, acc, node)
+        for _ in range(closes.count(")")):
+            if not stack:
+                return None
+            node = acc
+            acc, join, nots = stack.pop()
+            for _ in range(nots):
+                node = Node("not", node)
+            acc = node if acc is None else Node(join, acc, node)
+        nots = 0
+
+        if joined is None:
+            return None if stack else acc
+        join = _JOIN_BY_TEXT[joined]
+        pos = m.end()
+
+
+def _parse_exact(text: str, attributes: AttributeTable) -> Node:
+    """The exact tier: the reference-matched lexer and parser."""
     tokens = lex(text)
     if not tokens:
         raise ParserError("empty expression")
@@ -257,4 +408,16 @@ def parse(text: str, attributes: AttributeTable) -> Node:
         raise ParserError(
             f"unexpected trailing token {trailing.kind} at position {trailing.pos}"
         )
+    return node
+
+
+def parse(text: str, attributes: AttributeTable) -> Node:
+    """Parse a DSL expression against a schema. Raises ParserError /
+    EventError subclasses exactly where the reference does."""
+    try:
+        node = _scan(text, attributes)
+    except Exception:
+        node = None
+    if node is None:
+        node = _parse_exact(text, attributes)
     return node

@@ -315,13 +315,14 @@ def test_mixed_list_literal_is_error(attributes):
 
 def test_bulk_compile_time_budget():
     """Compile-path regression guard (VERDICT round 1 #9). The costs
-    that matter are split: INSERT parses once and stores the NNF tree,
-    so the insert/delete -> recompile cycle pays only compile_forest
-    (~0.8s at 1e5 subscriptions), not a re-parse; the cold bulk build
-    (lex+parse+NNF of 1e5 templated expressions) measures ~6.5s after
-    the round-2 master-regex lexer / NamedTuple nodes / predicate
-    memoization (was ~10s). Bounds are ~2x measured to absorb host
-    CPU-steal streaks while still catching real regressions."""
+    that matter are split: INSERT parses once and walks the NNF tree
+    into the live forest, so compile() is a snapshot of that forest
+    (~0.02s at 1e5 subscriptions), never a re-parse. The cold bulk
+    build (parse + NNF + insert of 1e5 templated expressions) measures
+    4.6-5.0s on a 4-vCPU VM with parse()'s one-match-per-predicate
+    scanner, against 7.3-10s for the lexer + parser alone. Bounds are
+    ~2x an older, slower measurement; they absorb host CPU-steal
+    streaks while still catching real regressions."""
     import time
 
     from a_tree_spark.web.pipeline import build_page_forest
