@@ -417,6 +417,8 @@ def parse(text: str, attributes: AttributeTable) -> Node:
     try:
         node = _scan(text, attributes)
     except Exception:
+        # not reported here: the exact tier owns every error, and raises
+        # the one the reference raises at the position it raises it
         node = None
     if node is None:
         node = _parse_exact(text, attributes)
