@@ -78,31 +78,24 @@ class StageCheckpoint:
 
     # ------------------------------------------------------------- run
 
-    def run_stage(self, units: DataFrame, compute, unit_col: str = "unit_id") -> DataFrame:
-        """units: DataFrame with unit_col listing ALL work units.
+    def run_stage(self, units: DataFrame, compute) -> DataFrame:
+        """units: DataFrame with unit_id listing ALL work units.
         compute: fn(pending_units_df) -> result DataFrame that carries
-        unit_col on every row. Returns the stage's full output."""
+        unit_id on every row. Returns the stage's full output."""
         pending = units.join(
-            F.broadcast(self.completed_units().withColumnRenamed("unit_id", unit_col)),
-            unit_col,
-            "left_anti",
+            F.broadcast(self.completed_units()), "unit_id", "left_anti"
         )
         n_pending = pending.count()
         if n_pending:
             attempt = uuid.uuid4().hex
-            result = compute(pending)
-            if unit_col != "unit_id":
-                result = result.withColumnRenamed(unit_col, "unit_id")
-            result = result.withColumn("_attempt", F.lit(attempt))
+            result = compute(pending).withColumn("_attempt", F.lit(attempt))
             result.write.mode("append").parquet(self.data_path)
 
             written = (
                 self.spark.read.parquet(self.data_path)
                 .where(F.col("_attempt") == attempt)
                 .join(
-                    F.broadcast(
-                        pending.select(F.col(unit_col).alias("unit_id")).distinct()
-                    ),
+                    F.broadcast(pending.select("unit_id").distinct()),
                     "unit_id",
                     "semi",
                 )
@@ -122,7 +115,7 @@ class StageCheckpoint:
             # commit (row_count 0, null hash) or it is recomputed on
             # every resume forever (ADVICE.md round 2)
             lineage = (
-                pending.select(F.col(unit_col).alias("unit_id"))
+                pending.select("unit_id")
                 .distinct()
                 .join(written_stats, "unit_id", "left")
                 .select(

@@ -10,7 +10,6 @@ from .pipeline import (
     match_pages,
     root_subscription_map,
     run_pipeline,
-    salted_cell_stats,
     standing_page_subscriptions,
 )
 from .synth import synth_batch, synth_page, synth_pages_df
@@ -28,7 +27,6 @@ __all__ = [
     "geotag_pages",
     "match_pages",
     "run_pipeline",
-    "salted_cell_stats",
     "standing_page_subscriptions",
     "synth_batch",
     "synth_page",

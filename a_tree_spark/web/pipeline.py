@@ -21,8 +21,13 @@ so its side of the join runs no Python job. Hot ccTLD centroids
 concentrate matches in a few cells; the in-kernel and map-side combines
 collapse them before the shuffle.
 
-The composable strategies (``eventize_pages`` -> ``match_pages`` ->
-``salted_cell_stats``) keep the salted HLL aggregation.
+The same path serves the resumable deployment job
+(``scripts/submit_pipeline.py``): a carried integer ``group`` column
+(its ``unit_id``) makes the kernel combine on (group, ckey), so each
+work unit checkpoints exact partials of its own. The composable
+operators (``eventize_pages`` -> ``match_pages`` ->
+``exact_cell_sub_counts``) are the per-match reference the tests check
+the kernel against.
 """
 
 from __future__ import annotations
@@ -254,7 +259,6 @@ def build_page_forest(n_subscriptions: int) -> ForestBuilder:
 def match_pages(
     eventized: DataFrame,
     forest: ForestBuilder,
-    strategy: str = "vectorized",
     carry: tuple = ("cell_id",),
 ) -> DataFrame:
     """Page matches keyed by xxhash64(url): one row per (page,
@@ -267,7 +271,6 @@ def match_pages(
         with_id,
         forest,
         event_id_col="page_key",
-        strategy=strategy,
         carry_cols=list(carry),
     )
     return matches.withColumnRenamed("event_id", "page_key")
@@ -283,7 +286,12 @@ def salted_cell_stats(matches: DataFrame) -> DataFrame:
     a systematic under-estimate whenever a cell's subscriptions spread
     across salt buckets (VERDICT.md / ADVICE.md round 1).
     ``tests/test_web_pipeline.py`` pins this against
-    ``exact_cell_sub_counts`` on a skewed fixture."""
+    ``exact_cell_sub_counts`` on a skewed fixture.
+
+    No pipeline uses it: every per-cell aggregation is exact, through
+    ``cell_stats_from_root_partials``. It stays only because the frozen
+    ``bench.py`` imports it for a warm-up, and it is not exported from
+    ``a_tree_spark.web``."""
     salted = matches.withColumn(
         "salt", F.pmod("page_key", F.lit(SALT_BUCKETS))
     )
@@ -311,13 +319,25 @@ def root_subscription_map(spark, forest: ForestBuilder) -> DataFrame:
     Arrow columns: a list of Python tuples would become a Python-worker
     RDD whose own job, scheduled beside the kernel's stage, held every
     core to build a 10k-row broadcast."""
+    return _root_map(spark, [planned_evaluator(forest.compile()).root_sub_counts])
+
+
+def sharded_root_map(spark, forests: list[ForestBuilder]) -> DataFrame:
+    """``sharded_root_partials``' root map without building its kernels:
+    shard root ids are offset by the root counts of the shards before."""
+    return _root_map(
+        spark, [planned_evaluator(f.compile()).root_sub_counts for f in forests]
+    )
+
+
+def _root_map(spark, counts: list) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    counts = planned_evaluator(forest.compile()).root_sub_counts
+    n_subs = np.concatenate(counts)
     return spark.createDataFrame(pa.table({
-        "root_id": np.arange(len(counts), dtype=np.int64),
-        "n_subs": counts,
+        "root_id": np.arange(len(n_subs), dtype=np.int64),
+        "n_subs": n_subs,
     }))
 
 
@@ -374,10 +394,11 @@ def fused_match_pages(
     pages: DataFrame,
     forest: ForestBuilder,
     level: int = DEFAULT_LEVEL,
-    emit: str = "matches",
+    emit: str = "cell_root_partials",
     access_pruning: bool | None = None,
     fallback_counter=None,
     broadcast_out: list | None = None,
+    group: str | None = None,
 ) -> DataFrame:
     """Single-Python-stage flagship kernel: extract + eventize + match
     in ONE mapInArrow pass.
@@ -391,15 +412,18 @@ def fused_match_pages(
     pyarrow's C++ kernels (RE2 regex, split_pattern, list_slice);
     matching reuses BatchEvaluator via prepared column caches.
 
-    Output (emit="matches"): (page_key, cell_id, sub_id) — page_key is
-    a caller-supplied unique id column (monotonically_increasing_id).
-
-    emit="cell_root_partials" combines in the kernel, per task, to
-    (ckey, n_matches) with ckey = (cell key << sub_width) | root_id: at
-    ~40 matches/page the raw match stream would dominate the Arrow
+    Output: per-(cell, root) partials combined in the kernel, per task:
+    (ckey, n_matches) with ckey = (cell key << sub_width) | root_id. At
+    ~40 matches/page a per-match stream would dominate the Arrow
     boundary and the shuffle. ``cell_stats_from_root_partials`` turns
     the partials into exact per-cell statistics with the root map
-    (``root_subscription_map``).
+    (``root_subscription_map``). ``emit`` accepts only
+    "cell_root_partials"; the frozen benchmark passes it by name.
+
+    ``group`` names a non-null integer column carried through: the
+    combine runs on (group, ckey) and the output is (<group> long, ckey,
+    n_matches), e.g. per work unit for a resumable job. ``pages`` needs
+    only url, html, lang and the group column.
 
     The evaluator is the snapshot's shared plan; what ships is a copy
     carrying this call's ``access_pruning`` (None = cost-model auto),
@@ -416,16 +440,17 @@ def fused_match_pages(
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
+    from pyspark.sql.types import IntegralType
 
     from ..expr.vector import scalar_column
     from ..spatial.cells import cell_id as cell_id_np
     from .extract import page_features
     from .synth import TLD_TABLE
 
-    if emit not in ("matches", "cell_root_partials"):
-        raise ValueError(
-            f"emit must be 'matches' or 'cell_root_partials', got {emit!r}"
-        )
+    if emit != "cell_root_partials":
+        raise ValueError(f"emit must be 'cell_root_partials', got {emit!r}")
+    if group and not isinstance(pages.schema[group].dataType, IntegralType):
+        raise TypeError(f"group column {group!r} must be an integer column")
     # same cost-model default as match_events: two-phase access pruning
     # composes with the fused root-partials kernel (round 2 kept them
     # exclusive, VERDICT.md item 7) — evaluate_prepared_roots dispatches
@@ -439,16 +464,21 @@ def fused_match_pages(
         # isolate mode's per-worker memory bound)
         broadcast_out.append(bc)
 
-    # (cell, root) int64 packing contract for emit="cell_root_partials":
-    # the cell key (incl. the positionless sentinel 2^2L) needs
-    # 2*level+1 bits, leaving sub_width bits for root ids. Checked HERE,
-    # at plan time, so an oversized root id fails loudly instead of
-    # silently merging counts under a wrong (cell, root).
+    # (cell, root) int64 packing contract: the cell key (incl. the
+    # positionless sentinel 2^2L) needs 2*level+1 bits, leaving
+    # sub_width bits for root ids. Checked HERE, at plan time, so an
+    # oversized root id fails loudly instead of silently merging counts
+    # under a wrong (cell, root).
     sub_width = 63 - (2 * level + 1)
-    if emit == "cell_root_partials" and len(evaluator.root_nodes) >= (1 << sub_width):
+    if len(evaluator.root_nodes) >= (1 << sub_width):
         raise ValueError(
             f"root ids must fit in {sub_width} bits at level {level}"
         )
+    # the combine key: the packed ckey alone (a 1-D np.unique, the
+    # flagship's), or (group, ckey) rows unique along axis 0
+    unique_axis = None if group is None else 0
+    carried = [group] if group else []
+    out = carried + ["ckey", "n_matches"]
 
     centroid_lat: dict[str, float] = {}
     centroid_lon: dict[str, float] = {}
@@ -462,12 +492,12 @@ def fused_match_pages(
 
     def run(batches):
         ev = bc.value
-        # task-level combine state for emit="cell_root_partials": keys
-        # repeat across the task's batches (hot cells x shared roots),
-        # so the final np.unique over the whole task emits each distinct
-        # (cell, root) ONCE per task instead of once per 4096-row batch
-        # — less Arrow boundary traffic and fewer shuffle rows for free.
-        # Memory is bounded: chunks hold (distinct keys per batch) longs.
+        # task-level combine state: keys repeat across the task's
+        # batches (hot cells x shared roots), so the final np.unique
+        # over the whole task emits each distinct key ONCE per task
+        # instead of once per 4096-row batch — less Arrow boundary
+        # traffic and fewer shuffle rows for free. Memory is bounded:
+        # chunks hold (distinct keys per batch) longs.
         task_keys: list = []
         task_counts: list = []
 
@@ -475,7 +505,6 @@ def fused_match_pages(
             n = batch.num_rows
             if n == 0:
                 continue
-            page_key = batch.column(batch.schema.get_field_index("page_key")).to_numpy()
             text, meta_lat, meta_lon, tld = page_features(
                 batch.column(batch.schema.get_field_index("html")),
                 batch.column(batch.schema.get_field_index("url")),
@@ -535,7 +564,7 @@ def fused_match_pages(
             lat_band = np.floor((np.nan_to_num(lat) + 90.0) / 10.0).astype(np.int64)
 
             none_mask = np.zeros(n, dtype=bool)
-            out_rows, out_subs = [], []
+            out_rows, out_roots = [], []
             chunk = ev._chunk_rows(n)
             for start in range(0, n, chunk):
                 stop = min(start + chunk, n)
@@ -561,67 +590,58 @@ def fused_match_pages(
                         lead.slice(start, stop - start), idx["lead_tokens"]
                     ),
                 }
-                rows, hits = ev.evaluate_prepared_roots(cache, stop - start)
-                if emit != "cell_root_partials":
-                    rows, hits = ev.expand_roots(rows, hits)
+                rows, roots = ev.evaluate_prepared_roots(cache, stop - start)
                 out_rows.append(rows + start)
-                out_subs.append(hits)
+                out_roots.append(roots)
 
             rows = np.concatenate(out_rows)
-            subs = np.concatenate(out_subs)
-            if emit == "cell_root_partials":
-                # root-level in-kernel combine: one row per (cell, root)
-                # per batch. CSE shares one root across ~4.3 subs on the
-                # templated workload and a row matches ~17x fewer roots
-                # than subs, so the Arrow boundary + shuffle carry that
-                # much less; the root->subscription expansion happens
-                # AFTER the per-cell combine as a broadcast join against
-                # the (root_id, n_subs) map (root_subscription_map) —
-                # counts expand by pure multiplicity and distinct-sub
-                # counts become EXACT (each sub has exactly one root).
-                # The packed np.unique key ships AS-IS (one int64 column)
-                # — cell_stats_from_root_partials unpacks it after the
-                # keyed shuffle, so the hot shuffle is 2 longs wide.
-                sentinel = np.int64(1) << (2 * level)
-                cell_key = np.where(no_pos[rows], sentinel, cells[rows])
-                key = (cell_key << sub_width) | subs
-                uniq, counts = np.unique(key, return_counts=True)
-                task_keys.append(uniq)
-                task_counts.append(counts.astype(np.int64))
-                continue
-            cell_out = np.where(no_pos[rows], None, cells[rows])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(page_key[rows], type=pa.int64()),
-                    pa.array(cell_out, type=pa.int64()),
-                    pa.array(subs, type=pa.int64()),
-                ],
-                names=["page_key", "cell_id", "sub_id"],
-            )
+            roots = np.concatenate(out_roots)
+            # root-level in-kernel combine: one row per (cell, root) per
+            # batch. CSE shares one root across ~4.3 subs on the
+            # templated workload and a row matches ~17x fewer roots than
+            # subs, so the Arrow boundary + shuffle carry that much
+            # less; the root->subscription expansion happens AFTER the
+            # per-cell combine as a broadcast join against the (root_id,
+            # n_subs) map (root_subscription_map) — counts expand by
+            # pure multiplicity and distinct-sub counts are EXACT (each
+            # sub has exactly one root). The packed np.unique key ships
+            # AS-IS (one int64 column) — cell_stats_from_root_partials
+            # unpacks it after the keyed shuffle, so the hot shuffle is
+            # 2 longs wide.
+            sentinel = np.int64(1) << (2 * level)
+            cell_key = np.where(no_pos[rows], sentinel, cells[rows])
+            key = (cell_key << sub_width) | roots
+            if group is not None:
+                # zero-copy to_numpy refuses a null group value
+                groups = batch.column(
+                    batch.schema.get_field_index(group)
+                ).to_numpy().astype(np.int64)
+                key = np.stack([groups[rows], key], axis=1)
+            uniq, counts = np.unique(key, axis=unique_axis, return_counts=True)
+            task_keys.append(uniq)
+            task_counts.append(counts.astype(np.int64))
 
         if task_keys:
             all_keys = np.concatenate(task_keys)
             all_counts = np.concatenate(task_counts)
-            uniq, inverse = np.unique(all_keys, return_inverse=True)
+            uniq, inverse = np.unique(
+                all_keys, axis=unique_axis, return_inverse=True
+            )
             combined = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(combined, inverse, all_counts)
+            np.add.at(combined, inverse.reshape(-1), all_counts)
+            keys = [uniq] if group is None else [uniq[:, 0], uniq[:, 1]]
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(uniq, type=pa.int64()),
-                    pa.array(combined, type=pa.int64()),
-                ],
-                names=["ckey", "n_matches"],
+                [pa.array(k, type=pa.int64()) for k in keys + [combined]],
+                names=out,
             )
 
-    # Python-boundary column pruning: the kernel reads url/html/lang/
-    # page_key only — shipping text+warc_ts through Arrow costs ~40% more
-    # socket memcpy per page for nothing (and memory traffic is what
-    # breaks 8->32-worker scaling on one box: measured 1.6x per-core
-    # inflation at 32 workers in a zero-steal window)
-    pruned = pages.select("url", "html", "lang", "page_key")
-    if emit == "cell_root_partials":
-        return pruned.mapInArrow(run, schema="ckey long, n_matches long")
-    return pruned.mapInArrow(run, schema="page_key long, cell_id long, sub_id long")
+    # Python-boundary column pruning: the kernel reads url/html/lang
+    # (and the group) only — shipping text+warc_ts through Arrow costs
+    # ~40% more socket memcpy per page for nothing (and memory traffic
+    # is what breaks 8->32-worker scaling on one box: measured 1.6x
+    # per-core inflation at 32 workers in a zero-steal window)
+    pruned = pages.select("url", "html", "lang", *carried)
+    return pruned.mapInArrow(run, schema=", ".join(f"{c} long" for c in out))
 
 
 def write_eventized_bucketed(
@@ -829,6 +849,7 @@ def sharded_root_partials(
     forests: list[ForestBuilder],
     level: int = DEFAULT_LEVEL,
     isolate_shards: bool = False,
+    group: str | None = None,
 ):
     """(unioned packed partials, unioned root map) across k independent
     forests. Per-shard root ids are made globally unique by adding the
@@ -842,6 +863,7 @@ def sharded_root_partials(
     (sum n*n_subs) and exact distinct-sub counts (sum n_subs over roots
     present) are identical by construction, pinned by
     tests/test_web_pipeline.py::test_sharded_forest_equals_single.
+    ``group`` passes through to every shard's ``fused_match_pages``.
 
     Scale shape: each shard is its own broadcast (an executor group can
     hold one shard each on a real cluster) and its own map pass over
@@ -853,20 +875,19 @@ def sharded_root_partials(
     spark = keyed_pages.sparkSession
     sub_width = 63 - (2 * level + 1)
     parts: list[DataFrame] = []
-    maps: list[DataFrame] = []
+    counts: list = []
     offset = 0
     held = Held()
     for forest in forests:
-        n_roots = len(planned_evaluator(forest.compile()).root_nodes)
+        root_sub_counts = planned_evaluator(forest.compile()).root_sub_counts
         handles: list = []
         p = fused_match_pages(
-            keyed_pages, forest, level, emit="cell_root_partials",
+            keyed_pages, forest, level,
             broadcast_out=handles if isolate_shards else None,
+            group=group,
         )
-        m = root_subscription_map(spark, forest)
         if offset:
             p = p.withColumn("ckey", F.col("ckey") + F.lit(offset))
-            m = m.withColumn("root_id", F.col("root_id") + F.lit(offset))
         if isolate_shards:
             # ``isolate_shards``: run each shard's page pass as its own
             # eager job and DESTROY its evaluator broadcast once the
@@ -885,8 +906,8 @@ def sharded_root_partials(
             for h in handles:
                 h.destroy()
         parts.append(p)
-        maps.append(m)
-        offset += n_roots
+        counts.append(root_sub_counts)
+        offset += len(root_sub_counts)
     if offset >= (1 << sub_width):
         held.release()
         raise ValueError(
@@ -895,7 +916,7 @@ def sharded_root_partials(
         )
     if isolate_shards:
         retain(held)
-    return reduce(DataFrame.union, parts), reduce(DataFrame.union, maps)
+    return reduce(DataFrame.union, parts), _root_map(spark, counts)
 
 
 def run_pipeline(
@@ -903,15 +924,14 @@ def run_pipeline(
     n_pages: int,
     n_subscriptions: int,
     level: int = DEFAULT_LEVEL,
-    strategy: str = "fused",
     pages: DataFrame | None = None,
     n_shards: int | str = 1,
     workload: str = "standing",
 ) -> DataFrame:
-    """End-to-end: synthesize (or accept) pages, match, aggregate.
-    strategy="fused" (default) uses the single-Python-stage kernel;
-    "vectorized"/"codegen" use the composable eventize->match operators.
-    ``n_shards > 1`` (fused only) partitions the subscription set into
+    """End-to-end: synthesize (or accept) pages, match with the fused
+    kernel, aggregate to exact per-cell (cell_id, n_matches,
+    n_distinct_subs).
+    ``n_shards`` (at least 1) partitions the subscription set into
     independent forests whose partials union before the one downstream
     aggregation — the 10M-distinct-root scale path (sharded_root_partials).
     ``n_shards="auto"`` derives the count from the exact node total at
@@ -931,48 +951,16 @@ def run_pipeline(
     }
     if workload not in generators:
         raise ValueError(f"workload must be one of {sorted(generators)}")
-    gen = generators[workload]
-
-    subs: dict[int, str] | None = None
+    subs = generators[workload](n_subscriptions)
     if n_shards == "auto":
-        subs = gen(n_subscriptions)
         n_shards = choose_shards(count_forest_nodes(subs))
-    else:
-        n_shards = int(n_shards)   # accept CLI/config strings like "4"
-    if n_shards > 1 and strategy != "fused":
-        raise ValueError(
-            "n_shards > 1 (and 'auto') require strategy='fused' — the "
-            "composable strategies have no sharded partial union"
-        )
+    n_shards = int(n_shards)   # accept CLI/config strings like "4"
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be at least 1, got {n_shards}")
     if pages is None:
         pages = synth_pages_df(spark, n_pages)
-
-    def _forest():
-        if workload == "standing":
-            return build_page_forest(n_subscriptions)
-        builder = ForestBuilder(PAGE_ATTRIBUTES)
-        with _gc_paused():
-            for sub_id, expression in (subs or gen(n_subscriptions)).items():
-                builder.insert(sub_id, expression)
-        return builder
-
-    if strategy == "fused":
-        keyed = pages.withColumn("page_key", F.monotonically_increasing_id())
-        if n_shards > 1:
-            if subs is None:
-                subs = gen(n_subscriptions)
-            forests = build_forests(shard_subscriptions(subs, n_shards))
-            partials, root_map = sharded_root_partials(keyed, forests, level)
-        else:
-            forest = _forest()
-            partials = fused_match_pages(
-                keyed, forest, level, emit="cell_root_partials"
-            )
-            root_map = root_subscription_map(spark, forest)
-        # level MUST be forwarded: the unpack widths are level-derived
-        # and a mismatch silently corrupts every cell id (ADVICE r3)
-        return cell_stats_from_root_partials(partials, root_map, level=level)
-    forest = _forest()
-    eventized = eventize_pages(pages, level)
-    matches = match_pages(eventized, forest, strategy=strategy)
-    return salted_cell_stats(matches)
+    forests = build_forests(shard_subscriptions(subs, n_shards))
+    partials, root_map = sharded_root_partials(pages, forests, level)
+    # level MUST be forwarded: the unpack widths are level-derived and a
+    # mismatch silently corrupts every cell id (ADVICE r3)
+    return cell_stats_from_root_partials(partials, root_map, level=level)

@@ -8,114 +8,127 @@ Usage (see scripts/run_submit.sh which builds the --py-files zip):
         --pages <parquet path or synth:N> --subscriptions 100000 \
         --output /path/out --checkpoint-root /path/ckpt
 
-Stages checkpoint per-unit lineage through StageCheckpoint, so a killed
-job resumes exactly where it stopped.
+It computes what ``run_pipeline`` computes, exact per-cell stats from
+root partials, with the partials carried and checkpointed per work
+unit through StageCheckpoint, so a killed job resumes exactly where it
+stopped. Root ids are local to a forest snapshot, so the stage is named
+``match-<fp>`` after the plans' root CSR (``stage_fingerprint``).
 """
 
 from __future__ import annotations
 
 import argparse
+import os
+import sys
 
 
-def main() -> None:
+def _at_least_one(value: str) -> int:
+    if not value.lstrip("-").isdigit() or int(value) < 1:
+        raise argparse.ArgumentTypeError(f"expected an integer of at least 1, got {value!r}")
+    return int(value)
+
+
+def parse_args(argv=None) -> argparse.Namespace:
+    # counts are validated at parse time: a typo must fail BEFORE Spark
+    # startup and input synthesis, not minutes later with a raw error
     parser = argparse.ArgumentParser()
     parser.add_argument("--pages", default="synth:1000000",
                         help="pages parquet path, or synth:N")
     parser.add_argument("--subscriptions", type=int, default=100000)
     parser.add_argument("--output", default="/tmp/a_tree_spark_out")
     parser.add_argument("--checkpoint-root", default="/tmp/a_tree_spark_ckpt")
-    parser.add_argument("--units", type=int, default=64,
+    parser.add_argument("--units", type=_at_least_one, default=64,
                         help="resume granularity (work units)")
-    def shards_arg(value: str):
-        # validate at parse time: a typo must fail BEFORE Spark startup
-        # and input synthesis, not minutes later with a raw ValueError
-        if value == "auto":
-            return value
-        try:
-            return int(value)
-        except ValueError:
-            raise argparse.ArgumentTypeError(
-                f"--shards expects an integer or 'auto', got {value!r}"
-            )
-
-    parser.add_argument("--shards", type=shards_arg, default=1,
+    parser.add_argument("--shards", default=1,
+                        type=lambda v: v if v == "auto" else _at_least_one(v),
                         help="partition the subscription set into k "
                              "independent forests (10M+ distinct-root "
                              "scale; see web.pipeline.sharded_root_partials)"
                              " — or 'auto' to derive k from the exact "
                              "node count (count_forest_nodes)")
-    args = parser.parse_args()
+    return parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession, functions as F
 
-    from functools import reduce
+def stage_fingerprint(forests, level: int) -> str:
+    """SHA-256 over the level and each shard plan's root CSR
+    (root_sub_offsets, root_sub_ids): the CSR is what gives a root id
+    its meaning, so a changed subscription set, shard count or compiler
+    ordering changes the fingerprint."""
+    import hashlib
 
-    from pyspark.sql import DataFrame
+    from a_tree_spark.expr.vector import planned_evaluator
+
+    digest = hashlib.sha256(b"level=%d" % level)
+    for forest in forests:
+        plan = planned_evaluator(forest.compile())
+        for array in (plan.root_sub_offsets, plan.root_sub_ids):
+            digest.update(b"|%d|" % len(array) + array.tobytes())
+    return digest.hexdigest()[:16]
+
+
+def run(spark, args: argparse.Namespace):
+    """Run (or resume) the job; returns the per-cell stats it wrote."""
+    from pyspark.sql import functions as F
 
     from a_tree_spark.pipeline.checkpoint import StageCheckpoint
-    from a_tree_spark.web import build_page_forest, synth_pages_df
+    from a_tree_spark.spatial.cells import DEFAULT_LEVEL
+    from a_tree_spark.web import synth_pages_df
     from a_tree_spark.web.pipeline import (
         build_forests,
+        cell_stats_from_root_partials,
         choose_shards,
         count_forest_nodes,
-        fused_match_pages,
-        salted_cell_stats,
         shard_subscriptions,
+        sharded_root_map,
+        sharded_root_partials,
         standing_page_subscriptions,
     )
-
-    # on a cluster the master/conf come from spark-submit; fall back to
-    # the tuned local session for standalone runs
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        builder = SparkSession.builder.appName("a_tree_spark-pipeline")
-        spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     if args.pages.startswith("synth:"):
         pages = synth_pages_df(spark, int(args.pages.split(":", 1)[1]))
     else:
         pages = spark.read.parquet(args.pages)
 
-    subs = None
-    if args.shards == "auto":
-        subs = standing_page_subscriptions(args.subscriptions)
+    subs = standing_page_subscriptions(args.subscriptions)
+    n_shards = args.shards
+    if n_shards == "auto":
         n_shards = choose_shards(count_forest_nodes(subs))
         print(f"auto-sharding: {n_shards} forest(s)")
-    else:
-        n_shards = args.shards
-    if n_shards > 1:
-        # subscription-set sharding: k independent forests; the
-        # sub-level match streams union directly (sub ids are globally
-        # unique across shards, no root disambiguation needed)
-        if subs is None:
-            subs = standing_page_subscriptions(args.subscriptions)
-        forests = build_forests(shard_subscriptions(subs, n_shards))
-    else:
-        forests = [build_page_forest(args.subscriptions)]
-    keyed = pages.withColumn("page_key", F.xxhash64("url")).withColumn(
+    forests = build_forests(shard_subscriptions(subs, n_shards))
+    keyed = pages.withColumn(
         "unit_id", F.pmod(F.xxhash64("url"), F.lit(args.units))
     )
 
-    ckpt = StageCheckpoint(spark, args.checkpoint_root, "match")
+    stage = f"match-{stage_fingerprint(forests, DEFAULT_LEVEL)}"
+    ckpt = StageCheckpoint(spark, args.checkpoint_root, stage)
     units = spark.range(args.units).select(F.col("id").alias("unit_id"))
 
     def compute(pending):
-        subset = keyed.join(F.broadcast(pending), "unit_id")
-        matched = reduce(
-            DataFrame.union,
-            [fused_match_pages(subset, f) for f in forests],
-        )
-        return matched.join(
-            keyed.select("page_key", "unit_id").distinct(), "page_key"
-        )
+        subset = keyed.join(F.broadcast(pending), "unit_id", "semi")
+        return sharded_root_partials(subset, forests, group="unit_id")[0]
 
-    matches = ckpt.run_stage(units, compute)
-    stats = salted_cell_stats(matches)
+    partials = ckpt.run_stage(units, compute)
+    stats = cell_stats_from_root_partials(
+        partials, sharded_root_map(spark, forests)
+    )
     stats.write.mode("overwrite").parquet(args.output)
     print(f"wrote per-cell stats: {stats.count()} cells -> {args.output}")
     print(f"lineage audit mismatches: {ckpt.verify().count()}")
+    return stats
+
+
+def main() -> None:
+    args = parse_args()
+    from pyspark.sql import SparkSession
+
+    # on a cluster the master/conf come from spark-submit; a standalone
+    # run gets a default local session
+    spark = SparkSession.builder.appName("a_tree_spark-pipeline").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    run(spark, args)
 
 
 if __name__ == "__main__":
+    # standalone runs import the package from this checkout
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     main()

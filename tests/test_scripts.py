@@ -1,5 +1,6 @@
-"""Pure helpers of the bench scripts: the A/B gain rule of scripts/ab.py
-and the argument guard of scripts/bench_flows.py."""
+"""The scripts: the A/B gain rule of scripts/ab.py, the argument guards
+of scripts/bench_flows.py and scripts/submit_pipeline.py, and the
+deployment job's crash and resume."""
 
 import argparse
 import importlib.util
@@ -109,3 +110,91 @@ def test_ab_steal_summary_from_run_artifacts(tmp_path):
     for p in pairs:
         p["change"]["steal_pct"] = None
     assert ab.steal_summary(pairs) is None
+
+
+def test_submit_pipeline_rejects_counts_below_one(capsys):
+    sp = _load("submit_pipeline")
+    args = sp.parse_args(["--shards", "3", "--units", "8"])
+    assert (args.shards, args.units) == (3, 8)
+    assert sp.parse_args(["--shards", "auto"]).shards == "auto"
+    for argv in (["--shards", "0"], ["--shards", "-2"], ["--shards", "two"],
+                 ["--units", "0"], ["--units", "-1"]):
+        with pytest.raises(SystemExit):
+            sp.parse_args(argv)
+        assert "at least 1" in capsys.readouterr().err
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("shards", ["1", "3"])
+def test_submit_pipeline_resumes_exactly_after_crash(spark, tmp_path, monkeypatch, shards):
+    """A job that committed units 0-2 and died after landing rows of a
+    dead attempt for unit 4 resumes with only units 3-5, audits clean and
+    writes exactly ``run_pipeline``'s stats. A resume under a changed
+    subscription set opens a new stage and reads nothing of the old."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.pipeline import checkpoint
+    from a_tree_spark.web import run_pipeline, synth_pages_df
+
+    sp = _load("submit_pipeline")
+    n_pages, n_units = 400, 6
+    root = str(tmp_path / "ckpt")
+
+    def args(n_subs):
+        return sp.parse_args([
+            "--pages", f"synth:{n_pages}", "--subscriptions", str(n_subs),
+            "--units", str(n_units), "--shards", shards,
+            "--output", str(tmp_path / f"out{n_subs}"), "--checkpoint-root", root,
+        ])
+
+    def reference(n_subs):
+        pages = synth_pages_df(spark, n_pages)
+        return sorted(map(tuple, run_pipeline(spark, n_pages, n_subs, pages=pages).collect()))
+
+    stage_class = checkpoint.StageCheckpoint
+    stages, computed = [], []
+
+    class CrashingStage(stage_class):
+        def run_stage(self, units, compute):
+            super().run_stage(units.where("unit_id < 3"), compute)
+            compute(units.where("unit_id = 4")).withColumn(
+                "_attempt", F.lit("deadbeefcrashed")
+            ).write.mode("append").parquet(self.data_path)
+            raise _Crash
+
+    class RecordingStage(stage_class):
+        def __init__(self, *a):
+            super().__init__(*a)
+            stages.append(self)
+
+        def run_stage(self, units, compute):
+            def recording(pending):
+                computed.append(sorted(r["unit_id"] for r in pending.collect()))
+                return compute(pending)
+            return super().run_stage(units, recording)
+
+    monkeypatch.setattr(checkpoint, "StageCheckpoint", CrashingStage)
+    with pytest.raises(_Crash):
+        sp.run(spark, args(200))
+    monkeypatch.setattr(checkpoint, "StageCheckpoint", RecordingStage)
+
+    stats = sorted(map(tuple, sp.run(spark, args(200)).collect()))
+    ckpt = stages[0]
+    assert computed == [[3, 4, 5]]
+    orphans = spark.read.parquet(ckpt.data_path).where("_attempt = 'deadbeefcrashed'")
+    assert orphans.where("unit_id = 4").count() > 0
+    assert ckpt.verify().count() == 0
+    assert stats == reference(200) and stats
+    assert sorted(map(tuple, spark.read.parquet(str(tmp_path / "out200")).collect())) == stats
+
+    sp.run(spark, args(200))
+    assert len(computed) == 1  # nothing left to compute
+
+    changed = sorted(map(tuple, sp.run(spark, args(150)).collect()))
+    assert computed[-1] == list(range(n_units))
+    assert stages[-1].stage != ckpt.stage and stages[-1].stage.startswith("match-")
+    assert sorted(os.listdir(root)) == sorted([ckpt.stage, stages[-1].stage])
+    assert changed == reference(150) and changed != stats

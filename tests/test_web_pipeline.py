@@ -1,6 +1,8 @@
 """Web-page pipeline: byte-identical extraction, geotag determinism,
 end-to-end match parity with the single-node oracle."""
 
+from collections import Counter
+
 import numpy as np
 import pytest
 
@@ -20,6 +22,35 @@ from a_tree_spark.web import (
 
 N_PAGES = 400
 N_SUBS = 200
+
+
+def _expand_partials(partials, forests, level=None):
+    """Counter of (group, cell_id, sub_id) -> matches from ``group``-carrying
+    fused partials: ckey unpacks to (cell, root), and the root CSR of
+    each forest's plan expands a root to its subscription ids. Shard
+    root ids are offset by the root counts of the forests before it,
+    as in ``sharded_root_partials``."""
+    from collections import Counter
+
+    from a_tree_spark.expr.vector import planned_evaluator
+    from a_tree_spark.spatial.cells import DEFAULT_LEVEL
+
+    level = DEFAULT_LEVEL if level is None else level
+    sub_width = 63 - (2 * level + 1)
+    subs_of_root = []
+    for forest in forests:
+        plan = planned_evaluator(forest.compile())
+        bounds = plan.root_sub_offsets
+        subs_of_root += [
+            plan.root_sub_ids[lo:hi].tolist() for lo, hi in zip(bounds[:-1], bounds[1:])
+        ]
+    out = Counter()
+    for group, ckey, n in partials.collect():
+        cell = ckey >> sub_width
+        cell = None if cell == 1 << (2 * level) else cell
+        for sub in subs_of_root[ckey & ((1 << sub_width) - 1)]:
+            out[(group, cell, sub)] += n
+    return out
 
 
 def test_synth_is_deterministic_and_id_pure():
@@ -115,11 +146,11 @@ def test_fused_kernel_equals_composable_pipeline(spark):
     forest = build_page_forest(N_SUBS)
 
     keyed = pages.withColumn("page_key", F.xxhash64("url"))
-    fused = fused_match_pages(keyed, forest)
+    fused = fused_match_pages(keyed, forest, group="page_key")
     composable = match_pages(eventize_pages(pages), forest)
 
-    a = sorted(map(tuple, fused.select("page_key", "cell_id", "sub_id").collect()))
-    b = sorted(map(tuple, composable.select("page_key", "cell_id", "sub_id").collect()))
+    a = _expand_partials(fused, [forest])
+    b = Counter(map(tuple, composable.select("page_key", "cell_id", "sub_id").collect()))
     assert a == b and len(a) > 0
 
 
@@ -138,7 +169,9 @@ def test_root_partials_equal_raw_match_stats(spark):
     forest = build_page_forest(N_SUBS)
     keyed = pages.withColumn("page_key", F.xxhash64("url"))
 
-    raw = fused_match_pages(keyed, forest, emit="matches")
+    raw = _expand_partials(
+        fused_match_pages(keyed, forest, group="page_key"), [forest]
+    )
     partials = fused_match_pages(keyed, forest, emit="cell_root_partials")
     stats = cell_stats_from_root_partials(
         partials, root_subscription_map(spark, forest)
@@ -148,12 +181,11 @@ def test_root_partials_equal_raw_match_stats(spark):
         r["cell_id"]: (r["n_matches"], r["n_distinct_subs"])
         for r in stats.collect()
     }
-    want = {
-        r["cell_id"]: (r["n"], r["d"])
-        for r in raw.groupBy("cell_id")
-        .agg(F.count("*").alias("n"), F.countDistinct("sub_id").alias("d"))
-        .collect()
-    }
+    want = {}
+    for (_page, cell, sub), n in raw.items():
+        n_cell, subs = want.setdefault(cell, (0, set()))
+        want[cell] = (n_cell + n, subs | {sub})
+    want = {cell: (n, len(subs)) for cell, (n, subs) in want.items()}
     assert got == want and len(want) > 0
 
 
@@ -193,8 +225,9 @@ def test_salted_cell_stats_matches_exact_counts(spark):
 
 
 def test_cell_skew_exists(spark):
-    """The Zipf ccTLD draw must create hot cells (else the salting path
-    is untested theater)."""
+    """The Zipf ccTLD draw must create hot cells (else the in-kernel and
+    map-side combines that collapse hot (cell, root) keys before the
+    shuffle are never stressed)."""
     from pyspark.sql import functions as F
 
     eventized = eventize_pages(synth_pages_df(spark, 2000, partitions=4))
@@ -211,18 +244,23 @@ def test_run_pipeline_forwards_level_to_unpack(spark):
     """ADVICE round 3: run_pipeline passed level to the fused kernel
     (which packs ckey with a level-derived sub_width) but not to
     cell_stats_from_root_partials — any non-default level silently
-    unpacked corrupt cell ids. Fused and vectorized strategies must
-    agree at a NON-default level."""
-    from a_tree_spark.web.pipeline import run_pipeline
+    unpacked corrupt cell ids. run_pipeline must equal the per-match
+    reference (eventize -> match -> exact counts) at a NON-default
+    level."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.web.pipeline import exact_cell_sub_counts, run_pipeline
 
     pages = synth_pages_df(spark, N_PAGES, partitions=4)
     level = 9
-    fused = run_pipeline(spark, N_PAGES, N_SUBS, level=level,
-                         strategy="fused", pages=pages)
-    vect = run_pipeline(spark, N_PAGES, N_SUBS, level=level,
-                        strategy="vectorized", pages=pages)
-    a = sorted(map(tuple, fused.select("cell_id", "n_matches").collect()))
-    b = sorted(map(tuple, vect.select("cell_id", "n_matches").collect()))
+    fused = run_pipeline(spark, N_PAGES, N_SUBS, level=level, pages=pages)
+    matches = match_pages(eventize_pages(pages, level), build_page_forest(N_SUBS))
+    want = matches.groupBy("cell_id").agg(F.count("*").alias("n_matches")).join(
+        exact_cell_sub_counts(matches), "cell_id"
+    )
+    cols = ["cell_id", "n_matches", "n_distinct_subs"]
+    a = sorted(map(tuple, fused.select(*cols).collect()))
+    b = sorted(map(tuple, want.select(*cols).collect()))
     assert a == b and len(a) > 0
 
 
@@ -235,17 +273,22 @@ def test_sharded_forest_equals_single(spark):
     from a_tree_spark.web.pipeline import run_pipeline
 
     pages = synth_pages_df(spark, N_PAGES, partitions=4)
-    single = run_pipeline(spark, N_PAGES, N_SUBS, strategy="fused",
-                          pages=pages)
-    sharded = run_pipeline(spark, N_PAGES, N_SUBS, strategy="fused",
-                           pages=pages, n_shards=2)
+    single = run_pipeline(spark, N_PAGES, N_SUBS, pages=pages)
+    sharded = run_pipeline(spark, N_PAGES, N_SUBS, pages=pages, n_shards=2)
     a = sorted(map(tuple, single.collect()))
     b = sorted(map(tuple, sharded.collect()))
     assert a == b and len(a) > 0
     # three shards too: odd split exercises unequal shard sizes
-    sharded3 = run_pipeline(spark, N_PAGES, N_SUBS, strategy="fused",
-                            pages=pages, n_shards=3)
+    sharded3 = run_pipeline(spark, N_PAGES, N_SUBS, pages=pages, n_shards=3)
     assert sorted(map(tuple, sharded3.collect())) == a
+
+
+def test_run_pipeline_rejects_shard_count_below_one(spark):
+    from a_tree_spark.web.pipeline import run_pipeline
+
+    for n_shards in (0, -2, "0"):
+        with pytest.raises(ValueError, match="at least 1"):
+            run_pipeline(spark, 10, 10, n_shards=n_shards)
 
 
 def test_sharded_isolate_equals_union(spark):
@@ -315,10 +358,9 @@ def test_diverse_workload_distinct_roots(spark):
     assert count_forest_nodes(subs) >= 3 * n
 
     pages = synth_pages_df(spark, N_PAGES, partitions=4)
-    single = run_pipeline(spark, N_PAGES, n, strategy="fused",
-                          pages=pages, workload="diverse")
-    sharded = run_pipeline(spark, N_PAGES, n, strategy="fused",
-                           pages=pages, n_shards=2, workload="diverse")
+    single = run_pipeline(spark, N_PAGES, n, pages=pages, workload="diverse")
+    sharded = run_pipeline(spark, N_PAGES, n, pages=pages, n_shards=2,
+                           workload="diverse")
     a = sorted(map(tuple, single.collect()))
     b = sorted(map(tuple, sharded.collect()))
     assert a == b and len(a) > 0
@@ -473,10 +515,10 @@ def test_skewed_workload_flips_pruning_on(spark):
     pages = synth_pages_df(spark, N_PAGES, partitions=4).withColumn(
         "page_key", F.xxhash64("url")
     )
-    fused = fused_match_pages(pages, builder)  # auto -> pruned path
+    fused = fused_match_pages(pages, builder, group="page_key")  # auto -> pruned path
     composable = match_pages(eventize_pages(pages.drop("page_key")), builder)
-    a = sorted(map(tuple, fused.select("page_key", "sub_id").collect()))
-    b = sorted(map(tuple, composable.select("page_key", "sub_id").collect()))
+    a = _expand_partials(fused, [builder])
+    b = Counter(map(tuple, composable.select("page_key", "cell_id", "sub_id").collect()))
     assert a == b and len(a) > 0
 
 
@@ -500,30 +542,31 @@ def test_choose_shards_guidance():
 
 def test_sharded_sub_level_matches_equal_single(spark):
     """The deployment path (scripts/submit_pipeline.py --shards k)
-    unions SUB-level match streams across shard forests — sub ids are
-    globally unique across shards, so the union must equal the single
-    forest's matches exactly, no root disambiguation involved."""
-    from functools import reduce
-
-    from pyspark.sql import DataFrame, functions as F
+    carries ``unit_id`` through sharded root partials. Expanded through
+    each shard's root CSR (shard-offset root ids), the three shard
+    forests' (unit, cell, sub) match counts must equal the single
+    forest's exactly."""
+    from pyspark.sql import functions as F
 
     from a_tree_spark.web.pipeline import (
         build_forests, fused_match_pages, shard_subscriptions,
+        sharded_root_partials,
     )
 
     pages = synth_pages_df(spark, N_PAGES, partitions=4).withColumn(
-        "page_key", F.xxhash64("url")
+        "unit_id", F.pmod(F.xxhash64("url"), F.lit(8))
     )
     subs = standing_page_subscriptions(N_SUBS)
     single = build_page_forest(N_SUBS)
     forests = build_forests(shard_subscriptions(subs, 3))
 
-    want = sorted(map(tuple, fused_match_pages(pages, single)
-                      .select("page_key", "cell_id", "sub_id").collect()))
-    got = sorted(map(tuple, reduce(
-        DataFrame.union, [fused_match_pages(pages, f) for f in forests]
-    ).select("page_key", "cell_id", "sub_id").collect()))
+    want = _expand_partials(
+        fused_match_pages(pages, single, group="unit_id"), [single]
+    )
+    partials, _ = sharded_root_partials(pages, forests, group="unit_id")
+    got = _expand_partials(partials, forests)
     assert got == want and len(got) > 0
+    assert len({unit for unit, _, _ in got}) == 8
 
 
 def test_reinsert_same_expression_adds_zero_nodes():
@@ -561,11 +604,10 @@ def test_auto_shards_matches_explicit(spark, monkeypatch):
 
     pages = synth_pages_df(spark, N_PAGES, partitions=4)
     single = sorted(map(tuple, wp.run_pipeline(
-        spark, N_PAGES, N_SUBS, strategy="fused", pages=pages
+        spark, N_PAGES, N_SUBS, pages=pages
     ).collect()))
     auto = sorted(map(tuple, wp.run_pipeline(
-        spark, N_PAGES, N_SUBS, strategy="fused", pages=pages,
-        n_shards="auto",
+        spark, N_PAGES, N_SUBS, pages=pages, n_shards="auto"
     ).collect()))
     assert auto == single and len(single) > 0
 
@@ -578,8 +620,7 @@ def test_auto_shards_matches_explicit(spark, monkeypatch):
     )
     assert k > 1
     forced = sorted(map(tuple, wp.run_pipeline(
-        spark, N_PAGES, N_SUBS, strategy="fused", pages=pages,
-        n_shards="auto",
+        spark, N_PAGES, N_SUBS, pages=pages, n_shards="auto"
     ).collect()))
     assert forced == single
 
@@ -629,10 +670,13 @@ def test_fused_pruned_equals_dense_on_lead_token_lazy_leaves(spark, n_pages):
     )
     got = {}
     for pruning in (True, False):
-        out = fused_match_pages(pages, builder, emit="matches", access_pruning=pruning)
-        got[pruning] = sorted(map(tuple, out.collect()))
+        out = fused_match_pages(
+            pages, builder, access_pruning=pruning, group="page_key"
+        )
+        got[pruning] = _expand_partials(out, [builder])
     assert got[True] == got[False]
-    assert len(got[True]) >= min(n_pages, 40)  # every page fires its own sub
+    # every page fires its own sub
+    assert sum(got[True].values()) >= min(n_pages, 40)
 
 
 def _crawl(spark, pages, builder):
@@ -716,8 +760,8 @@ def test_pruning_flag_stays_with_its_caller(spark):
             want.add((row["page_key"], sub))
     assert want
 
-    pruned = fused_match_pages(pages, builder, emit="matches", access_pruning=True)
-    assert {(r["page_key"], r["sub_id"]) for r in pruned.collect()} == want
+    pruned = fused_match_pages(pages, builder, access_pruning=True, group="page_key")
+    assert {(page, sub) for page, _, sub in _expand_partials(pruned, [builder])} == want
     assert planned_evaluator(builder.compile()) is plan and not plan.access_pruning
 
     dense = match_events(eventized, builder, event_id_col="page_key",
@@ -752,5 +796,36 @@ def test_fused_rejects_unknown_emit(spark):
     from a_tree_spark.web.pipeline import fused_match_pages
 
     pages = synth_pages_df(spark, 10, partitions=1)
-    with pytest.raises(ValueError, match="emit must be"):
-        fused_match_pages(pages, build_page_forest(10), emit="cell_partials")
+    for emit in ("cell_partials", "matches"):
+        with pytest.raises(ValueError, match="emit must be"):
+            fused_match_pages(pages, build_page_forest(10), emit=emit)
+
+
+def test_fused_group_contract(spark):
+    """``group="unit_id"`` partials summed over units equal the
+    ungrouped partials row for row; a float or string group column
+    raises at plan time."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.web.pipeline import fused_match_pages
+
+    forest = build_page_forest(N_SUBS)
+    pages = synth_pages_df(spark, N_PAGES, partitions=4).withColumn(
+        "unit_id", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int")
+    )
+    grouped = fused_match_pages(pages, forest, group="unit_id")
+    assert grouped.columns == ["unit_id", "ckey", "n_matches"]
+    assert grouped.select("unit_id").distinct().count() > 1
+    summed = grouped.groupBy("ckey").agg(F.sum("n_matches").alias("n"))
+    ungrouped = fused_match_pages(pages, forest).groupBy("ckey").agg(
+        F.sum("n_matches").alias("n")
+    )
+    a = sorted(map(tuple, summed.collect()))
+    assert a == sorted(map(tuple, ungrouped.collect())) and len(a) > 0
+
+    for bad in (F.col("unit_id").cast("double"), F.col("unit_id").cast("string")):
+        with pytest.raises(TypeError, match="integer column"):
+            fused_match_pages(pages.withColumn("unit_id", bad), forest, group="unit_id")
+    nulls = pages.withColumn("unit_id", F.lit(None).cast("int"))
+    with pytest.raises(Exception, match="nulls"):
+        fused_match_pages(nulls, forest, group="unit_id").collect()
