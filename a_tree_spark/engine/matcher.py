@@ -34,12 +34,18 @@ from __future__ import annotations
 import copy
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DecimalType, IntegralType
 
 from ..expr.ast import Op
 from ..expr.compiler import CompiledForest, ForestBuilder
 from ..expr.schema import AttributeKind, AttributeTable
-from ..expr.sql import to_sql
-from ..expr.vector import DECIMAL_SCALE, BatchEvaluator, planned_evaluator
+from ..expr.sql import leaf_to_sql
+from ..expr.vector import (
+    DECIMAL_SCALE,
+    BatchEvaluator,
+    planned_evaluator,
+    unsupported_column,
+)
 
 
 def _needed_attributes(forest: CompiledForest) -> list[str]:
@@ -136,7 +142,6 @@ def match_events(
     matcher: ForestBuilder | CompiledForest,
     event_id_col: str = "event_id",
     strategy: str = "auto",
-    sub_id_type: str = "bigint",
     carry_cols: list[str] | None = None,
     access_pruning: bool | None = None,
 ) -> DataFrame:
@@ -155,7 +160,8 @@ def match_events(
     across the CSE DAG) — with two-phase access pruning switched on by
     the compiled cost model (``choose_access_pruning``). "codegen"
     remains callable for pure-JVM deployments that must avoid a Python
-    worker pool.
+    worker pool; "vectorized" names the default kernel. Any other
+    strategy raises ``ValueError``.
 
     ``access_pruning`` (None = cost-model auto) enables the reference's
     two-phase access-predicate evaluation (src/atree.rs:530-591) in the
@@ -165,11 +171,15 @@ def match_events(
     relative to the packed sweep — long list operands, ALL_OF over wide
     lists.
     """
+    if strategy not in ("auto", "vectorized", "codegen"):
+        raise ValueError(
+            f"strategy must be 'auto', 'vectorized' or 'codegen', got {strategy!r}"
+        )
     forest = matcher.compile() if isinstance(matcher, ForestBuilder) else matcher
     if strategy == "codegen":
-        return _match_codegen(events, forest, event_id_col, sub_id_type, carry_cols)
+        return _match_codegen(events, forest, event_id_col, carry_cols)
     return _match_vectorized(
-        events, forest, event_id_col, sub_id_type, carry_cols, access_pruning
+        events, forest, event_id_col, carry_cols, access_pruning
     )
 
 
@@ -177,7 +187,6 @@ def _match_vectorized(
     events: DataFrame,
     forest: CompiledForest,
     event_id_col: str,
-    sub_id_type: str,
     carry_cols: list[str] | None = None,
     access_pruning: bool | None = None,
 ) -> DataFrame:
@@ -193,13 +202,25 @@ def _match_vectorized(
     )
 
     # Exact-decimal fast path: scale Float attrs to int64 fixed-point
-    # JVM-side (exact for DecimalType), so Arrow ships primitives and the
-    # Python evaluator never touches decimal objects (SURVEY.md §4.8).
+    # JVM-side, so Arrow ships primitives and the Python evaluator never
+    # touches decimal objects (SURVEY.md §4.8). A decimal rounds to
+    # scale 6 first (Spark's round is HALF_UP: ties away from zero, as
+    # normalize_event and the evaluator's decimal path round), since
+    # the cast to long truncates toward zero. A float64 column has no
+    # exact scale-6 reading and fails here, as it does in the evaluator.
     for name in _float_attributes(forest):
-        if name in needed:
-            projected = projected.withColumn(
-                name, (F.col(name) * (10**DECIMAL_SCALE)).cast("long")
+        if name not in needed:
+            continue
+        column_type = projected.schema[name].dataType
+        if isinstance(column_type, DecimalType):
+            scaled = F.round(name, DECIMAL_SCALE) * (10**DECIMAL_SCALE)
+        elif isinstance(column_type, IntegralType):
+            scaled = F.col(name) * (10**DECIMAL_SCALE)
+        else:
+            raise unsupported_column(
+                AttributeKind.FLOAT, f"Spark type {column_type.simpleString()}"
             )
+        projected = projected.withColumn(name, scaled.cast("long"))
 
     _, bc = broadcast_evaluator(spark, forest, access_pruning)
     id_field = projected.schema[event_id_col]
@@ -215,14 +236,13 @@ def _match_vectorized(
         import pyarrow.compute as pc
 
         ev = bc.value
-        sub_type = pa.int64() if sub_id_type == "bigint" else pa.int32()
         for batch in batches:
             rows, subs = ev.evaluate_arrow(batch)
             take_idx = pa.array(rows)
             id_arr = batch.column(batch.schema.get_field_index(event_id_col))
             arrays = [
                 pc.take(id_arr, take_idx),
-                pa.array(subs, type=pa.int64()).cast(sub_type),
+                pa.array(subs, type=pa.int64()),
             ]
             for c in carry:
                 arrays.append(
@@ -236,7 +256,7 @@ def _match_vectorized(
             )
 
     out_schema = ", ".join(
-        [f"event_id {id_field.dataType.simpleString()}", f"sub_id {sub_id_type}"]
+        [f"event_id {id_field.dataType.simpleString()}", "sub_id bigint"]
         + [f"{f.name} {f.dataType.simpleString()}" for f in carry_fields]
     )
     return projected.mapInArrow(match_batches, schema=out_schema)
@@ -246,7 +266,6 @@ def _match_codegen(
     events: DataFrame,
     forest: CompiledForest,
     event_id_col: str,
-    sub_id_type: str,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
     """Small-N strategy: subscriptions as Catalyst columns.
@@ -276,8 +295,6 @@ def _match_codegen(
         return text
 
     def to_sql_leaf(forest: CompiledForest, idx: int) -> str:
-        from ..expr.sql import leaf_to_sql
-
         return leaf_to_sql(forest.leaves[forest.node_left[idx]], dialect="spark")
 
     hits = []
@@ -286,14 +303,14 @@ def _match_codegen(
             hits.append(
                 F.when(
                     F.expr(node_sql(node_idx)),
-                    F.lit(sub).cast(sub_id_type),
+                    F.lit(sub).cast("bigint"),
                 )
             )
     carry = carry_cols or []
     if not hits:
         return events.select(
             F.col(event_id_col).alias("event_id"),
-            F.lit(None).cast(sub_id_type).alias("sub_id"),
+            F.lit(None).cast("bigint").alias("sub_id"),
             *[F.col(c) for c in carry],
         ).where(F.lit(False))
 

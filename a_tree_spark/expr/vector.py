@@ -36,6 +36,12 @@ Execution strategy (SURVEY.md §4.8), measured on 32 concurrent workers:
   times fewer reduceat elements than the byte form;
 - rows are processed in adaptive chunks sized to a memory budget so
   working sets stay cache-resident.
+
+Every caller hands the evaluator Arrow record batches: the matcher
+(engine/matcher.py) its projected event columns, and the fused page
+kernel (web/pipeline.py) one batch of the page attributes it derives.
+Both go through ``evaluate_arrow_roots``, the one chunk loop and the one
+column ingest (``arrow_columns``).
 """
 
 from __future__ import annotations
@@ -135,12 +141,14 @@ class _ListColumn:
         return self._offsets
 
 
-def scalar_column(mask: np.ndarray, values=None,
-                  codes=None, uniques=None) -> _ScalarColumn:
-    """Public constructor for prepared scalar columns (fused kernels).
-    String columns pass dictionary ``codes`` + ``uniques`` instead of
-    ``values`` — see _ScalarColumn."""
-    return _ScalarColumn(mask, values, codes=codes, uniques=uniques)
+def unsupported_column(kind, column_type: str) -> TypeError:
+    """The error for an attribute column type the evaluator cannot read
+    exactly, e.g. a float64 column for a FLOAT attribute; the matcher
+    raises the same one at plan time."""
+    return TypeError(
+        f"{kind.value} attribute column of {column_type} is not supported "
+        f"(FLOAT takes decimal or int64 fixed-point at scale {DECIMAL_SCALE})"
+    )
 
 
 def _scaled_int_from_decimal_literal(literal: Decimal) -> Fraction:
@@ -227,8 +235,8 @@ class _MemberGroup:
 
     def map_unique(self, unique_values: list) -> np.ndarray:
         """vocab lookup for a (small) unique-value dictionary; -1 = not
-        in any literal list. Lets fused kernels pass Arrow dictionary
-        indices so only UNIQUE strings ever cross into Python."""
+        in any literal list. String columns arrive as Arrow dictionary
+        indices, so only UNIQUE strings ever cross into Python."""
         return np.array(
             [self.vocab.get(u, -1) for u in unique_values], dtype=np.int64
         )
@@ -547,7 +555,7 @@ class BatchEvaluator:
         workload), so match decode runs per distinct root and expands to
         sub ids afterwards — round 1 gathered and bit-decoded one node
         row PER SUBSCRIPTION, which was the single largest cost at 100k
-        subs (~45% of evaluate_prepared). Root order follows the sweep
+        subs (~45% of the evaluation). Root order follows the sweep
         slot order from _plan_levels so decode segments index straight
         into this CSR."""
         forest = self.forest
@@ -642,8 +650,7 @@ class BatchEvaluator:
 
     def list_column(self, arr, attr_index: int) -> _ListColumn:
         """Prepared list column from an Arrow ListArray's offsets and
-        flattened values — the one list-encoding path of
-        ``arrow_columns`` and the fused page kernel (web/pipeline.py).
+        flattened values — the list-encoding path of ``arrow_columns``.
 
         String elements encode ONCE per batch, in Arrow, into codes of
         the attribute's literal vocabulary (``pc.index_in``; -1 = in no
@@ -756,30 +763,32 @@ class BatchEvaluator:
                 .to_numpy(zero_copy_only=False)
             )
             return _ScalarColumn(mask, values)
-        raise TypeError(
-            f"{kind.value} attribute column of Arrow type {arr.type} is not "
-            f"supported (FLOAT takes decimal or int64 fixed-point at scale "
-            f"{DECIMAL_SCALE})"
-        )
+        raise unsupported_column(kind, f"Arrow type {arr.type}")
+
+    def evaluate_arrow_roots(self, batch) -> tuple[np.ndarray, np.ndarray]:
+        """(row_positions, root_index) pairs of one RecordBatch holding
+        the forest's attribute columns (see ``evaluate_prepared_roots``).
+        Rows are chunked to the memory budget via zero-copy
+        ``batch.slice`` (pc kernels honor slice offsets)."""
+        n_total = batch.num_rows
+        if n_total == 0 or len(self.root_nodes) == 0:
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+        chunk = self._chunk_rows(n_total)
+        out_rows: list[np.ndarray] = []
+        out_roots: list[np.ndarray] = []
+        for start in range(0, n_total, chunk):
+            piece = batch.slice(start, min(chunk, n_total - start))
+            rows, roots = self.evaluate_prepared_roots(
+                self.arrow_columns(piece), piece.num_rows
+            )
+            out_rows.append(rows + start)
+            out_roots.append(roots)
+        return np.concatenate(out_rows), np.concatenate(out_roots)
 
     def evaluate_arrow(self, batch) -> tuple[np.ndarray, np.ndarray]:
         """(row_positions, sub_ids): one pair per (row, matching
-        subscription) of one RecordBatch. Rows are chunked to the memory
-        budget via zero-copy ``batch.slice`` (pc kernels honor slice
-        offsets)."""
-        n_total = batch.num_rows
-        if n_total == 0 or len(self.sub_ids) == 0:
-            return np.empty(0, dtype=np.int64), self.sub_ids[:0]
-        chunk = self._chunk_rows(n_total)
-        out_rows: list[np.ndarray] = []
-        out_subs: list[np.ndarray] = []
-        for start in range(0, n_total, chunk):
-            piece = batch.slice(start, min(chunk, n_total - start))
-            cache = self.arrow_columns(piece)
-            rows, subs = self.evaluate_prepared(cache, piece.num_rows)
-            out_rows.append(rows + start)
-            out_subs.append(subs)
-        return np.concatenate(out_rows), np.concatenate(out_subs)
+        subscription) of one RecordBatch."""
+        return self.expand_roots(*self.evaluate_arrow_roots(batch))
 
     # ------------------------------------------------------------ leaves
 
@@ -976,13 +985,19 @@ class BatchEvaluator:
             )
         return bufs
 
-    def evaluate_prepared(
+    def evaluate_prepared_roots(
         self, cache: dict[int, object], n: int
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Evaluate from prepared column caches (attr_index -> scalar/
-        list column). Fused kernels build these straight from Arrow
-        arrays; callers are responsible for chunking to a cache-friendly
-        n (see _chunk_rows).
+        """Root-level matches: (row_positions, root_index) pairs, where
+        root_index indexes ``root_nodes``/``root_sub_counts``, from a
+        prepared column cache (attr_index -> scalar/list column,
+        ``arrow_columns``) of n rows; ``evaluate_arrow_roots`` chunks
+        a batch to a cache-friendly n (see _chunk_rows). Decoding
+        per DISTINCT root (not per subscription) makes the gather +
+        nonzero + unpack proportional to the CSE-deduped forest, and
+        lets aggregation kernels combine counts BEFORE the root->sub
+        expansion (the expansion is a pure multiplicity joint —
+        ``expand_roots`` — or a tiny broadcast join on the Spark side).
 
         The interior sweep runs on PACKED truth bitsets (1 bit/row, the
         batch form of the reference's bitset memo, src/evaluation.rs):
@@ -993,19 +1008,6 @@ class BatchEvaluator:
         cuts sweep memory traffic 8x, which is the binding resource at
         32 concurrent workers (measured 3x per-process cpu inflation
         from DRAM saturation with byte-wide sweeps)."""
-        rows, root_idx = self.evaluate_prepared_roots(cache, n)
-        return self.expand_roots(rows, root_idx)
-
-    def evaluate_prepared_roots(
-        self, cache: dict[int, object], n: int
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Root-level matches: (row_positions, root_index) pairs, where
-        root_index indexes ``root_nodes``/``root_sub_counts``. Decoding
-        per DISTINCT root (not per subscription) makes the gather +
-        nonzero + unpack proportional to the CSE-deduped forest, and
-        lets aggregation kernels combine counts BEFORE the root->sub
-        expansion (the expansion is a pure multiplicity joint —
-        ``expand_roots`` — or a tiny broadcast join on the Spark side)."""
         if self.access_pruning and self.lazy_leaf_idxs:
             return self._evaluate_two_phase(cache, n)
         leaf_values = self._eval_leaves(cache, n)

@@ -1,9 +1,10 @@
 """Geotagging: URL ccTLD + embedded geo metadata -> lat/lon -> cell id.
 
-Entirely JVM-side (SURVEY.md §2.4): regexp extraction, a broadcast join
-against the tiny ccTLD-centroid dimension, coalesce, then the arithmetic
-cell encode — the whole geotag stage lives inside whole-stage codegen
-with one broadcast exchange and zero Python workers.
+Entirely JVM-side (SURVEY.md §2.4): a broadcast join against the tiny
+ccTLD-centroid dimension, coalesce, then the arithmetic cell encode —
+the whole geotag stage lives inside whole-stage codegen with one
+broadcast exchange and zero Python workers. The fused page kernel
+(web/pipeline.py) reads the same centroids, ``TLD_CENTROIDS``.
 """
 
 from __future__ import annotations
@@ -13,53 +14,27 @@ from pyspark.sql import DataFrame, functions as F
 from ..spatial.cells import DEFAULT_LEVEL, cell_id_sql
 from .synth import TLD_TABLE
 
-# 'https://host.sub.tld/...' -> last dotted component of the authority
-_TLD_REGEX = r"^https?://[^/]*\.([a-z]+)/"
-_GEO_META_REGEX = r'geo\.position" content="(-?[0-9.]+);(-?[0-9.]+)"'
+#: ccTLD -> (centroid lat, centroid lon). A url's tld is the last
+#: dotted component of its authority, so 'co-uk' (host.co.uk) keys
+#: under 'uk'.
+TLD_CENTROIDS: dict[str, tuple[float, float]] = {
+    t.split("-")[-1]: (lat, lon) for t, _lang, lat, lon, _w in TLD_TABLE
+}
 
 
 def centroid_df(spark) -> DataFrame:
-    rows = [(t.replace("-", "."), lat, lon) for (t, _lang, lat, lon, _w) in TLD_TABLE]
-    # 'co-uk' synthesizes as host.co.uk -> tld 'uk'
-    rows = [(t.split(".")[-1], lat, lon) for (t, lat, lon) in rows]
-    dedup = {}
-    for t, lat, lon in rows:
-        dedup.setdefault(t, (lat, lon))
     return spark.createDataFrame(
-        [(t, lat, lon) for t, (lat, lon) in dedup.items()],
+        [(t, lat, lon) for t, (lat, lon) in TLD_CENTROIDS.items()],
         "tld string, centroid_lat double, centroid_lon double",
     )
 
 
-def geotag_pages(
-    pages: DataFrame,
-    level: int = DEFAULT_LEVEL,
-    html_col: str = "html",
-) -> DataFrame:
-    """Adds tld, lat, lon (meta-geo first, ccTLD centroid fallback) and
-    cell_id. Pages with neither signal keep NULL lat/lon/cell_id.
-
-    If extraction already produced meta_lat/meta_lon/tld columns (the
-    fused with_page_features pass), they are reused; otherwise they are
-    derived here with JVM regexps (three extra regex scans of the html —
-    correct but slower)."""
-    spark = pages.sparkSession
-    if "meta_lat" in pages.columns:
-        tagged = pages
-    else:
-        html_str = F.col(html_col).cast("string")
-        tagged = (
-            pages.withColumn("tld", F.regexp_extract("url", _TLD_REGEX, 1))
-            .withColumn(
-                "meta_lat",
-                F.nullif(F.regexp_extract(html_str, _GEO_META_REGEX, 1), F.lit("")).cast("double"),
-            )
-            .withColumn(
-                "meta_lon",
-                F.nullif(F.regexp_extract(html_str, _GEO_META_REGEX, 2), F.lit("")).cast("double"),
-            )
-        )
-    tagged = tagged.join(F.broadcast(centroid_df(spark)), "tld", "left")
+def geotag_pages(pages: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
+    """Adds lat, lon (meta-geo first, ccTLD centroid fallback) and
+    cell_id to ``with_page_features`` output, which carries the
+    meta_lat, meta_lon and tld columns. Pages with neither signal keep
+    NULL lat/lon/cell_id."""
+    tagged = pages.join(F.broadcast(centroid_df(pages.sparkSession)), "tld", "left")
     tagged = (
         tagged.withColumn("lat", F.coalesce("meta_lat", "centroid_lat"))
         .withColumn("lon", F.coalesce("meta_lon", "centroid_lon"))

@@ -40,7 +40,7 @@ from ..expr.vector import planned_evaluator
 from ..pipeline.materialize import Held, retain
 from ..spatial.cells import DEFAULT_LEVEL
 from .extract import with_page_features
-from .geotag import geotag_pages
+from .geotag import TLD_CENTROIDS, geotag_pages
 from .synth import TLD_TABLE
 
 PAGE_ATTRIBUTES = AttributeTable([
@@ -85,7 +85,7 @@ def standing_page_subscriptions(n: int) -> dict[int, str]:
     north-star metric, generated like the reference's bench fixture
     (benches/data/search.json: templated expressions with long lists)."""
     langs = [row[1] for row in TLD_TABLE]
-    tlds = sorted({row[0].split("-")[-1] for row in TLD_TABLE})
+    tlds = sorted(TLD_CENTROIDS)
     subs: dict[int, str] = {}
     for i in range(n):
         lang = langs[i % len(langs)]
@@ -149,7 +149,7 @@ def skewed_page_subscriptions(n: int) -> dict[int, str]:
       tests/test_web_pipeline.py::test_skewed_workload_flips_pruning_on."""
     langs = [row[1] for row in TLD_TABLE]
     hot_langs = langs[:3]
-    tlds = sorted({row[0].split("-")[-1] for row in TLD_TABLE})
+    tlds = sorted(TLD_CENTROIDS)
     hot_tlds = tlds[:2]
     subs: dict[int, str] = {}
     for i in range(n):
@@ -205,7 +205,7 @@ def diverse_page_subscriptions(n: int) -> dict[int, str]:
     from ..pipeline.dedup import _splitmix64
 
     langs = [row[1] for row in TLD_TABLE]
-    tlds = sorted({row[0].split("-")[-1] for row in TLD_TABLE})
+    tlds = sorted(TLD_CENTROIDS)
     subs: dict[int, str] = {}
     for i in range(n):
         h = _splitmix64(i)
@@ -410,7 +410,8 @@ def fused_match_pages(
     task, halves Arrow boundary crossings, and never materializes the
     intermediate eventized columns. Feature extraction stays in
     pyarrow's C++ kernels (RE2 regex, split_pattern, list_slice);
-    matching reuses BatchEvaluator via prepared column caches.
+    the page attributes go to the evaluator as one Arrow batch, through
+    the matcher's own ingest (``BatchEvaluator.evaluate_arrow_roots``).
 
     Output: per-(cell, root) partials combined in the kernel, per task:
     (ckey, n_matches) with ckey = (cell key << sub_width) | root_id. At
@@ -442,10 +443,8 @@ def fused_match_pages(
     import pyarrow.compute as pc
     from pyspark.sql.types import IntegralType
 
-    from ..expr.vector import scalar_column
     from ..spatial.cells import cell_id as cell_id_np
     from .extract import page_features
-    from .synth import TLD_TABLE
 
     if emit != "cell_root_partials":
         raise ValueError(f"emit must be 'cell_root_partials', got {emit!r}")
@@ -480,15 +479,12 @@ def fused_match_pages(
     carried = [group] if group else []
     out = carried + ["ckey", "n_matches"]
 
-    centroid_lat: dict[str, float] = {}
-    centroid_lon: dict[str, float] = {}
-    for t, _lang, clat, clon, _w in TLD_TABLE:
-        key = t.split("-")[-1]
-        centroid_lat.setdefault(key, clat)
-        centroid_lon.setdefault(key, clon)
-
-    names = PAGE_ATTRIBUTES.names()
-    idx = {name: i for i, name in enumerate(names)}
+    # centroid per tld code of pc.index_in over the table's tlds; the
+    # trailing NaN slot takes an unknown or null tld
+    known_tlds = pa.array(list(TLD_CENTROIDS), type=pa.string())
+    centroids = np.array(
+        list(TLD_CENTROIDS.values()) + [(np.nan, np.nan)], dtype=np.float64
+    )
 
     def run(batches):
         ev = bc.value
@@ -502,8 +498,7 @@ def fused_match_pages(
         task_counts: list = []
 
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             text, meta_lat, meta_lon, tld = page_features(
                 batch.column(batch.schema.get_field_index("html")),
@@ -512,90 +507,30 @@ def fused_match_pages(
             )
             meta_lat = meta_lat.to_numpy(zero_copy_only=False)
             meta_lon = meta_lon.to_numpy(zero_copy_only=False)
-            # dictionary-encode the string attribute columns ONCE per
-            # batch: only the ~dozens of UNIQUE tld/lang values become
-            # Python objects; per-row data crossing into the evaluator
-            # is int64 codes (guide §2.3 narrower types / §4.2 — and
-            # the round-7 DRAM-ceiling decomposition's first candidate:
-            # cut bytes per doc crossing Arrow)
-            tld_enc = pc.dictionary_encode(tld)
-            tld_uniques = tld_enc.dictionary.to_pylist()
-            tld_codes = (
-                pc.fill_null(tld_enc.indices, -1)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            tld_mask = tld_codes == -1
-            lang_enc = pc.dictionary_encode(
-                batch.column(batch.schema.get_field_index("lang"))
-            )
-            lang_uniques = lang_enc.dictionary.to_pylist()
-            lang_codes = (
-                pc.fill_null(lang_enc.indices, -1)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            lang_mask = lang_codes == -1
-
             toks = pc.split_pattern(text, " ")
-            n_tokens = pc.list_value_length(toks).to_numpy().astype(np.int64)
-            lead = pc.list_slice(toks, 0, 8)
 
             has_geo = ~np.isnan(meta_lat)
-            # centroid lookup over the UNIQUE tlds (a ~26-entry python
-            # loop), gathered per row through the dictionary codes —
-            # the per-row pandas .map built an object column each batch
-            u_lat = np.array(
-                [centroid_lat.get(u, np.nan) for u in tld_uniques]
-                + [np.nan],   # trailing slot: null tld (code -1)
-                dtype=np.float64,
-            )
-            u_lon = np.array(
-                [centroid_lon.get(u, np.nan) for u in tld_uniques]
-                + [np.nan],
-                dtype=np.float64,
-            )
-            cent_lat = u_lat[tld_codes]
-            cent_lon = u_lon[tld_codes]
-            lat = np.where(has_geo, meta_lat, cent_lat)
-            lon = np.where(has_geo, meta_lon, cent_lon)
+            tld_code = pc.fill_null(
+                pc.index_in(tld, value_set=known_tlds), len(known_tlds)
+            ).to_numpy(zero_copy_only=False)
+            lat = np.where(has_geo, meta_lat, centroids[tld_code, 0])
+            lon = np.where(has_geo, meta_lon, centroids[tld_code, 1])
             no_pos = np.isnan(lat) | np.isnan(lon)
             cells = cell_id_np(np.nan_to_num(lat), np.nan_to_num(lon), level)
             lat_band = np.floor((np.nan_to_num(lat) + 90.0) / 10.0).astype(np.int64)
 
-            none_mask = np.zeros(n, dtype=bool)
-            out_rows, out_roots = [], []
-            chunk = ev._chunk_rows(n)
-            for start in range(0, n, chunk):
-                stop = min(start + chunk, n)
-                sl = slice(start, stop)
-                cache = {
-                    idx["lang"]: scalar_column(
-                        lang_mask[sl],
-                        codes=lang_codes[sl], uniques=lang_uniques,
-                    ),
-                    idx["tld"]: scalar_column(
-                        tld_mask[sl],
-                        codes=tld_codes[sl], uniques=tld_uniques,
-                    ),
-                    idx["n_tokens"]: scalar_column(none_mask[sl], n_tokens[sl]),
-                    idx["has_geo"]: scalar_column(none_mask[sl], has_geo[sl]),
-                    idx["lat_band"]: scalar_column(no_pos[sl], lat_band[sl]),
-                    # the matcher's own list encoding: the lead tokens
-                    # encode once, in Arrow, into codes of the forest's
-                    # literal vocabulary, and the int64 codes feed both
-                    # the member group and the generic all of / none of
-                    # leaves (no token becomes a Python string)
-                    idx["lead_tokens"]: ev.list_column(
-                        lead.slice(start, stop - start), idx["lead_tokens"]
-                    ),
-                }
-                rows, roots = ev.evaluate_prepared_roots(cache, stop - start)
-                out_rows.append(rows + start)
-                out_roots.append(roots)
-
-            rows = np.concatenate(out_rows)
-            roots = np.concatenate(out_roots)
+            events = pa.RecordBatch.from_arrays(
+                [
+                    batch.column(batch.schema.get_field_index("lang")),
+                    tld,
+                    pc.list_value_length(toks),
+                    pa.array(has_geo),
+                    pa.array(lat_band, mask=no_pos),
+                    pc.list_slice(toks, 0, 8),
+                ],
+                names=PAGE_ATTRIBUTES.names(),
+            )
+            rows, roots = ev.evaluate_arrow_roots(events)
             # root-level in-kernel combine: one row per (cell, root) per
             # batch. CSE shares one root across ~4.3 subs on the
             # templated workload and a row matches ~17x fewer roots than

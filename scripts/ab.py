@@ -15,7 +15,12 @@ the choosing-metrics guide (section 8): at least 10 pairs ran, the
 change won at least 9/10 of them, it failed no more runs than the
 parent did, and the medians differ by more than the distance between
 the parent's own quartiles. Wins count over every pair run: a pair
-whose change run reported no value counts as lost. Runs that failed a
+whose change run reported no value counts as lost. Beside it stands the
+no-regression verdict of the simplicity-review guide, against the
+metric's ``bound`` in BENCHMARK.json: ``worse`` when the change's median
+is worse than the parent's by more than the bound, ``unresolved`` when
+the parent's own IQR/median exceeds the bound (unless every change run
+beats every parent run), ``ok`` otherwise. Runs that failed a
 check are listed; their metrics still enter the medians. Below the
 metrics, a ``steal%`` row gives each side's median and quartiles of
 host CPU steal (each run's median over its steps, read from the run's
@@ -99,9 +104,26 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, median, q3
 
 
-def summarize(pairs: list[dict], metric: str, higher_is_better: bool) -> dict | None:
+def regression(base: list[float], change: list[float], higher_is_better: bool,
+               bound: float) -> str:
+    """No-regression verdict of one metric: "worse", "unresolved" or
+    "ok" (see the module docstring); ``bound`` is a share of the
+    parent's median."""
+    sign = 1 if higher_is_better else -1
+    b_q1, b_med, b_q3 = quartiles(base)
+    if sign * (quartiles(change)[1] - b_med) < -bound * abs(b_med):
+        return "worse"
+    every_run_better = all(sign * (c - b) > 0 for c in change for b in base)
+    if b_q3 - b_q1 > bound * abs(b_med) and not every_run_better:
+        return "unresolved"
+    return "ok"
+
+
+def summarize(pairs: list[dict], metric: str, higher_is_better: bool,
+              bound: float | None = None) -> dict | None:
     """Each side's median and quartiles of one metric over the runs
-    that reported it, the change's wins over all pairs, and the gain
+    that reported it, the change's wins over all pairs, the gain
+    verdict and, given the metric's bound, the no-regression
     verdict."""
     base = [p["base"]["metrics"][metric] for p in pairs if metric in p["base"]["metrics"]]
     change = [p["change"]["metrics"][metric] for p in pairs if metric in p["change"]["metrics"]]
@@ -131,6 +153,9 @@ def summarize(pairs: list[dict], metric: str, higher_is_better: bool) -> dict | 
         and wins >= WIN_SHARE * len(pairs)
         and failed["change"] <= failed["base"]
         and sign * (c_med - b_med) > b_q3 - b_q1,
+        "bound": bound,
+        "regression": None if bound is None
+        else regression(base, change, higher_is_better, bound),
     }
 
 
@@ -182,7 +207,8 @@ def main(argv=None) -> int:
                   f"correct base={pair['base']['correct']} "
                   f"change={pair['change']['correct']}", flush=True)
         table = {
-            m["name"]: summarize(pairs, m["name"], m["better"] == "higher")
+            m["name"]: summarize(pairs, m["name"], m["better"] == "higher",
+                                 m["bound"])
             for m in bench["end_to_end"]
         }
         steal = steal_summary(pairs)
@@ -192,7 +218,8 @@ def main(argv=None) -> int:
         print(f"\n{workload}: base {shas['base'][:10]} vs change {shas['change'][:10]}, "
               f"{len(pairs)} pairs, {seconds:g} s runs")
         print(f"{'metric':24s} {'base median [q1, q3]':>30s} "
-              f"{'change median [q1, q3]':>30s} {'ratio':>7s} {'won':>6s}  gain")
+              f"{'change median [q1, q3]':>30s} {'ratio':>7s} {'won':>6s}  gain  "
+              f"no-regression")
         for name, row in table.items():
             if row is None:
                 print(f"{name:24s} (not reported)")
@@ -202,7 +229,8 @@ def main(argv=None) -> int:
             print(f"{name:24s} {b['median']:12.5g} [{b['q1']:.5g}, {b['q3']:.5g}] "
                   f"{c['median']:12.5g} [{c['q1']:.5g}, {c['q3']:.5g}] "
                   f"{ratio:>7s} {row['wins']:>2d}/{row['pairs']:<3d}  "
-                  f"{'yes' if row['gain'] else 'no'}")
+                  f"{'yes' if row['gain'] else 'no':4s}  "
+                  f"{row['regression']} (bound {row['bound']:g})")
         if steal is None:
             print(f"{'steal%':24s} (not reported)")
         else:

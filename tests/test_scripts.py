@@ -1,6 +1,7 @@
-"""The scripts: the A/B gain rule of scripts/ab.py, the argument guards
-of scripts/bench_flows.py and scripts/submit_pipeline.py, and the
-deployment job's crash and resume."""
+"""The scripts: the A/B gain and no-regression rules of scripts/ab.py,
+the argument guards of scripts/bench_flows.py and
+scripts/submit_pipeline.py, and the deployment job's crash and
+resume."""
 
 import argparse
 import importlib.util
@@ -80,6 +81,36 @@ def test_ab_lower_is_better_and_missing_metric():
     row = ab.summarize(_pairs(base, [b / 2 for b in base], "setup_s"), "setup_s", False)
     assert row["gain"] and row["ratio"] < 1
     assert ab.summarize(_pairs(base, base, "setup_s"), "docs_per_s", True) is None
+
+
+def test_ab_no_regression_verdict_against_the_bound():
+    ab = _load("ab")
+    base = [10.0, 10.2, 10.4, 10.1, 10.3, 10.0, 10.2, 10.4, 10.1, 10.3]
+    row = ab.summarize(_pairs(base, [b * 0.9 for b in base]), "docs_per_s", True, 0.25)
+    assert row["regression"] == "ok" and row["bound"] == 0.25 and not row["gain"]
+    # 30% fewer docs/s is past a 25% bound
+    row = ab.summarize(_pairs(base, [b * 0.7 for b in base]), "docs_per_s", True, 0.25)
+    assert row["regression"] == "worse"
+    # a lower-is-better metric regresses upward
+    assert ab.summarize(_pairs(base, [b * 1.2 for b in base], "rss"), "rss", False,
+                        0.1)["regression"] == "worse"
+    assert ab.summarize(_pairs(base, [b * 0.8 for b in base], "rss"), "rss", False,
+                        0.1)["regression"] == "ok"
+    # no bound given, no verdict
+    assert ab.summarize(_pairs(base, base), "docs_per_s", True)["regression"] is None
+
+
+def test_ab_no_regression_unresolved_when_parent_spread_exceeds_bound():
+    ab = _load("ab")
+    base = [6.0, 14.0, 7.0, 13.0, 8.0, 12.0, 6.0, 14.0, 7.0, 13.0]  # IQR/median 0.6
+    row = ab.summarize(_pairs(base, base), "docs_per_s", True, 0.25)
+    assert row["regression"] == "unresolved"
+    # unless every change run beats every parent run
+    row = ab.summarize(_pairs(base, [15.0 + i for i in range(10)]), "docs_per_s", True, 0.25)
+    assert row["regression"] == "ok"
+    # a median past the bound is worse, whatever the spread
+    row = ab.summarize(_pairs(base, [b * 0.5 for b in base]), "docs_per_s", True, 0.25)
+    assert row["regression"] == "worse"
 
 
 def test_bench_flows_rejects_fewer_than_two_users():

@@ -58,6 +58,43 @@ def test_strategies_agree(eventized, builder):
     b = sorted(map(tuple, match_events(eventized, builder, "event_id", "codegen").collect()))
     assert a == b
     assert len(a) > 0  # the workload matches something
+    for typo in ("codgen", "fused", ""):
+        with pytest.raises(ValueError, match="strategy must be"):
+            match_events(eventized, builder, strategy=typo)
+
+
+def test_float_prescale_rounds_like_the_oracle(spark):
+    """FLOAT columns reach the evaluator as scale-6 fixed point. A
+    decimal of a finer scale rounds half away from zero, as the
+    single-row oracle does (truncation missed ``1.0000005 >= 1.000001``
+    and matched ``-0.0000005 >= 0.0``); a double column has no exact
+    reading and raises at plan time (it read ``1.005`` as 1004999)."""
+    from decimal import Decimal
+
+    from a_tree_spark.expr import ATreeMatcher, AttributeDefinition as A, AttributeTable
+
+    attrs = AttributeTable([A.float("f")])
+    expressions = {1: "f >= 1.000001", 2: "f >= 1.005", 3: "f >= 0.0"}
+    oracle = ATreeMatcher(attrs)
+    builder = ForestBuilder(attrs)
+    for sub_id, expression in expressions.items():
+        oracle.insert(sub_id, expression)
+        builder.insert(sub_id, expression)
+
+    values = [Decimal("1.0000005"), Decimal("1.005"), Decimal("-0.0000005")]
+    events = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(values)], "event_id long, f decimal(38,10)"
+    )
+    want = sorted(
+        (i, sub) for i, v in enumerate(values) for sub in oracle.search({"f": v})
+    )
+    assert (0, 1) in want and (2, 3) not in want
+    got = sorted(map(tuple, match_events(events, builder).collect()))
+    assert got == want
+
+    doubles = events.withColumn("f", events["f"].cast("double"))
+    with pytest.raises(TypeError, match="float.*double"):
+        match_events(doubles, builder)
 
 
 def test_access_pruning_agrees_end_to_end(eventized, builder):

@@ -829,3 +829,87 @@ def test_fused_group_contract(spark):
     nulls = pages.withColumn("unit_id", F.lit(None).cast("int"))
     with pytest.raises(Exception, match="nulls"):
         fused_match_pages(nulls, forest, group="unit_id").collect()
+
+
+def test_fused_kernel_null_paths_equal_composable_and_oracle(spark):
+    """Crafted pages reach the kernel's null paths, which synthetic
+    pages never do: a null lang, a null url, a url with no tld, an
+    unknown tld without geo meta (no position: null lat_band and a null
+    cell) and html with no ``<p>``. The fused kernel, the composable
+    pipeline and the single-row oracle agree on every (page, cell,
+    sub)."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.expr import ForestBuilder
+    from a_tree_spark.web.pipeline import fused_match_pages
+
+    geo = '<meta name="geo.position" content="48.85;2.35">'
+    crafted = [
+        ("https://a.example.de/p/1", b"<p>tok1 tok2</p>", None),
+        (None, b"<p>tok1</p>", "en"),
+        ("https://localhost/p/3", f"<head>{geo}</head><p>tok2</p>".encode(), "fr"),
+        ("https://x.example.zz/p/4", b"<p>tok1 tok3 tok4</p>", "en"),
+        ("https://b.example.fr/p/5", b"<html><body>no paragraph</body></html>", "fr"),
+    ]
+    pages = spark.createDataFrame(
+        [(url, None, html, "", lang) for url, html, lang in crafted],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    ).unionByName(synth_pages_df(spark, 60, partitions=2))
+
+    expressions = [
+        "lang is null", "tld is null", "lat_band is null",
+        "not has_geo and lat_band is not null", "lead_tokens is empty",
+        "lang = 'en'", "lang = 'fr'", "lang = 'de'", "lang = 'ja'",
+        "tld = 'de'", "tld = 'fr'", "tld = 'com'", "tld = 'zz'",
+        "lang in ['en', 'de']", "tld in ['fr', 'zz']",
+        "lat_band in [13, 14]", "lat_band = 13 or lat_band = 9",
+        "lead_tokens one of ['tok1', 'tok2']", "lead_tokens all of ['tok1']",
+        "lead_tokens none of ['tok1'] and n_tokens <= 3",
+        "lang in ['fr', 'ja']", "tld in ['de', 'uk']", "lat_band in [9]",
+        "lead_tokens one of ['tok3', 'tok4']",
+    ]
+    builder = ForestBuilder(PAGE_ATTRIBUTES)
+    for sub_id, expression in enumerate(expressions):
+        builder.insert(sub_id, expression)
+    forest = builder.compile()
+
+    keyed = pages.withColumn("page_key", F.xxhash64("url"))
+    fused = _expand_partials(fused_match_pages(keyed, builder, group="page_key"), [builder])
+    eventized = eventize_pages(pages).withColumn("page_key", F.xxhash64("url"))
+    composable = Counter(map(tuple, match_pages(eventize_pages(pages), builder)
+                             .select("page_key", "cell_id", "sub_id").collect()))
+    rows = eventized.collect()
+    oracle = Counter()
+    for row in rows:
+        event = {k: row[k] for k in PAGE_ATTRIBUTES.names()}
+        for sub in evaluate_event(forest, normalize_event(PAGE_ATTRIBUTES, event)):
+            oracle[(row["page_key"], row["cell_id"], sub)] += 1
+    assert fused == composable == oracle
+
+    # the null paths are taken: each crafted page's null attribute fires
+    hits = {(page, sub) for page, _, sub in oracle}
+    key = {r["url"]: r["page_key"] for r in rows}
+    assert (key["https://a.example.de/p/1"], 0) in hits          # lang is null
+    assert (key[None], 1) in hits and (key["https://localhost/p/3"], 1) in hits
+    assert (key["https://x.example.zz/p/4"], 2) in hits          # no position
+    assert (key["https://x.example.zz/p/4"], None, 2) in oracle  # null cell
+    assert (key["https://localhost/p/3"], 3) not in hits         # has geo
+
+
+def test_evaluator_columns_are_built_in_one_module():
+    """Only expr/vector.py builds evaluator columns: every other module
+    hands ``BatchEvaluator`` Arrow batches."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "a_tree_spark"
+    owner = root / "expr" / "vector.py"
+    banned = re.compile(r"_ScalarColumn\(|_ListColumn\(|scalar_column")
+    offenders = [
+        f"{path.relative_to(root)}:{n}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        if path != owner
+        for n, line in enumerate(path.read_text().splitlines(), start=1)
+        if banned.search(line)
+    ]
+    assert offenders == []
