@@ -32,6 +32,7 @@ the caller does downstream with the matches.
 from __future__ import annotations
 
 import copy
+import dataclasses
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DecimalType, IntegralType
@@ -67,7 +68,10 @@ def _float_attributes(forest: CompiledForest) -> list[str]:
 #: much lazy work it saves, so the decision variable is the total
 #: deferred-work density: sum of reference leaf costs over the LAZY
 #: leaves per forest unit (nodes + edges). Measured A/B (4096-row
-#: batches, warm, identical outputs):
+#: batches, warm, identical outputs), BEFORE list ``all of`` leaves
+#: joined the member group: the skewed and wide-ALL_OF rows below had
+#: those leaves generic and lazy; today a list attribute with two or
+#: more list leaves has none lazy, and the skewed forests read OFF:
 #:   workload             density   pruned vs dense
 #:   uniform flagship     .0004-.011  0.42x LOSS (r3 flagship: 33.5s/14.1s)
 #:   skewed 100k subs     .014        0.44x LOSS
@@ -115,7 +119,9 @@ def choose_access_pruning(evaluator: BatchEvaluator) -> bool:
     if not lazy:
         return False
     total = sum(_leaf_ref_cost(evaluator.forest.leaves[i]) for i in lazy)
-    edges = len(evaluator._parent_csr()[0])
+    # parent-CSR edges: two per interior node. Counted, not built: only
+    # the two-phase pass itself needs the CSR, and builds it lazily
+    edges = 2 * (evaluator.forest.num_nodes - evaluator.n_leaf_nodes)
     density = total / max(evaluator.forest.num_nodes + edges, 1)
     return density >= ACCESS_PRUNING_MIN_COST_DENSITY
 
@@ -168,8 +174,9 @@ def match_events(
     vectorized strategy: lazy (non-access) leaves evaluate only on the
     candidate rows their access siblings admit. Semantics-invariant
     (hypothesis-pinned); pays off when lazy predicates are expensive
-    relative to the packed sweep — long list operands, ALL_OF over wide
-    lists.
+    relative to the packed sweep — long list operands, such as a lone
+    ``all of`` over a wide list (two or more list leaves of one
+    attribute share the member group and are never lazy).
     """
     if strategy not in ("auto", "vectorized", "codegen"):
         raise ValueError(
@@ -203,24 +210,12 @@ def _match_vectorized(
 
     # Exact-decimal fast path: scale Float attrs to int64 fixed-point
     # JVM-side, so Arrow ships primitives and the Python evaluator never
-    # touches decimal objects (SURVEY.md §4.8). A decimal rounds to
-    # scale 6 first (Spark's round is HALF_UP: ties away from zero, as
-    # normalize_event and the evaluator's decimal path round), since
-    # the cast to long truncates toward zero. A float64 column has no
-    # exact scale-6 reading and fails here, as it does in the evaluator.
+    # touches decimal objects (SURVEY.md §4.8). The cast to long
+    # truncates toward zero, so the value is rounded first.
     for name in _float_attributes(forest):
-        if name not in needed:
-            continue
-        column_type = projected.schema[name].dataType
-        if isinstance(column_type, DecimalType):
-            scaled = F.round(name, DECIMAL_SCALE) * (10**DECIMAL_SCALE)
-        elif isinstance(column_type, IntegralType):
-            scaled = F.col(name) * (10**DECIMAL_SCALE)
-        else:
-            raise unsupported_column(
-                AttributeKind.FLOAT, f"Spark type {column_type.simpleString()}"
-            )
-        projected = projected.withColumn(name, scaled.cast("long"))
+        if name in needed:
+            scaled = _float_at_scale(projected, name) * (10**DECIMAL_SCALE)
+            projected = projected.withColumn(name, scaled.cast("long"))
 
     _, bc = broadcast_evaluator(spark, forest, access_pruning)
     id_field = projected.schema[event_id_col]
@@ -262,6 +257,22 @@ def _match_vectorized(
     return projected.mapInArrow(match_batches, schema=out_schema)
 
 
+def _float_at_scale(events: DataFrame, name: str):
+    """A FLOAT attribute's column as both strategies compare it: a
+    decimal rounded to scale 6 (Spark's round is HALF_UP: ties away
+    from zero, as normalize_event and the evaluator's decimal path
+    round), an integer as is. A float64 column has no exact scale-6
+    reading and fails here, as it does in the evaluator."""
+    column_type = events.schema[name].dataType
+    if isinstance(column_type, DecimalType):
+        return F.round(name, DECIMAL_SCALE)
+    if isinstance(column_type, IntegralType):
+        return F.col(name)
+    raise unsupported_column(
+        AttributeKind.FLOAT, f"Spark type {column_type.simpleString()}"
+    )
+
+
 def _match_codegen(
     events: DataFrame,
     forest: CompiledForest,
@@ -272,8 +283,19 @@ def _match_codegen(
 
     matches = explode(filter(array(if(expr_i, id_i, null)...), notnull)).
     Whole-stage codegen keeps this JVM-only; NULL boolean results are
-    dropped by the filter, which is exactly 'match = IS TRUE'.
+    dropped by the filter, which is exactly 'match = IS TRUE'. A FLOAT
+    leaf reads its column rounded to scale 6 (``_float_at_scale``),
+    through a temporary column so carried columns keep their values.
     """
+    needed = _needed_attributes(forest)
+    rounded: dict[str, str] = {}
+    for name in _float_attributes(forest):
+        if name in needed:
+            rounded[name] = f"__scale6_{name}"
+            events = events.withColumn(
+                rounded[name], _float_at_scale(events, name)
+            )
+
     # Reconstruct each subscription's expression from the DAG by node
     # (sub roots can be interior nodes); render SQL bottom-up.
     sql_cache: dict[int, str] = {}
@@ -295,7 +317,10 @@ def _match_codegen(
         return text
 
     def to_sql_leaf(forest: CompiledForest, idx: int) -> str:
-        return leaf_to_sql(forest.leaves[forest.node_left[idx]], dialect="spark")
+        leaf = forest.leaves[forest.node_left[idx]]
+        if leaf.attr_name in rounded:
+            leaf = dataclasses.replace(leaf, attr_name=rounded[leaf.attr_name])
+        return leaf_to_sql(leaf, dialect="spark")
 
     hits = []
     for node_idx, subs in sorted(forest.node_subs.items()):

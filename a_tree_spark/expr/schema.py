@@ -89,6 +89,15 @@ class AttributeTable:
             self._by_name[definition.name] = len(self._defs)
             self._defs.append(definition)
 
+    def __getstate__(self) -> dict:
+        """Pickle without the parse memo that ``ast.make_predicate``
+        keeps on the table: a table shared by many forests would ship
+        every predicate any of them ever parsed with each one. An
+        unpickled table starts a fresh memo on its first parse."""
+        state = self.__dict__.copy()
+        state.pop("_predicate_cache", None)
+        return state
+
     def __len__(self) -> int:
         return len(self._defs)
 

@@ -55,11 +55,18 @@ def leaf_to_sql(predicate: Predicate, dialect: str = "spark") -> str:
         return f"({col} IN ({_literal_list(operand)}))"
     if op is Op.NOT_IN:
         return f"({col} NOT IN ({_literal_list(operand)}))"
+    # A null element is never a member. Spark's arrays_overlap and
+    # array_contains return NULL rather than FALSE on one, which would
+    # leave `none of` and `not all of` NULL where the oracle reads TRUE,
+    # so the Spark bodies drop null elements (or test them) first.
     if op in (Op.ONE_OF, Op.NONE_OF):
         if dialect == "duckdb":
             body = f"list_has_any({col}, [{_literal_list(operand)}])"
         else:
-            body = f"arrays_overlap({col}, array({_literal_list(operand)}))"
+            body = (
+                f"arrays_overlap(filter({col}, x -> x IS NOT NULL), "
+                f"array({_literal_list(operand)}))"
+            )
         return f"({body})" if op is Op.ONE_OF else f"(NOT {body})"
     if op in (Op.ALL_OF, Op.NOT_ALL_OF):
         # direction: event list ⊆ literal list (src/predicates.rs:363-367);
@@ -68,7 +75,7 @@ def leaf_to_sql(predicate: Predicate, dialect: str = "spark") -> str:
             body = f"list_has_all([{_literal_list(operand)}], {col})"
         else:
             body = (
-                f"forall({col}, x -> "
+                f"forall({col}, x -> x IS NOT NULL AND "
                 f"array_contains(array({_literal_list(operand)}), x))"
             )
         return f"({body})" if op is Op.ALL_OF else f"(NOT {body})"

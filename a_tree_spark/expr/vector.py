@@ -13,11 +13,16 @@ Execution strategy (SURVEY.md §4.8), measured on 32 concurrent workers:
 - each distinct leaf is evaluated once per batch as a numpy bool column
   (the CSE payoff — reference shares node evaluations per event,
   src/lib.rs:72-75);
-- membership leaves (in / one of / ...) per attribute share one
-  broadcast inverted index: each batch value occurrence scatters into
-  exactly the leaves listing it — the vectorized analog of the
-  reference's access-predicate work-list (src/atree.rs:530-591);
-  strings encode once per batch, in Arrow, as int64 codes: scalar
+- membership leaves per attribute (in / not in of a scalar; one of /
+  none of / all of / not all of of a list) share one broadcast inverted
+  index: each batch value occurrence pairs with exactly the leaves
+  listing it, an all-of leaf counts its pairs per row against the
+  row's list length, and each group writes one contiguous block of
+  the leaf matrix in place — the vectorized analog of the reference's
+  access-predicate work-list (src/atree.rs:530-591). Grouped leaves are
+  never lazy, so a forest whose list leaves all group (crawl_skewed)
+  runs one dense sweep. Strings encode once per batch, in Arrow, as
+  int64 codes: scalar
   strings by per-batch dictionary (only unique strings cross into
   Python), list elements into the forest's literal vocabulary
   (BatchEvaluator.list_column: none cross);
@@ -46,6 +51,7 @@ column ingest (``arrow_columns``).
 
 from __future__ import annotations
 
+import bisect
 from decimal import Decimal
 from fractions import Fraction
 
@@ -176,62 +182,89 @@ def _decimal_threshold(op: Op, literal: Decimal) -> tuple[Op, int]:
     raise AssertionError(op)
 
 
+#: block order of a member group's leaves (see _MemberGroup)
+_GROUP_RANK = {
+    Op.IN: 0, Op.ONE_OF: 0, Op.ALL_OF: 1,
+    Op.NOT_ALL_OF: 2, Op.NOT_IN: 3, Op.NONE_OF: 3,
+}
+
+
 class _MemberGroup:
-    """Inverted index over the membership leaves of one attribute.
+    """Inverted index over the membership leaves of one attribute: the
+    ``in`` / ``not in`` leaves of a scalar, or the ``one of`` /
+    ``none of`` / ``all of`` / ``not all of`` leaves of a list.
 
     vocab: literal value -> dense vid; CSR (vid_offsets, vid_leaves) maps
     each vid to the group-leaf positions whose literal list contains it.
-    Evaluation scatters each batch value occurrence into its leaves —
-    the batch analog of the reference registering each predicate once in
-    a global work-list and evaluating it once per event
-    (src/atree.rs:558-591).
+    Evaluation gathers, for each batch value occurrence, one (leaf, row)
+    pair per leaf that lists the value — the batch analog of the
+    reference registering each predicate once in a global work-list and
+    evaluating it once per event (src/atree.rs:558-591). An ``in`` /
+    ``one of`` leaf is TRUE on the rows it has a pair for. An ``all of``
+    leaf is TRUE where its pair count equals the row's list length:
+    every element is a member. Pairs count once per element occurrence
+    (a vid maps to a leaf at most once), so ``['a', 'a']`` is within
+    ``all of ['a']``; an empty list has no elements and is TRUE, and a
+    null element or one outside the vocabulary has no pair, so it is
+    never a member. The negated ops flip the result; a null row is
+    never TRUE.
+
+    ``leaf_idxs`` is in block order (``_GROUP_RANK``): plain, subset,
+    negated subset, negated plain, so the subset leaves are positions
+    [subset_lo, subset_hi) and the negated ones [negated_lo, n_leaves).
+    The evaluator lays the group out as rows [row_lo, row_lo + n_leaves)
+    of its leaf matrix, and the group writes that block in place.
     """
 
     __slots__ = (
-        "attr_index", "is_list", "leaf_idxs", "negated", "vocab",
-        "vid_offsets", "vid_leaves", "n_leaves",
+        "attr_index", "is_list", "leaf_idxs", "vocab", "vid_offsets",
+        "vid_leaves", "n_leaves", "subset_lo", "subset_hi", "negated_lo",
+        "row_lo",
     )
 
     def __init__(self, forest, attr_index: int, is_list: bool, leaf_idxs: list[int]):
         self.attr_index = attr_index
         self.is_list = is_list
-        self.leaf_idxs = leaf_idxs
+        rank = {i: _GROUP_RANK[forest.leaves[i].op] for i in leaf_idxs}
+        self.leaf_idxs = sorted(leaf_idxs, key=rank.__getitem__)
         self.n_leaves = len(leaf_idxs)
-        self.negated = np.array(
-            [forest.leaves[i].op in (Op.NOT_IN, Op.NONE_OF) for i in leaf_idxs]
+        ranks = [rank[i] for i in self.leaf_idxs]
+        self.subset_lo = bisect.bisect_left(ranks, 1)
+        self.negated_lo = bisect.bisect_left(ranks, 2)
+        self.subset_hi = bisect.bisect_left(ranks, 3)
+        self.row_lo = 0  # set by the evaluator's leaf-row layout
+        operands = [forest.leaves[i].operand for i in self.leaf_idxs]
+        values = [v for operand in operands for v in operand]
+        # vids in first-occurrence order
+        vocab = {v: vid for vid, v in enumerate(dict.fromkeys(values))}
+        vids = np.fromiter(map(vocab.__getitem__, values), np.int64, len(values))
+        positions = np.repeat(
+            np.arange(self.n_leaves, dtype=np.int64),
+            [len(operand) for operand in operands],
         )
-        vocab: dict = {}
-        per_vid_leaves: list[list[int]] = []
-        for group_pos, leaf_idx in enumerate(leaf_idxs):
-            for value in forest.leaves[leaf_idx].operand:
-                vid = vocab.get(value)
-                if vid is None:
-                    vid = len(vocab)
-                    vocab[value] = vid
-                    per_vid_leaves.append([])
-                per_vid_leaves[vid].append(group_pos)
-        counts = np.array([len(v) for v in per_vid_leaves], dtype=np.int64)
-        self.vid_offsets = np.concatenate([[0], np.cumsum(counts)])
-        self.vid_leaves = (
-            np.concatenate([np.asarray(v, dtype=np.int64) for v in per_vid_leaves])
-            if per_vid_leaves
-            else np.empty(0, dtype=np.int64)
+        # CSR by vid, leaves ascending; one entry per (vid, leaf) even
+        # for a repeated literal: the subset count relies on it
+        order = np.lexsort((positions, vids))
+        vids, positions = vids[order], positions[order]
+        keep = np.ones(len(vids), dtype=bool)
+        keep[1:] = (vids[1:] != vids[:-1]) | (positions[1:] != positions[:-1])
+        self.vid_leaves = positions[keep]
+        self.vid_offsets = np.concatenate(
+            [[0], np.cumsum(np.bincount(vids[keep], minlength=len(vocab)))]
         )
         self.vocab = vocab
 
-    def _codes(self, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Map integer values -> (valid_mask, vids) by searchsorted on
-        the sorted vocab (strings arrive pre-coded)."""
+    def _codes(self, values: np.ndarray) -> np.ndarray:
+        """Map integer values -> vids (-1 = in no literal list) by
+        searchsorted on the sorted vocab (strings arrive pre-coded)."""
         if len(values) == 0:
-            return np.empty(0, dtype=bool), np.empty(0, dtype=np.int64)
+            return np.empty(0, dtype=np.int64)
         keys = np.fromiter(self.vocab.keys(), dtype=np.int64, count=len(self.vocab))
         vids_by_key = np.fromiter(self.vocab.values(), dtype=np.int64, count=len(self.vocab))
         order = np.argsort(keys)
         sorted_keys, sorted_vids = keys[order], vids_by_key[order]
-        pos = np.searchsorted(sorted_keys, values)
-        pos_clipped = np.minimum(pos, len(sorted_keys) - 1)
-        valid = sorted_keys[pos_clipped] == values
-        return valid, sorted_vids[pos_clipped]
+        pos = np.minimum(np.searchsorted(sorted_keys, values), len(sorted_keys) - 1)
+        return np.where(sorted_keys[pos] == values, sorted_vids[pos], -1)
 
     def map_unique(self, unique_values: list) -> np.ndarray:
         """vocab lookup for a (small) unique-value dictionary; -1 = not
@@ -241,55 +274,81 @@ class _MemberGroup:
             [self.vocab.get(u, -1) for u in unique_values], dtype=np.int64
         )
 
-    def evaluate_codes(
-        self, vids: np.ndarray, rows: np.ndarray, mask: np.ndarray, n: int
-    ) -> np.ndarray:
-        """Pre-coded path: vids (-1 = no vocab hit) aligned with rows."""
-        valid = vids >= 0
-        return self._scatter(rows[valid], vids[valid], mask, n)
-
-    def evaluate_column(self, col, n: int) -> np.ndarray:
-        """-> bool TRUE-mask matrix (n_leaves, n)."""
+    def evaluate_into(self, col, n: int, block: np.ndarray) -> None:
+        """Write the group's TRUE bits for ``n`` rows of ``col`` into
+        ``block``, its (n_leaves, n) row range of the leaf matrix. The
+        block is C-contiguous, so its flat view takes the pairs as one
+        1-D scatter."""
+        lengths = None
         if self.is_list:
-            if col.vids is not None:
-                return self.evaluate_codes(col.vids, col.row_ids, col.mask, n)
-            values, rows = col.flat, col.row_ids
+            rows, lengths = col.row_ids, col.lengths
+            # string elements arrive pre-coded (-1 = no vocab hit)
+            vids = col.vids if col.vids is not None else self._codes(col.flat)
+        elif col.codes is not None:
+            # dictionary path: vocab lookup over the few uniques, gather
+            # through the int codes (trailing -1 = null)
+            rows = np.arange(n)
+            vids = np.append(self.map_unique(col.uniques), -1)[col.codes]
         else:
-            if col.codes is not None:
-                # dictionary path: vocab lookup over the few uniques,
-                # gather through the int codes (trailing -1 = null)
-                lookup = np.append(self.map_unique(col.uniques), -1)
-                return self.evaluate_codes(
-                    lookup[col.codes], np.arange(n), col.mask, n
-                )
-            values, rows = col.values, np.arange(n)
-        valid, vids = self._codes(np.asarray(values))
-        return self._scatter(rows[valid], vids[valid], col.mask, n)
+            rows = np.arange(n)
+            vids = self._codes(col.values)
+        block.fill(False)
+        flat = block.reshape(-1)
+        valid = vids >= 0
+        pair_leaves, pair_rows = self._pairs(rows[valid], vids[valid])
+        if self.subset_hi > self.subset_lo:
+            in_subset = (pair_leaves >= self.subset_lo) & (pair_leaves < self.subset_hi)
+            plain = ~in_subset
+            flat[pair_leaves[plain] * n + pair_rows[plain]] = True
+            self._mark_subsets(
+                block, pair_leaves[in_subset], pair_rows[in_subset], lengths
+            )
+        else:
+            flat[pair_leaves * n + pair_rows] = True
+        negated = block[self.negated_lo:]
+        np.logical_not(negated, out=negated)
+        if col.mask.any():
+            block[:, col.mask] = False  # UNKNOWN never matches
 
-    def _scatter(
-        self, occ_rows: np.ndarray, occ_vids: np.ndarray, mask: np.ndarray, n: int
-    ) -> np.ndarray:
+    def _pairs(
+        self, occ_rows: np.ndarray, occ_vids: np.ndarray
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(group position, row) for every (occurrence, listing leaf)
+        pair: a ragged gather through the vid -> leaves CSR."""
+        starts = self.vid_offsets[occ_vids]
+        counts = self.vid_offsets[occ_vids + 1] - starts
+        total = int(counts.sum())
+        offsets = np.repeat(starts, counts)
+        within = np.arange(total) - np.repeat(
+            np.cumsum(counts) - counts, counts
+        )
+        return self.vid_leaves[offsets + within], np.repeat(occ_rows, counts)
 
-        hit = np.zeros((self.n_leaves, n), dtype=bool)
-        if len(occ_vids):
-            starts = self.vid_offsets[occ_vids]
-            counts = self.vid_offsets[occ_vids + 1] - starts
-            total = int(counts.sum())
-            if total:
-                # ragged gather: positions into vid_leaves for every
-                # (occurrence, leaf) pair
-                offsets = np.repeat(starts, counts)
-                within = np.arange(total) - np.repeat(
-                    np.concatenate([[0], np.cumsum(counts)[:-1]]), counts
-                )
-                pair_leaves = self.vid_leaves[offsets + within]
-                pair_rows = np.repeat(occ_rows, counts)
-                hit[pair_leaves, pair_rows] = True
-
-        hit ^= self.negated[:, None]
-        if mask is not None and mask.any():
-            hit[:, mask] = False  # UNKNOWN never matches
-        return hit
+    def _mark_subsets(
+        self, block: np.ndarray, leaves: np.ndarray, rows: np.ndarray,
+        lengths: np.ndarray,
+    ) -> None:
+        """Set ``block`` TRUE where a subset leaf lists every element of
+        the row: count the (leaf, row) pairs in O(pairs) by sorting
+        their keys — no dense leaves x rows count — and compare each
+        run's length with the row's list length. Rows are already
+        ascending, so row-major keys arrive as sorted runs, which a
+        stable sort merges. Empty lists are TRUE (null rows have length
+        0 too; the caller masks them)."""
+        n_leaves = self.n_leaves
+        keys = np.sort(rows * n_leaves + leaves, kind="stable")
+        if len(keys):
+            first = np.empty(len(keys), dtype=bool)
+            first[0] = True
+            np.not_equal(keys[1:], keys[:-1], out=first[1:])
+            starts = np.flatnonzero(first)
+            counts = np.diff(starts, append=len(keys))
+            row, leaf = np.divmod(keys[starts], n_leaves)
+            full = counts == lengths[row]
+            block[leaf[full], row[full]] = True
+        empty = np.flatnonzero(lengths == 0)
+        if len(empty):
+            block[self.subset_lo:self.subset_hi, empty] = True
 
 
 def _pull_block(
@@ -384,15 +443,19 @@ class BatchEvaluator:
         """Group leaves per attribute for one-shot evaluation:
 
         - EQ leaves -> one searchsorted/map + scatter per attribute;
-        - IN/NOT_IN and ONE_OF/NONE_OF leaves -> a broadcast *inverted
-          index* (literal value -> leaf ids): each value occurrence in the
-          batch scatters into exactly the leaves that list it, so work is
-          O(occurrences x leaves-per-value) instead of O(leaves x rows).
+        - IN/NOT_IN leaves of a scalar, and ONE_OF/NONE_OF/ALL_OF/
+          NOT_ALL_OF leaves of a list -> a broadcast *inverted index*
+          (literal value -> leaf ids, ``_MemberGroup``): each value
+          occurrence in the batch pairs with exactly the leaves that list
+          it, so work is O(occurrences x leaves-per-value) instead of
+          O(leaves x rows); ALL_OF counts those pairs per (leaf, row).
           This is the vectorized restatement of the reference's global
           predicate work-list / access-predicate pass
           (src/atree.rs:530-591).
 
-        Everything else evaluates per-leaf (still vectorized per batch).
+        An attribute needs at least 4 EQ leaves, or 2 membership leaves,
+        for a group. Everything else evaluates per-leaf (still vectorized
+        per batch); only those generic leaves can be lazy (_plan_access).
         """
         forest = self.forest
         eq_groups: dict[int, list[int]] = {}
@@ -403,7 +466,7 @@ class BatchEvaluator:
                 eq_groups.setdefault(leaf.attr_index, []).append(leaf_idx)
             elif leaf.op in (Op.IN, Op.NOT_IN):
                 member_groups.setdefault((leaf.attr_index, False), []).append(leaf_idx)
-            elif leaf.op in (Op.ONE_OF, Op.NONE_OF):
+            elif leaf.op in self._FLAT_OPS:
                 member_groups.setdefault((leaf.attr_index, True), []).append(leaf_idx)
             else:
                 generic.append(leaf_idx)
@@ -428,6 +491,21 @@ class BatchEvaluator:
                 _MemberGroup(forest, attr_index, is_list, leaf_idxs)
             )
         self.generic_leaves = generic
+        # leaf-row layout of the per-batch leaf matrix: each member
+        # group's leaves take one contiguous block of rows, in the
+        # group's own order, so a group writes its block in place (no
+        # per-group matrix, no copy); every other leaf follows in leaf
+        # order. _leaf_row maps a leaf index to its row.
+        order: list[int] = []
+        for group in self.member_groups:
+            group.row_lo = len(order)
+            order.extend(group.leaf_idxs)
+        grouped = set(order)
+        order.extend(i for i in range(len(forest.leaves)) if i not in grouped)
+        self._leaf_row = np.empty(len(order), dtype=np.int64)
+        self._leaf_row[np.asarray(order, dtype=np.int64)] = np.arange(
+            len(order), dtype=np.int64
+        )
         # what list_column builds per list attribute: member-group vids,
         # and element values for the generic ops that read them. A
         # string list gets ONE literal vocabulary (value -> code) that
@@ -536,9 +614,10 @@ class BatchEvaluator:
             right = perm[np.array([forest.node_right[i] for i in nodes], dtype=np.int64)]
             self.levels.append((kind, lo, hi, left, right))
         self.n_leaf_nodes = len(leaf_nodes)
-        self.leaf_of_node = np.array(
-            [forest.node_left[i] for i in leaf_nodes], dtype=np.int64
-        )
+        # leaf-matrix row of each leaf node (_plan_leaf_groups layout)
+        self.leaf_of_node = self._leaf_row[
+            np.array([forest.node_left[i] for i in leaf_nodes], dtype=np.int64)
+        ]
         # interning guarantees one node per distinct leaf predicate;
         # the pruning pass relies on this to scatter leaf candidates
         # with plain indexed assignment (checked once at plan time —
@@ -909,7 +988,9 @@ class BatchEvaluator:
         )
 
     def _eval_leaves(self, cache: dict, n: int, lazy_true: bool = False) -> np.ndarray:
+        """(n_leaves, n) TRUE matrix in leaf-row order (``_leaf_row``)."""
         forest = self.forest
+        leaf_row = self._leaf_row
         leaf_values = np.empty((len(forest.leaves), n), dtype=bool)
 
         # grouped equality: one searchsorted + scatter per attribute
@@ -933,19 +1014,20 @@ class BatchEvaluator:
             group_rows[pos[hit], rows[hit]] = True
             if col.mask.any():
                 group_rows[:, col.mask] = False
-            leaf_values[leaf_idxs, :] = group_rows
+            leaf_values[leaf_row[leaf_idxs], :] = group_rows
 
         for group in self.member_groups:
-            leaf_values[group.leaf_idxs, :] = group.evaluate_column(
-                cache[group.attr_index], n
+            group.evaluate_into(
+                cache[group.attr_index], n,
+                leaf_values[group.row_lo : group.row_lo + group.n_leaves],
             )
 
         for leaf_idx in self.generic_leaves:
             if lazy_true and leaf_idx in self._lazy_set:
-                leaf_values[leaf_idx] = True  # monotone upper bound
+                leaf_values[leaf_row[leaf_idx]] = True  # monotone upper bound
                 continue
             attr_index = self.forest.leaves[leaf_idx].attr_index
-            leaf_values[leaf_idx] = self._eval_generic_leaf(
+            leaf_values[leaf_row[leaf_idx]] = self._eval_generic_leaf(
                 leaf_idx, cache[attr_index], n
             )
         return leaf_values
@@ -1218,16 +1300,16 @@ class BatchEvaluator:
         # affect any root on any row, so the upper-bound TRUE bits may
         # stay in leaf_bits (writing FALSE, as the k==0 branch below
         # does, is equally valid — both are unobservable at the roots).
-        # On heavy-tailed workloads (skewed_page_subscriptions: ~25k
-        # distinct wide all-of leaves, each selective) most lazy leaves
-        # have no candidates in most batches, and the per-leaf python
-        # iteration itself was the phase-2 floor. One vectorized
+        # When many lazy leaves are selective, most have no candidates
+        # in most batches, and the per-leaf python iteration itself was
+        # the phase-2 floor (profiled round 4). One vectorized
         # any-reduction finds the live subset.
         lazy_arr = np.asarray(self.lazy_leaf_idxs, dtype=np.int64)
-        live = lazy_arr[leaf_cand[lazy_arr].any(axis=1)] if len(lazy_arr) else lazy_arr
-        for leaf_idx in live:
+        lazy_rows = self._leaf_row[lazy_arr]
+        live = leaf_cand[lazy_rows].any(axis=1)
+        for leaf_idx, leaf_row in zip(lazy_arr[live], lazy_rows[live]):
             mask = np.unpackbits(
-                leaf_cand[leaf_idx], bitorder="little"
+                leaf_cand[leaf_row], bitorder="little"
             )[:n].astype(bool)
             k = int(mask.sum())
             col = cache[self.forest.leaves[leaf_idx].attr_index]
@@ -1242,7 +1324,7 @@ class BatchEvaluator:
                     leaf_idx, self._subset_col(col, idx), k
                 )
             packed_row = np.packbits(row, bitorder="little")
-            leaf_bits[leaf_idx, : len(packed_row)] = packed_row
+            leaf_bits[leaf_row, : len(packed_row)] = packed_row
 
         self._sweep(values, gather_a, gather_b, leaf_bits)  # exact
         return self._decode_roots(values, n)

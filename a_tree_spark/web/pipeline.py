@@ -143,9 +143,11 @@ def skewed_page_subscriptions(n: int) -> dict[int, str]:
       is inherently unselective, which real systems offset with
       high-cardinality list domains or extra conjuncts);
     - every 4th subscription conjoins a wide-ish ``all of`` (4-8
-      elements, cost 8-16 in the reference cost model) — the generic
-      lazy leaves that flip the cost-model access pruning ON
-      (choose_access_pruning), pinned by
+      elements, cost 8-16 in the reference cost model). These used to
+      be generic lazy leaves that switched the cost-model access
+      pruning ON; they now share the ``lead_tokens`` member group with
+      the ``one of`` / ``none of`` leaves, are never lazy, and the
+      forest reads pruning OFF (choose_access_pruning), pinned by
       tests/test_web_pipeline.py::test_skewed_workload_flips_pruning_on."""
     langs = [row[1] for row in TLD_TABLE]
     hot_langs = langs[:3]

@@ -162,8 +162,12 @@ def test_access_pruning_selective_workload_with_planted_matches():
     lazy siblings. Results must equal the dense evaluator exactly,
     including planted rows engineered to fire specific subscriptions
     (6.6x faster measured at 400 subs x 20k rows — recorded in
-    BENCH/PLANS.md)."""
-    attrs = AttributeTable([A.integer("k"), A.integer_list("xs")])
+    BENCH/PLANS.md). The 60 ``all of`` leaves over ``xs`` share one
+    member group, so the lazy leaf is a lone wide ``all of`` over
+    ``ys`` (the reference's benches/data/search.json shape: one
+    expression with a long list), which stays generic."""
+    attrs = AttributeTable([A.integer("k"), A.integer_list("xs"),
+                            A.integer_list("ys")])
     builder = ForestBuilder(attrs)
     rng = np.random.RandomState(7)
     wides = {}
@@ -171,6 +175,8 @@ def test_access_pruning_selective_workload_with_planted_matches():
         wide = sorted(rng.choice(100000, size=40, replace=False).tolist())
         wides[i] = wide
         builder.insert(i, f"k = {i % 50} and xs all of {wide}")
+    lone = list(range(0, 3600, 3))
+    builder.insert(60, f"k = 7 and ys all of {lone}")
     forest = builder.compile()
 
     n = 4000
@@ -179,11 +185,19 @@ def test_access_pruning_selective_workload_with_planted_matches():
     for i in range(0, 60, 3):  # plant rows that DO satisfy sub i
         ks[i] = i % 50
         xs[i] = sorted(rng.choice(wides[i], size=5, replace=False).tolist())
-    batch = event_batch(attrs, [{"k": k, "xs": x} for k, x in zip(ks, xs)])
+    ys = [sorted(rng.choice(3600, size=3, replace=False).tolist())
+          for _ in range(n)]
+    batch = event_batch(
+        attrs, [{"k": k, "xs": x, "ys": y} for k, x, y in zip(ks, xs, ys)]
+    )
 
     dense = BatchEvaluator(forest)
     pruned = BatchEvaluator(forest, access_pruning=True)
-    assert len(pruned.lazy_leaf_idxs) > 0  # pruning actually engaged
+    # the xs leaves are one member group; the lone ys leaf is lazy
+    xs_leaves = [i for i, leaf in enumerate(forest.leaves)
+                 if leaf.attr_name == "xs"]
+    assert [sorted(g.leaf_idxs) for g in pruned.member_groups] == [xs_leaves]
+    assert [forest.leaves[i].attr_name for i in pruned.lazy_leaf_idxs] == ["ys"]
     a = sorted(zip(*map(np.ndarray.tolist, dense.evaluate_arrow(batch))))
     b = sorted(zip(*map(np.ndarray.tolist, pruned.evaluate_arrow(batch))))
     assert a == b and len(a) >= 20  # planted matches found by both
@@ -294,19 +308,22 @@ def test_pull_block_words_equal_bytes(seed):
 
 
 def _tags_forest():
-    """Selective integer access predicates guarding lazy string-list
-    ``all of`` / ``none of`` leaves (a single ``none of`` leaf stays out
-    of the member group, so it is generic and lazy too)."""
+    """Selective integer access predicates guarding string-list
+    ``all of`` / ``none of`` leaves over ``tags`` (one member group),
+    and one lone wide ``all of`` over ``wide``, which stays out of any
+    group, so it is generic and lazy."""
     from a_tree_spark.expr import AttributeDefinition as A, AttributeTable
 
     attrs = AttributeTable([A.integer("k"), A.string_list("tags"),
-                            A.string("s")])
+                            A.string("s"), A.string_list("wide")])
     builder = ForestBuilder(attrs)
     for i in range(8):
         toks = ", ".join(f"'t{(i * 3 + j) % 12}'" for j in range(5))
         builder.insert(i, f"k = {i} and tags all of [{toks}]")
     builder.insert(8, "k = 2 and tags none of ['t1', 't3']")
     builder.insert(9, "k = 5 and s = 'q'")
+    wide = ", ".join(f"'w{j}'" for j in range(0, 60, 2))
+    builder.insert(10, f"k = 3 and wide all of [{wide}]")
     return builder.compile()
 
 
@@ -315,24 +332,30 @@ def _tags_batch(n, seed):
     import pyarrow as pa
 
     rng = random.Random(seed)
-    vocab = [f"t{i}" for i in range(12)]
-    tags = []
-    for _ in range(n):
-        r = rng.random()
-        if r < 0.08:
-            tags.append(None)
-        elif r < 0.16:
-            tags.append([])
-        else:
-            row = rng.sample(vocab, rng.randint(1, 4))
-            if rng.random() < 0.1:
-                row.insert(rng.randint(0, len(row)), None)
-            tags.append(row)
+
+    def lists(vocab):
+        out = []
+        for _ in range(n):
+            r = rng.random()
+            if r < 0.08:
+                out.append(None)
+            elif r < 0.16:
+                out.append([])
+            else:
+                row = rng.sample(vocab, rng.randint(1, 4))
+                if rng.random() < 0.1:
+                    row.insert(rng.randint(0, len(row)), None)
+                out.append(row)
+        return out
+
+    tags = lists([f"t{i}" for i in range(12)])
     return pa.record_batch({
         "k": pa.array([rng.choice([None] + list(range(16))) for _ in range(n)],
                       type=pa.int64()),
         "tags": pa.array(tags, type=pa.list_(pa.string())),
         "s": pa.array([rng.choice(["q", "r", None]) for _ in range(n)]),
+        "wide": pa.array(lists([f"w{i}" for i in range(40)]),
+                         type=pa.list_(pa.string())),
     })
 
 
@@ -345,8 +368,14 @@ def test_pruned_equals_dense_on_string_list_lazy_leaves(n, monkeypatch):
     forest = _tags_forest()
     dense = BatchEvaluator(forest)
     pruned = BatchEvaluator(forest, access_pruning=True)
-    lazy_ops = {forest.leaves[i].op.name for i in pruned.lazy_leaf_idxs}
-    assert {"ALL_OF", "NONE_OF"} <= lazy_ops
+    # the tags leaves sit in one member group; the lone wide leaf is lazy
+    tags = forest.attributes.index_of("tags")
+    assert [
+        {forest.leaves[i].op.name for i in g.leaf_idxs}
+        for g in pruned.member_groups if g.attr_index == tags
+    ] == [{"ALL_OF", "NONE_OF"}]
+    lazy = [forest.leaves[i] for i in pruned.lazy_leaf_idxs]
+    assert ("wide", "ALL_OF") in [(leaf.attr_name, leaf.op.name) for leaf in lazy]
 
     subsets = []
     real_subset = pruned._subset_col
@@ -369,6 +398,91 @@ def test_pruned_equals_dense_on_string_list_lazy_leaves(n, monkeypatch):
         for sub in evaluate_event(forest, event)
     )
     assert got == oracle
+
+
+def _list_group_forest():
+    """``all of``, ``not all of``, ``one of`` and ``none of`` sharing
+    one string-list and one integer-list attribute (one member group
+    each), plus a lone wide ``all of`` over ``other`` that stays generic
+    and lazy, so forced pruning runs its two-phase pass."""
+    attrs = AttributeTable([A.integer("k"), A.string_list("tags"),
+                            A.integer_list("nums"), A.integer_list("other")])
+    builder = ForestBuilder(attrs)
+    for sub_id, expression in enumerate([
+        "tags all of ['a']",
+        "tags all of ['a', 'b']",
+        "not (tags all of ['a', 'c'])",
+        "tags one of ['a', 'c']",
+        "tags none of ['b']",
+        "k = 1 and tags all of ['b', 'c']",
+        "k = 2 or not (tags all of ['b'])",
+        "nums all of [1]",
+        "nums all of [1, 2]",
+        "not (nums all of [1, 3])",
+        "nums one of [1, 3]",
+        "nums none of [2]",
+        "k = 1 and nums all of [2, 3]",
+        f"k = 3 and other all of {list(range(0, 400, 2))}",
+    ]):
+        builder.insert(sub_id, expression)
+    return builder.compile()
+
+
+def _list_group_batch(n, seed):
+    """Rows 0-7 plant a repeated element, a null list, an empty list, a
+    null element alone and beside a member, and an element outside the
+    vocabulary; the rest are random."""
+    import pyarrow as pa
+
+    rng = random.Random(seed)
+    tags = [["a", "a"], None, [], [None], ["a", None], ["zzz"], ["a", "b"],
+            ["b", "c", "b"]]
+    nums = [[1, 1], None, [], [None], [1, None], [99], [1, 2], [2, 3, 2]]
+    for _ in range(n - len(tags)):
+        tags.append(rng.choice([None, [], [None]]) if rng.random() < 0.15
+                    else [rng.choice(["a", "b", "c", "d", None])
+                          for _ in range(rng.randint(1, 4))])
+        nums.append(rng.choice([None, [], [None]]) if rng.random() < 0.15
+                    else [rng.choice([1, 2, 3, 4, None])
+                          for _ in range(rng.randint(1, 4))])
+    return pa.record_batch({
+        "k": pa.array([rng.choice([None, 1, 2, 3]) for _ in range(n)],
+                      type=pa.int64()),
+        "tags": pa.array(tags[:n], type=pa.list_(pa.string())),
+        "nums": pa.array(nums[:n], type=pa.list_(pa.int64())),
+        "other": pa.array([rng.sample(range(400), rng.randint(0, 3))
+                           for _ in range(n)], type=pa.list_(pa.int64())),
+    })
+
+
+@pytest.mark.parametrize("n", [1, 63, 64, 65, 4095, 4097])
+@pytest.mark.parametrize("pruning", [False, True])
+def test_list_member_group_equals_oracle(n, pruning):
+    """The list member group evaluates ``all of`` / ``not all of`` /
+    ``one of`` / ``none of`` leaves of one attribute together; on null
+    lists, empty lists, null elements, repeated elements and elements
+    outside every literal list it must equal the single-event oracle,
+    dense and forced-pruned, at row counts around the 64-bit word."""
+    forest = _list_group_forest()
+    ev = BatchEvaluator(forest, access_pruning=pruning)
+    attrs = forest.attributes
+    grouped = {
+        attrs.definition(g.attr_index).name:
+            {forest.leaves[i].op.name for i in g.leaf_idxs}
+        for g in ev.member_groups
+    }
+    ops = {"ALL_OF", "NOT_ALL_OF", "ONE_OF", "NONE_OF"}
+    assert grouped == {"tags": ops, "nums": ops}
+    assert [forest.leaves[i].attr_name for i in ev.lazy_leaf_idxs] == ["other"]
+
+    batch = _list_group_batch(n, seed=n)
+    got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
+    want = sorted(
+        (r, sub)
+        for r, event in enumerate(batch.to_pylist())
+        for sub in evaluate_event(forest, event)
+    )
+    assert got == want and len(want) > 0
 
 
 def test_subset_columns_share_one_dictionary_map():
@@ -394,17 +508,17 @@ def test_subset_columns_share_one_dictionary_map():
     assert built is not None
     assert all(sub._uniq_map is built for sub in subsets)
 
-    tags_col = cache[attrs.index_of("tags")]
-    tags_leaves = [i for i in ev.generic_leaves
-                   if forest.leaves[i].attr_index == attrs.index_of("tags")]
-    assert tags_col.fcodes is not None
-    assert sorted(ev._flat_op_codes) == sorted(tags_leaves)
+    wide_col = cache[attrs.index_of("wide")]
+    wide_leaves = [i for i in ev.generic_leaves
+                   if forest.leaves[i].attr_index == attrs.index_of("wide")]
+    assert wide_col.fcodes is not None
+    assert sorted(ev._flat_op_codes) == sorted(wide_leaves)
     for idx in subset_idx:
-        sub = ev._subset_col(tags_col, idx)
-        for i in tags_leaves:
+        sub = ev._subset_col(wide_col, idx)
+        for i in wide_leaves:
             np.testing.assert_array_equal(
                 ev._eval_generic_leaf(i, sub, len(idx)),
-                ev._eval_generic_leaf(i, tags_col, 200)[idx],
+                ev._eval_generic_leaf(i, wide_col, 200)[idx],
             )
 
 
@@ -455,3 +569,27 @@ def test_unsupported_arrow_column_type_raises():
         ev._scalar_from_arrow(pa.array([1.5]), AttributeKind.FLOAT)
     with pytest.raises(TypeError, match="float.*double"):
         ev.evaluate_arrow(pa.record_batch({"f": pa.array([1.5])}))
+
+
+def test_pickled_evaluator_carries_no_parse_memo():
+    """Parsing fills a memo on the attribute table, and tables are
+    shared by every forest over them; an evaluator's pickle (what a
+    broadcast ships) must not grow with what else was parsed, and an
+    unpickled table must still parse."""
+    import pickle
+
+    from a_tree_spark.expr.parser import parse
+
+    attrs = attributes()
+    builder = ForestBuilder(attrs)
+    builder.insert(1, "exchange_id = 1 and deals all of ['deal-1', 'deal-2']")
+    builder.insert(2, "country in ['US', 'CA'] or price > 7")
+    ev = BatchEvaluator(builder.compile())
+    before = len(pickle.dumps(ev))
+    for i in range(1000):
+        parse(f"price > {i} and segment_ids one of [{i}, {i + 1}]", attrs)
+    assert len(pickle.dumps(ev)) == before
+
+    table = pickle.loads(pickle.dumps(ev)).forest.attributes
+    tree = parse("city = 'NY' and deals none of ['deal-3']", table)
+    assert tree.optimize().left.predicate.attr_name == "city"

@@ -97,6 +97,52 @@ def test_float_prescale_rounds_like_the_oracle(spark):
         match_events(doubles, builder)
 
 
+def test_strategies_equal_oracle_on_null_elements_and_fine_decimals(spark):
+    """Every strategy equals the single-row oracle where the codegen
+    strategy used to differ: a decimal FLOAT finer than scale 6 rounds
+    half up before the compare, and a null list element is never a
+    member, so ``none of`` and ``not all of`` are TRUE on a list with a
+    null element and no member (Spark's arrays_overlap and
+    array_contains return NULL there). Codegen missed (0, 1), (0, 5),
+    (1, 2), (2, 1) and (2, 2) before."""
+    from decimal import Decimal
+
+    from a_tree_spark.expr import (
+        AttributeDefinition as A, AttributeTable, evaluate_event, normalize_event,
+    )
+
+    attrs = AttributeTable([A.string_list("tags"), A.float("f")])
+    builder = ForestBuilder(attrs)
+    for sub_id, expression in {
+        1: "tags none of ['a']",
+        2: "not (tags all of ['a'])",
+        3: "tags all of ['a']",
+        4: "tags one of ['a']",
+        5: "f >= 1.000001",
+    }.items():
+        builder.insert(sub_id, expression)
+    forest = builder.compile()
+    rows = [(["b", None], Decimal("1.0000005")), (["a", None], Decimal("1.0")),
+            ([None], Decimal("2"))]
+    want = sorted(
+        (i, sub)
+        for i, (tags, f) in enumerate(rows)
+        for sub in evaluate_event(
+            forest, {"tags": tags, **normalize_event(attrs, {"f": f})}
+        )
+    )
+    assert {(0, 1), (0, 5), (1, 2), (2, 1), (2, 2)} <= set(want)
+    events = spark.createDataFrame(
+        [(i, tags, f) for i, (tags, f) in enumerate(rows)],
+        "event_id long, tags array<string>, f decimal(38,10)",
+    )
+    for strategy in ("auto", "vectorized", "codegen"):
+        got = sorted(map(tuple, match_events(
+            events, builder, strategy=strategy
+        ).collect()))
+        assert got == want, strategy
+
+
 def test_access_pruning_agrees_end_to_end(eventized, builder):
     """Two-phase access-predicate evaluation (reference
     src/atree.rs:530-591) must be invisible in the results — same
@@ -124,7 +170,8 @@ def test_vectorized_plan_prunes_columns(eventized, builder):
 def test_auto_strategy_cost_model():
     """strategy auto: the compiled cost model turns two-phase pruning on
     exactly when lazy leaves are expensive (reference economics,
-    src/predicates.rs:144-165 + atree.rs:530-547)."""
+    src/predicates.rs:144-165 + atree.rs:530-547). Two or more list
+    leaves of one attribute form a member group and are never lazy."""
     from a_tree_spark.engine.matcher import choose_access_pruning
     from a_tree_spark.expr import AttributeDefinition as A, AttributeTable, ForestBuilder
     from a_tree_spark.expr.vector import BatchEvaluator
@@ -135,14 +182,25 @@ def test_auto_strategy_cost_model():
         BatchEvaluator(build_page_forest(500).compile())
     )
 
-    # selective workload with wide ALL_OF lazies -> two-phase pruning
-    attrs = AttributeTable([A.integer("k"), A.integer_list("xs")])
+    # selective workload with wide ALL_OF leaves over one attribute: they
+    # share its member group, so nothing is lazy -> dense
+    attrs = AttributeTable([A.integer("k"), A.integer_list("xs"),
+                            A.integer_list("ys")])
     builder = ForestBuilder(attrs)
     for i in range(20):
         wide = sorted(range(i * 3, i * 3 + 40))
         builder.insert(i, f"k = {i} and xs all of {wide}")
     evaluator = BatchEvaluator(builder.compile())
-    assert evaluator.lazy_leaf_idxs  # ALL_OF leaves actually deferred
+    assert [len(g.leaf_idxs) for g in evaluator.member_groups] == [20]
+    assert not evaluator.lazy_leaf_idxs
+    assert not choose_access_pruning(evaluator)
+
+    # a lone wide ALL_OF (the reference's benches/data/search.json
+    # shape) stays generic and lazy -> two-phase pruning
+    builder.insert(20, f"k = 3 and ys all of {list(range(3600))}")
+    evaluator = BatchEvaluator(builder.compile())
+    lazy = [evaluator.forest.leaves[i] for i in evaluator.lazy_leaf_idxs]
+    assert [(leaf.attr_name, leaf.op.name) for leaf in lazy] == [("ys", "ALL_OF")]
     assert choose_access_pruning(evaluator)
 
 
@@ -175,3 +233,20 @@ def test_match_events_shares_one_plan_across_pruning_flags(eventized, monkeypatc
     assert pruned == dense and len(dense) > 0
     assert len(plans) == 1
     assert not planned_evaluator(fresh.compile()).access_pruning
+
+
+def test_broadcast_copy_without_pruning_carries_no_parent_csr(spark):
+    """The cost model counts parent edges without building the parent
+    CSR, so a broadcast copy with pruning off ships none; only the
+    two-phase pass builds it, where it runs."""
+    import pickle
+
+    from a_tree_spark.engine.matcher import broadcast_evaluator
+    from a_tree_spark.web.pipeline import build_page_forest
+
+    # the auto model reads OFF on the standing page forest
+    evaluator, bc = broadcast_evaluator(spark, build_page_forest(400).compile())
+    assert not evaluator.access_pruning
+    shipped = pickle.loads(pickle.dumps(evaluator))
+    assert not hasattr(shipped, "_parent_csr_cache")
+    bc.unpersist()

@@ -481,10 +481,13 @@ def test_fused_extractor_fallback_counter(spark):
 
 
 def test_skewed_workload_flips_pruning_on(spark):
-    """VERDICT round 4 item 6: on the heavy-tailed workload (wide
-    all-of lazy leaves), the cost-model auto strategy must switch
-    two-phase access pruning ON — and the fused kernel under that
-    forest must still agree exactly with the composable pipeline."""
+    """VERDICT round 4 item 6: the heavy-tailed workload's wide
+    ``all of`` leaves used to be generic and lazy, and switched the
+    cost-model access pruning ON. They now sit in the ``lead_tokens``
+    member group, so the skewed forest reads OFF at 400 and at 50k
+    subscriptions; its generic comparison leaves are still lazy. The
+    fused kernel must agree exactly with the composable pipeline, on
+    the auto (dense) path and with pruning forced on."""
     from pyspark.sql import functions as F
 
     from a_tree_spark.engine.matcher import choose_access_pruning
@@ -497,8 +500,15 @@ def test_skewed_workload_flips_pruning_on(spark):
     builder = ForestBuilder(PAGE_ATTRIBUTES)
     for sub_id, expression in skewed_page_subscriptions(400).items():
         builder.insert(sub_id, expression)
-    ev = BatchEvaluator(builder.compile())
-    assert choose_access_pruning(ev), "skewed lazy leaves must trip the model"
+    forest = builder.compile()
+    ev = BatchEvaluator(forest)
+    lead = PAGE_ATTRIBUTES.index_of("lead_tokens")
+    (group,) = [g for g in ev.member_groups if g.attr_index == lead]
+    assert {forest.leaves[i].op.name for i in group.leaf_idxs} == {
+        "ALL_OF", "ONE_OF", "NONE_OF"
+    }
+    assert ev.lazy_leaf_idxs  # generic leaves the forced pass defers
+    assert not choose_access_pruning(ev)
     # the uniform flagship workload must still leave it OFF (cheap lazy)
     assert not choose_access_pruning(
         BatchEvaluator(build_page_forest(400).compile())
@@ -515,11 +525,14 @@ def test_skewed_workload_flips_pruning_on(spark):
     pages = synth_pages_df(spark, N_PAGES, partitions=4).withColumn(
         "page_key", F.xxhash64("url")
     )
-    fused = fused_match_pages(pages, builder, group="page_key")  # auto -> pruned path
     composable = match_pages(eventize_pages(pages.drop("page_key")), builder)
-    a = _expand_partials(fused, [builder])
     b = Counter(map(tuple, composable.select("page_key", "cell_id", "sub_id").collect()))
-    assert a == b and len(a) > 0
+    for pruning in (None, True):  # auto (dense), then the two-phase pass
+        fused = fused_match_pages(
+            pages, builder, access_pruning=pruning, group="page_key"
+        )
+        a = _expand_partials(fused, [builder])
+        assert a == b and len(a) > 0
 
 
 def test_choose_shards_guidance():
@@ -628,8 +641,11 @@ def test_auto_shards_matches_explicit(spark, monkeypatch):
 def _lead_token_lazy_subscriptions(n_pages_seen: int) -> dict[int, str]:
     """Per page: ``n_tokens = <its count> and lead_tokens all of [its
     lead tokens + 2 others]`` (fires on that page), plus ONE ``none of``
-    leaf (a lone one stays generic, hence lazy). The selective
+    leaf; these share the ``lead_tokens`` member group. A lone wide
+    ``lang in`` leaf stays generic, hence lazy. The selective
     ``n_tokens`` equality is the access predicate."""
+    from a_tree_spark.web.synth import TLD_TABLE
+
     pages = synth_batch(np.arange(n_pages_seen))
     subs: dict[int, str] = {}
     for p, text in enumerate(pages["text"]):
@@ -640,16 +656,18 @@ def _lead_token_lazy_subscriptions(n_pages_seen: int) -> dict[int, str]:
     subs[n_pages_seen] = (
         f"n_tokens = {len(first)} and lead_tokens none of ['{first[0]}', 'tok1']"
     )
+    langs = ", ".join(sorted({f"'{row[1]}'" for row in TLD_TABLE}))
+    subs[n_pages_seen + 1] = f"n_tokens = {len(first)} and lang in [{langs}]"
     return subs
 
 
 @pytest.mark.parametrize("n_pages", [1, 63, 64, 65, 4095, 4097])
 def test_fused_pruned_equals_dense_on_lead_token_lazy_leaves(spark, n_pages):
     """The fused kernel's access-pruned path must emit exactly the dense
-    path's matches when the lazy leaves are string-list ``all of`` /
-    ``none of`` over dictionary-coded lead tokens, at batch sizes around
-    the 64-bit word and the partial last byte (4097 = one full Arrow
-    batch + one row)."""
+    path's matches when string-list ``all of`` / ``none of`` leaves over
+    dictionary-coded lead tokens sit in the member group beside a lazy
+    generic leaf, at batch sizes around the 64-bit word and the partial
+    last byte (4097 = one full Arrow batch + one row)."""
     from pyspark.sql import functions as F
 
     from a_tree_spark.expr import ForestBuilder
@@ -661,9 +679,12 @@ def test_fused_pruned_equals_dense_on_lead_token_lazy_leaves(spark, n_pages):
         builder.insert(sub_id, expression)
     forest = builder.compile()
     ev = BatchEvaluator(forest)
-    assert {"ALL_OF", "NONE_OF"} <= {
-        forest.leaves[i].op.name for i in ev.lazy_leaf_idxs
-    }
+    lead = PAGE_ATTRIBUTES.index_of("lead_tokens")
+    assert [
+        {forest.leaves[i].op.name for i in g.leaf_idxs}
+        for g in ev.member_groups if g.attr_index == lead
+    ] == [{"ALL_OF", "NONE_OF"}]
+    assert [forest.leaves[i].op.name for i in ev.lazy_leaf_idxs] == ["IN"]
 
     pages = synth_pages_df(spark, n_pages, partitions=1).withColumn(
         "page_key", F.monotonically_increasing_id()
