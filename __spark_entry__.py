@@ -46,7 +46,7 @@ def _matcher_oracle() -> str:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: vectorized predicate matching (the reference's `search`,
     src/atree.rs:255-311, generalized to a DataFrame of events), on the
-    cost-model-selected auto strategy."""
+    auto strategy."""
     from a_tree_spark.engine.matcher import match_events
 
     events = _eventized(spark, "/root/testdata/sf0.001")
@@ -54,14 +54,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _q_match_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense single-phase sweep, pinned explicitly (access_pruning=False)
-    so this row keeps exercising the non-pruned kernel now that the
-    default is cost-model auto."""
+    """The vectorized Arrow kernel, named explicitly rather than through
+    the auto strategy."""
     from a_tree_spark.engine.matcher import match_events
 
     return match_events(
-        _eventized(spark, sf_dir), _builder(),
-        strategy="vectorized", access_pruning=False,
+        _eventized(spark, sf_dir), _builder(), strategy="vectorized"
     )
 
 
@@ -69,17 +67,6 @@ def _q_match_codegen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a_tree_spark.engine.matcher import match_events
 
     return match_events(_eventized(spark, sf_dir), _builder(), strategy="codegen")
-
-
-def _q_match_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase access-predicate pruning (reference atree.rs:530-591)
-    under the same oracle as the dense strategies — the driver-visible
-    correctness row for the A-Tree fidelity feature."""
-    from a_tree_spark.engine.matcher import match_events
-
-    return match_events(
-        _eventized(spark, sf_dir), _builder(), access_pruning=True
-    )
 
 
 def _q_match_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,7 +86,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out = {
         "match_vectorized": _q_match_vectorized,
         "match_codegen": _q_match_codegen,
-        "match_pruned": _q_match_pruned,
         "match_agg_by_sub": _q_match_agg,
         "cell_encode": SQ.q_cell_encode,
         "cell_agg": SQ.q_cell_agg,
@@ -135,7 +121,6 @@ def oracle_sql() -> dict[str, str]:
     out.update({
         "match_vectorized": matcher,
         "match_codegen": matcher,
-        "match_pruned": matcher,
         "match_agg_by_sub": (
             f"SELECT sub_id, COUNT(*) AS n_matches, "
             f"COUNT(DISTINCT event_id) AS n_events "

@@ -31,13 +31,11 @@ the caller does downstream with the matches.
 
 from __future__ import annotations
 
-import copy
 import dataclasses
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DecimalType, IntegralType
 
-from ..expr.ast import Op
 from ..expr.compiler import CompiledForest, ForestBuilder
 from ..expr.schema import AttributeKind, AttributeTable
 from ..expr.sql import leaf_to_sql
@@ -62,84 +60,18 @@ def _float_attributes(forest: CompiledForest) -> list[str]:
     return out
 
 
-#: auto-pruning threshold (round 5, recalibrated by measurement): the
-#: two-phase machinery — upper-bound sweep + candidate pull pass —
-#: costs O((nodes + parent edges) * packed_bytes) REGARDLESS of how
-#: much lazy work it saves, so the decision variable is the total
-#: deferred-work density: sum of reference leaf costs over the LAZY
-#: leaves per forest unit (nodes + edges). Measured A/B (4096-row
-#: batches, warm, identical outputs), BEFORE list ``all of`` leaves
-#: joined the member group: the skewed and wide-ALL_OF rows below had
-#: those leaves generic and lazy; today a list attribute with two or
-#: more list leaves has none lazy, and the skewed forests read OFF:
-#:   workload             density   pruned vs dense
-#:   uniform flagship     .0004-.011  0.42x LOSS (r3 flagship: 33.5s/14.1s)
-#:   skewed 100k subs     .014        0.44x LOSS
-#:   skewed 50k subs      .020        0.61x LOSS
-#:   skewed 10k subs      .086        2.27x WIN
-#:   skewed 400-2k subs   .353        4.6-5.1x WIN
-#:   wide-ALL_OF fixture  16.0        2.6-6.6x WIN
-#: Breakeven sits between .02 and .086; .05 splits it. (The round-3/4
-#: model thresholded the MEAN lazy cost at 8 instead, which mispredicts
-#: in both directions: the 400-sub skewed forest wins 4.6x at mean 6.2,
-#: and the 100k-sub skewed forest loses 2.3x at mean 12 — per-unit
-#: total cost is what tracks the sweep+pull overhead, not the mean.)
-ACCESS_PRUNING_MIN_COST_DENSITY = 0.05
-
-
-def _leaf_ref_cost(leaf) -> int:
-    """The reference's per-predicate cost model (src/predicates.rs:
-    144-165): variables / null checks / comparisons / equality are
-    constant, set membership costs len(list), list operators cost
-    2 * len(list). Used both here (auto strategy) and by the compiler's
-    cost-ordered children."""
-    op = leaf.op
-    if op in (Op.IN, Op.NOT_IN):
-        return max(len(leaf.operand), 1)
-    if op in (Op.ONE_OF, Op.NONE_OF, Op.ALL_OF, Op.NOT_ALL_OF):
-        return 2 * max(len(leaf.operand), 1)
-    return 1
-
-
 def choose_access_pruning(evaluator: BatchEvaluator) -> bool:
-    """Cost-model-driven default for the two-phase access split: prune
-    when the LAZY (deferred) leaves are expensive enough that skipping
-    them on non-candidate rows beats the extra upper-bound sweep +
-    downward candidate pass. Grouped leaves (inverted membership index,
-    grouped equality) already cost O(occurrences) and are never lazy.
-
-    Decision variable: total lazy cost per forest unit (nodes +
-    parent-CSR edges) >= ACCESS_PRUNING_MIN_COST_DENSITY — the
-    candidate pull pass is O(forest size x packed bytes) whether or
-    not it saves anything, so what predicts the win is how much
-    deferred work each unit of that overhead buys back (measured
-    calibration table at the constant; a mean-lazy-cost threshold
-    mispredicted in both directions)."""
-    lazy = evaluator.lazy_leaf_idxs
-    if not lazy:
-        return False
-    total = sum(_leaf_ref_cost(evaluator.forest.leaves[i]) for i in lazy)
-    # parent-CSR edges: two per interior node. Counted, not built: only
-    # the two-phase pass itself needs the CSR, and builds it lazily
-    edges = 2 * (evaluator.forest.num_nodes - evaluator.n_leaf_nodes)
-    density = total / max(evaluator.forest.num_nodes + edges, 1)
-    return density >= ACCESS_PRUNING_MIN_COST_DENSITY
+    """Always False: the evaluator has one dense path. Kept only for the
+    benchmark's layer probe (perfbench/layers.py), which imports it and
+    stores its answer on its own evaluator, where nothing reads it."""
+    return False
 
 
-def broadcast_evaluator(
-    spark, forest: CompiledForest, access_pruning: bool | None = None
-):
+def broadcast_evaluator(spark, forest: CompiledForest):
     """(evaluator, broadcast handle) for one Spark stage over ``forest``:
-    a shallow copy of the snapshot's shared plan (planned_evaluator)
-    that carries this caller's ``access_pruning`` (None = cost-model
-    auto, ``choose_access_pruning``). A stage over an already planned
-    snapshot plans nothing, and its flag never reaches the shared plan
-    or another caller's stage."""
-    plan = planned_evaluator(forest)
-    if access_pruning is None:
-        access_pruning = choose_access_pruning(plan)
-    evaluator = copy.copy(plan)
-    evaluator.access_pruning = access_pruning
+    the snapshot's shared plan (planned_evaluator), so a stage over an
+    already planned snapshot plans nothing."""
+    evaluator = planned_evaluator(forest)
     return evaluator, spark.sparkContext.broadcast(evaluator)
 
 
@@ -149,7 +81,6 @@ def match_events(
     event_id_col: str = "event_id",
     strategy: str = "auto",
     carry_cols: list[str] | None = None,
-    access_pruning: bool | None = None,
 ) -> DataFrame:
     """Match every event row against every subscription.
 
@@ -163,20 +94,13 @@ def match_events(
     vectorized Arrow kernel — measured faster than the codegen plan even
     at 27 subscriptions (BENCH_r02: 1.281s vs 1.785s; the Catalyst plan
     re-evaluates every expression per row while the sweep amortizes
-    across the CSE DAG) — with two-phase access pruning switched on by
-    the compiled cost model (``choose_access_pruning``). "codegen"
-    remains callable for pure-JVM deployments that must avoid a Python
-    worker pool; "vectorized" names the default kernel. Any other
-    strategy raises ``ValueError``.
-
-    ``access_pruning`` (None = cost-model auto) enables the reference's
-    two-phase access-predicate evaluation (src/atree.rs:530-591) in the
-    vectorized strategy: lazy (non-access) leaves evaluate only on the
-    candidate rows their access siblings admit. Semantics-invariant
-    (hypothesis-pinned); pays off when lazy predicates are expensive
-    relative to the packed sweep — long list operands, such as a lone
-    ``all of`` over a wide list (two or more list leaves of one
-    attribute share the member group and are never lazy).
+    across the CSE DAG). The reference's access predicates
+    (src/atree.rs:530-591) have their vectorized form inside the
+    kernel: membership leaves of one attribute share an inverted index
+    (``expr.vector._MemberGroup``). "codegen" remains callable for
+    pure-JVM deployments that must avoid a Python worker pool;
+    "vectorized" names the default kernel. Any other strategy raises
+    ``ValueError``.
     """
     if strategy not in ("auto", "vectorized", "codegen"):
         raise ValueError(
@@ -185,9 +109,7 @@ def match_events(
     forest = matcher.compile() if isinstance(matcher, ForestBuilder) else matcher
     if strategy == "codegen":
         return _match_codegen(events, forest, event_id_col, carry_cols)
-    return _match_vectorized(
-        events, forest, event_id_col, carry_cols, access_pruning
-    )
+    return _match_vectorized(events, forest, event_id_col, carry_cols)
 
 
 def _match_vectorized(
@@ -195,7 +117,6 @@ def _match_vectorized(
     forest: CompiledForest,
     event_id_col: str,
     carry_cols: list[str] | None = None,
-    access_pruning: bool | None = None,
 ) -> DataFrame:
     needed = _needed_attributes(forest)
     carry = carry_cols or []
@@ -217,7 +138,7 @@ def _match_vectorized(
             scaled = _float_at_scale(projected, name) * (10**DECIMAL_SCALE)
             projected = projected.withColumn(name, scaled.cast("long"))
 
-    _, bc = broadcast_evaluator(spark, forest, access_pruning)
+    _, bc = broadcast_evaluator(spark, forest)
     id_field = projected.schema[event_id_col]
     carry_fields = [projected.schema[c] for c in carry]
 

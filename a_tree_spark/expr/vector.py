@@ -19,15 +19,15 @@ Execution strategy (SURVEY.md §4.8), measured on 32 concurrent workers:
   listing it, an all-of leaf counts its pairs per row against the
   row's list length, and each group writes one contiguous block of
   the leaf matrix in place — the vectorized analog of the reference's
-  access-predicate work-list (src/atree.rs:530-591). Grouped leaves are
-  never lazy, so a forest whose list leaves all group (crawl_skewed)
-  runs one dense sweep. Strings encode once per batch, in Arrow, as
-  int64 codes: scalar
-  strings by per-batch dictionary (only unique strings cross into
-  Python), list elements into the forest's literal vocabulary
-  (BatchEvaluator.list_column: none cross);
+  access-predicate work-list (src/atree.rs:530-591): a leaf costs the
+  occurrences of its listed values, not a pass over every row, so no
+  leaf is deferred and every forest runs one dense sweep. Scalar
+  strings encode once per batch, in Arrow, by per-batch dictionary
+  (only unique strings cross into Python); list elements, string or
+  integer, encode into int64 codes of the attribute's literal
+  vocabulary (BatchEvaluator.list_column: none cross);
 - equality leaves per attribute evaluate as one searchsorted + scatter;
-- list attributes flatten once per batch (flat values + row ids) so
+- list attributes flatten once per batch (element codes + row ids) so
   every leaf over them is one vectorized membership + segmented
   reduction — no per-row Python;
 - the interior sweep runs on PACKED bits (np.packbits) level by level
@@ -36,9 +36,6 @@ Execution strategy (SURVEY.md §4.8), measured on 32 concurrent workers:
   mmap/munmap storm (30-40% kernel time) — together they took the
   evaluator from 3x per-process cpu inflation at 32 workers
   (DRAM-saturated) to ~1.3x;
-- with access pruning, the downward candidate pass ORs parent rows
-  as uint64 words (the packed rows are padded to whole words), eight
-  times fewer reduceat elements than the byte form;
 - rows are processed in adaptive chunks sized to a memory budget so
   working sets stay cache-resident.
 
@@ -110,41 +107,25 @@ class _ListColumn:
     per-row null ``mask`` and ``lengths``, and the elements aligned with
     ``row_ids``.
 
-    String elements arrive only as int64 codes, so no element string
-    becomes a Python object: ``vids`` carries member-group vocabulary
-    codes (-1 = not in any literal list), ``fcodes`` codes into the
-    forest's literal vocabulary of this attribute (-1 = in no literal
-    list, or null). Integer elements arrive as numpy ``flat`` values.
-    Parts nothing reads stay None."""
+    Elements, string or integer, arrive only as int64 codes, so no
+    element becomes a Python object or a float: ``vids`` carries
+    member-group vocabulary codes (-1 = not in any literal list),
+    ``fcodes`` codes into the forest's literal vocabulary of this
+    attribute (-1 = in no literal list, or null). Parts nothing reads
+    stay None."""
 
-    __slots__ = ("mask", "lengths", "row_ids", "flat", "n", "vids",
-                 "_offsets", "fcodes")
+    __slots__ = ("mask", "lengths", "row_ids", "vids", "fcodes")
 
     def __init__(
-        self, mask: np.ndarray, lengths: np.ndarray, flat: np.ndarray | None,
+        self, mask: np.ndarray, lengths: np.ndarray,
         vids: np.ndarray | None = None,
         fcodes: np.ndarray | None = None,
     ):
-        self.n = len(mask)
         self.mask = mask
         self.lengths = lengths
-        self.row_ids = np.repeat(np.arange(self.n, dtype=np.int64), lengths)
-        self.flat = flat
+        self.row_ids = np.repeat(np.arange(len(mask), dtype=np.int64), lengths)
         self.vids = vids
-        self._offsets = None
         self.fcodes = fcodes
-
-    @property
-    def offsets(self) -> np.ndarray:
-        """Flat-start offset per row (len n+1), computed once per batch.
-        Access pruning subsets the SAME column once per lazy leaf —
-        recomputing this O(n) cumsum per subset was 15% of the pruned
-        evaluator's wall at 3k lazy leaves (profiled round 4)."""
-        if self._offsets is None:
-            self._offsets = np.concatenate(
-                ([0], np.cumsum(self.lengths))
-            )
-        return self._offsets
 
 
 def unsupported_column(kind, column_type: str) -> TypeError:
@@ -255,8 +236,9 @@ class _MemberGroup:
         self.vocab = vocab
 
     def _codes(self, values: np.ndarray) -> np.ndarray:
-        """Map integer values -> vids (-1 = in no literal list) by
-        searchsorted on the sorted vocab (strings arrive pre-coded)."""
+        """Map scalar integer values -> vids (-1 = in no literal list)
+        by searchsorted on the sorted vocab (strings and list elements
+        arrive pre-coded)."""
         if len(values) == 0:
             return np.empty(0, dtype=np.int64)
         keys = np.fromiter(self.vocab.keys(), dtype=np.int64, count=len(self.vocab))
@@ -281,9 +263,8 @@ class _MemberGroup:
         1-D scatter."""
         lengths = None
         if self.is_list:
-            rows, lengths = col.row_ids, col.lengths
-            # string elements arrive pre-coded (-1 = no vocab hit)
-            vids = col.vids if col.vids is not None else self._codes(col.flat)
+            # elements arrive pre-coded (-1 = no vocab hit)
+            rows, lengths, vids = col.row_ids, col.lengths, col.vids
         elif col.codes is not None:
             # dictionary path: vocab lookup over the few uniques, gather
             # through the int codes (trailing -1 = null)
@@ -351,47 +332,6 @@ class _MemberGroup:
             block[self.subset_lo:self.subset_hi, empty] = True
 
 
-def _pull_block(
-    cand: np.ndarray,
-    values: np.ndarray,
-    P_ids: np.ndarray,
-    P_off: np.ndarray,
-    P_counts: np.ndarray,
-    lo: int,
-    hi: int,
-) -> None:
-    """OR each node's parents' (cand & ub) rows into ``cand[lo:hi]`` —
-    one vectorized reduceat over the block's slice of the
-    child->parents CSR. Works on any unsigned width: the two-phase
-    evaluator passes uint64 views of its packed buffers, so the AND and
-    the reduceat walk 64-bit words (a 43k-node block of 512 B rows:
-    0.095 s vs 0.40 s on bytes, one core of a 4-vCPU Xeon VM); tests
-    also drive it on uint8 rows.
-
-    One zero row is appended to the contribution matrix so an empty
-    TRAILING segment's start (== e-s) indexes the pad instead of being
-    clamped into the preceding segment — the round-4 clamp
-    ``np.minimum(starts, e-s-1)`` silently truncated the preceding
-    node's LAST parent contribution whenever the block ended with a
-    parentless node (safe then only via an undocumented slot-ordering
-    invariant; ADVICE round 4, pinned by
-    tests/test_expr_vector.py::test_pull_block_trailing_empty_segment).
-    A non-empty final segment ORs the pad in (identity), and empty
-    MIDDLE segments (start[i] == start[i+1]) yield one garbage element
-    that the counts mask zeroes."""
-    s, e = int(P_off[lo]), int(P_off[hi])
-    if e == s:
-        return
-    ids = P_ids[s:e]
-    contrib = np.empty((e - s + 1, cand.shape[1]), dtype=cand.dtype)
-    np.bitwise_and(cand[ids], values[ids], out=contrib[:-1])
-    contrib[-1] = 0
-    starts = P_off[lo:hi] - s
-    pulled = np.bitwise_or.reduceat(contrib, starts, axis=0)
-    pulled[P_counts[lo:hi] == 0] = 0
-    np.bitwise_or(cand[lo:hi], pulled, out=cand[lo:hi])
-
-
 def adaptive_budget(num_nodes: int) -> int:
     """Sweep-buffer budget sized to the forest. After the
     level-contiguous layout + word-first decode, per-row sweep cost is
@@ -414,28 +354,12 @@ class BatchEvaluator:
     numpy on Arrow-backed columns.
     """
 
-    #: lazy leaves evaluate on the candidate subset only below this
-    #: row fraction; above it a dense evaluation is cheaper than the
-    #: gather/scatter of subsetting
-    DENSE_FRACTION = 0.5
-
-    def __init__(
-        self,
-        forest: CompiledForest,
-        memory_budget_bytes: int | None = None,
-        access_pruning: bool = False,
-    ):
+    def __init__(self, forest: CompiledForest):
         self.forest = forest
-        self.memory_budget = (
-            adaptive_budget(forest.num_nodes)
-            if memory_budget_bytes is None
-            else memory_budget_bytes
-        )
-        self.access_pruning = access_pruning
+        self.memory_budget = adaptive_budget(forest.num_nodes)
         self._plan_leaf_groups()
         self._plan_levels()
         self._plan_subscribers()
-        self._plan_access()
 
     # ------------------------------------------------------------ planning
 
@@ -451,11 +375,13 @@ class BatchEvaluator:
           O(leaves x rows); ALL_OF counts those pairs per (leaf, row).
           This is the vectorized restatement of the reference's global
           predicate work-list / access-predicate pass
-          (src/atree.rs:530-591).
+          (src/atree.rs:530-591): where the reference defers a costly
+          predicate until a cheap sibling fired, the index never reads
+          a leaf's literal list on a row holding none of its values.
 
         An attribute needs at least 4 EQ leaves, or 2 membership leaves,
-        for a group. Everything else evaluates per-leaf (still vectorized
-        per batch); only those generic leaves can be lazy (_plan_access).
+        for a group. Everything else evaluates per-leaf, still vectorized
+        per batch, on every row.
         """
         forest = self.forest
         eq_groups: dict[int, list[int]] = {}
@@ -507,13 +433,11 @@ class BatchEvaluator:
             len(order), dtype=np.int64
         )
         # what list_column builds per list attribute: member-group vids,
-        # and element values for the generic ops that read them. A
-        # string list gets ONE literal vocabulary (value -> code) that
+        # and element codes for the generic ops that read them. Each
+        # list attribute gets ONE literal vocabulary (value -> code) that
         # the batch's elements encode into: the member group's vocab
         # first, so a code below its size IS the group vid, then the
         # literals of the generic flat ops
-        from .schema import AttributeKind
-
         self._list_groups = {
             g.attr_index: g for g in self.member_groups if g.is_list
         }
@@ -525,9 +449,6 @@ class BatchEvaluator:
         self._flat_attrs = set(flat_literals)
         self._list_vocab: dict[int, dict] = {}
         for attr_index in self._list_groups.keys() | self._flat_attrs:
-            kind = forest.attributes.definition(attr_index).kind
-            if kind is not AttributeKind.STRING_LIST:
-                continue
             group = self._list_groups.get(attr_index)
             vocab = dict(group.vocab) if group is not None else {}
             for value in flat_literals.get(attr_index, ()):
@@ -538,8 +459,8 @@ class BatchEvaluator:
         self._flat_op_codes: dict[int, np.ndarray] = {}
         for i in generic:
             leaf = forest.leaves[i]
-            vocab = self._list_vocab.get(leaf.attr_index)
-            if leaf.op in self._FLAT_OPS and vocab is not None:
+            if leaf.op in self._FLAT_OPS:
+                vocab = self._list_vocab[leaf.attr_index]
                 self._flat_op_codes[i] = np.array(
                     [vocab[v] for v in leaf.operand], dtype=np.int64
                 )
@@ -618,15 +539,6 @@ class BatchEvaluator:
         self.leaf_of_node = self._leaf_row[
             np.array([forest.node_left[i] for i in leaf_nodes], dtype=np.int64)
         ]
-        # interning guarantees one node per distinct leaf predicate;
-        # the pruning pass relies on this to scatter leaf candidates
-        # with plain indexed assignment (checked once at plan time —
-        # an explicit raise, not `assert`, so it survives python -O)
-        if len(np.unique(self.leaf_of_node)) != len(self.leaf_of_node):
-            raise AssertionError(
-                "leaf_of_node is not injective: leaf interning invariant "
-                "violated; pruned scatter would drop candidates"
-            )
 
     def _plan_subscribers(self) -> None:
         """CSR of DISTINCT expression roots -> subscriber ids. CSE means
@@ -658,49 +570,6 @@ class BatchEvaluator:
         self.sub_node_idxs = np.repeat(self.root_nodes, self.root_sub_counts)
         self.sub_ids = self.root_sub_ids
 
-    def _plan_access(self) -> None:
-        """Two-phase access-predicate split, the reference's defining
-        optimization (src/atree.rs:530-591 choose_access_child / delayed
-        predicates, doc src/lib.rs:77-87): an AND registers only its
-        CHEAPEST child as the access predicate and defers the sibling
-        until the access side fired. The compiler already cost-orders
-        children (node_left = cheapest, compiler.py, ref atree.rs:133-137),
-        so the access set is the leaves reachable from the roots without
-        ever entering an AND's right child; everything else is LAZY.
-
-        Vectorized restatement: lazy leaves are assumed TRUE for an
-        upper-bound sweep (sound in NNF — Kleene truth is monotone under
-        AND=min/OR=max), a packed downward pass turns the upper bound
-        into per-leaf candidate row bitsets, and each lazy leaf then
-        evaluates only on its candidate rows. Grouped leaves (inverted
-        membership index, grouped equality) stay dense: they already
-        cost O(occurrences), which IS the access-predicate economics —
-        only per-leaf generic evaluation is worth deferring."""
-        forest = self.forest
-        access_nodes: set[int] = set()
-        stack = list(forest.node_subs.keys())
-        while stack:
-            node = stack.pop()
-            if node in access_nodes:
-                continue
-            access_nodes.add(node)
-            kind = forest.node_kind[node]
-            if kind == LEAF:
-                continue
-            stack.append(forest.node_left[node])  # cheapest child = access
-            if kind != AND:
-                stack.append(forest.node_right[node])  # OR defers nothing
-
-        access_leaves = {
-            forest.node_left[node]
-            for node in access_nodes
-            if forest.node_kind[node] == LEAF
-        }
-        self.lazy_leaf_idxs = [
-            i for i in self.generic_leaves if i not in access_leaves
-        ]
-        self._lazy_set = set(self.lazy_leaf_idxs)
-
     # ------------------------------------------------------------ columns
 
     #: generic ops that read the flattened element values (everything
@@ -731,19 +600,21 @@ class BatchEvaluator:
         """Prepared list column from an Arrow ListArray's offsets and
         flattened values — the list-encoding path of ``arrow_columns``.
 
-        String elements encode ONCE per batch, in Arrow, into codes of
-        the attribute's literal vocabulary (``pc.index_in``; -1 = in no
+        Elements encode ONCE per batch, in Arrow, into codes of the
+        attribute's literal vocabulary (``pc.index_in``; -1 = in no
         literal list, or a null element, which is never a member). The
         same int64 codes feed the member group (``vids``) and the
         generic flat ops (``fcodes``: int64 isin instead of
-        object-array hashing), and no element string becomes a Python
-        object: converting even a batch's unique tokens to Python was
-        most of the encoding cost. A string list whose elements are not
-        typed string (e.g. ``list<null>``) is cast to string first.
-        Other element types hand their flat values over as numpy. Parts
-        nothing reads are not built."""
+        object-array hashing), and no element becomes a Python object:
+        converting even a batch's unique tokens to Python was most of
+        the encoding cost. String elements not typed string (e.g.
+        ``list<null>``) are cast to string first, integer elements to
+        int64, so a null element never turns the batch's integers into
+        float64. Parts nothing reads are not built."""
         import pyarrow as pa
         import pyarrow.compute as pc
+
+        from .schema import AttributeKind
 
         mask = pc.is_null(arr).to_numpy(zero_copy_only=False)
         lengths = (
@@ -751,28 +622,29 @@ class BatchEvaluator:
             .to_numpy(zero_copy_only=False)
             .astype(np.int64)
         )
-        group = self._list_groups.get(attr_index)
-        reads_flat = attr_index in self._flat_attrs
+        if attr_index not in self._list_vocab:
+            return _ListColumn(mask, lengths)  # no leaf reads the elements
         flat = pc.list_flatten(arr)
-        flat_np = vids = fcodes = None
-        if attr_index in self._list_vocab:
+        kind = self.forest.attributes.definition(attr_index).kind
+        if kind is AttributeKind.STRING_LIST:
             if not (pa.types.is_string(flat.type) or pa.types.is_large_string(flat.type)):
                 flat = flat.cast(pa.string())
-            codes = (
-                pc.fill_null(
-                    pc.index_in(flat, value_set=self._value_set(attr_index, flat.type)),
-                    -1,
-                )
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
+        elif flat.type != pa.int64():
+            flat = flat.cast(pa.int64())
+        codes = (
+            pc.fill_null(
+                pc.index_in(flat, value_set=self._value_set(attr_index, flat.type)),
+                -1,
             )
-            if group is not None:
-                vids = np.where(codes < len(group.vocab), codes, -1)
-            if reads_flat:
-                fcodes = codes
-        elif group is not None or reads_flat:
-            flat_np = flat.to_numpy(zero_copy_only=False)
-        return _ListColumn(mask, lengths, flat_np, vids=vids, fcodes=fcodes)
+            .to_numpy(zero_copy_only=False)
+            .astype(np.int64)
+        )
+        group = self._list_groups.get(attr_index)
+        return _ListColumn(
+            mask, lengths,
+            vids=None if group is None else np.where(codes < len(group.vocab), codes, -1),
+            fcodes=codes if attr_index in self._flat_attrs else None,
+        )
 
     def _value_set(self, attr_index: int, value_type):
         """An attribute's literal vocabulary as an Arrow array in code
@@ -938,56 +810,17 @@ class BatchEvaluator:
                 result = ~result
             return _true_mask(result, col.mask)
 
-        # list operators over the flattened column
-        if col.fcodes is not None:
-            member = np.isin(col.fcodes, self._flat_op_codes[leaf_idx])
-        else:
-            member = np.isin(col.flat, np.array(operand, dtype=np.int64))
-        n_rows = col.n
+        # list operators over the flattened element codes
+        member = np.isin(col.fcodes, self._flat_op_codes[leaf_idx])
         if op in (Op.ONE_OF, Op.NONE_OF):
-            hits = np.bincount(col.row_ids[member], minlength=n_rows) > 0
+            hits = np.bincount(col.row_ids[member], minlength=n) > 0
             result = hits if op is Op.ONE_OF else ~hits
         else:  # ALL_OF / NOT_ALL_OF: no non-member elements; empty -> all-of
-            violations = np.bincount(col.row_ids[~member], minlength=n_rows) > 0
+            violations = np.bincount(col.row_ids[~member], minlength=n) > 0
             result = ~violations if op is Op.ALL_OF else violations
         return _true_mask(result, col.mask)
 
-    def _subset_col(self, col, idx: np.ndarray):
-        """Row-subset view of a prepared column (lazy-leaf evaluation on
-        candidate rows only)."""
-        if isinstance(col, _ScalarColumn):
-            sub = _ScalarColumn(
-                col.mask[idx],
-                None if col.values is None else col.values[idx],
-                codes=None if col.codes is None else col.codes[idx],
-                uniques=col.uniques,
-            )
-            # read the parent's map through the property (its slot may
-            # still be None): built once per batch, shared by every
-            # lazy-leaf subset
-            if col.codes is not None:
-                sub._uniq_map = col.uniq_map
-            return sub
-        offsets = col.offsets
-        lengths = col.lengths[idx]
-        total = int(lengths.sum())
-        if total:
-            starts = offsets[idx]
-            gather = np.repeat(starts, lengths) + (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(np.concatenate([[0], np.cumsum(lengths)[:-1]]), lengths)
-            )
-        else:
-            gather = np.empty(0, dtype=np.int64)
-        return _ListColumn(
-            col.mask[idx],
-            lengths,
-            None if col.flat is None else col.flat[gather],
-            vids=None if col.vids is None else col.vids[gather],
-            fcodes=None if col.fcodes is None else col.fcodes[gather],
-        )
-
-    def _eval_leaves(self, cache: dict, n: int, lazy_true: bool = False) -> np.ndarray:
+    def _eval_leaves(self, cache: dict, n: int) -> np.ndarray:
         """(n_leaves, n) TRUE matrix in leaf-row order (``_leaf_row``)."""
         forest = self.forest
         leaf_row = self._leaf_row
@@ -1023,9 +856,6 @@ class BatchEvaluator:
             )
 
         for leaf_idx in self.generic_leaves:
-            if lazy_true and leaf_idx in self._lazy_set:
-                leaf_values[leaf_row[leaf_idx]] = True  # monotone upper bound
-                continue
             attr_index = self.forest.leaves[leaf_idx].attr_index
             leaf_values[leaf_row[leaf_idx]] = self._eval_generic_leaf(
                 leaf_idx, cache[attr_index], n
@@ -1090,8 +920,6 @@ class BatchEvaluator:
         cuts sweep memory traffic 8x, which is the binding resource at
         32 concurrent workers (measured 3x per-process cpu inflation
         from DRAM saturation with byte-wide sweeps)."""
-        if self.access_pruning and self.lazy_leaf_idxs:
-            return self._evaluate_two_phase(cache, n)
         leaf_values = self._eval_leaves(cache, n)
 
         nb = self._packed_width(n)
@@ -1192,144 +1020,6 @@ class BatchEvaluator:
         )
         return out_rows, self.root_sub_ids[offsets + within]
 
-    # --------------------------------------- two-phase access pruning
-
-    def _parent_csr(self):
-        """child slot -> parent slots CSR (P_ids, P_off, counts), built
-        once per evaluator: the downward candidate pass pulls each
-        node's parents instead of scattering to children (see
-        _evaluate_two_phase). Total size = 2 x interior nodes."""
-        cached = getattr(self, "_parent_csr_cache", None)
-        if cached is not None:
-            return cached
-        nn = max(self.forest.num_nodes, 1)
-        children, parents = [], []
-        for _, lo, hi, left, right in self.levels:
-            ps = np.arange(lo, hi, dtype=np.int64)
-            children.append(left)
-            parents.append(ps)
-            children.append(right)
-            parents.append(ps)
-        if children:
-            ch = np.concatenate(children)
-            pa = np.concatenate(parents)
-            order = np.argsort(ch, kind="stable")
-            p_ids = pa[order]
-            counts = np.bincount(ch, minlength=nn)
-        else:
-            p_ids = np.empty(0, dtype=np.int64)
-            counts = np.zeros(nn, dtype=np.int64)
-        p_off = np.concatenate(([0], np.cumsum(counts)))
-        self._parent_csr_cache = (p_ids, p_off, counts)
-        return self._parent_csr_cache
-
-    def _pruning_buffers(self, nb: int):
-        cached = getattr(self, "_prune_buf_cache", None)
-        if cached is None:
-            cached = self._prune_buf_cache = {}
-        bufs = cached.get(nb)
-        if bufs is None:
-            if len(cached) > 4:
-                cached.clear()
-            nn = max(self.forest.num_nodes, 1)
-            nl = max(len(self.forest.leaves), 1)
-            bufs = cached[nb] = (
-                np.empty((nn, nb), dtype=np.uint8),   # candidate bits/node
-                np.empty((nl, nb), dtype=np.uint8),   # candidate bits/leaf
-            )
-        return bufs
-
-    def _evaluate_two_phase(
-        self, cache: dict[int, object], n: int
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Access pass -> candidate propagation -> lazy pass -> exact
-        sweep (the vectorized two-phase of _plan_access).
-
-        Phase 1 evaluates only access leaves, assumes every LAZY leaf
-        TRUE, and sweeps: because NNF truth is monotone, the result is a
-        sound upper bound — any root FALSE here is exactly FALSE.
-        The downward pass then computes, per node, the packed row set
-        where its exact value is still needed: a child inherits
-        cand(parent) & ub(parent) (rows where the parent can still be
-        TRUE and is itself needed) — for an AND's right child, ub(parent)
-        already includes the access sibling's truth, which is precisely
-        the reference's 'evaluate the delayed predicate only where the
-        access predicate fired' (src/atree.rs:568-574). Phase 2
-        evaluates each lazy leaf on its candidate rows (dense fallback
-        above DENSE_FRACTION); phase 3 re-sweeps with exact bits."""
-        leaf_values = self._eval_leaves(cache, n, lazy_true=True)
-
-        nb = self._packed_width(n)
-        values, gather_a, gather_b = self._buffers(nb)
-        cand, leaf_cand = self._pruning_buffers(nb)
-
-        leaf_bits = self._pack_padded(leaf_values, nb)
-        self._sweep(values, gather_a, gather_b, leaf_bits)  # upper bound
-
-        # downward candidate pass as a parent PULL over a precomputed
-        # child->parents CSR: each block (descending by height, leaves
-        # last) takes its parents' (cand & ub) rows — parents are final
-        # because their blocks came earlier — and OR-combines them per
-        # node with one vectorized reduceat. The round-3 form scattered
-        # parent contributions to children with np.bitwise_or.at, whose
-        # unbuffered element loop was the largest single line of the
-        # pruned evaluator after the offsets cache (profiled round 4).
-        # Root seeding reads contiguous root segments (slot layout).
-        # The pull runs on uint64 views: _packed_width pads every row to
-        # whole words, so the views are free and reduceat walks 8x fewer
-        # elements than on bytes.
-        cand[:] = 0
-        for lo, k in self.root_segments:
-            cand[lo : lo + k] = values[lo : lo + k]
-        P_ids, P_off, P_counts = self._parent_csr()
-        blocks = [(lo, hi) for _, lo, hi, _, _ in reversed(self.levels)]
-        blocks.append((0, self.n_leaf_nodes))
-        cand_words, value_words = cand.view(np.uint64), values.view(np.uint64)
-        for lo, hi in blocks:
-            _pull_block(cand_words, value_words, P_ids, P_off, P_counts, lo, hi)
-
-        # leaves are interned (one node per distinct predicate), so
-        # leaf_of_node is injective and plain indexed assignment
-        # replaces the unbuffered bitwise_or.at scatter
-        leaf_cand[:] = 0
-        leaf_cand[self.leaf_of_node] = cand[: self.n_leaf_nodes]
-
-        # phase 2: lazy leaves on candidate rows only. Leaves whose
-        # candidate bitset is entirely ZERO are skipped without even an
-        # unpack: by the downward-pass invariant their value cannot
-        # affect any root on any row, so the upper-bound TRUE bits may
-        # stay in leaf_bits (writing FALSE, as the k==0 branch below
-        # does, is equally valid — both are unobservable at the roots).
-        # When many lazy leaves are selective, most have no candidates
-        # in most batches, and the per-leaf python iteration itself was
-        # the phase-2 floor (profiled round 4). One vectorized
-        # any-reduction finds the live subset.
-        lazy_arr = np.asarray(self.lazy_leaf_idxs, dtype=np.int64)
-        lazy_rows = self._leaf_row[lazy_arr]
-        live = leaf_cand[lazy_rows].any(axis=1)
-        for leaf_idx, leaf_row in zip(lazy_arr[live], lazy_rows[live]):
-            mask = np.unpackbits(
-                leaf_cand[leaf_row], bitorder="little"
-            )[:n].astype(bool)
-            k = int(mask.sum())
-            col = cache[self.forest.leaves[leaf_idx].attr_index]
-            if k == 0:
-                row = np.zeros(n, dtype=bool)
-            elif k >= self.DENSE_FRACTION * n:
-                row = self._eval_generic_leaf(leaf_idx, col, n)
-            else:
-                idx = np.flatnonzero(mask)
-                row = np.zeros(n, dtype=bool)
-                row[idx] = self._eval_generic_leaf(
-                    leaf_idx, self._subset_col(col, idx), k
-                )
-            packed_row = np.packbits(row, bitorder="little")
-            leaf_bits[leaf_row, : len(packed_row)] = packed_row
-
-        self._sweep(values, gather_a, gather_b, leaf_bits)  # exact
-        return self._decode_roots(values, n)
-
-
 #: the evaluator planned for the most recent snapshot (see
 #: planned_evaluator); a module slot rather than an attribute of the
 #: forest, so pickling an evaluator never drags it along
@@ -1344,9 +1034,9 @@ def planned_evaluator(forest: CompiledForest) -> BatchEvaluator:
     instead of re-planning the same snapshot. One slot: a new snapshot
     replaces the previous plan, which live forests never return to.
 
-    The plan is shared — callers that need a different
-    ``access_pruning`` flag take a shallow copy
-    (engine.matcher.broadcast_evaluator) rather than set it here."""
+    The plan is shared, and a Spark stage broadcasts it as it is
+    (engine.matcher.broadcast_evaluator): it has no per-caller
+    setting."""
     global _latest_plan
     plan = _latest_plan
     if plan is None or plan.forest is not forest:

@@ -143,12 +143,10 @@ def skewed_page_subscriptions(n: int) -> dict[int, str]:
       is inherently unselective, which real systems offset with
       high-cardinality list domains or extra conjuncts);
     - every 4th subscription conjoins a wide-ish ``all of`` (4-8
-      elements, cost 8-16 in the reference cost model). These used to
-      be generic lazy leaves that switched the cost-model access
-      pruning ON; they now share the ``lead_tokens`` member group with
-      the ``one of`` / ``none of`` leaves, are never lazy, and the
-      forest reads pruning OFF (choose_access_pruning), pinned by
-      tests/test_web_pipeline.py::test_skewed_workload_flips_pruning_on."""
+      elements, cost 8-16 in the reference cost model). They share the
+      ``lead_tokens`` member group with the ``one of`` / ``none of``
+      leaves (pinned by
+      tests/test_web_pipeline.py::test_skewed_workload_flips_pruning_on)."""
     langs = [row[1] for row in TLD_TABLE]
     hot_langs = langs[:3]
     tlds = sorted(TLD_CENTROIDS)
@@ -397,7 +395,6 @@ def fused_match_pages(
     forest: ForestBuilder,
     level: int = DEFAULT_LEVEL,
     emit: str = "cell_root_partials",
-    access_pruning: bool | None = None,
     fallback_counter=None,
     broadcast_out: list | None = None,
     group: str | None = None,
@@ -428,9 +425,8 @@ def fused_match_pages(
     n_matches), e.g. per work unit for a resumable job. ``pages`` needs
     only url, html, lang and the group column.
 
-    The evaluator is the snapshot's shared plan; what ships is a copy
-    carrying this call's ``access_pruning`` (None = cost-model auto),
-    see ``engine.matcher.broadcast_evaluator``.
+    The evaluator is the snapshot's shared plan, broadcast as it is
+    (``engine.matcher.broadcast_evaluator``).
 
     ``fallback_counter`` (a ``sparkContext.accumulator(0)``) receives
     the number of rows whose html the fast RE2 pattern can't represent
@@ -452,13 +448,7 @@ def fused_match_pages(
         raise ValueError(f"emit must be 'cell_root_partials', got {emit!r}")
     if group and not isinstance(pages.schema[group].dataType, IntegralType):
         raise TypeError(f"group column {group!r} must be an integer column")
-    # same cost-model default as match_events: two-phase access pruning
-    # composes with the fused root-partials kernel (round 2 kept them
-    # exclusive, VERDICT.md item 7) — evaluate_prepared_roots dispatches
-    # on the flag either way
-    evaluator, bc = broadcast_evaluator(
-        pages.sparkSession, forest.compile(), access_pruning
-    )
+    evaluator, bc = broadcast_evaluator(pages.sparkSession, forest.compile())
     if broadcast_out is not None:
         # hand the caller the broadcast handle so it can destroy it
         # once a materialized pass no longer needs it (the sharded

@@ -134,8 +134,9 @@ def test_small_chunking_equals_single_pass():
     batch = event_batch(attributes(), events)
 
     big = BatchEvaluator(forest)
-    # Force tiny chunks through the memory budget knob
-    small = BatchEvaluator(forest, memory_budget_bytes=1)
+    # Force tiny chunks through the memory budget
+    small = BatchEvaluator(forest)
+    small.memory_budget = 1
     rows_a, subs_a = big.evaluate_arrow(batch)
     rows_b, subs_b = small.evaluate_arrow(batch)
     a = sorted(zip(rows_a.tolist(), subs_a.tolist()))
@@ -157,15 +158,13 @@ def test_empty_inputs():
 
 
 def test_access_pruning_selective_workload_with_planted_matches():
-    """Two-phase access pruning (reference src/atree.rs:530-591) on its
-    home turf: narrow equality access predicates guarding wide ALL_OF
-    lazy siblings. Results must equal the dense evaluator exactly,
-    including planted rows engineered to fire specific subscriptions
-    (6.6x faster measured at 400 subs x 20k rows — recorded in
-    BENCH/PLANS.md). The 60 ``all of`` leaves over ``xs`` share one
-    member group, so the lazy leaf is a lone wide ``all of`` over
-    ``ys`` (the reference's benches/data/search.json shape: one
-    expression with a long list), which stays generic."""
+    """The reference's access-predicate shape (src/atree.rs:530-591):
+    narrow equality predicates guarding wide ALL_OF siblings. The 60
+    ``all of`` leaves over ``xs`` share one member group; a lone wide
+    ``all of`` over ``ys`` (the reference's benches/data/search.json
+    shape: one expression with a long list) stays a generic leaf.
+    Results must equal the single-event oracle, including planted rows
+    engineered to fire specific subscriptions."""
     attrs = AttributeTable([A.integer("k"), A.integer_list("xs"),
                             A.integer_list("ys")])
     builder = ForestBuilder(attrs)
@@ -191,16 +190,21 @@ def test_access_pruning_selective_workload_with_planted_matches():
         attrs, [{"k": k, "xs": x, "ys": y} for k, x, y in zip(ks, xs, ys)]
     )
 
-    dense = BatchEvaluator(forest)
-    pruned = BatchEvaluator(forest, access_pruning=True)
-    # the xs leaves are one member group; the lone ys leaf is lazy
+    ev = BatchEvaluator(forest)
+    # the xs leaves are one member group; the lone ys leaf is generic
     xs_leaves = [i for i, leaf in enumerate(forest.leaves)
                  if leaf.attr_name == "xs"]
-    assert [sorted(g.leaf_idxs) for g in pruned.member_groups] == [xs_leaves]
-    assert [forest.leaves[i].attr_name for i in pruned.lazy_leaf_idxs] == ["ys"]
-    a = sorted(zip(*map(np.ndarray.tolist, dense.evaluate_arrow(batch))))
-    b = sorted(zip(*map(np.ndarray.tolist, pruned.evaluate_arrow(batch))))
-    assert a == b and len(a) >= 20  # planted matches found by both
+    assert [sorted(g.leaf_idxs) for g in ev.member_groups] == [xs_leaves]
+    assert "ys" in [forest.leaves[i].attr_name for i in ev.generic_leaves]
+    got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
+    want = sorted(
+        (r, sub)
+        for r, event in enumerate(batch.to_pylist())
+        for sub in evaluate_event(forest, event)
+    )
+    assert got == want
+    planted = {(i, i) for i in range(0, 60, 3)}
+    assert planted <= set(got)
 
 
 def test_evaluate_arrow_matches_oracle_on_null_and_empty_lists():
@@ -248,70 +252,43 @@ def test_evaluate_arrow_matches_oracle_on_null_and_empty_lists():
         assert got == want and len(got) > 0
 
 
-def test_pull_block_trailing_empty_segment():
-    """A block ending in a PARENTLESS node must not truncate the
-    preceding node's parent list (ADVICE round 4: the old clamp
-    np.minimum(starts, e-s-1) dropped that node's last parent
-    contribution — a 2-parent node pulled only 1)."""
-    from a_tree_spark.expr.vector import _pull_block
+@pytest.mark.parametrize("subs, n_groups, expected", [
+    ({1: "nums one of [9007199254740992]",
+      2: "nums all of [9007199254740992, 5]",
+      3: "nums none of [9007199254740992]"}, 1, [(0, 3), (1, 3)]),
+    ({1: "nums one of [9007199254740992]"}, 0, []),
+], ids=["grouped", "lone"])
+def test_integer_list_elements_stay_exact_beside_a_null(subs, n_groups, expected):
+    """A null element in the batch must not turn integer list elements
+    into float64, where 2**53 + 1 reads as the literal 2**53: the
+    member group and a lone generic leaf both equal the oracle."""
+    import pyarrow as pa
 
-    nb = 1  # one packed byte per node
-    # nodes 0..2 are the block; nodes 3..4 are (already-final) parents.
-    # The bug needs the MULTI-parent node immediately before the empty
-    # trailing segment: node0 <- {3}; node1 <- {3, 4}; node2 <- none.
-    # Old clamp: starts [0,1,3] -> [0,1,2], so node1 reduced over [1,2)
-    # — parent 4's contribution dropped.
-    P_ids = np.array([3, 3, 4], dtype=np.int64)
-    P_off = np.array([0, 1, 3, 3, 3, 3], dtype=np.int64)
-    P_counts = np.diff(P_off)
-    values = np.zeros((5, nb), dtype=np.uint8)
-    cand = np.zeros((5, nb), dtype=np.uint8)
-    # parent 3 contributes bit 0 on rows 0b0001; parent 4 bit 1
-    cand[3] = values[3] = 0b0001
-    cand[4] = values[4] = 0b0010
-    _pull_block(cand, values, P_ids, P_off, P_counts, 0, 3)
-    assert cand[0, 0] == 0b0001
-    assert cand[1, 0] == 0b0011  # BOTH parents (old clamp gave 0b0001)
-    assert cand[2, 0] == 0  # parentless: counts mask zeroes the pad
-
-
-def _random_csr_block(rng, n_block, n_parents):
-    """Child->parents CSR over a block of ``n_block`` nodes whose parents
-    sit above it; some segments empty, the last one always empty."""
-    counts = rng.integers(0, 4, size=n_block + n_parents)
-    counts[n_block - 1] = 0
-    counts[n_block:] = 0
-    P_off = np.concatenate(([0], np.cumsum(counts))).astype(np.int64)
-    P_ids = rng.integers(n_block, n_block + n_parents, size=int(P_off[-1]))
-    return P_ids.astype(np.int64), P_off, counts
-
-
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_pull_block_words_equal_bytes(seed):
-    """The two-phase evaluator pulls on uint64 views of its packed
-    buffers; the result must equal the byte-wide pull bit for bit."""
-    from a_tree_spark.expr.vector import _pull_block
-
-    rng = np.random.default_rng(seed)
-    n_block, n_parents, nb = 40, 25, 24
-    P_ids, P_off, P_counts = _random_csr_block(rng, n_block, n_parents)
-    nn = n_block + n_parents
-    values = rng.integers(0, 256, size=(nn, nb), dtype=np.uint8)
-    cand = rng.integers(0, 256, size=(nn, nb), dtype=np.uint8)
-    cand[:n_block] = 0
-    as_bytes, as_words = cand.copy(), cand.copy()
-    _pull_block(as_bytes, values, P_ids, P_off, P_counts, 0, n_block)
-    _pull_block(as_words.view(np.uint64), values.view(np.uint64),
-                P_ids, P_off, P_counts, 0, n_block)
-    assert np.array_equal(as_bytes, as_words)
-    assert as_bytes[:n_block].any()
+    attrs = AttributeTable([A.integer_list("nums")])
+    builder = ForestBuilder(attrs)
+    for sub_id, expression in subs.items():
+        builder.insert(sub_id, expression)
+    ev = BatchEvaluator(builder.compile())
+    assert len(ev.member_groups) == n_groups
+    batch = pa.record_batch({
+        "nums": pa.array([[2**53 + 1, None], [2**53 + 1]],
+                         type=pa.list_(pa.int64())),
+    })
+    want = sorted(
+        (r, sub)
+        for r, event in enumerate(batch.to_pylist())
+        for sub in evaluate_event(ev.forest, event)
+    )
+    assert want == expected
+    got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
+    assert got == want
 
 
 def _tags_forest():
     """Selective integer access predicates guarding string-list
     ``all of`` / ``none of`` leaves over ``tags`` (one member group),
     and one lone wide ``all of`` over ``wide``, which stays out of any
-    group, so it is generic and lazy."""
+    group, so it is generic."""
     from a_tree_spark.expr import AttributeDefinition as A, AttributeTable
 
     attrs = AttributeTable([A.integer("k"), A.string_list("tags"),
@@ -360,51 +337,40 @@ def _tags_batch(n, seed):
 
 
 @pytest.mark.parametrize("n", [1, 63, 64, 65, 4095, 4097])
-def test_pruned_equals_dense_on_string_list_lazy_leaves(n, monkeypatch):
-    """Access pruning on ``all of`` / ``none of`` string-list leaves,
-    through ``arrow_columns``: row counts around the 64-bit word and the
-    partial last byte, with null lists, empty lists and null elements.
-    Both must also agree with the single-event oracle."""
+def test_pruned_equals_dense_on_string_list_lazy_leaves(n):
+    """Grouped ``all of`` / ``none of`` string-list leaves beside a lone
+    generic wide ``all of``, through ``arrow_columns``: row counts
+    around the 64-bit word and the partial last byte, with null lists,
+    empty lists and null elements, must equal the single-event
+    oracle."""
     forest = _tags_forest()
-    dense = BatchEvaluator(forest)
-    pruned = BatchEvaluator(forest, access_pruning=True)
-    # the tags leaves sit in one member group; the lone wide leaf is lazy
+    ev = BatchEvaluator(forest)
+    # the tags leaves sit in one member group; the lone wide leaf is generic
     tags = forest.attributes.index_of("tags")
     assert [
         {forest.leaves[i].op.name for i in g.leaf_idxs}
-        for g in pruned.member_groups if g.attr_index == tags
+        for g in ev.member_groups if g.attr_index == tags
     ] == [{"ALL_OF", "NONE_OF"}]
-    lazy = [forest.leaves[i] for i in pruned.lazy_leaf_idxs]
-    assert ("wide", "ALL_OF") in [(leaf.attr_name, leaf.op.name) for leaf in lazy]
+    generic = [forest.leaves[i] for i in ev.generic_leaves]
+    assert ("wide", "ALL_OF") in [(leaf.attr_name, leaf.op.name) for leaf in generic]
 
-    subsets = []
-    real_subset = pruned._subset_col
-
-    def counting_subset(col, idx):
-        subsets.append(len(idx))
-        return real_subset(col, idx)
-
-    monkeypatch.setattr(pruned, "_subset_col", counting_subset)
     batch = _tags_batch(n, seed=n)
-    want = sorted(zip(*map(np.ndarray.tolist, dense.evaluate_arrow(batch))))
-    got = sorted(zip(*map(np.ndarray.tolist, pruned.evaluate_arrow(batch))))
-    assert got == want
-    if n >= 64:
-        assert subsets and len(want) > 0  # lazy leaves ran on subsets
-
-    oracle = sorted(
+    got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
+    want = sorted(
         (r, sub)
         for r, event in enumerate(batch.to_pylist())
         for sub in evaluate_event(forest, event)
     )
-    assert got == oracle
+    assert got == want
+    if n >= 64:
+        assert want
 
 
 def _list_group_forest():
     """``all of``, ``not all of``, ``one of`` and ``none of`` sharing
     one string-list and one integer-list attribute (one member group
-    each), plus a lone wide ``all of`` over ``other`` that stays generic
-    and lazy, so forced pruning runs its two-phase pass."""
+    each), plus a lone wide ``all of`` over ``other`` that stays
+    generic."""
     attrs = AttributeTable([A.integer("k"), A.string_list("tags"),
                             A.integer_list("nums"), A.integer_list("other")])
     builder = ForestBuilder(attrs)
@@ -456,15 +422,14 @@ def _list_group_batch(n, seed):
 
 
 @pytest.mark.parametrize("n", [1, 63, 64, 65, 4095, 4097])
-@pytest.mark.parametrize("pruning", [False, True])
-def test_list_member_group_equals_oracle(n, pruning):
+def test_list_member_group_equals_oracle(n):
     """The list member group evaluates ``all of`` / ``not all of`` /
     ``one of`` / ``none of`` leaves of one attribute together; on null
     lists, empty lists, null elements, repeated elements and elements
     outside every literal list it must equal the single-event oracle,
-    dense and forced-pruned, at row counts around the 64-bit word."""
+    at row counts around the 64-bit word."""
     forest = _list_group_forest()
-    ev = BatchEvaluator(forest, access_pruning=pruning)
+    ev = BatchEvaluator(forest)
     attrs = forest.attributes
     grouped = {
         attrs.definition(g.attr_index).name:
@@ -473,7 +438,7 @@ def test_list_member_group_equals_oracle(n, pruning):
     }
     ops = {"ALL_OF", "NOT_ALL_OF", "ONE_OF", "NONE_OF"}
     assert grouped == {"tags": ops, "nums": ops}
-    assert [forest.leaves[i].attr_name for i in ev.lazy_leaf_idxs] == ["other"]
+    assert "other" in [forest.leaves[i].attr_name for i in ev.generic_leaves]
 
     batch = _list_group_batch(n, seed=n)
     got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
@@ -483,43 +448,6 @@ def test_list_member_group_equals_oracle(n, pruning):
         for sub in evaluate_event(forest, event)
     )
     assert got == want and len(want) > 0
-
-
-def test_subset_columns_share_one_dictionary_map():
-    """Lazy-leaf subsets of one prepared column must reuse the parent's
-    {value -> code} map, not rebuild it per subset: both subsets (and
-    the parent) hold the same map object once leaves have read it. A
-    string list has no per-batch map at all: its flat-op literals are
-    coded once, at plan time, and subsets evaluate like the parent."""
-    forest = _tags_forest()
-    ev = BatchEvaluator(forest, access_pruning=True)
-    cache = ev.arrow_columns(_tags_batch(200, seed=3))
-    attrs = forest.attributes
-    subset_idx = [np.arange(0, 200, 3), np.arange(1, 200, 7)]
-
-    s_col = cache[attrs.index_of("s")]
-    s_leaves = [i for i in ev.generic_leaves
-                if forest.leaves[i].attr_index == attrs.index_of("s")]
-    subsets = [ev._subset_col(s_col, idx) for idx in subset_idx]
-    for sub in subsets:
-        for i in s_leaves:
-            ev._eval_generic_leaf(i, sub, len(sub.mask))
-    built = s_col._uniq_map
-    assert built is not None
-    assert all(sub._uniq_map is built for sub in subsets)
-
-    wide_col = cache[attrs.index_of("wide")]
-    wide_leaves = [i for i in ev.generic_leaves
-                   if forest.leaves[i].attr_index == attrs.index_of("wide")]
-    assert wide_col.fcodes is not None
-    assert sorted(ev._flat_op_codes) == sorted(wide_leaves)
-    for idx in subset_idx:
-        sub = ev._subset_col(wide_col, idx)
-        for i in wide_leaves:
-            np.testing.assert_array_equal(
-                ev._eval_generic_leaf(i, sub, len(idx)),
-                ev._eval_generic_leaf(i, wide_col, 200)[idx],
-            )
 
 
 def test_float_decimals_round_half_up_at_scale_six():

@@ -1,10 +1,14 @@
 """The scripts: the A/B gain and no-regression rules of scripts/ab.py,
 the argument guards of scripts/bench_flows.py and
-scripts/submit_pipeline.py, and the deployment job's crash and
-resume."""
+scripts/submit_pipeline.py, the deployment job's crash and resume, and
+the library names the benchmark harness imports."""
 
 import argparse
+import ast
+import glob
+import importlib
 import importlib.util
+import inspect
 import os
 
 import pytest
@@ -24,6 +28,51 @@ def _pairs(base, change, metric="docs_per_s"):
     def run(value):
         return {"correct": True, "metrics": {} if value is None else {metric: value}}
     return [{"base": run(b), "change": run(c)} for b, c in zip(base, change)]
+
+
+def _harness_call_errors(path):
+    """Every ``from a_tree_spark... import name`` in ``path`` that no
+    longer resolves, and every keyword argument its calls of such a
+    name pass that the name's signature no longer accepts."""
+    tree = ast.parse(open(path).read(), path)
+    imported, errors = {}, []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.ImportFrom) and node.level == 0
+                and node.module.split(".")[0] == "a_tree_spark"):
+            continue
+        module = importlib.import_module(node.module)
+        for alias in node.names:
+            if hasattr(module, alias.name):
+                imported[alias.asname or alias.name] = getattr(module, alias.name)
+            else:
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ModuleNotFoundError:
+                    errors.append(f"{node.module}.{alias.name}")
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+                and callable(imported.get(node.func.id))):
+            continue
+        params = inspect.signature(imported[node.func.id]).parameters
+        if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+            continue
+        errors += [f"{node.func.id}({kw.arg}=)" for kw in node.keywords
+                   if kw.arg is not None and kw.arg not in params]
+    return errors
+
+
+def test_benchmark_harness_imports_resolve():
+    """perfbench/, bench.py and bench_extra.py import library names and
+    call them by keyword (``choose_access_pruning``,
+    ``salted_cell_stats``, ``emit=``). Each name must still resolve and
+    each keyword must still be accepted, so a change that drops one
+    fails here rather than in a benchmark run. Needs no Spark session."""
+    root = os.path.dirname(SCRIPTS)
+    paths = sorted(glob.glob(os.path.join(root, "perfbench", "*.py")))
+    paths += [os.path.join(root, "bench.py"), os.path.join(root, "bench_extra.py")]
+    assert len(paths) > 2
+    errors = {path: _harness_call_errors(path) for path in paths}
+    assert not any(errors.values()), errors
 
 
 def test_ab_gain_needs_nine_tenths_of_pairs_and_gap_beyond_parent_iqr():

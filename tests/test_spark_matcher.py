@@ -143,18 +143,6 @@ def test_strategies_equal_oracle_on_null_elements_and_fine_decimals(spark):
         assert got == want, strategy
 
 
-def test_access_pruning_agrees_end_to_end(eventized, builder):
-    """Two-phase access-predicate evaluation (reference
-    src/atree.rs:530-591) must be invisible in the results — same
-    matches as the dense vectorized strategy on the full standing
-    workload, through the real Spark stage."""
-    dense = sorted(map(tuple, match_events(eventized, builder).collect()))
-    pruned = sorted(map(tuple, match_events(
-        eventized, builder, access_pruning=True
-    ).collect()))
-    assert dense == pruned and len(dense) > 0
-
-
 def test_no_python_in_codegen_plan(eventized, builder):
     plan = match_events(eventized, builder, strategy="codegen")._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
@@ -165,88 +153,3 @@ def test_vectorized_plan_prunes_columns(eventized, builder):
     df = match_events(eventized, builder, strategy="vectorized")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "MapInArrow" in plan
-
-
-def test_auto_strategy_cost_model():
-    """strategy auto: the compiled cost model turns two-phase pruning on
-    exactly when lazy leaves are expensive (reference economics,
-    src/predicates.rs:144-165 + atree.rs:530-547). Two or more list
-    leaves of one attribute form a member group and are never lazy."""
-    from a_tree_spark.engine.matcher import choose_access_pruning
-    from a_tree_spark.expr import AttributeDefinition as A, AttributeTable, ForestBuilder
-    from a_tree_spark.expr.vector import BatchEvaluator
-    from a_tree_spark.web.pipeline import build_page_forest
-
-    # flagship workload: lazy leaves are cheap scalar compares -> dense
-    assert not choose_access_pruning(
-        BatchEvaluator(build_page_forest(500).compile())
-    )
-
-    # selective workload with wide ALL_OF leaves over one attribute: they
-    # share its member group, so nothing is lazy -> dense
-    attrs = AttributeTable([A.integer("k"), A.integer_list("xs"),
-                            A.integer_list("ys")])
-    builder = ForestBuilder(attrs)
-    for i in range(20):
-        wide = sorted(range(i * 3, i * 3 + 40))
-        builder.insert(i, f"k = {i} and xs all of {wide}")
-    evaluator = BatchEvaluator(builder.compile())
-    assert [len(g.leaf_idxs) for g in evaluator.member_groups] == [20]
-    assert not evaluator.lazy_leaf_idxs
-    assert not choose_access_pruning(evaluator)
-
-    # a lone wide ALL_OF (the reference's benches/data/search.json
-    # shape) stays generic and lazy -> two-phase pruning
-    builder.insert(20, f"k = 3 and ys all of {list(range(3600))}")
-    evaluator = BatchEvaluator(builder.compile())
-    lazy = [evaluator.forest.leaves[i] for i in evaluator.lazy_leaf_idxs]
-    assert [(leaf.attr_name, leaf.op.name) for leaf in lazy] == [("ys", "ALL_OF")]
-    assert choose_access_pruning(evaluator)
-
-
-def test_match_events_shares_one_plan_across_pruning_flags(eventized, monkeypatch):
-    """Two vectorized passes over one snapshot, one pruned and one
-    dense, plan the evaluator once; each pass ships its own flag and the
-    shared plan keeps its own."""
-    from a_tree_spark.expr import vector
-    from a_tree_spark.expr.vector import BatchEvaluator, planned_evaluator
-
-    plans = []
-    init = BatchEvaluator.__init__
-
-    def counting_init(self, *args, **kwargs):
-        plans.append(1)
-        init(self, *args, **kwargs)
-
-    monkeypatch.setattr(BatchEvaluator, "__init__", counting_init)
-    monkeypatch.setattr(vector, "_latest_plan", None)
-
-    fresh = ForestBuilder(EVENT_ATTRIBUTES)
-    for sub_id, expression in STANDING_SUBSCRIPTIONS.items():
-        fresh.insert(sub_id, expression)
-    pruned = sorted(map(tuple, match_events(
-        eventized, fresh, strategy="vectorized", access_pruning=True
-    ).collect()))
-    dense = sorted(map(tuple, match_events(
-        eventized, fresh, strategy="vectorized", access_pruning=False
-    ).collect()))
-    assert pruned == dense and len(dense) > 0
-    assert len(plans) == 1
-    assert not planned_evaluator(fresh.compile()).access_pruning
-
-
-def test_broadcast_copy_without_pruning_carries_no_parent_csr(spark):
-    """The cost model counts parent edges without building the parent
-    CSR, so a broadcast copy with pruning off ships none; only the
-    two-phase pass builds it, where it runs."""
-    import pickle
-
-    from a_tree_spark.engine.matcher import broadcast_evaluator
-    from a_tree_spark.web.pipeline import build_page_forest
-
-    # the auto model reads OFF on the standing page forest
-    evaluator, bc = broadcast_evaluator(spark, build_page_forest(400).compile())
-    assert not evaluator.access_pruning
-    shipped = pickle.loads(pickle.dumps(evaluator))
-    assert not hasattr(shipped, "_parent_csr_cache")
-    bc.unpersist()

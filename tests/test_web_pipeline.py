@@ -481,16 +481,12 @@ def test_fused_extractor_fallback_counter(spark):
 
 
 def test_skewed_workload_flips_pruning_on(spark):
-    """VERDICT round 4 item 6: the heavy-tailed workload's wide
-    ``all of`` leaves used to be generic and lazy, and switched the
-    cost-model access pruning ON. They now sit in the ``lead_tokens``
-    member group, so the skewed forest reads OFF at 400 and at 50k
-    subscriptions; its generic comparison leaves are still lazy. The
-    fused kernel must agree exactly with the composable pipeline, on
-    the auto (dense) path and with pruning forced on."""
+    """The heavy-tailed workload's wide ``all of`` leaves sit in the
+    ``lead_tokens`` member group with its ``one of`` / ``none of``
+    leaves, and the fused kernel agrees exactly with the composable
+    pipeline."""
     from pyspark.sql import functions as F
 
-    from a_tree_spark.engine.matcher import choose_access_pruning
     from a_tree_spark.expr import ForestBuilder
     from a_tree_spark.expr.vector import BatchEvaluator
     from a_tree_spark.web.pipeline import (
@@ -507,32 +503,14 @@ def test_skewed_workload_flips_pruning_on(spark):
     assert {forest.leaves[i].op.name for i in group.leaf_idxs} == {
         "ALL_OF", "ONE_OF", "NONE_OF"
     }
-    assert ev.lazy_leaf_idxs  # generic leaves the forced pass defers
-    assert not choose_access_pruning(ev)
-    # the uniform flagship workload must still leave it OFF (cheap lazy)
-    assert not choose_access_pruning(
-        BatchEvaluator(build_page_forest(400).compile())
-    )
-    # density term (round 5): the SAME templates at 50k subscriptions
-    # dilute the lazy cost across a ~300k-unit forest — the candidate
-    # pass would cost more than the lazies save (measured 0.61x), so
-    # the model must flip back OFF at scale
-    big = ForestBuilder(PAGE_ATTRIBUTES)
-    for sub_id, expression in skewed_page_subscriptions(50_000).items():
-        big.insert(sub_id, expression)
-    assert not choose_access_pruning(BatchEvaluator(big.compile()))
 
     pages = synth_pages_df(spark, N_PAGES, partitions=4).withColumn(
         "page_key", F.xxhash64("url")
     )
     composable = match_pages(eventize_pages(pages.drop("page_key")), builder)
     b = Counter(map(tuple, composable.select("page_key", "cell_id", "sub_id").collect()))
-    for pruning in (None, True):  # auto (dense), then the two-phase pass
-        fused = fused_match_pages(
-            pages, builder, access_pruning=pruning, group="page_key"
-        )
-        a = _expand_partials(fused, [builder])
-        assert a == b and len(a) > 0
+    a = _expand_partials(fused_match_pages(pages, builder, group="page_key"), [builder])
+    assert a == b and len(a) > 0
 
 
 def test_choose_shards_guidance():
@@ -642,8 +620,8 @@ def _lead_token_lazy_subscriptions(n_pages_seen: int) -> dict[int, str]:
     """Per page: ``n_tokens = <its count> and lead_tokens all of [its
     lead tokens + 2 others]`` (fires on that page), plus ONE ``none of``
     leaf; these share the ``lead_tokens`` member group. A lone wide
-    ``lang in`` leaf stays generic, hence lazy. The selective
-    ``n_tokens`` equality is the access predicate."""
+    ``lang in`` leaf stays generic. The selective ``n_tokens`` equality
+    is the reference's access predicate."""
     from a_tree_spark.web.synth import TLD_TABLE
 
     pages = synth_batch(np.arange(n_pages_seen))
@@ -663,41 +641,49 @@ def _lead_token_lazy_subscriptions(n_pages_seen: int) -> dict[int, str]:
 
 @pytest.mark.parametrize("n_pages", [1, 63, 64, 65, 4095, 4097])
 def test_fused_pruned_equals_dense_on_lead_token_lazy_leaves(spark, n_pages):
-    """The fused kernel's access-pruned path must emit exactly the dense
-    path's matches when string-list ``all of`` / ``none of`` leaves over
-    dictionary-coded lead tokens sit in the member group beside a lazy
-    generic leaf, at batch sizes around the 64-bit word and the partial
-    last byte (4097 = one full Arrow batch + one row)."""
+    """String-list ``all of`` / ``none of`` leaves over dictionary-coded
+    lead tokens sit in the member group beside a generic ``lang in``
+    leaf. At batch sizes around the 64-bit word and the partial last
+    byte (4097 = one full Arrow batch + one row), the fused kernel and
+    ``match_events`` on the same snapshot both equal the single-row
+    oracle, and both use the snapshot's one shared plan."""
     from pyspark.sql import functions as F
 
+    from a_tree_spark.engine.matcher import match_events
     from a_tree_spark.expr import ForestBuilder
-    from a_tree_spark.expr.vector import BatchEvaluator
+    from a_tree_spark.expr.vector import planned_evaluator
     from a_tree_spark.web.pipeline import fused_match_pages
 
     builder = ForestBuilder(PAGE_ATTRIBUTES)
     for sub_id, expression in _lead_token_lazy_subscriptions(40).items():
         builder.insert(sub_id, expression)
     forest = builder.compile()
-    ev = BatchEvaluator(forest)
+    plan = planned_evaluator(forest)
     lead = PAGE_ATTRIBUTES.index_of("lead_tokens")
     assert [
         {forest.leaves[i].op.name for i in g.leaf_idxs}
-        for g in ev.member_groups if g.attr_index == lead
+        for g in plan.member_groups if g.attr_index == lead
     ] == [{"ALL_OF", "NONE_OF"}]
-    assert [forest.leaves[i].op.name for i in ev.lazy_leaf_idxs] == ["IN"]
+    assert "IN" in {forest.leaves[i].op.name for i in plan.generic_leaves}
 
     pages = synth_pages_df(spark, n_pages, partitions=1).withColumn(
-        "page_key", F.monotonically_increasing_id()
+        "page_key", F.xxhash64("url")
     )
-    got = {}
-    for pruning in (True, False):
-        out = fused_match_pages(
-            pages, builder, access_pruning=pruning, group="page_key"
-        )
-        got[pruning] = _expand_partials(out, [builder])
-    assert got[True] == got[False]
-    # every page fires its own sub
-    assert sum(got[True].values()) >= min(n_pages, 40)
+    eventized = eventize_pages(pages).withColumn("page_key", F.xxhash64("url"))
+    want = set()
+    for row in eventized.collect():
+        event = {k: row[k] for k in PAGE_ATTRIBUTES.names()}
+        for sub in evaluate_event(forest, normalize_event(PAGE_ATTRIBUTES, event)):
+            want.add((row["page_key"], sub))
+    assert len(want) >= min(n_pages, 40)  # every page fires its own sub
+
+    fused = fused_match_pages(pages, builder, group="page_key")
+    assert {(page, sub) for page, _, sub in _expand_partials(fused, [builder])} == want
+    assert planned_evaluator(builder.compile()) is plan
+
+    matched = match_events(eventized, builder, event_id_col="page_key")
+    assert {(r["event_id"], r["sub_id"]) for r in matched.collect()} == want
+    assert planned_evaluator(builder.compile()) is plan
 
 
 def _crawl(spark, pages, builder):
@@ -716,12 +702,13 @@ def _crawl(spark, pages, builder):
 
 
 def test_crawl_plans_one_evaluator_per_snapshot(spark, monkeypatch):
-    """The root map and the fused kernel share the snapshot's one plan:
-    a crawl plans once, and after an insert the next crawl plans once
-    more. The root map is still one (root_id, n_subs) row per root, in
-    the plan's root order."""
+    """The root map, the fused kernel and ``match_events`` share the
+    snapshot's one plan: a crawl and a matcher pass plan once, and after
+    an insert the next crawl plans once more. The root map is still one
+    (root_id, n_subs) row per root, in the plan's root order."""
     from pyspark.sql import functions as F
 
+    from a_tree_spark.engine.matcher import match_events
     from a_tree_spark.expr import vector
     from a_tree_spark.expr.vector import BatchEvaluator, planned_evaluator
 
@@ -742,6 +729,8 @@ def test_crawl_plans_one_evaluator_per_snapshot(spark, monkeypatch):
     root_map, stats = _crawl(spark, pages, builder)
     assert len(plans) == 1 and plans[0] is builder.compile()
     assert stats
+    assert match_events(eventize_pages(pages), builder, event_id_col="url").count()
+    assert len(plans) == 1
     assert root_map.schema.simpleString() == "struct<root_id:bigint,n_subs:bigint>"
     counts = planned_evaluator(builder.compile()).root_sub_counts
     assert sorted(map(tuple, root_map.collect())) == list(enumerate(counts.tolist()))
@@ -750,50 +739,6 @@ def test_crawl_plans_one_evaluator_per_snapshot(spark, monkeypatch):
     _, after = _crawl(spark, pages, builder)
     assert len(plans) == 2 and plans[1] is builder.compile()
     assert after != stats  # the new subscription matches somewhere
-
-
-def test_pruning_flag_stays_with_its_caller(spark):
-    """On one snapshot, a pruned fused pass and then a dense
-    ``match_events`` pass both equal the single-row oracle, and neither
-    flag lands on the shared plan."""
-    from pyspark.sql import functions as F
-
-    from a_tree_spark.engine.matcher import broadcast_evaluator, match_events
-    from a_tree_spark.expr import ForestBuilder
-    from a_tree_spark.expr.vector import planned_evaluator
-    from a_tree_spark.web.pipeline import fused_match_pages
-
-    builder = ForestBuilder(PAGE_ATTRIBUTES)
-    for sub_id, expression in _lead_token_lazy_subscriptions(40).items():
-        builder.insert(sub_id, expression)
-    forest = builder.compile()
-    plan = planned_evaluator(forest)
-    assert plan.lazy_leaf_idxs and not plan.access_pruning
-
-    pages = synth_pages_df(spark, 200, partitions=2).withColumn(
-        "page_key", F.xxhash64("url")
-    )
-    eventized = eventize_pages(pages).withColumn("page_key", F.xxhash64("url"))
-    want = set()
-    for row in eventized.collect():
-        event = {k: row[k] for k in PAGE_ATTRIBUTES.names()}
-        for sub in evaluate_event(forest, normalize_event(PAGE_ATTRIBUTES, event)):
-            want.add((row["page_key"], sub))
-    assert want
-
-    pruned = fused_match_pages(pages, builder, access_pruning=True, group="page_key")
-    assert {(page, sub) for page, _, sub in _expand_partials(pruned, [builder])} == want
-    assert planned_evaluator(builder.compile()) is plan and not plan.access_pruning
-
-    dense = match_events(eventized, builder, event_id_col="page_key",
-                         access_pruning=False)
-    assert {(r["event_id"], r["sub_id"]) for r in dense.collect()} == want
-    assert planned_evaluator(builder.compile()) is plan and not plan.access_pruning
-
-    shipped, bc = broadcast_evaluator(spark, forest, access_pruning=True)
-    assert shipped is not plan and shipped.access_pruning
-    assert not plan.access_pruning
-    bc.destroy()
 
 
 def test_empty_forest_crawl(spark):
