@@ -79,7 +79,7 @@ def match_events(
     events: DataFrame,
     matcher: ForestBuilder | CompiledForest,
     event_id_col: str = "event_id",
-    strategy: str = "auto",
+    strategy: str = "vectorized",
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
     """Match every event row against every subscription.
@@ -89,22 +89,19 @@ def match_events(
     through the match stage so downstream spatial aggregation needs no
     join back to the (expensive to recompute) event source.
 
-    strategy="auto" (default) mirrors the reference's cost-driven access
-    selection (src/atree.rs:133-137,530-547) at plan level: always the
-    vectorized Arrow kernel — measured faster than the codegen plan even
-    at 27 subscriptions (BENCH_r02: 1.281s vs 1.785s; the Catalyst plan
-    re-evaluates every expression per row while the sweep amortizes
-    across the CSE DAG). The reference's access predicates
+    strategy="vectorized" (default) runs the vectorized Arrow kernel,
+    measured faster than the codegen plan even at 27 subscriptions
+    (BENCH_r02: 1.281s vs 1.785s; the Catalyst plan re-evaluates every
+    expression per row while the sweep amortizes across the CSE DAG). The reference's access predicates
     (src/atree.rs:530-591) have their vectorized form inside the
-    kernel: membership leaves of one attribute share an inverted index
-    (``expr.vector._MemberGroup``). "codegen" remains callable for
-    pure-JVM deployments that must avoid a Python worker pool;
-    "vectorized" names the default kernel. Any other strategy raises
-    ``ValueError``.
+    kernel: the equality and membership leaves of one attribute share
+    an inverted index (``expr.vector._MemberGroup``). "codegen" remains
+    callable for pure-JVM deployments that must avoid a Python worker
+    pool. Any other strategy raises ``ValueError``.
     """
-    if strategy not in ("auto", "vectorized", "codegen"):
+    if strategy not in ("vectorized", "codegen"):
         raise ValueError(
-            f"strategy must be 'auto', 'vectorized' or 'codegen', got {strategy!r}"
+            f"strategy must be 'vectorized' or 'codegen', got {strategy!r}"
         )
     forest = matcher.compile() if isinstance(matcher, ForestBuilder) else matcher
     if strategy == "codegen":

@@ -13,23 +13,23 @@ Execution strategy (SURVEY.md §4.8), measured on 32 concurrent workers:
 - each distinct leaf is evaluated once per batch as a numpy bool column
   (the CSE payoff — reference shares node evaluations per event,
   src/lib.rs:72-75);
-- membership leaves per attribute (in / not in of a scalar; one of /
-  none of / all of / not all of of a list) share one broadcast inverted
-  index: each batch value occurrence pairs with exactly the leaves
-  listing it, an all-of leaf counts its pairs per row against the
-  row's list length, and each group writes one contiguous block of
-  the leaf matrix in place — the vectorized analog of the reference's
-  access-predicate work-list (src/atree.rs:530-591): a leaf costs the
-  occurrences of its listed values, not a pass over every row, so no
-  leaf is deferred and every forest runs one dense sweep. Scalar
-  strings encode once per batch, in Arrow, by per-batch dictionary
-  (only unique strings cross into Python); list elements, string or
-  integer, encode into int64 codes of the attribute's literal
-  vocabulary (BatchEvaluator.list_column: none cross);
-- equality leaves per attribute evaluate as one searchsorted + scatter;
-- list attributes flatten once per batch (element codes + row ids) so
-  every leaf over them is one vectorized membership + segmented
-  reduction — no per-row Python;
+- every equality and membership leaf of an attribute (= / <> / in /
+  not in of a scalar, whose scalar operand is a one-element literal
+  set; one of / none of / all of / not all of of a list) sits in that
+  attribute's one broadcast inverted index: each batch value
+  occurrence pairs with exactly the leaves listing it, an all-of leaf
+  counts its pairs per row against the row's list length, and each
+  group writes one contiguous block of the leaf matrix in place — the
+  vectorized analog of the reference's access-predicate work-list
+  (src/atree.rs:530-591): a leaf costs the occurrences of its listed
+  values, not a pass over every row, so no leaf is deferred and every
+  forest runs one dense sweep. Scalar strings encode once per batch,
+  in Arrow, by per-batch dictionary (only unique strings cross into
+  Python); list elements, string or integer, flatten once per batch
+  into row ids and int64 vids of the group's vocabulary
+  (BatchEvaluator.list_column: none cross). Only null / empty checks,
+  boolean leaves, range comparisons and FLOAT (= / <>) evaluate per
+  leaf;
 - the interior sweep runs on PACKED bits (np.packbits) level by level
   with fancy-indexed bitwise AND/OR into persistent reusable buffers:
   packing cut memory traffic 8x and buffer reuse removed an
@@ -76,29 +76,21 @@ class _ScalarColumn:
 
     Non-string columns carry int64 or bool ``values``. String columns
     carry an Arrow dictionary encoding instead: ``codes``, int64 codes
-    (-1 = null) into the batch-local ``uniques`` list. Every string
-    leaf op then runs as int64 numpy compares/gathers over the codes
-    with ONE tiny python lookup over the uniques, instead of
-    object-array comparisons per leaf (profiled: object-dtype EQ/
-    isin/map were the dense sweep's largest line items — guide §4.2,
-    hand batches to vectorized kernels, encode strings once).
+    (-1 = null) into the batch-local ``uniques`` list. The member group
+    then maps the few uniques to its vids with ONE tiny python lookup
+    and gathers through the int64 codes, instead of object-array
+    comparisons per leaf (profiled: object-dtype EQ/isin/map were the
+    dense sweep's largest line items — guide §4.2, hand batches to
+    vectorized kernels, encode strings once).
     """
 
-    __slots__ = ("mask", "values", "codes", "uniques", "_uniq_map")
+    __slots__ = ("mask", "values", "codes", "uniques")
 
     def __init__(self, mask: np.ndarray, values, codes=None, uniques=None):
         self.mask = mask
         self.values = values
         self.codes = codes
         self.uniques = uniques
-        self._uniq_map = None
-
-    @property
-    def uniq_map(self) -> dict:
-        """{unique value -> dictionary code}, built once per batch."""
-        if self._uniq_map is None:
-            self._uniq_map = {u: i for i, u in enumerate(self.uniques)}
-        return self._uniq_map
 
 
 class _ListColumn:
@@ -107,25 +99,21 @@ class _ListColumn:
     per-row null ``mask`` and ``lengths``, and the elements aligned with
     ``row_ids``.
 
-    Elements, string or integer, arrive only as int64 codes, so no
-    element becomes a Python object or a float: ``vids`` carries
-    member-group vocabulary codes (-1 = not in any literal list),
-    ``fcodes`` codes into the forest's literal vocabulary of this
-    attribute (-1 = in no literal list, or null). Parts nothing reads
-    stay None."""
+    Elements, string or integer, arrive only as int64 ``vids`` of the
+    attribute's member-group vocabulary (-1 = in no literal list, or
+    null), so no element becomes a Python object or a float. ``vids``
+    stays None when no leaf reads the elements."""
 
-    __slots__ = ("mask", "lengths", "row_ids", "vids", "fcodes")
+    __slots__ = ("mask", "lengths", "row_ids", "vids")
 
     def __init__(
         self, mask: np.ndarray, lengths: np.ndarray,
         vids: np.ndarray | None = None,
-        fcodes: np.ndarray | None = None,
     ):
         self.mask = mask
         self.lengths = lengths
         self.row_ids = np.repeat(np.arange(len(mask), dtype=np.int64), lengths)
         self.vids = vids
-        self.fcodes = fcodes
 
 
 def unsupported_column(kind, column_type: str) -> TypeError:
@@ -163,17 +151,22 @@ def _decimal_threshold(op: Op, literal: Decimal) -> tuple[Op, int]:
     raise AssertionError(op)
 
 
-#: block order of a member group's leaves (see _MemberGroup)
+#: the ops a member group takes, and its leaves' block order (see
+#: _MemberGroup); a FLOAT (Decimal) = / <> stays a generic leaf
 _GROUP_RANK = {
-    Op.IN: 0, Op.ONE_OF: 0, Op.ALL_OF: 1,
-    Op.NOT_ALL_OF: 2, Op.NOT_IN: 3, Op.NONE_OF: 3,
+    Op.EQ: 0, Op.IN: 0, Op.ONE_OF: 0, Op.ALL_OF: 1,
+    Op.NOT_ALL_OF: 2, Op.NE: 3, Op.NOT_IN: 3, Op.NONE_OF: 3,
 }
+
+_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
 
 
 class _MemberGroup:
-    """Inverted index over the membership leaves of one attribute: the
-    ``in`` / ``not in`` leaves of a scalar, or the ``one of`` /
-    ``none of`` / ``all of`` / ``not all of`` leaves of a list.
+    """Inverted index over the equality and membership leaves of one
+    attribute: the ``=`` / ``<>`` / ``in`` / ``not in`` leaves of a
+    scalar (an ``=`` / ``<>`` operand is a one-element literal list), or
+    the ``one of`` / ``none of`` / ``all of`` / ``not all of`` leaves of
+    a list. Every such leaf joins its attribute's group, however few.
 
     vocab: literal value -> dense vid; CSR (vid_offsets, vid_leaves) maps
     each vid to the group-leaf positions whose literal list contains it.
@@ -190,8 +183,9 @@ class _MemberGroup:
     never a member. The negated ops flip the result; a null row is
     never TRUE.
 
-    ``leaf_idxs`` is in block order (``_GROUP_RANK``): plain, subset,
-    negated subset, negated plain, so the subset leaves are positions
+    ``leaf_idxs`` is in block order (``_GROUP_RANK``): plain (``=``,
+    ``in``, ``one of``), subset, negated subset, negated plain (``<>``,
+    ``not in``, ``none of``), so the subset leaves are positions
     [subset_lo, subset_hi) and the negated ones [negated_lo, n_leaves).
     The evaluator lays the group out as rows [row_lo, row_lo + n_leaves)
     of its leaf matrix, and the group writes that block in place.
@@ -200,12 +194,12 @@ class _MemberGroup:
     __slots__ = (
         "attr_index", "is_list", "leaf_idxs", "vocab", "vid_offsets",
         "vid_leaves", "n_leaves", "subset_lo", "subset_hi", "negated_lo",
-        "row_lo",
+        "row_lo", "keys", "key_vids",
     )
 
-    def __init__(self, forest, attr_index: int, is_list: bool, leaf_idxs: list[int]):
+    def __init__(self, forest, attr_index: int, leaf_idxs: list[int]):
         self.attr_index = attr_index
-        self.is_list = is_list
+        self.is_list = forest.leaves[leaf_idxs[0]].attr_kind.is_list
         rank = {i: _GROUP_RANK[forest.leaves[i].op] for i in leaf_idxs}
         self.leaf_idxs = sorted(leaf_idxs, key=rank.__getitem__)
         self.n_leaves = len(leaf_idxs)
@@ -215,6 +209,7 @@ class _MemberGroup:
         self.subset_hi = bisect.bisect_left(ranks, 3)
         self.row_lo = 0  # set by the evaluator's leaf-row layout
         operands = [forest.leaves[i].operand for i in self.leaf_idxs]
+        operands = [o if isinstance(o, tuple) else (o,) for o in operands]
         values = [v for operand in operands for v in operand]
         # vids in first-occurrence order
         vocab = {v: vid for vid, v in enumerate(dict.fromkeys(values))}
@@ -234,19 +229,23 @@ class _MemberGroup:
             [[0], np.cumsum(np.bincount(vids[keep], minlength=len(vocab)))]
         )
         self.vocab = vocab
+        # an integer scalar's literals sorted once, for _codes; one
+        # outside int64 can never equal a value, so it is left out
+        keys = [] if self.is_list else sorted(
+            v for v in vocab
+            if isinstance(v, int) and _INT64_MIN <= v <= _INT64_MAX
+        )
+        self.keys = np.array(keys, dtype=np.int64)
+        self.key_vids = np.array([vocab[k] for k in keys], dtype=np.int64)
 
     def _codes(self, values: np.ndarray) -> np.ndarray:
         """Map scalar integer values -> vids (-1 = in no literal list)
-        by searchsorted on the sorted vocab (strings and list elements
+        by searchsorted on the sorted keys (strings and list elements
         arrive pre-coded)."""
-        if len(values) == 0:
-            return np.empty(0, dtype=np.int64)
-        keys = np.fromiter(self.vocab.keys(), dtype=np.int64, count=len(self.vocab))
-        vids_by_key = np.fromiter(self.vocab.values(), dtype=np.int64, count=len(self.vocab))
-        order = np.argsort(keys)
-        sorted_keys, sorted_vids = keys[order], vids_by_key[order]
-        pos = np.minimum(np.searchsorted(sorted_keys, values), len(sorted_keys) - 1)
-        return np.where(sorted_keys[pos] == values, sorted_vids[pos], -1)
+        if len(self.keys) == 0:
+            return np.full(len(values), -1, dtype=np.int64)
+        pos = np.minimum(np.searchsorted(self.keys, values), len(self.keys) - 1)
+        return np.where(self.keys[pos] == values, self.key_vids[pos], -1)
 
     def map_unique(self, unique_values: list) -> np.ndarray:
         """vocab lookup for a (small) unique-value dictionary; -1 = not
@@ -364,58 +363,37 @@ class BatchEvaluator:
     # ------------------------------------------------------------ planning
 
     def _plan_leaf_groups(self) -> None:
-        """Group leaves per attribute for one-shot evaluation:
+        """Group the equality and membership leaves per attribute for
+        one-shot evaluation: every ``=`` / ``<>`` / ``in`` / ``not in``
+        leaf of a scalar, and every ``one of`` / ``none of`` /
+        ``all of`` / ``not all of`` leaf of a list, joins its
+        attribute's broadcast *inverted index* (literal value -> leaf
+        ids, ``_MemberGroup``), whatever the group's size: each value
+        occurrence in the batch pairs with exactly the leaves that list
+        it, so work is O(occurrences x leaves-per-value) instead of
+        O(leaves x rows); ALL_OF counts those pairs per (leaf, row).
+        This is the vectorized restatement of the reference's global
+        predicate work-list / access-predicate pass
+        (src/atree.rs:530-591): where the reference defers a costly
+        predicate until a cheap sibling fired, the index never reads a
+        leaf's literal list on a row holding none of its values.
 
-        - EQ leaves -> one searchsorted/map + scatter per attribute;
-        - IN/NOT_IN leaves of a scalar, and ONE_OF/NONE_OF/ALL_OF/
-          NOT_ALL_OF leaves of a list -> a broadcast *inverted index*
-          (literal value -> leaf ids, ``_MemberGroup``): each value
-          occurrence in the batch pairs with exactly the leaves that list
-          it, so work is O(occurrences x leaves-per-value) instead of
-          O(leaves x rows); ALL_OF counts those pairs per (leaf, row).
-          This is the vectorized restatement of the reference's global
-          predicate work-list / access-predicate pass
-          (src/atree.rs:530-591): where the reference defers a costly
-          predicate until a cheap sibling fired, the index never reads
-          a leaf's literal list on a row holding none of its values.
-
-        An attribute needs at least 4 EQ leaves, or 2 membership leaves,
-        for a group. Everything else evaluates per-leaf, still vectorized
-        per batch, on every row.
+        Every other leaf — null / empty checks, boolean leaves, range
+        comparisons and FLOAT ``=`` / ``<>`` — evaluates per leaf,
+        still vectorized per batch, on every row.
         """
         forest = self.forest
-        eq_groups: dict[int, list[int]] = {}
-        member_groups: dict[tuple[int, bool], list[int]] = {}
+        member_groups: dict[int, list[int]] = {}
         generic: list[int] = []
         for leaf_idx, leaf in enumerate(forest.leaves):
-            if leaf.op is Op.EQ and not isinstance(leaf.operand, Decimal):
-                eq_groups.setdefault(leaf.attr_index, []).append(leaf_idx)
-            elif leaf.op in (Op.IN, Op.NOT_IN):
-                member_groups.setdefault((leaf.attr_index, False), []).append(leaf_idx)
-            elif leaf.op in self._FLAT_OPS:
-                member_groups.setdefault((leaf.attr_index, True), []).append(leaf_idx)
+            if leaf.op in _GROUP_RANK and not isinstance(leaf.operand, Decimal):
+                member_groups.setdefault(leaf.attr_index, []).append(leaf_idx)
             else:
                 generic.append(leaf_idx)
-
-        self.eq_groups: list[tuple[int, np.ndarray, list[int]]] = []
-        for attr_index, leaf_idxs in eq_groups.items():
-            if len(leaf_idxs) < 4:
-                generic.extend(leaf_idxs)
-                continue
-            operands = [forest.leaves[i].operand for i in leaf_idxs]
-            order = sorted(range(len(operands)), key=lambda i: operands[i])
-            sorted_ops = np.array([operands[i] for i in order])
-            sorted_leaf_idxs = [leaf_idxs[i] for i in order]
-            self.eq_groups.append((attr_index, sorted_ops, sorted_leaf_idxs))
-
-        self.member_groups: list[_MemberGroup] = []
-        for (attr_index, is_list), leaf_idxs in member_groups.items():
-            if len(leaf_idxs) < 2:
-                generic.extend(leaf_idxs)
-                continue
-            self.member_groups.append(
-                _MemberGroup(forest, attr_index, is_list, leaf_idxs)
-            )
+        self.member_groups = [
+            _MemberGroup(forest, attr_index, leaf_idxs)
+            for attr_index, leaf_idxs in member_groups.items()
+        ]
         self.generic_leaves = generic
         # leaf-row layout of the per-batch leaf matrix: each member
         # group's leaves take one contiguous block of rows, in the
@@ -426,44 +404,16 @@ class BatchEvaluator:
         for group in self.member_groups:
             group.row_lo = len(order)
             order.extend(group.leaf_idxs)
-        grouped = set(order)
-        order.extend(i for i in range(len(forest.leaves)) if i not in grouped)
+        order.extend(generic)
         self._leaf_row = np.empty(len(order), dtype=np.int64)
         self._leaf_row[np.asarray(order, dtype=np.int64)] = np.arange(
             len(order), dtype=np.int64
         )
-        # what list_column builds per list attribute: member-group vids,
-        # and element codes for the generic ops that read them. Each
-        # list attribute gets ONE literal vocabulary (value -> code) that
-        # the batch's elements encode into: the member group's vocab
-        # first, so a code below its size IS the group vid, then the
-        # literals of the generic flat ops
+        # a list attribute's elements encode into its group's vocab
+        # (list_column), so their codes are the group's vids
         self._list_groups = {
             g.attr_index: g for g in self.member_groups if g.is_list
         }
-        flat_literals: dict[int, list] = {}
-        for i in generic:
-            leaf = forest.leaves[i]
-            if leaf.op in self._FLAT_OPS:
-                flat_literals.setdefault(leaf.attr_index, []).extend(leaf.operand)
-        self._flat_attrs = set(flat_literals)
-        self._list_vocab: dict[int, dict] = {}
-        for attr_index in self._list_groups.keys() | self._flat_attrs:
-            group = self._list_groups.get(attr_index)
-            vocab = dict(group.vocab) if group is not None else {}
-            for value in flat_literals.get(attr_index, ()):
-                vocab.setdefault(value, len(vocab))
-            self._list_vocab[attr_index] = vocab
-        # each generic flat op's literals as codes of that vocabulary,
-        # worked out once here rather than per leaf per batch
-        self._flat_op_codes: dict[int, np.ndarray] = {}
-        for i in generic:
-            leaf = forest.leaves[i]
-            if leaf.op in self._FLAT_OPS:
-                vocab = self._list_vocab[leaf.attr_index]
-                self._flat_op_codes[i] = np.array(
-                    [vocab[v] for v in leaf.operand], dtype=np.int64
-                )
 
     def _plan_levels(self) -> None:
         """Level-contiguous node layout: the evaluator renumbers nodes
@@ -572,11 +522,6 @@ class BatchEvaluator:
 
     # ------------------------------------------------------------ columns
 
-    #: generic ops that read the flattened element values (everything
-    #: else on a list attribute — is empty / is null — needs only
-    #: lengths/mask, so flat materialization can be skipped)
-    _FLAT_OPS = (Op.ONE_OF, Op.NONE_OF, Op.ALL_OF, Op.NOT_ALL_OF)
-
     def arrow_columns(self, batch) -> dict[int, object]:
         """Prepared column cache straight from an Arrow RecordBatch, for
         the attributes the forest actually touches (column pruning at
@@ -600,17 +545,16 @@ class BatchEvaluator:
         """Prepared list column from an Arrow ListArray's offsets and
         flattened values — the list-encoding path of ``arrow_columns``.
 
-        Elements encode ONCE per batch, in Arrow, into codes of the
-        attribute's literal vocabulary (``pc.index_in``; -1 = in no
-        literal list, or a null element, which is never a member). The
-        same int64 codes feed the member group (``vids``) and the
-        generic flat ops (``fcodes``: int64 isin instead of
-        object-array hashing), and no element becomes a Python object:
+        Elements encode ONCE per batch, in Arrow, into the attribute's
+        member-group vids (``pc.index_in`` over the group's vocab in vid
+        order; -1 = in no literal list, or a null element, which is
+        never a member), and no element becomes a Python object:
         converting even a batch's unique tokens to Python was most of
         the encoding cost. String elements not typed string (e.g.
         ``list<null>``) are cast to string first, integer elements to
         int64, so a null element never turns the batch's integers into
-        float64. Parts nothing reads are not built."""
+        float64. With no group (only is empty / is not empty leaves),
+        the elements are not read."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -622,7 +566,7 @@ class BatchEvaluator:
             .to_numpy(zero_copy_only=False)
             .astype(np.int64)
         )
-        if attr_index not in self._list_vocab:
+        if attr_index not in self._list_groups:
             return _ListColumn(mask, lengths)  # no leaf reads the elements
         flat = pc.list_flatten(arr)
         kind = self.forest.attributes.definition(attr_index).kind
@@ -631,7 +575,7 @@ class BatchEvaluator:
                 flat = flat.cast(pa.string())
         elif flat.type != pa.int64():
             flat = flat.cast(pa.int64())
-        codes = (
+        vids = (
             pc.fill_null(
                 pc.index_in(flat, value_set=self._value_set(attr_index, flat.type)),
                 -1,
@@ -639,15 +583,10 @@ class BatchEvaluator:
             .to_numpy(zero_copy_only=False)
             .astype(np.int64)
         )
-        group = self._list_groups.get(attr_index)
-        return _ListColumn(
-            mask, lengths,
-            vids=None if group is None else np.where(codes < len(group.vocab), codes, -1),
-            fcodes=codes if attr_index in self._flat_attrs else None,
-        )
+        return _ListColumn(mask, lengths, vids)
 
     def _value_set(self, attr_index: int, value_type):
-        """An attribute's literal vocabulary as an Arrow array in code
+        """A list attribute's group vocab as an Arrow array in vid
         order, built once per process and element type."""
         import pyarrow as pa
 
@@ -658,7 +597,7 @@ class BatchEvaluator:
         value_set = cached.get(key)
         if value_set is None:
             value_set = cached[key] = pa.array(
-                list(self._list_vocab[attr_index]), type=value_type
+                list(self._list_groups[attr_index].vocab), type=value_type
             )
         return value_set
 
@@ -744,6 +683,8 @@ class BatchEvaluator:
     # ------------------------------------------------------------ leaves
 
     def _eval_generic_leaf(self, leaf_idx: int, col, n: int) -> np.ndarray:
+        """One leaf outside every member group: a null or empty check, a
+        boolean leaf, a range comparison, or a FLOAT ``=`` / ``<>``."""
         leaf = self.forest.leaves[leaf_idx]
         op = leaf.op
         operand = leaf.operand
@@ -760,64 +701,24 @@ class BatchEvaluator:
         if op is Op.NVAR:
             return _true_mask(~col.values, col.mask)
 
-        if op in (Op.EQ, Op.NE, Op.LT, Op.LE, Op.GT, Op.GE):
-            if isinstance(operand, Decimal):
-                cmp_op, threshold = (
-                    _decimal_threshold(op, operand)
-                    if op in (Op.LT, Op.LE, Op.GT, Op.GE)
-                    else (op, None)
-                )
-                if op is Op.EQ or op is Op.NE:
-                    frac = _scaled_int_from_decimal_literal(operand)
-                    if frac.denominator != 1:
-                        result = np.zeros(n, dtype=bool) if op is Op.EQ else np.ones(n, dtype=bool)
-                    else:
-                        result = col.values == int(frac)
-                        if op is Op.NE:
-                            result = ~result
-                    return _true_mask(result, col.mask)
-                values, literal, op = col.values, threshold, cmp_op
-            elif isinstance(operand, str):
-                code = col.uniq_map.get(operand, -2)  # -2: absent
-                result = col.codes == code if op is Op.EQ else col.codes != code
-                return _true_mask(result, col.mask)
+        values = col.values
+        if op in (Op.EQ, Op.NE):  # a Decimal literal vs scale-6 values
+            frac = _scaled_int_from_decimal_literal(operand)
+            if frac.denominator != 1:
+                result = np.zeros(n, dtype=bool)
             else:
-                values, literal = col.values, operand
-            if op is Op.EQ:
-                result = values == literal
-            elif op is Op.NE:
-                result = values != literal
-            elif op is Op.LT:
-                result = values < literal
-            elif op is Op.LE:
-                result = values <= literal
-            elif op is Op.GT:
-                result = values > literal
-            else:
-                result = values >= literal
-            return _true_mask(result, col.mask)
-
-        if op in (Op.IN, Op.NOT_IN):
-            if isinstance(operand[0], str):
-                m = col.uniq_map
-                op_codes = np.array(
-                    [m[v] for v in operand if v in m], dtype=np.int64
-                )
-                result = np.isin(col.codes, op_codes)
-            else:
-                result = np.isin(col.values, np.array(operand, dtype=np.int64))
-            if op is Op.NOT_IN:
-                result = ~result
-            return _true_mask(result, col.mask)
-
-        # list operators over the flattened element codes
-        member = np.isin(col.fcodes, self._flat_op_codes[leaf_idx])
-        if op in (Op.ONE_OF, Op.NONE_OF):
-            hits = np.bincount(col.row_ids[member], minlength=n) > 0
-            result = hits if op is Op.ONE_OF else ~hits
-        else:  # ALL_OF / NOT_ALL_OF: no non-member elements; empty -> all-of
-            violations = np.bincount(col.row_ids[~member], minlength=n) > 0
-            result = ~violations if op is Op.ALL_OF else violations
+                result = values == int(frac)
+            return _true_mask(result if op is Op.EQ else ~result, col.mask)
+        if isinstance(operand, Decimal):
+            op, operand = _decimal_threshold(op, operand)
+        if op is Op.LT:
+            result = values < operand
+        elif op is Op.LE:
+            result = values <= operand
+        elif op is Op.GT:
+            result = values > operand
+        else:
+            result = values >= operand
         return _true_mask(result, col.mask)
 
     def _eval_leaves(self, cache: dict, n: int) -> np.ndarray:
@@ -825,29 +726,6 @@ class BatchEvaluator:
         forest = self.forest
         leaf_row = self._leaf_row
         leaf_values = np.empty((len(forest.leaves), n), dtype=bool)
-
-        # grouped equality: one searchsorted + scatter per attribute
-        for attr_index, sorted_ops, leaf_idxs in self.eq_groups:
-            col = cache[attr_index]
-            if sorted_ops.dtype.kind in ("U", "O"):
-                m = {v: i for i, v in enumerate(sorted_ops)}
-                lookup = np.append(
-                    np.array([m.get(u, -1) for u in col.uniques], dtype=np.int64),
-                    -1,   # trailing slot: null codes (-1) land here
-                )
-                pos = lookup[col.codes]
-                hit = pos >= 0
-            else:
-                pos = np.searchsorted(sorted_ops, col.values)
-                pos_clipped = np.minimum(pos, len(sorted_ops) - 1)
-                hit = sorted_ops[pos_clipped] == col.values
-                pos = pos_clipped
-            rows = np.arange(n)
-            group_rows = np.zeros((len(leaf_idxs), n), dtype=bool)
-            group_rows[pos[hit], rows[hit]] = True
-            if col.mask.any():
-                group_rows[:, col.mask] = False
-            leaf_values[leaf_row[leaf_idxs], :] = group_rows
 
         for group in self.member_groups:
             group.evaluate_into(

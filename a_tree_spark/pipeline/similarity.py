@@ -80,14 +80,6 @@ def _plane_sign_sql(emb: str, plane: int, one_based: bool) -> str:
     return f"(CASE WHEN ({' + '.join(terms)}) >= 0 THEN 1 ELSE 0 END)"
 
 
-def _plane_sign_spark(emb: str, plane: int) -> str:
-    weights = ", ".join(
-        f"CAST({_plane_weight(plane, d)} AS DOUBLE)" for d in range(EMBED_DIM)
-    )
-    dot = _dot_spark(emb, f"array({weights})")
-    return f"(CASE WHEN {dot} >= 0 THEN 1 ELSE 0 END)"
-
-
 N_QUERIES = 20
 
 

@@ -42,19 +42,6 @@ def with_cell_id(
     return df.withColumn(out_col, F.expr(cell_id_sql(lat_col, lon_col, level)))
 
 
-def tile_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "cell_id",
-    broadcast_right: bool | None = None,
-) -> DataFrame:
-    """Tile↔tile equi-join. ``broadcast_right=None`` lets AQE decide;
-    True forces a broadcast hint for known-small dimension sides."""
-    if broadcast_right:
-        right = F.broadcast(right)
-    return left.join(right, on)
-
-
 @dataclass(frozen=True)
 class Polygon:
     shape_id: int

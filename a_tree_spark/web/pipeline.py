@@ -146,7 +146,7 @@ def skewed_page_subscriptions(n: int) -> dict[int, str]:
       elements, cost 8-16 in the reference cost model). They share the
       ``lead_tokens`` member group with the ``one of`` / ``none of``
       leaves (pinned by
-      tests/test_web_pipeline.py::test_skewed_workload_flips_pruning_on)."""
+      tests/test_web_pipeline.py::test_skewed_workload_shares_one_lead_token_group)."""
     langs = [row[1] for row in TLD_TABLE]
     hot_langs = langs[:3]
     tlds = sorted(TLD_CENTROIDS)
@@ -622,25 +622,6 @@ def bucketed_cell_history(
     )
     return now.join(spark.table(stats_table), "cell_id").select(
         "cell_id", "n_pages", "avg_tokens", "n_matches", "n_distinct_subs"
-    )
-
-
-def bucketed_page_enrichment(
-    spark, pages_table: str, stats_table: str
-) -> DataFrame:
-    """ROW-LEVEL per-page enrichment: attach the cell's historical match
-    statistics to every page row. This is the join shape where bucketing
-    actually pays: no pre-aggregation can shrink the shuffle (the output
-    keeps one row per page), so the plain-table plan moves EVERY page
-    row through an Exchange on cell_id, while the bucketed plan joins
-    bucket i against bucket i with zero data movement. The
-    aggregate-then-join shape (``bucketed_cell_history``) measures ~even
-    with or without buckets — Spark's partial aggregation already
-    reduces its shuffle to one row per cell — which is exactly why the
-    enrichment shape is the one to design the table layout around
-    (measured in BENCH/BASELINE.md)."""
-    return spark.table(pages_table).join(
-        spark.table(stats_table), "cell_id"
     )
 
 

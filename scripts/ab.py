@@ -15,13 +15,18 @@ the choosing-metrics guide (section 8): at least 10 pairs ran, the
 change won at least 9/10 of them, it failed no more runs than the
 parent did, and the medians differ by more than the distance between
 the parent's own quartiles. Wins count over every pair run: a pair
-whose change run reported no value counts as lost. Beside it stands the
-no-regression verdict of the simplicity-review guide, against the
-metric's ``bound`` in BENCHMARK.json: ``worse`` when the change's median
-is worse than the parent's by more than the bound, ``unresolved`` when
-the parent's own IQR/median exceeds the bound (unless every change run
-beats every parent run), ``ok`` otherwise. Runs that failed a
-check are listed; their metrics still enter the medians. Below the
+whose change run reported no value counts as lost. Beside it stand the
+median and quartiles of the paired ratios (change / parent, one per
+pair where both runs reported the metric) and the no-regression verdict
+of the simplicity-review guide, which reads those paired ratios against
+the metric's ``bound`` in BENCHMARK.json: ``worse`` when the median
+ratio is worse than 1 by more than the bound, ``unresolved`` when the
+ratios' IQR exceeds the bound (unless the change won every pair),
+``ok`` otherwise. Pairing cancels a host that drifts for both sides
+mid-run: a slowdown from pair 5 on moves both runs of a pair alike, so
+their ratio stays put while the unpaired side medians and quartiles
+would not. Runs that failed a check are listed; their metrics still
+enter the medians. Below the
 metrics, a ``steal%`` row gives each side's median and quartiles of
 host CPU steal (each run's median over its steps, read from the run's
 artifact), so a pair that ran in a noisy window can be told apart.
@@ -104,17 +109,28 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, median, q3
 
 
-def regression(base: list[float], change: list[float], higher_is_better: bool,
-               bound: float) -> str:
-    """No-regression verdict of one metric: "worse", "unresolved" or
-    "ok" (see the module docstring); ``bound`` is a share of the
-    parent's median."""
+def paired_ratios(pairs: list[dict], metric: str) -> list[float]:
+    """change / parent of one metric, per pair where both runs reported
+    it (and the parent's value is not 0)."""
+    return [
+        p["change"]["metrics"][metric] / p["base"]["metrics"][metric]
+        for p in pairs
+        if metric in p["change"]["metrics"] and p["base"]["metrics"].get(metric)
+    ]
+
+
+def regression(ratios: list[float], won_every_pair: bool,
+               higher_is_better: bool, bound: float) -> str:
+    """No-regression verdict of one metric from its paired ratios:
+    "worse", "unresolved" or "ok" (see the module docstring); ``bound``
+    is a share of 1."""
+    if not ratios:
+        return "unresolved"
     sign = 1 if higher_is_better else -1
-    b_q1, b_med, b_q3 = quartiles(base)
-    if sign * (quartiles(change)[1] - b_med) < -bound * abs(b_med):
+    q1, median, q3 = quartiles(ratios)
+    if sign * (median - 1) < -bound:
         return "worse"
-    every_run_better = all(sign * (c - b) > 0 for c in change for b in base)
-    if b_q3 - b_q1 > bound * abs(b_med) and not every_run_better:
+    if q3 - q1 > bound and not won_every_pair:
         return "unresolved"
     return "ok"
 
@@ -123,8 +139,8 @@ def summarize(pairs: list[dict], metric: str, higher_is_better: bool,
               bound: float | None = None) -> dict | None:
     """Each side's median and quartiles of one metric over the runs
     that reported it, the change's wins over all pairs, the gain
-    verdict and, given the metric's bound, the no-regression
-    verdict."""
+    verdict, the paired ratios' median and quartiles and, given the
+    metric's bound, the no-regression verdict."""
     base = [p["base"]["metrics"][metric] for p in pairs if metric in p["base"]["metrics"]]
     change = [p["change"]["metrics"][metric] for p in pairs if metric in p["change"]["metrics"]]
     if not base or not change:
@@ -142,10 +158,13 @@ def summarize(pairs: list[dict], metric: str, higher_is_better: bool,
     }
     b_q1, b_med, b_q3 = quartiles(base)
     c_q1, c_med, c_q3 = quartiles(change)
+    ratios = paired_ratios(pairs, metric)
     return {
         "base": {"median": b_med, "q1": b_q1, "q3": b_q3},
         "change": {"median": c_med, "q1": c_q1, "q3": c_q3},
         "ratio": c_med / b_med if b_med else None,
+        "paired": dict(zip(("q1", "median", "q3"), quartiles(ratios)))
+        if ratios else None,
         "wins": wins,
         "pairs": len(pairs),
         "failed": failed,
@@ -155,7 +174,7 @@ def summarize(pairs: list[dict], metric: str, higher_is_better: bool,
         and sign * (c_med - b_med) > b_q3 - b_q1,
         "bound": bound,
         "regression": None if bound is None
-        else regression(base, change, higher_is_better, bound),
+        else regression(ratios, wins == len(pairs), higher_is_better, bound),
     }
 
 
@@ -218,17 +237,21 @@ def main(argv=None) -> int:
         print(f"\n{workload}: base {shas['base'][:10]} vs change {shas['change'][:10]}, "
               f"{len(pairs)} pairs, {seconds:g} s runs")
         print(f"{'metric':24s} {'base median [q1, q3]':>30s} "
-              f"{'change median [q1, q3]':>30s} {'ratio':>7s} {'won':>6s}  gain  "
-              f"no-regression")
+              f"{'change median [q1, q3]':>30s} {'ratio':>7s} "
+              f"{'paired ratio [q1, q3]':>23s} {'won':>6s}  gain  no-regression")
         for name, row in table.items():
             if row is None:
                 print(f"{name:24s} (not reported)")
                 continue
             b, c = row["base"], row["change"]
             ratio = "-" if row["ratio"] is None else f"{row['ratio']:.3f}"
+            r = row["paired"]
+            paired = "-" if r is None else (
+                f"{r['median']:.3f} [{r['q1']:.3f}, {r['q3']:.3f}]"
+            )
             print(f"{name:24s} {b['median']:12.5g} [{b['q1']:.5g}, {b['q3']:.5g}] "
                   f"{c['median']:12.5g} [{c['q1']:.5g}, {c['q3']:.5g}] "
-                  f"{ratio:>7s} {row['wins']:>2d}/{row['pairs']:<3d}  "
+                  f"{ratio:>7s} {paired:>23s} {row['wins']:>2d}/{row['pairs']:<3d}  "
                   f"{'yes' if row['gain'] else 'no':4s}  "
                   f"{row['regression']} (bound {row['bound']:g})")
         if steal is None:

@@ -162,7 +162,7 @@ def test_access_pruning_selective_workload_with_planted_matches():
     narrow equality predicates guarding wide ALL_OF siblings. The 60
     ``all of`` leaves over ``xs`` share one member group; a lone wide
     ``all of`` over ``ys`` (the reference's benches/data/search.json
-    shape: one expression with a long list) stays a generic leaf.
+    shape: one expression with a long list) forms its own group.
     Results must equal the single-event oracle, including planted rows
     engineered to fire specific subscriptions."""
     attrs = AttributeTable([A.integer("k"), A.integer_list("xs"),
@@ -191,11 +191,16 @@ def test_access_pruning_selective_workload_with_planted_matches():
     )
 
     ev = BatchEvaluator(forest)
-    # the xs leaves are one member group; the lone ys leaf is generic
-    xs_leaves = [i for i, leaf in enumerate(forest.leaves)
-                 if leaf.attr_name == "xs"]
-    assert [sorted(g.leaf_idxs) for g in ev.member_groups] == [xs_leaves]
-    assert "ys" in [forest.leaves[i].attr_name for i in ev.generic_leaves]
+    # one member group per attribute: the xs leaves share one, and the
+    # lone ys leaf forms its own
+    groups = {
+        g.attr_index: sorted(g.leaf_idxs) for g in ev.member_groups
+    }
+    for name in ("xs", "ys"):
+        assert groups[attrs.index_of(name)] == [
+            i for i, leaf in enumerate(forest.leaves) if leaf.attr_name == name
+        ]
+    assert ev.generic_leaves == []
     got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
     want = sorted(
         (r, sub)
@@ -256,12 +261,13 @@ def test_evaluate_arrow_matches_oracle_on_null_and_empty_lists():
     ({1: "nums one of [9007199254740992]",
       2: "nums all of [9007199254740992, 5]",
       3: "nums none of [9007199254740992]"}, 1, [(0, 3), (1, 3)]),
-    ({1: "nums one of [9007199254740992]"}, 0, []),
+    ({1: "nums one of [9007199254740992]"}, 1, []),
 ], ids=["grouped", "lone"])
 def test_integer_list_elements_stay_exact_beside_a_null(subs, n_groups, expected):
     """A null element in the batch must not turn integer list elements
-    into float64, where 2**53 + 1 reads as the literal 2**53: the
-    member group and a lone generic leaf both equal the oracle."""
+    into float64, where 2**53 + 1 reads as the literal 2**53: a group
+    of three leaves and a lone leaf's own group both equal the
+    oracle."""
     import pyarrow as pa
 
     attrs = AttributeTable([A.integer_list("nums")])
@@ -287,8 +293,8 @@ def test_integer_list_elements_stay_exact_beside_a_null(subs, n_groups, expected
 def _tags_forest():
     """Selective integer access predicates guarding string-list
     ``all of`` / ``none of`` leaves over ``tags`` (one member group),
-    and one lone wide ``all of`` over ``wide``, which stays out of any
-    group, so it is generic."""
+    and one lone wide ``all of`` over ``wide``, which forms its own
+    group."""
     from a_tree_spark.expr import AttributeDefinition as A, AttributeTable
 
     attrs = AttributeTable([A.integer("k"), A.string_list("tags"),
@@ -339,20 +345,21 @@ def _tags_batch(n, seed):
 @pytest.mark.parametrize("n", [1, 63, 64, 65, 4095, 4097])
 def test_pruned_equals_dense_on_string_list_lazy_leaves(n):
     """Grouped ``all of`` / ``none of`` string-list leaves beside a lone
-    generic wide ``all of``, through ``arrow_columns``: row counts
+    wide ``all of`` in its own group, through ``arrow_columns``: row counts
     around the 64-bit word and the partial last byte, with null lists,
     empty lists and null elements, must equal the single-event
     oracle."""
     forest = _tags_forest()
     ev = BatchEvaluator(forest)
-    # the tags leaves sit in one member group; the lone wide leaf is generic
-    tags = forest.attributes.index_of("tags")
-    assert [
-        {forest.leaves[i].op.name for i in g.leaf_idxs}
-        for g in ev.member_groups if g.attr_index == tags
-    ] == [{"ALL_OF", "NONE_OF"}]
-    generic = [forest.leaves[i] for i in ev.generic_leaves]
-    assert ("wide", "ALL_OF") in [(leaf.attr_name, leaf.op.name) for leaf in generic]
+    # the tags leaves sit in one member group; the lone wide leaf forms
+    # its own
+    ops = {
+        forest.attributes.definition(g.attr_index).name:
+            {forest.leaves[i].op.name for i in g.leaf_idxs}
+        for g in ev.member_groups
+    }
+    assert ops["tags"] == {"ALL_OF", "NONE_OF"}
+    assert ops["wide"] == {"ALL_OF"}
 
     batch = _tags_batch(n, seed=n)
     got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
@@ -369,8 +376,8 @@ def test_pruned_equals_dense_on_string_list_lazy_leaves(n):
 def _list_group_forest():
     """``all of``, ``not all of``, ``one of`` and ``none of`` sharing
     one string-list and one integer-list attribute (one member group
-    each), plus a lone wide ``all of`` over ``other`` that stays
-    generic."""
+    each), plus a lone wide ``all of`` over ``other`` that forms its
+    own group."""
     attrs = AttributeTable([A.integer("k"), A.string_list("tags"),
                             A.integer_list("nums"), A.integer_list("other")])
     builder = ForestBuilder(attrs)
@@ -437,8 +444,10 @@ def test_list_member_group_equals_oracle(n):
         for g in ev.member_groups
     }
     ops = {"ALL_OF", "NOT_ALL_OF", "ONE_OF", "NONE_OF"}
-    assert grouped == {"tags": ops, "nums": ops}
-    assert "other" in [forest.leaves[i].attr_name for i in ev.generic_leaves]
+    assert grouped == {
+        "tags": ops, "nums": ops, "other": {"ALL_OF"}, "k": {"EQ"},
+    }
+    assert ev.generic_leaves == []
 
     batch = _list_group_batch(n, seed=n)
     got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
@@ -448,6 +457,80 @@ def test_list_member_group_equals_oracle(n):
         for sub in evaluate_event(forest, event)
     )
     assert got == want and len(want) > 0
+
+
+def _equality_forest():
+    """``=`` / ``<>`` / ``in`` / ``not in`` leaves: one lone ``s = 'q'``,
+    a string attribute mixing all four (``'zz'`` is in no batch), an
+    integer attribute mixing ``=`` with ``in`` (one literal outside
+    int64), and a FLOAT ``=`` / ``<>``, which stays generic."""
+    attrs = AttributeTable([A.string("s"), A.string("c"), A.integer("n"),
+                            A.float("f")])
+    builder = ForestBuilder(attrs)
+    for sub_id, expression in enumerate([
+        "s = 'q'",
+        "c = 'a'",
+        "c <> 'b' and n = 3",
+        "c in ['a', 'zz']",
+        "c not in ['b', 'c']",
+        "c = 'zz' or c <> 'a'",
+        "n in [1, 3, 5]",
+        "n = 2 or n = 99999999999999999999",
+        "not (n in [2, 4]) and s = 'q'",
+        "f = 1.5",
+        "f <> 2.25 and c = 'c'",
+        "f = 1.0000001",
+    ]):
+        builder.insert(sub_id, expression)
+    return builder.compile()
+
+
+@pytest.mark.parametrize("n", [1, 63, 64, 65, 4097])
+def test_equality_leaves_share_one_group_per_attribute(n):
+    """Every non-FLOAT ``=`` / ``<>`` / ``in`` / ``not in`` leaf sits in
+    its attribute's member group, a lone ``s = 'q'`` included, and only
+    the FLOAT leaves evaluate per leaf. On null strings, a literal
+    absent from the batch dictionary and an all-null string column the
+    evaluator equals the single-event oracle."""
+    import pyarrow as pa
+
+    forest = _equality_forest()
+    ev = BatchEvaluator(forest)
+    attrs = forest.attributes
+    grouped = {
+        attrs.definition(g.attr_index).name:
+            {forest.leaves[i].op.name for i in g.leaf_idxs}
+        for g in ev.member_groups
+    }
+    assert grouped == {
+        "s": {"EQ"}, "c": {"EQ", "NE", "IN", "NOT_IN"}, "n": {"EQ", "IN", "NOT_IN"},
+    }
+    generic = [forest.leaves[i] for i in ev.generic_leaves]
+    assert {leaf.attr_name for leaf in generic} == {"f"}
+    assert all(isinstance(leaf.operand, Decimal) for leaf in generic)
+
+    rng = random.Random(n)
+    batch = event_batch(attrs, [
+        {
+            "s": rng.choice(["q", "r", None]),
+            "c": rng.choice(["a", "b", "c", "d", None]),
+            "n": rng.choice([None, 1, 2, 3, 4, 5, 6]),
+            "f": rng.choice([None, Decimal("1.5"), Decimal("2.25"),
+                             Decimal("1.0000001"), Decimal("0.5")]),
+        }
+        for _ in range(n)
+    ])
+    all_null_s = batch.set_column(0, "s", pa.nulls(n, pa.string()))
+    for b in (batch, all_null_s):
+        want = sorted(
+            (r, sub)
+            for r, event in enumerate(b.to_pylist())
+            for sub in evaluate_event(forest, normalize_event(attrs, event))
+        )
+        got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(b))))
+        assert got == want
+        if n >= 64:
+            assert want
 
 
 def test_float_decimals_round_half_up_at_scale_six():

@@ -149,17 +149,47 @@ def test_ab_no_regression_verdict_against_the_bound():
     assert ab.summarize(_pairs(base, base), "docs_per_s", True)["regression"] is None
 
 
-def test_ab_no_regression_unresolved_when_parent_spread_exceeds_bound():
+def test_ab_no_regression_unresolved_when_paired_spread_exceeds_bound():
     ab = _load("ab")
-    base = [6.0, 14.0, 7.0, 13.0, 8.0, 12.0, 6.0, 14.0, 7.0, 13.0]  # IQR/median 0.6
-    row = ab.summarize(_pairs(base, base), "docs_per_s", True, 0.25)
+    base = [10.0] * 10
+    spread = [6.0, 14.0, 7.0, 13.0, 8.0, 12.0, 6.0, 14.0, 7.0, 13.0]
+    row = ab.summarize(_pairs(base, spread), "docs_per_s", True, 0.25)
+    assert row["paired"]["median"] == 1.0  # paired ratios' IQR 0.6
     assert row["regression"] == "unresolved"
-    # unless every change run beats every parent run
+    # unless the change won every pair
     row = ab.summarize(_pairs(base, [15.0 + i for i in range(10)]), "docs_per_s", True, 0.25)
     assert row["regression"] == "ok"
     # a median past the bound is worse, whatever the spread
-    row = ab.summarize(_pairs(base, [b * 0.5 for b in base]), "docs_per_s", True, 0.25)
+    row = ab.summarize(_pairs(base, [b * 0.5 for b in spread]), "docs_per_s", True, 0.25)
     assert row["regression"] == "worse"
+    # the parent's own spread is no verdict when every pair agrees
+    row = ab.summarize(_pairs(spread, spread), "docs_per_s", True, 0.25)
+    assert row["regression"] == "ok"
+
+
+def _drift(throughputs, start=4):
+    """``throughputs`` with the host slowed 2x from pair ``start + 1``
+    on."""
+    return [v / 2 if i >= start else v for i, v in enumerate(throughputs)]
+
+
+def test_ab_no_regression_reads_paired_ratios_through_host_drift():
+    """Both sides slow 2x from pair 5 on: the unpaired side medians and
+    the parent's quartiles move, the paired ratios do not, so the
+    verdict is ``ok``. A uniform 10% regression still reads ``worse``,
+    with the drift and without it."""
+    ab = _load("ab")
+    steady = [10.0, 10.2, 10.4, 10.1, 10.3, 10.0, 10.2, 10.4, 10.1, 10.3]
+    drifted = _drift(steady)
+    row = ab.summarize(_pairs(drifted, [b * 1.01 for b in drifted]), "docs_per_s",
+                       True, 0.05)
+    assert row["paired"]["median"] == pytest.approx(1.01)
+    assert row["regression"] == "ok"
+    for base in (steady, drifted):
+        row = ab.summarize(_pairs(base, [b * 0.9 for b in base]), "docs_per_s",
+                           True, 0.05)
+        assert row["paired"]["median"] == pytest.approx(0.9)
+        assert row["regression"] == "worse"
 
 
 def test_bench_flows_rejects_fewer_than_two_users():

@@ -480,7 +480,7 @@ def test_fused_extractor_fallback_counter(spark):
     assert acc2.value == 50
 
 
-def test_skewed_workload_flips_pruning_on(spark):
+def test_skewed_workload_shares_one_lead_token_group(spark):
     """The heavy-tailed workload's wide ``all of`` leaves sit in the
     ``lead_tokens`` member group with its ``one of`` / ``none of``
     leaves, and the fused kernel agrees exactly with the composable
@@ -620,8 +620,9 @@ def _lead_token_lazy_subscriptions(n_pages_seen: int) -> dict[int, str]:
     """Per page: ``n_tokens = <its count> and lead_tokens all of [its
     lead tokens + 2 others]`` (fires on that page), plus ONE ``none of``
     leaf; these share the ``lead_tokens`` member group. A lone wide
-    ``lang in`` leaf stays generic. The selective ``n_tokens`` equality
-    is the reference's access predicate."""
+    ``lang in`` leaf forms its own group, and the selective
+    ``n_tokens`` equalities share one: the reference's access
+    predicate."""
     from a_tree_spark.web.synth import TLD_TABLE
 
     pages = synth_batch(np.arange(n_pages_seen))
@@ -642,8 +643,8 @@ def _lead_token_lazy_subscriptions(n_pages_seen: int) -> dict[int, str]:
 @pytest.mark.parametrize("n_pages", [1, 63, 64, 65, 4095, 4097])
 def test_fused_pruned_equals_dense_on_lead_token_lazy_leaves(spark, n_pages):
     """String-list ``all of`` / ``none of`` leaves over dictionary-coded
-    lead tokens sit in the member group beside a generic ``lang in``
-    leaf. At batch sizes around the 64-bit word and the partial last
+    lead tokens sit in the member group beside a lone ``lang in`` leaf
+    in its own group. At batch sizes around the 64-bit word and the partial last
     byte (4097 = one full Arrow batch + one row), the fused kernel and
     ``match_events`` on the same snapshot both equal the single-row
     oracle, and both use the snapshot's one shared plan."""
@@ -664,7 +665,12 @@ def test_fused_pruned_equals_dense_on_lead_token_lazy_leaves(spark, n_pages):
         {forest.leaves[i].op.name for i in g.leaf_idxs}
         for g in plan.member_groups if g.attr_index == lead
     ] == [{"ALL_OF", "NONE_OF"}]
-    assert "IN" in {forest.leaves[i].op.name for i in plan.generic_leaves}
+    # the lone lang leaf forms its own group
+    lang = PAGE_ATTRIBUTES.index_of("lang")
+    assert [
+        {forest.leaves[i].op.name for i in g.leaf_idxs}
+        for g in plan.member_groups if g.attr_index == lang
+    ] == [{"IN"}]
 
     pages = synth_pages_df(spark, n_pages, partitions=1).withColumn(
         "page_key", F.xxhash64("url")
