@@ -9,3 +9,10 @@ batches; spatial joins are cell-id equi-joins handled by Catalyst.
 """
 
 __version__ = "0.1.0"
+
+from . import _zipgate
+
+# every kernel closure and broadcast evaluator imports this package when
+# it unpickles in a Python worker, so the worker gates its per-task zip
+# re-reads from its first task on (see _zipgate)
+_zipgate.install()

@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-Tuned for the sandbox (single JVM, local[N], 128 GiB) but every knob is
-the one you'd set on a real 1000-executor cluster: AQE + skew-join for
-hot cells, bounded Arrow batches for the Python matcher, partition
-sizing so sf0.1 parquet splits sensibly.
+Tuned for one JVM in local[N] mode (the tests and benchmarks run on
+4 cores and 15 GB of RAM; ``SPARK_GRAFT_DRIVER_MEM`` sizes the driver)
+but every knob is the one you'd set on a real 1000-executor cluster:
+AQE + skew-join for hot cells, bounded Arrow batches for the Python
+matcher, partition sizing so sf0.1 parquet splits sensibly.
 """
 
 from __future__ import annotations

@@ -577,7 +577,11 @@ class BatchEvaluator:
             flat = flat.cast(pa.int64())
         vids = (
             pc.fill_null(
-                pc.index_in(flat, value_set=self._value_set(attr_index, flat.type)),
+                pc.index_in(
+                    flat,
+                    value_set=self._value_set(attr_index, flat.type),
+                    skip_nulls=True,
+                ),
                 -1,
             )
             .to_numpy(zero_copy_only=False)
@@ -587,7 +591,10 @@ class BatchEvaluator:
 
     def _value_set(self, attr_index: int, value_type):
         """A list attribute's group vocab as an Arrow array in vid
-        order, built once per process and element type."""
+        order, built once per process and element type. An integer
+        literal outside int64 can never equal an element: it keeps its
+        vid as a null, which ``list_column``'s ``skip_nulls`` lookup
+        never matches."""
         import pyarrow as pa
 
         cached = getattr(self, "_value_set_cache", None)
@@ -596,9 +603,12 @@ class BatchEvaluator:
         key = (attr_index, str(value_type))
         value_set = cached.get(key)
         if value_set is None:
-            value_set = cached[key] = pa.array(
-                list(self._list_groups[attr_index].vocab), type=value_type
-            )
+            values = list(self._list_groups[attr_index].vocab)
+            if pa.types.is_integer(value_type):
+                values = [
+                    v if _INT64_MIN <= v <= _INT64_MAX else None for v in values
+                ]
+            value_set = cached[key] = pa.array(values, type=value_type)
         return value_set
 
     def _scalar_from_arrow(self, arr, kind) -> _ScalarColumn:

@@ -290,6 +290,38 @@ def test_integer_list_elements_stay_exact_beside_a_null(subs, n_groups, expected
     assert got == want
 
 
+def test_integer_list_literal_outside_int64_never_matches():
+    """A list literal outside int64 is a null in the group's value set:
+    the first batch does not overflow, no element (a null one neither)
+    ever equals it, and all four list ops equal the oracle."""
+    import pyarrow as pa
+
+    big = "99999999999999999999"
+    attrs = AttributeTable([A.integer_list("nums")])
+    builder = ForestBuilder(attrs)
+    for sub_id, expression in enumerate([
+        f"nums one of [1, {big}]",
+        f"nums none of [1, {big}]",
+        f"nums all of [1, {big}]",
+        f"not (nums all of [1, {big}])",  # NNF: not all of
+        f"nums one of [{big}]",
+    ], start=1):
+        builder.insert(sub_id, expression)
+    ev = BatchEvaluator(builder.compile())
+    batch = pa.record_batch({
+        "nums": pa.array([[1], [2], [1, None], None, [], [None], [1, 2]],
+                         type=pa.list_(pa.int64())),
+    })
+    want = sorted(
+        (r, sub)
+        for r, event in enumerate(batch.to_pylist())
+        for sub in evaluate_event(ev.forest, event)
+    )
+    assert {sub for _, sub in want} == {1, 2, 3, 4}
+    got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
+    assert got == want
+
+
 def _tags_forest():
     """Selective integer access predicates guarding string-list
     ``all of`` / ``none of`` leaves over ``tags`` (one member group),

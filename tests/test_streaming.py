@@ -949,8 +949,12 @@ def test_asof_stream_matches_batch(spark, tmp_path):
     )
     try:
         query.processAllAvailable()
-        spark.createDataFrame(l1, lschema).coalesce(1).write.parquet(str(ldir / "b1"))
+        # the right file lands first: the running query may trigger
+        # between the two writes, and a left-only trigger (max ts 12:50)
+        # followed by a no-data trigger moves the watermark to 12:40,
+        # which would drop click 104 (12:40) as late
         spark.createDataFrame(r1, rschema).coalesce(1).write.parquet(str(rdir / "b1"))
+        spark.createDataFrame(l1, lschema).coalesce(1).write.parquet(str(ldir / "b1"))
         query.processAllAvailable()
         spark.createDataFrame(sentinel, lschema).coalesce(1).write.parquet(
             str(ldir / "b2")
