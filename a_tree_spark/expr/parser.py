@@ -82,6 +82,7 @@ class _Parser:
         self.attributes = attributes
         self.pos = 0
         self.n = len(tokens)  # hot loop: peek/next run ~10x per token
+        self.depth = 0  # open parentheses around the current primary
 
     def peek(self) -> Token | None:
         pos = self.pos
@@ -132,8 +133,10 @@ class _Parser:
             # used nowhere at primary position — the grammar only allows
             # expressions here.
             self.next()
+            self.depth += 1
             node = self.expression()
             self.expect("RPAREN")
+            self.depth -= 1
             return node
 
         if token.kind in ("INTEGER", "FLOAT", "STRING"):
@@ -177,7 +180,14 @@ class _Parser:
                 make_predicate(self.attributes, name, _NULLY_TOKEN_TO_OP[token.kind])
             )
 
-        # bare boolean variable
+        # bare boolean variable. A token that cannot follow it fails the
+        # parse whatever the attribute's type, so that ParserError (the
+        # one its enclosing rule raises) comes before the type check
+        if self.depth:
+            if token is None or token.kind not in ("AND", "OR", "RPAREN"):
+                self.expect("RPAREN")
+        elif token is not None and token.kind not in ("AND", "OR"):
+            raise _trailing_error(token)
         return Node.value(make_predicate(self.attributes, name, Op.VAR))
 
     def reversed_predicate(self) -> Node:
@@ -405,10 +415,12 @@ def _parse_exact(text: str, attributes: AttributeTable) -> Node:
     node = parser.expression()
     trailing = parser.peek()
     if trailing is not None:
-        raise ParserError(
-            f"unexpected trailing token {trailing.kind} at position {trailing.pos}"
-        )
+        raise _trailing_error(trailing)
     return node
+
+
+def _trailing_error(token: Token) -> ParserError:
+    return ParserError(f"unexpected trailing token {token.kind} at position {token.pos}")
 
 
 def parse(text: str, attributes: AttributeTable) -> Node:

@@ -431,9 +431,9 @@ class BatchEvaluator:
           1e5 subs) disappears entirely.
 
         The ordering is deterministic (sorted levels, roots-first then
-        forest id). Root ids in the fused kernel's partials and in
-        root_subscription_map index this order; both read it from the
-        one plan per snapshot (planned_evaluator)."""
+        forest id). Root ids in the fused kernel's partials, and the
+        n_subs the kernel reads for them from ``root_sub_counts``, index
+        this order, from the one plan per snapshot (planned_evaluator)."""
         forest = self.forest
         is_root = set(forest.node_subs.keys())
 

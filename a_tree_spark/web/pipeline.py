@@ -9,17 +9,17 @@ aggregated per spatial cell. Stage layout of the default fused path
 
   scan -> mapInArrow(fused kernel)      [broadcast evaluator: RE2 extract,
                                          geotag + cell, match, in-kernel
-                                         (cell, root) combine]
-       -> keyed shuffle on ckey         [map-side combined packed key]
-       -> broadcast join on root_id     [(root_id, n_subs) root map]
-       -> per-cell aggregate            [exact counts, AQE-coalesced]
+                                         (cell, root) combine, root's
+                                         n_subs read from the plan]
+       -> one shuffle on the cell key   [defaultParallelism partitions]
+       -> per-(cell, root) and per-cell [both in the shuffle's
+          aggregates                     partitions: exact counts]
 
 The evaluator is planned once per forest snapshot
-(``expr.vector.planned_evaluator``) and shared by the kernel's
-broadcast and the root map; the root map is built from Arrow columns,
-so its side of the join runs no Python job. Hot ccTLD centroids
-concentrate matches in a few cells; the in-kernel and map-side combines
-collapse them before the shuffle.
+(``expr.vector.planned_evaluator``); each partial row carries its
+root's subscriber count from that plan, so no root map is joined.
+Hot ccTLD centroids concentrate matches in a few cells; the in-kernel
+combine collapses them before the shuffle.
 
 The same path serves the resumable deployment job
 (``scripts/submit_pipeline.py``): a carried integer ``group`` column
@@ -53,6 +53,11 @@ PAGE_ATTRIBUTES = AttributeTable([
 ])
 
 SALT_BUCKETS = 64
+
+# the fused kernel's partial row, after the carried group column if
+# any; a checkpoint of partials is valid only for this layout
+# (scripts/submit_pipeline.py::stage_fingerprint)
+PARTIAL_COLUMNS = ("ckey", "n_matches", "n_subs")
 
 
 def eventize_pages(pages: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
@@ -309,32 +314,15 @@ def salted_cell_stats(matches: DataFrame) -> DataFrame:
 
 
 def root_subscription_map(spark, forest: ForestBuilder) -> DataFrame:
-    """Tiny (root_id, n_subs) DataFrame for the post-shuffle expansion
-    of root-level partials — one row per DISTINCT expression root (CSE
-    class), broadcastable at any subscription count (23k rows for the
-    100k-sub workload).
-
-    Root ids index the snapshot's shared plan (planned_evaluator), the
-    same plan the fused kernel broadcasts. The table ships as two int64
-    Arrow columns: a list of Python tuples would become a Python-worker
-    RDD whose own job, scheduled beside the kernel's stage, held every
-    core to build a 10k-row broadcast."""
-    return _root_map(spark, [planned_evaluator(forest.compile()).root_sub_counts])
-
-
-def sharded_root_map(spark, forests: list[ForestBuilder]) -> DataFrame:
-    """``sharded_root_partials``' root map without building its kernels:
-    shard root ids are offset by the root counts of the shards before."""
-    return _root_map(
-        spark, [planned_evaluator(f.compile()).root_sub_counts for f in forests]
-    )
-
-
-def _root_map(spark, counts: list) -> DataFrame:
+    """(root_id, n_subs) DataFrame, one row per DISTINCT expression root
+    (CSE class) of the snapshot's shared plan (planned_evaluator), in
+    its root order. The crawl no longer reads it: the fused kernel
+    writes n_subs into every partial row. It stays for callers that
+    still pass it to ``cell_stats_from_root_partials``."""
     import numpy as np
     import pyarrow as pa
 
-    n_subs = np.concatenate(counts)
+    n_subs = planned_evaluator(forest.compile()).root_sub_counts
     return spark.createDataFrame(pa.table({
         "root_id": np.arange(len(n_subs), dtype=np.int64),
         "n_subs": n_subs,
@@ -342,38 +330,42 @@ def _root_map(spark, counts: list) -> DataFrame:
 
 
 def cell_stats_from_root_partials(
-    partials: DataFrame, root_map: DataFrame, level: int = DEFAULT_LEVEL
+    partials: DataFrame, root_map: DataFrame | None = None,
+    level: int = DEFAULT_LEVEL,
 ) -> DataFrame:
-    """Per-cell statistics from in-kernel packed (ckey, n) partials,
-    where ckey = (cell_key << sub_width) | root_id — the kernel's own
-    np.unique key, shipped as-is so the shuffle carries ONE int64 key
-    instead of two columns (at 1e5 subscriptions the partials stream is
-    ~17 rows/page and this shuffle is ~25% of flagship wall time).
+    """Exact per-cell (cell_id, n_matches, n_distinct_subs) from the
+    fused kernel's (ckey, n_matches, n_subs) partials, where ckey =
+    (cell_key << sub_width) | root_id and n_subs is that root's
+    subscriber count. ``root_map`` is unread; it is accepted for
+    callers that still pass ``root_subscription_map``.
 
     The kernel emits per DISTINCT expression root; each subscription has
     exactly ONE root, so subs(root) PARTITIONS the subscription ids and
     the expansion is pure multiplicity: per-cell match count =
     sum(n * n_subs), and the distinct-subscription count is EXACT —
-    sum of n_subs over the distinct roots present in the cell — where
-    the sub-level path needed an HLL sketch. One keyed shuffle on ckey
-    (map-side combined), a post-shuffle unpack projection, a broadcast
-    join with the root map, and a second (AQE-coalesced,
-    already-combined) per-cell shuffle."""
+    sum of n_subs over the distinct roots present in the cell. One
+    shuffle hashes the partials on the cell key into
+    ``defaultParallelism`` partitions (a fixed count, so AQE does not
+    coalesce it to one task); the per-(cell, ckey) and per-cell
+    aggregates both run inside those partitions. The positionless
+    sentinel cell becomes null only after the final aggregate."""
     sub_width = 63 - (2 * level + 1)
     sentinel = 1 << (2 * level)
-    per_key = partials.groupBy("ckey").agg(F.sum("n_matches").alias("n"))
-    cell = F.shiftright(F.col("ckey"), sub_width)
-    per_root = per_key.select(
-        F.when(cell == sentinel, F.lit(None)).otherwise(cell).alias("cell_id"),
-        F.col("ckey").bitwiseAND(F.lit((1 << sub_width) - 1)).alias("root_id"),
-        "n",
-    )
+    n_parts = partials.sparkSession.sparkContext.defaultParallelism
     return (
-        per_root.join(F.broadcast(root_map), "root_id")
-        .groupBy("cell_id")
+        partials.selectExpr(
+            f"shiftright(ckey, {sub_width}) AS cell", "ckey", "n_matches", "n_subs"
+        )
+        .repartition(n_parts, "cell")
+        .groupBy("cell", "ckey")
+        .agg(F.expr("sum(n_matches) AS n"), F.expr("max(n_subs) AS n_subs"))
+        .groupBy("cell")
         .agg(
-            F.sum(F.col("n") * F.col("n_subs")).alias("n_matches"),
-            F.sum("n_subs").alias("n_distinct_subs"),
+            F.expr("sum(n * n_subs) AS n_matches"),
+            F.expr("sum(n_subs) AS n_distinct_subs"),
+        )
+        .selectExpr(
+            f"nullif(cell, {sentinel}) AS cell_id", "n_matches", "n_distinct_subs"
         )
     )
 
@@ -413,17 +405,19 @@ def fused_match_pages(
     the matcher's own ingest (``BatchEvaluator.evaluate_arrow_roots``).
 
     Output: per-(cell, root) partials combined in the kernel, per task:
-    (ckey, n_matches) with ckey = (cell key << sub_width) | root_id. At
-    ~40 matches/page a per-match stream would dominate the Arrow
-    boundary and the shuffle. ``cell_stats_from_root_partials`` turns
-    the partials into exact per-cell statistics with the root map
-    (``root_subscription_map``). ``emit`` accepts only
-    "cell_root_partials"; the frozen benchmark passes it by name.
+    ``PARTIAL_COLUMNS`` = (ckey, n_matches, n_subs) with ckey = (cell
+    key << sub_width) | root_id and n_subs the root's subscriber count,
+    read from the broadcast plan (``root_sub_counts``). At ~40
+    matches/page a per-match stream would dominate the Arrow boundary
+    and the shuffle. ``cell_stats_from_root_partials`` turns the
+    partials into exact per-cell statistics with no join. ``emit``
+    accepts only "cell_root_partials"; the frozen benchmark passes it
+    by name.
 
     ``group`` names a non-null integer column carried through: the
     combine runs on (group, ckey) and the output is (<group> long, ckey,
-    n_matches), e.g. per work unit for a resumable job. ``pages`` needs
-    only url, html, lang and the group column.
+    n_matches, n_subs), e.g. per work unit for a resumable job.
+    ``pages`` needs only url, html, lang and the group column.
 
     The evaluator is the snapshot's shared plan, broadcast as it is
     (``engine.matcher.broadcast_evaluator``).
@@ -465,11 +459,12 @@ def fused_match_pages(
         raise ValueError(
             f"root ids must fit in {sub_width} bits at level {level}"
         )
+    root_mask = np.int64((1 << sub_width) - 1)
     # the combine key: the packed ckey alone (a 1-D np.unique, the
     # flagship's), or (group, ckey) rows unique along axis 0
     unique_axis = None if group is None else 0
     carried = [group] if group else []
-    out = carried + ["ckey", "n_matches"]
+    out = carried + list(PARTIAL_COLUMNS)
 
     # centroid per tld code of pc.index_in over the table's tlds; the
     # trailing NaN slot takes an unknown or null tld
@@ -527,14 +522,13 @@ def fused_match_pages(
             # batch. CSE shares one root across ~4.3 subs on the
             # templated workload and a row matches ~17x fewer roots than
             # subs, so the Arrow boundary + shuffle carry that much
-            # less; the root->subscription expansion happens AFTER the
-            # per-cell combine as a broadcast join against the (root_id,
-            # n_subs) map (root_subscription_map) — counts expand by
-            # pure multiplicity and distinct-sub counts are EXACT (each
-            # sub has exactly one root). The packed np.unique key ships
-            # AS-IS (one int64 column) — cell_stats_from_root_partials
-            # unpacks it after the keyed shuffle, so the hot shuffle is
-            # 2 longs wide.
+            # less; each emitted row carries its root's n_subs, and the
+            # root->subscription expansion happens AFTER the per-cell
+            # combine — counts expand by pure multiplicity and
+            # distinct-sub counts are EXACT (each sub has exactly one
+            # root). The packed np.unique key ships AS-IS (one int64
+            # column); cell_stats_from_root_partials unpacks the cell
+            # after its one shuffle.
             sentinel = np.int64(1) << (2 * level)
             cell_key = np.where(no_pos[rows], sentinel, cells[rows])
             key = (cell_key << sub_width) | roots
@@ -557,8 +551,9 @@ def fused_match_pages(
             combined = np.zeros(len(uniq), dtype=np.int64)
             np.add.at(combined, inverse.reshape(-1), all_counts)
             keys = [uniq] if group is None else [uniq[:, 0], uniq[:, 1]]
+            n_subs = ev.root_sub_counts[keys[-1] & root_mask]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(k, type=pa.int64()) for k in keys + [combined]],
+                [pa.array(k, type=pa.int64()) for k in keys + [combined, n_subs]],
                 names=out,
             )
 
@@ -759,35 +754,33 @@ def sharded_root_partials(
     isolate_shards: bool = False,
     group: str | None = None,
 ):
-    """(unioned packed partials, unioned root map) across k independent
+    """The unioned ``fused_match_pages`` partials of k independent
     forests. Per-shard root ids are made globally unique by adding the
     cumulative root-count offset — the packed ckey's low ``sub_width``
     bits hold the root id, and offset + shard-local id never carries
     into the cell field because the total root count is guarded against
-    2^sub_width. Downstream (``cell_stats_from_root_partials``) is
-    UNCHANGED: subscriptions partition across shards, so an expression
-    CSE-shared inside one forest splits into per-shard roots whose
-    n_subs sum to the single-forest value — per-cell match counts
-    (sum n*n_subs) and exact distinct-sub counts (sum n_subs over roots
-    present) are identical by construction, pinned by
+    2^sub_width. Each row's n_subs is its shard root's own count.
+    Downstream (``cell_stats_from_root_partials``) is UNCHANGED:
+    subscriptions partition across shards, so an expression CSE-shared
+    inside one forest splits into per-shard roots whose n_subs sum to
+    the single-forest value — per-cell match counts (sum n*n_subs) and
+    exact distinct-sub counts (sum n_subs over roots present) are
+    identical by construction, pinned by
     tests/test_web_pipeline.py::test_sharded_forest_equals_single.
     ``group`` passes through to every shard's ``fused_match_pages``.
 
     Scale shape: each shard is its own broadcast (an executor group can
     hold one shard each on a real cluster) and its own map pass over
-    the pages; the union adds no shuffle — the ONE keyed shuffle on
-    ckey happens after the union, map-side combined across all shards'
-    partials alike."""
+    the pages; the union adds no shuffle — the ONE shuffle on the cell
+    key happens after the union, over all shards' partials alike."""
     from functools import reduce
 
-    spark = keyed_pages.sparkSession
     sub_width = 63 - (2 * level + 1)
     parts: list[DataFrame] = []
-    counts: list = []
     offset = 0
     held = Held()
     for forest in forests:
-        root_sub_counts = planned_evaluator(forest.compile()).root_sub_counts
+        n_roots = len(planned_evaluator(forest.compile()).root_sub_counts)
         handles: list = []
         p = fused_match_pages(
             keyed_pages, forest, level,
@@ -814,8 +807,7 @@ def sharded_root_partials(
             for h in handles:
                 h.destroy()
         parts.append(p)
-        counts.append(root_sub_counts)
-        offset += len(root_sub_counts)
+        offset += n_roots
     if offset >= (1 << sub_width):
         held.release()
         raise ValueError(
@@ -824,7 +816,7 @@ def sharded_root_partials(
         )
     if isolate_shards:
         retain(held)
-    return reduce(DataFrame.union, parts), _root_map(spark, counts)
+    return reduce(DataFrame.union, parts)
 
 
 def run_pipeline(
@@ -868,7 +860,7 @@ def run_pipeline(
     if pages is None:
         pages = synth_pages_df(spark, n_pages)
     forests = build_forests(shard_subscriptions(subs, n_shards))
-    partials, root_map = sharded_root_partials(pages, forests, level)
+    partials = sharded_root_partials(pages, forests, level)
     # level MUST be forwarded: the unpack widths are level-derived and a
     # mismatch silently corrupts every cell id (ADVICE r3)
-    return cell_stats_from_root_partials(partials, root_map, level=level)
+    return cell_stats_from_root_partials(partials, level=level)

@@ -46,7 +46,6 @@ def main() -> int:
         count_forest_nodes,
         diverse_page_subscriptions,
         fused_match_pages,
-        root_subscription_map,
         run_pipeline,
         shard_subscriptions,
         sharded_root_partials,
@@ -114,12 +113,11 @@ def main() -> int:
             partials = fused_match_pages(
                 keyed, forests[0], emit="cell_root_partials"
             )
-            root_map = root_subscription_map(spark, forests[0])
         else:
-            partials, root_map = sharded_root_partials(
+            partials = sharded_root_partials(
                 keyed, forests, isolate_shards=isolate
             )
-        return cell_stats_from_root_partials(partials, root_map)
+        return cell_stats_from_root_partials(partials)
 
     # per-run incremental prints: a 1M-root bench holds ~100 GB of
     # worker broadcast caches + /dev/shm shuffle on this box, and two

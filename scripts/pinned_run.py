@@ -41,7 +41,6 @@ def main() -> None:
     from a_tree_spark.web.pipeline import (
         cell_stats_from_root_partials,
         fused_match_pages,
-        root_subscription_map,
     )
 
     cores = int(sys.argv[1])
@@ -72,8 +71,6 @@ def main() -> None:
     pages_path = _pages_parquet(spark, n_pages)
     forest = build_page_forest(n_subs)
     forest.compile()
-    root_map = root_subscription_map(spark, forest).cache()
-    root_map.count()
 
     def flagship() -> None:
         # noop sink, NOT count(): count() lets Catalyst strip aggregate
@@ -85,7 +82,6 @@ def main() -> None:
         )
         cell_stats_from_root_partials(
             fused_match_pages(pages, forest, emit="cell_root_partials"),
-            root_map,
         ).write.format("noop").mode("overwrite").save()
 
     # warm every python worker, then one full warm pass (page cache,
@@ -97,7 +93,6 @@ def main() -> None:
             forest,
             emit="cell_root_partials",
         ),
-        root_map,
     ).count()
     flagship()
 

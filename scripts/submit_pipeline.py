@@ -12,7 +12,8 @@ It computes what ``run_pipeline`` computes, exact per-cell stats from
 root partials, with the partials carried and checkpointed per work
 unit through StageCheckpoint, so a killed job resumes exactly where it
 stopped. Root ids are local to a forest snapshot, so the stage is named
-``match-<fp>`` after the plans' root CSR (``stage_fingerprint``).
+``match-<fp>`` after the partial row layout and the plans' root CSR
+(``stage_fingerprint``).
 """
 
 from __future__ import annotations
@@ -50,15 +51,19 @@ def parse_args(argv=None) -> argparse.Namespace:
 
 
 def stage_fingerprint(forests, level: int) -> str:
-    """SHA-256 over the level and each shard plan's root CSR
-    (root_sub_offsets, root_sub_ids): the CSR is what gives a root id
-    its meaning, so a changed subscription set, shard count or compiler
-    ordering changes the fingerprint."""
+    """SHA-256 over the kernel's partial columns (``PARTIAL_COLUMNS``),
+    the level and each shard plan's root CSR (root_sub_offsets,
+    root_sub_ids): the CSR is what gives a root id its meaning, so a
+    changed subscription set, shard count or compiler ordering changes
+    the fingerprint, and so does a changed partial row, whose old
+    checkpoints the aggregate could not read."""
     import hashlib
 
     from a_tree_spark.expr.vector import planned_evaluator
+    from a_tree_spark.web.pipeline import PARTIAL_COLUMNS
 
-    digest = hashlib.sha256(b"level=%d" % level)
+    digest = hashlib.sha256(b"columns=%s|" % ",".join(PARTIAL_COLUMNS).encode())
+    digest.update(b"level=%d" % level)
     for forest in forests:
         plan = planned_evaluator(forest.compile())
         for array in (plan.root_sub_offsets, plan.root_sub_ids):
@@ -79,7 +84,6 @@ def run(spark, args: argparse.Namespace):
         choose_shards,
         count_forest_nodes,
         shard_subscriptions,
-        sharded_root_map,
         sharded_root_partials,
         standing_page_subscriptions,
     )
@@ -105,12 +109,10 @@ def run(spark, args: argparse.Namespace):
 
     def compute(pending):
         subset = keyed.join(F.broadcast(pending), "unit_id", "semi")
-        return sharded_root_partials(subset, forests, group="unit_id")[0]
+        return sharded_root_partials(subset, forests, group="unit_id")
 
     partials = ckpt.run_stage(units, compute)
-    stats = cell_stats_from_root_partials(
-        partials, sharded_root_map(spark, forests)
-    )
+    stats = cell_stats_from_root_partials(partials)
     stats.write.mode("overwrite").parquet(args.output)
     print(f"wrote per-cell stats: {stats.count()} cells -> {args.output}")
     print(f"lineage audit mismatches: {ckpt.verify().count()}")

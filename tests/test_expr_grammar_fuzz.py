@@ -302,6 +302,11 @@ def test_grammar_fuzz_parse_equals_exact_tier():
     "private&&android||nothing",
     "price >= 1. and bidfloor <> 2.50",
     "price = 1\x0b",
+    "ids not all of [1, 2]",
+    "ids foo",
+    "(ids foo)",
+    "ids )",
+    "private not all of [1]",
 ])
 def test_lexer_traps_match_exact_tier(text):
     assert_tiers_agree(text)

@@ -308,6 +308,21 @@ def test_syntax_errors(attributes):
             parse(expr, attributes)
 
 
+@pytest.mark.parametrize("name", ["private", "ids", "deals", "price", "country", "bidfloor", "nope"])
+@pytest.mark.parametrize("template, message", [
+    ("{} not all of [1, 2]", "unexpected trailing token NOT"),
+    ("{} foo", "unexpected trailing token IDENT"),
+    ("{} )", "unexpected trailing token RPAREN"),
+    ("({} foo)", "expected RPAREN"),
+    ("(private and {}", "unexpected end of expression"),
+])
+def test_syntax_error_after_bare_identifier_outranks_its_type(attributes, name, template, message):
+    # the same ParserError for every attribute type, and for an unknown
+    # name: a bare identifier is type-checked only where it may end
+    with pytest.raises(ParserError, match=message):
+        parse(template.format(name), attributes)
+
+
 def test_mixed_list_literal_is_error(attributes):
     with pytest.raises(ParserError):
         parse("segment_ids one of [1, 'a']", attributes)

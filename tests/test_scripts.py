@@ -234,6 +234,21 @@ def test_submit_pipeline_rejects_counts_below_one(capsys):
         assert "at least 1" in capsys.readouterr().err
 
 
+def test_submit_stage_fingerprint_covers_the_partial_layout(monkeypatch):
+    """A checkpoint of partials in another row layout is never resumed:
+    the stage fingerprint changes with the kernel's partial columns,
+    for the same forests and level."""
+    from a_tree_spark.web import pipeline
+    from a_tree_spark.web.pipeline import build_forests, standing_page_subscriptions
+
+    sp = _load("submit_pipeline")
+    forests = build_forests([standing_page_subscriptions(50)])
+    now = sp.stage_fingerprint(forests, 12)
+    assert sp.stage_fingerprint(forests, 12) == now
+    monkeypatch.setattr(pipeline, "PARTIAL_COLUMNS", ("ckey", "n_matches"))
+    assert sp.stage_fingerprint(forests, 12) != now
+
+
 class _Crash(Exception):
     pass
 
