@@ -1,20 +1,20 @@
-"""AST, typed predicates, NNF rewrite, canonical hashing, cost model.
+"""AST, typed predicates, NNF rewrite.
 
 Reference parity:
 - predicate kinds + negation closure: /root/reference/src/predicates.rs:133-205
 - NNF ("zero suppression filter", De Morgan): /root/reference/src/ast.rs:68-98
-- commutative canonical hashing for CSE: /root/reference/src/ast.rs:30-54
-- cost model: /root/reference/src/predicates.rs:144-165 (leaf),
-  /root/reference/src/ast.rs:55-66 (AND=+50, OR=+60)
 
-Hashes here use blake2b (stable across processes) instead of Rust's
-DefaultHasher — only *equality within one compile* matters for CSE.
+The reference also hashes each subtree to a commutative 64-bit id for CSE
+(src/ast.rs:30-54) and scores it with a cost model (src/ast.rs:55-66) to
+order children cheap-first. Neither lives here: ``compiler.ForestBuilder``
+identifies a node by ``(op, child, child)`` once its children are shared,
+and ``Predicate.key()`` is a leaf's identity; the dense sweep never
+short-circuits, so child order is unused.
 """
 
 from __future__ import annotations
 
 import enum
-import hashlib
 from dataclasses import dataclass
 from decimal import Decimal
 from typing import NamedTuple, Union
@@ -98,14 +98,6 @@ class Predicate:
             # normalize 5.00 vs 5.0 to one key
             operand = ("dec", str(operand.normalize()))
         return (self.attr_index, self.op.value, operand)
-
-    def cost(self) -> int:
-        """Reference src/predicates.rs:144-165."""
-        if self.op in _SET_OPS:
-            return 1 * len(self.operand)
-        if self.op in _LIST_OPS:
-            return 2 * len(self.operand)
-        return 0
 
 
 def validate_predicate(name: str, kind: AttributeKind, op: Op, operand: Operand) -> None:
@@ -247,22 +239,3 @@ class NnfNode(NamedTuple):
     left: "NnfNode | None" = None
     right: "NnfNode | None" = None
     predicate: Predicate | None = None
-
-    def id(self) -> int:
-        """Canonical 64-bit id; AND/OR are commutative via (op, min, max)
-        hashing (reference src/ast.rs:30-54)."""
-        if self.tag == "value":
-            payload = repr(("leaf", self.predicate.key()))
-        else:
-            a, b = self.left.id(), self.right.id()
-            payload = repr((self.tag, min(a, b), max(a, b)))
-        return int.from_bytes(
-            hashlib.blake2b(payload.encode(), digest_size=8).digest(), "big"
-        )
-
-    def cost(self) -> int:
-        """Reference src/ast.rs:55-66."""
-        if self.tag == "value":
-            return self.predicate.cost()
-        extra = 50 if self.tag == "and" else 60
-        return self.left.cost() + self.right.cost() + extra

@@ -1,7 +1,7 @@
 """Forest compiler: many expressions -> one shared DAG (CSE), flat arrays.
 
 This is the driver-side analog of the reference's A-Tree insert path
-(/root/reference/src/atree.rs:96-245): parse -> NNF -> canonical-hash
+(/root/reference/src/atree.rs:96-245): parse -> NNF -> hash-consing
 common-subexpression dedup -> dense node arena. Instead of a pointer DAG
 we emit structure-of-arrays (SURVEY.md §4.7) that broadcasts cheaply to
 executors and drives a vectorized tri-state evaluator:
@@ -20,23 +20,33 @@ executors and drives a vectorized tri-state evaluator:
   src/atree.rs:111-119). Duplicate expressions under different ids share
   one node (src/atree.rs:1001-1014).
 
+Node identity. The reference finds a shared node by a commutative 64-bit
+hash of the subtree (src/ast.rs:30-54) and orders children cheap-first
+for its short-circuiting evaluator (src/atree.rs:133-137). Here children
+are already shared when their parent is looked up, so a node is exactly
+identified by ``(kind, a, b)``: ``(LEAF, leaf index, -1)`` for a leaf and
+``(AND|OR, min child, max child)`` by node index for an interior node —
+plain hash-consing, commutative by construction, with no hash to collide.
+Child order carries no meaning: the packed sweep, ``evaluate_event`` and
+the generated SQL read both children symmetrically and never
+short-circuit.
+
 Insert/delete are INCREMENTAL (reference src/atree.rs:96-245 insert,
-:313-339,430-460 refcounted delete): the canonical-id -> node map, the
-refcounts, and the flat arrays live across mutations in ``ForestBuilder``.
-Insert walks only the new expression (shared subtrees hit the id map and
+:313-339,430-460 refcounted delete): the key -> node map, the refcounts,
+and the flat arrays live across mutations in ``ForestBuilder``. Insert
+walks only the new expression (shared subtrees hit the key map and
 stop); delete decrements use counts and tombstones nodes that reach zero,
 cascading into children exactly like the reference's
 ``decrement_use_count``. ``compile()`` then snapshots the arrays — after
 inserts that is a plain shallow copy, after deletes a numpy index
 compaction — so a churning subscription set pays O(changed expression)
-per mutation instead of the O(total) reparse+rehash of a cold
-``compile_forest`` (~0.8 s at 1e5 subscriptions; the snapshot is ~ms).
+per mutation instead of the O(total) reparse of a cold ``compile_forest``
+(~0.8 s at 1e5 subscriptions; the snapshot is ~ms).
 """
 
 from __future__ import annotations
 
-import hashlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -46,26 +56,20 @@ from .schema import AttributeTable
 
 LEAF, AND, OR = 0, 1, 2
 
-_blake = hashlib.blake2b
-
 
 @dataclass
 class CompiledForest:
     attributes: AttributeTable
     leaves: list[Predicate]
     node_kind: list[int]          # LEAF/AND/OR per node
-    node_left: list[int]          # leaf: index into leaves; and/or: node idx
-    node_right: list[int]         # leaf: -1
+    node_left: list[int]          # leaf: index into leaves; and/or: lower child idx
+    node_right: list[int]         # leaf: -1; and/or: higher child idx
     node_level: list[int]         # leaf: 0; interior: 1 + max(children)
     node_subs: dict[int, list]    # node idx -> subscription ids
-    node_cost: list[int] = field(default_factory=list)
 
     @property
     def num_nodes(self) -> int:
         return len(self.node_kind)
-
-    def subscriber_nodes(self) -> list[tuple[int, list]]:
-        return sorted(self.node_subs.items())
 
     def to_graphviz(self) -> str:
         """DOT dump of the compiled DAG (reference to_graphviz,
@@ -94,11 +98,11 @@ class ForestBuilder:
     """Live incremental subscription registry (reference lifecycle API:
     new/insert/delete/compile, src/atree.rs:66-339).
 
-    The DAG state — interned leaves, canonical-id map, refcounts, flat
-    node arrays — persists across mutations. ``nodes_created_total``
-    counts arena appends over the builder's lifetime, letting tests pin
-    that inserting k expressions into a live forest touches O(k·expr)
-    nodes, never O(total).
+    The DAG state — interned leaves, the ``(kind, a, b)`` -> node map,
+    refcounts, flat node arrays — persists across mutations.
+    ``nodes_created_total`` counts arena appends over the builder's
+    lifetime, letting tests pin that inserting k expressions into a live
+    forest touches O(k·expr) nodes, never O(total).
     """
 
     def __init__(self, attributes: AttributeTable | list | tuple):
@@ -108,17 +112,15 @@ class ForestBuilder:
         # interned unique predicates (leaf evaluation units)
         self._leaves: list[Predicate] = []
         self._leaf_index: dict[tuple, int] = {}      # predicate key -> leaf idx
-        self._leaf_id_cache: dict[tuple, int] = {}   # predicate key -> canonical id
         # flat node arena, append-only between compactions
         self._kind: list[int] = []
         self._left: list[int] = []
         self._right: list[int] = []
         self._level: list[int] = []
-        self._cost: list[int] = []
-        self._canonical: list[int] = []
+        self._key: list[tuple] = []                  # (kind, left, right) per node
         self._use_count: list[int] = []
         self._alive: list[bool] = []
-        self._node_by_id: dict[int, int] = {}        # canonical -> live node idx
+        self._node_by_key: dict[tuple, int] = {}     # key -> live node idx
         self._node_subs: dict[int, list] = {}        # node idx -> sub ids
         self._sub_root: dict = {}                    # sub id -> node idx
         self._n_dead = 0
@@ -141,14 +143,21 @@ class ForestBuilder:
 
     def insert(self, sub_id, expression: str | NnfNode) -> None:
         """Insert one expression in O(expression) (reference insert_root,
-        src/atree.rs:110-181): shared subtrees hit the canonical-id map
-        and stop the walk; only novel nodes append to the arena. A
-        re-insert under an existing sub id replaces it (delete+insert)."""
+        src/atree.rs:110-181): shared subtrees hit the key map and stop
+        the walk; only novel nodes append to the arena. A re-insert under
+        an existing sub id replaces it (delete+insert). A tree that is
+        not in NNF (``parse()`` output without ``.optimize()``) is a
+        TypeError, raised before the forest changes."""
         if isinstance(expression, str):
             expression = parse(expression, self.attributes).optimize()
+        elif not isinstance(expression, NnfNode):
+            raise TypeError(
+                f"insert takes a DSL string or an NnfNode (call .optimize() "
+                f"on a parsed tree), not {type(expression).__name__}"
+            )
         if sub_id in self._sub_root:
             self.delete(sub_id)
-        root_idx, _ = self._insert_node(expression)
+        root_idx = self._insert_node(expression)
         self._node_subs.setdefault(root_idx, []).append(sub_id)
         self._sub_root[sub_id] = root_idx
         self._forest = None
@@ -156,8 +165,8 @@ class ForestBuilder:
     def delete(self, sub_id) -> None:
         """Refcounted cascade delete (reference decrement_use_count,
         src/atree.rs:313-339,430-460): the node loses one reference; at
-        zero it is tombstoned, its canonical id unregistered, and its
-        children released recursively. Shared nodes — and nodes other
+        zero it is tombstoned, its key unregistered, and its children
+        released recursively. Shared nodes — and nodes other
         subscriptions still use as roots — survive."""
         root_idx = self._sub_root.pop(sub_id, None)
         if root_idx is None:
@@ -186,7 +195,6 @@ class ForestBuilder:
                 node_right=list(self._right),
                 node_level=list(self._level),
                 node_subs={k: list(v) for k, v in self._node_subs.items()},
-                node_cost=list(self._cost),
             )
         return self._forest
 
@@ -201,80 +209,45 @@ class ForestBuilder:
             self._leaves.append(predicate)
         return idx
 
-    def _append_node(
-        self, kind: int, left: int, right: int, level: int, cost: int,
-        canonical: int,
-    ) -> int:
-        idx = len(self._kind)
-        self._kind.append(kind)
-        self._left.append(left)
-        self._right.append(right)
-        self._level.append(level)
-        self._cost.append(cost)
-        self._canonical.append(canonical)
-        self._use_count.append(1)
-        self._alive.append(True)
-        self._node_by_id[canonical] = idx
-        self.nodes_created_total += 1
-        return idx
-
-    def _insert_node(self, node: NnfNode) -> tuple[int, int]:
-        """Returns (node_idx, canonical_id); children-first recursion
-        keeps topological order (children always at lower indexes, so
+    def _insert_node(self, node: NnfNode) -> int:
+        """Returns the node's index; children-first recursion keeps
+        topological order (children always at lower indexes, so
         snapshots and compactions stay topologically sorted). Every call
         accounts exactly one incoming reference to the returned node —
         a shared hit increments its use count and stops (reference
-        increment_use_count, src/atree.rs:184-190). Canonical ids hash
-        compact byte payloads — repr() of nested tuples was ~15% of a
-        1e5-expression compile — and leaf ids memoize on the interned
-        predicate key."""
+        increment_use_count, src/atree.rs:184-190)."""
         if node.tag == "value":
-            key = node.predicate.key()
-            canonical = self._leaf_id_cache.get(key)
-            if canonical is None:
-                canonical = self._leaf_id_cache[key] = node.id()
-            existing = self._node_by_id.get(canonical)
-            if existing is not None:
-                self._use_count[existing] += 1
-                return existing, canonical
-            leaf_idx = self._intern_leaf(node.predicate)
-            idx = self._append_node(
-                LEAF, leaf_idx, -1, 0, node.predicate.cost(), canonical
-            )
-            return idx, canonical
-
-        left_idx, left_id = self._insert_node(node.left)
-        right_idx, right_id = self._insert_node(node.right)
-        op = AND if node.tag == "and" else OR
-        # commutative canonical id (reference src/ast.rs:30-54)
-        a, b = (left_id, right_id) if left_id <= right_id else (right_id, left_id)
-        payload = (
-            (b"a" if node.tag == "and" else b"o")
-            + a.to_bytes(8, "big") + b.to_bytes(8, "big")
-        )
-        canonical = int.from_bytes(_blake(payload, digest_size=8).digest(), "big")
-        existing = self._node_by_id.get(canonical)
-        if existing is not None:
-            # the children references this walk just took are absorbed
-            # by the existing shared node: release them again so the
-            # counts stay exactly "one per incoming edge"
-            self._use_count[existing] += 1
-            self._release(left_idx)
-            self._release(right_idx)
-            return existing, canonical
-        # cheap-first child ordering (reference src/atree.rs:133-137)
-        if self._cost[left_idx] <= self._cost[right_idx]:
-            lo, hi = left_idx, right_idx
+            kind, a, b = LEAF, self._intern_leaf(node.predicate), -1
         else:
-            lo, hi = right_idx, left_idx
-        extra = 50 if op == AND else 60
-        idx = self._append_node(
-            op, lo, hi,
-            1 + max(self._level[left_idx], self._level[right_idx]),
-            self._cost[left_idx] + self._cost[right_idx] + extra,
-            canonical,
+            a = self._insert_node(node.left)
+            b = self._insert_node(node.right)
+            if a > b:
+                a, b = b, a
+            kind = AND if node.tag == "and" else OR
+        key = (kind, a, b)
+        existing = self._node_by_key.get(key)
+        if existing is not None:
+            self._use_count[existing] += 1
+            if kind != LEAF:
+                # the children references this walk just took are
+                # absorbed by the existing shared node: release them
+                # again so the counts stay exactly "one per incoming edge"
+                self._release(a)
+                self._release(b)
+            return existing
+        idx = len(self._kind)
+        self._kind.append(kind)
+        self._left.append(a)
+        self._right.append(b)
+        self._level.append(
+            0 if kind == LEAF else 1 + max(self._level[a], self._level[b])
         )
-        return idx, canonical
+        self._key.append(key)
+        self._use_count.append(1)
+        self._alive.append(True)
+        self._node_by_key[key] = idx
+        self.nodes_created_total += 1
+        return idx
 
     def _release(self, idx: int) -> None:
         """Drop one reference; tombstone + cascade at zero."""
@@ -286,16 +259,17 @@ class ForestBuilder:
                 continue
             self._alive[i] = False
             self._n_dead += 1
-            self._node_by_id.pop(self._canonical[i], None)
+            del self._node_by_key[self._key[i]]
             if self._kind[i] != LEAF:
                 stack.append(self._left[i])
                 stack.append(self._right[i])
 
     def _compact(self) -> None:
         """Squeeze tombstones out of the arena with numpy index remaps
-        (relative order — hence topological order — is preserved).
-        Unreferenced leaf predicates drop from ``leaves`` too, so the
-        per-batch leaf evaluation never pays for deleted expressions."""
+        (relative order — hence topological order, and each interior
+        node's child order — is preserved). Unreferenced leaf predicates
+        drop from ``leaves`` too, so the per-batch leaf evaluation never
+        pays for deleted expressions."""
         alive = np.asarray(self._alive, dtype=bool)
         new_idx = np.cumsum(alive, dtype=np.int64) - 1   # old -> new (alive only)
         keep = np.flatnonzero(alive)
@@ -320,25 +294,19 @@ class ForestBuilder:
         new_right[~is_leaf] = new_idx[new_right[~is_leaf]]
 
         level_arr = np.asarray(self._level, dtype=np.int64)[keep]
-        cost_arr = np.asarray(self._cost, dtype=np.int64)[keep]
         use_arr = np.asarray(self._use_count, dtype=np.int64)[keep]
 
         self._kind = kind_arr[keep].tolist()
         self._left = new_left.tolist()
         self._right = new_right.tolist()
         self._level = level_arr.tolist()
-        self._cost = cost_arr.tolist()
         self._use_count = use_arr.tolist()
-        canonical_keep = [self._canonical[i] for i in keep.tolist()]
-        self._canonical = canonical_keep
+        self._key = list(zip(self._kind, self._left, self._right))
         self._alive = [True] * len(keep)
-        self._node_by_id = {c: i for i, c in enumerate(canonical_keep)}
-        self._node_subs = {
-            int(new_idx[i]): subs for i, subs in self._node_subs.items()
-        }
-        self._sub_root = {
-            s: int(new_idx[i]) for s, i in self._sub_root.items()
-        }
+        self._node_by_key = {k: i for i, k in enumerate(self._key)}
+        remap = new_idx.tolist()
+        self._node_subs = {remap[i]: subs for i, subs in self._node_subs.items()}
+        self._sub_root = {s: remap[i] for s, i in self._sub_root.items()}
         self._leaves = new_leaves
         self._leaf_index = {p.key(): i for i, p in enumerate(new_leaves)}
         self._n_dead = 0

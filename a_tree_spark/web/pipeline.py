@@ -148,7 +148,7 @@ def skewed_page_subscriptions(n: int) -> dict[int, str]:
       is inherently unselective, which real systems offset with
       high-cardinality list domains or extra conjuncts);
     - every 4th subscription conjoins a wide-ish ``all of`` (4-8
-      elements, cost 8-16 in the reference cost model). They share the
+      elements). They share the
       ``lead_tokens`` member group with the ``one of`` / ``none of``
       leaves (pinned by
       tests/test_web_pipeline.py::test_skewed_workload_shares_one_lead_token_group)."""
@@ -667,9 +667,9 @@ def count_forest_nodes(subscriptions: dict[int, str]) -> int:
 
     Key fact (pinned by tests/test_web_pipeline.py): re-inserting an
     expression string that is already in the forest appends ZERO nodes
-    — the walk terminates in the canonical-id map and only the sub-id
-    list grows. So inserting each DISTINCT expression once yields the
-    same node count as inserting all N, and real workloads are heavily
+    — the walk stops at the compiler's (op, child, child) node key and
+    only the sub-id list grows. So inserting each DISTINCT expression
+    once yields the same node count as inserting all N, and real workloads are heavily
     repetitive (the 1e6-sub flagship mix has ~36k distinct roots:
     BENCH/BASELINE.md). Sampling estimators were tried first and
     rejected by measurement: node growth here is linear until the

@@ -335,20 +335,26 @@ def test_event_type_checking():
 
 
 def test_cse_shares_leaves_and_interior_nodes():
-    # commutative hashing: "a and b" == "b and a" (src/ast.rs:312-345)
-    matcher = ATreeMatcher([A.boolean("a"), A.boolean("b")])
+    # a node is identified by (op, child, child) once its children are
+    # shared: "a and b" == "b and a", and/or stay distinct
+    # (src/ast.rs:312-345)
+    matcher = ATreeMatcher([
+        A.boolean("a"), A.boolean("b"), A.integer("price"), A.float("f"),
+    ])
     matcher.insert(1, "a and b")
     matcher.insert(2, "b and a")
     forest = matcher.compile()
     assert forest.num_nodes == 3  # two leaves + one shared AND
     assert sorted(forest.node_subs.values()) == [[1, 2]]
-
-
-def test_cost_model_reference_parity(attributes):
-    # leaf: const=0 / set=1*len / list=2*len (predicates.rs:144-165);
-    # AND=+50, OR=+60 (ast.rs:55-66)
-    assert parse("exchange_id = 1", attributes).optimize().cost() == 0
-    assert parse("exchange_id in [1, 2, 3]", attributes).optimize().cost() == 3
-    assert parse("segment_ids one of [1, 2, 3]", attributes).optimize().cost() == 6
-    assert parse("private and exchange_id in [1, 2]", attributes).optimize().cost() == 52
-    assert parse("private or exchange_id in [1, 2]", attributes).optimize().cost() == 62
+    matcher.insert(3, "a or b")
+    forest = matcher.compile()
+    assert forest.num_nodes == 4  # a new OR over the same two leaves
+    assert sorted(forest.node_subs.values()) == [[1, 2], [3]]
+    # sorted+deduped lists and normalized decimals give one leaf
+    matcher.insert(4, "price in [3, 1, 2]")
+    matcher.insert(5, "price in [2, 3, 1, 1]")
+    matcher.insert(6, "f = 5.0")
+    matcher.insert(7, "f = 5.00")
+    forest = matcher.compile()
+    assert len(forest.leaves) == forest.num_nodes - 2 == 4
+    assert sorted(forest.node_subs.values()) == [[1, 2], [3], [4, 5], [6, 7]]

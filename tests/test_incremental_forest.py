@@ -10,9 +10,17 @@ compile of the surviving expression set.
 """
 
 import time
+from decimal import Decimal
 
 import numpy as np
 import pytest
+from hypothesis import settings, strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    invariant,
+    precondition,
+    rule,
+)
 
 from a_tree_spark.expr import (
     AttributeDefinition as A,
@@ -24,9 +32,14 @@ from a_tree_spark.expr import (
 )
 from a_tree_spark.expr.compiler import LEAF
 from a_tree_spark.expr.parser import parse
-from a_tree_spark.expr.vector import BatchEvaluator
+from a_tree_spark.expr.vector import BatchEvaluator, planned_evaluator
 from a_tree_spark.web import PAGE_ATTRIBUTES, standing_page_subscriptions
 from tests.conftest import event_batch
+from tests.test_expr_properties import (
+    ATTRS as PROP_ATTRS,
+    event_strategy,
+    expression_strategy,
+)
 
 ATTRS = AttributeTable([
     A.boolean("private"),
@@ -56,7 +69,7 @@ def check_refcount_invariant(builder: ForestBuilder) -> None:
         if alive:
             assert builder._use_count[i] == expected[i], i
         else:
-            assert builder._use_count[i] <= 0 or True  # tombstone
+            assert builder._use_count[i] == 0, i  # tombstone
 
 
 def test_delete_keeps_shared_expression():
@@ -137,6 +150,24 @@ def test_compaction_drops_dead_leaves_and_preserves_matches():
     check_refcount_invariant(b)
 
 
+def test_insert_rejects_a_tree_not_in_nnf():
+    """A parsed tree that skipped .optimize() still holds NOT nodes the
+    walk cannot read: insert raises before the forest changes, also
+    when the id is live (no half-done replace)."""
+    b = ForestBuilder(ATTRS)
+    b.insert(1, "exchange_id = 1 and not private")
+    forest = b.compile()
+    nodes = b.live_node_count
+    with pytest.raises(TypeError):
+        b.insert(2, parse("not (private or exchange_id = 2)", ATTRS))
+    with pytest.raises(TypeError):
+        b.insert(1, parse("exchange_id = 3", ATTRS))
+    assert b.live_node_count == nodes
+    assert list(b.sub_ids()) == [1]
+    assert b.compile() is forest
+    check_refcount_invariant(b)
+
+
 def _page_events(n: int, seed: int = 11):
     from a_tree_spark.web.pipeline import TLD_TABLE
 
@@ -213,3 +244,157 @@ def test_churn_on_live_1e5_forest_equals_cold_recompile():
     assert t_compile_incr < t_compile_cold / 3, (
         t_compile_incr, t_compile_cold, t_mutate
     )
+
+
+# ---- stateful differential test --------------------------------------
+
+
+def _shapes(forest) -> list:
+    """Structural form of every node: a leaf's predicate key, or its op
+    over the set of its children's forms (child order carries no
+    meaning)."""
+    shapes: list = []
+    for i in range(forest.num_nodes):
+        if forest.node_kind[i] == LEAF:
+            shapes.append(forest.leaves[forest.node_left[i]].key())
+        else:
+            children = (shapes[forest.node_left[i]], shapes[forest.node_right[i]])
+            shapes.append((forest.node_kind[i], frozenset(children)))
+    return shapes
+
+
+def _mirror(node):
+    """The same NNF tree with every AND/OR's operands swapped."""
+    if node.tag == "value":
+        return node
+    return node._replace(left=_mirror(node.right), right=_mirror(node.left))
+
+
+def _sub_shapes(forest) -> dict:
+    shapes = _shapes(forest)
+    return {
+        sub: shapes[node]
+        for node, subs in forest.node_subs.items() for sub in subs
+    }
+
+
+# null lists, empty lists and null list elements in every checked batch
+_EDGE_EVENTS = [
+    {"x": None, "xs": None, "s": None, "ss": None, "b": None, "f": None},
+    {"x": 0, "xs": [], "s": "v0", "ss": [], "b": False, "f": Decimal("0")},
+    {"x": 3, "xs": [3, None], "s": "v1", "ss": ["v1", None], "b": True,
+     "f": Decimal("5.25")},
+]
+
+
+class ForestBuilderMachine(RuleBasedStateMachine):
+    """Random insert / re-insert / delete / compile runs on one live
+    ForestBuilder. After every step the refcounts and the key map are
+    exact; after every compile the snapshot equals a cold compile of the
+    live expressions, and the planned evaluator equals the exact oracle
+    row by row."""
+
+    def __init__(self):
+        super().__init__()
+        self.builder = ForestBuilder(PROP_ATTRS)
+        self.live: dict = {}   # sub id -> DSL string or NnfNode, insert order
+        self.deleted: list[int] = []
+        self.next_id = 0
+        self.edited = False
+        self.plan = None
+
+    def _insert(self, sub_id, expression) -> None:
+        self.builder.insert(sub_id, expression)
+        self.live.pop(sub_id, None)
+        self.live[sub_id] = expression
+        self.edited = True
+
+    @rule(expression=expression_strategy())
+    def insert(self, expression):
+        self._insert(self.next_id, expression)
+        self.next_id += 1
+
+    @precondition(lambda self: self.live)
+    @rule(data=st.data(), expression=expression_strategy())
+    def reinsert_live_id(self, data, expression):
+        self._insert(data.draw(st.sampled_from(list(self.live))), expression)
+
+    @precondition(lambda self: self.live)
+    @rule(data=st.data())
+    def insert_mirror_of_live(self, data):
+        """AND/OR are commutative: the operand-swapped tree of a live
+        expression lands on its root and creates no node."""
+        source = data.draw(st.sampled_from(list(self.live)))
+        tree = self.live[source]
+        if isinstance(tree, str):
+            tree = parse(tree, PROP_ATTRS).optimize()
+        created = self.builder.nodes_created_total
+        self._insert(self.next_id, _mirror(tree))
+        assert self.builder.nodes_created_total == created
+        assert self.builder._sub_root[self.next_id] == self.builder._sub_root[source]
+        self.next_id += 1
+
+    @precondition(lambda self: self.live)
+    @rule(data=st.data())
+    def delete_live_id(self, data):
+        sub_id = data.draw(st.sampled_from(list(self.live)))
+        self.builder.delete(sub_id)
+        del self.live[sub_id]
+        self.deleted.append(sub_id)
+        self.edited = True
+
+    @precondition(lambda self: self.deleted)
+    @rule(data=st.data())
+    def delete_deleted_id(self, data):
+        self.builder.delete(data.draw(st.sampled_from(self.deleted)))
+
+    @rule()
+    def delete_unknown_id(self):
+        self.builder.delete(-1)
+
+    @rule(events=st.lists(event_strategy, max_size=8))
+    def compile(self, events):
+        forest = self.builder.compile()
+        plan = planned_evaluator(forest)
+        assert (plan is not self.plan) == (self.edited or self.plan is None)
+        self.plan, self.edited = plan, False
+
+        leaf_nodes = [
+            forest.node_left[i] for i in range(forest.num_nodes)
+            if forest.node_kind[i] == LEAF
+        ]
+        assert sorted(leaf_nodes) == list(range(len(forest.leaves)))
+
+        cold = compile_forest(PROP_ATTRS, self.live)
+        shapes = _shapes(forest)
+        assert len(set(shapes)) == forest.num_nodes
+        assert set(shapes) == set(_shapes(cold))
+        assert _sub_shapes(forest) == _sub_shapes(cold)
+
+        events = events + _EDGE_EVENTS
+        rows, subs = plan.evaluate_arrow(event_batch(PROP_ATTRS, events))
+        got: dict[int, set] = {}
+        for row, sub in zip(rows.tolist(), subs.tolist()):
+            got.setdefault(row, set()).add(sub)
+        for i, event in enumerate(events):
+            expected = set(evaluate_event(forest, event))
+            assert got.get(i, set()) == expected, (self.live, event)
+            assert set(evaluate_event(cold, event)) == expected
+
+    @invariant()
+    def refcounts_and_keys_are_exact(self):
+        b = self.builder
+        check_refcount_invariant(b)
+        live = [i for i, alive in enumerate(b._alive) if alive]
+        assert len(live) == b.live_node_count == len(b._node_by_key)
+        assert b._node_by_key == {b._key[i]: i for i in live}
+        assert all(
+            b._key[i] == (b._kind[i], b._left[i], b._right[i]) for i in live
+        )
+
+
+TestForestBuilderMachine = ForestBuilderMachine.TestCase
+TestForestBuilderMachine.settings = settings(
+    max_examples=40, stateful_step_count=30, derandomize=True,
+    database=None, deadline=None,
+)
