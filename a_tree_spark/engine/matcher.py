@@ -3,7 +3,7 @@
 The flagship operator (SURVEY.md §2.3 "search"): the reference matches
 one event against all expressions per call (src/atree.rs:255-311); here
 a whole DataFrame streams through executors, each Arrow batch is matched
-vectorized against the broadcast compiled forest, and the result is the
+vectorized against the compiled forest's broadcast plan, and the result is the
 relational form of Report::matches() — rows (event_id, sub_id),
 unordered (the reference tests sort before asserting,
 src/atree.rs:1182-1184).
@@ -11,7 +11,8 @@ src/atree.rs:1182-1184).
 Two physical strategies:
 
 - ``vectorized`` (default, scales to 1e5+ subscriptions): driver
-  compiles + broadcasts the CSE forest; ``mapInArrow`` evaluates each
+  compiles the CSE forest and broadcasts its plan (``BatchEvaluator``,
+  which ships no forest); ``mapInArrow`` evaluates each
   RecordBatch with numpy tri-state sweeps over zero-copy Arrow views
   (list columns never materialize as python objects). One Python stage,
   no shuffle — matching is embarrassingly parallel over event

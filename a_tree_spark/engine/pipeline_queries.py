@@ -140,10 +140,9 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # n_centroids=None -> k ~ sqrt(n) with the 64 floor (ivf_centroids)
+    # k ~ sqrt(n) centroids with the 64 floor (ivf_centroids)
     return similarity.ivf_topk(
         _embeddings(spark, sf_dir),
-        n_centroids=None,
         n_rows=_parquet_rows(f"{sf_dir}/embeddings.parquet"),
     )
 

@@ -3,8 +3,9 @@
 This is the driver-side analog of the reference's A-Tree insert path
 (/root/reference/src/atree.rs:96-245): parse -> NNF -> hash-consing
 common-subexpression dedup -> dense node arena. Instead of a pointer DAG
-we emit structure-of-arrays (SURVEY.md §4.7) that broadcasts cheaply to
-executors and drives a vectorized tri-state evaluator:
+we emit structure-of-arrays (SURVEY.md §4.7) that a vectorized
+tri-state evaluator plans from (expr/vector.py); the plan, not this
+forest, is what ships to executors:
 
 - ``leaves``: unique Predicate list; each distinct leaf is evaluated ONCE
   per Arrow batch as a numpy column — the vectorized generalization of
@@ -37,7 +38,9 @@ and the flat arrays live across mutations in ``ForestBuilder``. Insert
 walks only the new expression (shared subtrees hit the key map and
 stop); delete decrements use counts and tombstones nodes that reach zero,
 cascading into children exactly like the reference's
-``decrement_use_count``. ``compile()`` then snapshots the arrays — after
+``decrement_use_count``. Each fact is stored once: a node is live while
+its use count is above zero, and its key is read back from the kind and
+child arrays. ``compile()`` then snapshots the arrays — after
 inserts that is a plain shallow copy, after deletes a numpy index
 compaction — so a churning subscription set pays O(changed expression)
 per mutation instead of the O(total) reparse of a cold ``compile_forest``
@@ -99,7 +102,8 @@ class ForestBuilder:
     new/insert/delete/compile, src/atree.rs:66-339).
 
     The DAG state — interned leaves, the ``(kind, a, b)`` -> node map,
-    refcounts, flat node arrays — persists across mutations.
+    refcounts, flat node arrays — persists across mutations. A node
+    with a use count of zero is a tombstone until the next compaction.
     ``nodes_created_total`` counts arena appends over the builder's
     lifetime, letting tests pin that inserting k expressions into a live
     forest touches O(k·expr) nodes, never O(total).
@@ -117,9 +121,7 @@ class ForestBuilder:
         self._left: list[int] = []
         self._right: list[int] = []
         self._level: list[int] = []
-        self._key: list[tuple] = []                  # (kind, left, right) per node
-        self._use_count: list[int] = []
-        self._alive: list[bool] = []
+        self._use_count: list[int] = []              # live while > 0
         self._node_by_key: dict[tuple, int] = {}     # key -> live node idx
         self._node_subs: dict[int, list] = {}        # node idx -> sub ids
         self._sub_root: dict = {}                    # sub id -> node idx
@@ -242,9 +244,7 @@ class ForestBuilder:
         self._level.append(
             0 if kind == LEAF else 1 + max(self._level[a], self._level[b])
         )
-        self._key.append(key)
         self._use_count.append(1)
-        self._alive.append(True)
         self._node_by_key[key] = idx
         self.nodes_created_total += 1
         return idx
@@ -257,9 +257,8 @@ class ForestBuilder:
             self._use_count[i] -= 1
             if self._use_count[i] > 0:
                 continue
-            self._alive[i] = False
             self._n_dead += 1
-            del self._node_by_key[self._key[i]]
+            del self._node_by_key[(self._kind[i], self._left[i], self._right[i])]
             if self._kind[i] != LEAF:
                 stack.append(self._left[i])
                 stack.append(self._right[i])
@@ -269,46 +268,44 @@ class ForestBuilder:
         (relative order — hence topological order, and each interior
         node's child order — is preserved). Unreferenced leaf predicates
         drop from ``leaves`` too, so the per-batch leaf evaluation never
-        pays for deleted expressions."""
-        alive = np.asarray(self._alive, dtype=bool)
+        pays for deleted expressions. A node is live while its use
+        count is above zero."""
+        use_arr = np.asarray(self._use_count, dtype=np.int64)
+        alive = use_arr > 0
         new_idx = np.cumsum(alive, dtype=np.int64) - 1   # old -> new (alive only)
         keep = np.flatnonzero(alive)
 
-        kind_arr = np.asarray(self._kind, dtype=np.int64)
-        left_arr = np.asarray(self._left, dtype=np.int64)
-        right_arr = np.asarray(self._right, dtype=np.int64)
+        kind_arr = np.asarray(self._kind, dtype=np.int64)[keep]
+        left_arr = np.asarray(self._left, dtype=np.int64)[keep]
+        right_arr = np.asarray(self._right, dtype=np.int64)[keep]
+        is_leaf = kind_arr == LEAF
 
         # surviving leaf predicates, in first-use order
-        leaf_keep_nodes = keep[kind_arr[keep] == LEAF]
-        old_leaf_idxs = left_arr[leaf_keep_nodes]
+        order = np.sort(left_arr[is_leaf])
         leaf_remap = np.full(len(self._leaves), -1, dtype=np.int64)
-        order = np.sort(old_leaf_idxs)
         leaf_remap[order] = np.arange(len(order), dtype=np.int64)
-        new_leaves = [self._leaves[i] for i in order.tolist()]
 
-        new_left = left_arr[keep].copy()
-        is_leaf = kind_arr[keep] == LEAF
-        new_left[is_leaf] = leaf_remap[new_left[is_leaf]]
-        new_left[~is_leaf] = new_idx[new_left[~is_leaf]]
-        new_right = right_arr[keep].copy()
-        new_right[~is_leaf] = new_idx[new_right[~is_leaf]]
+        left_arr[is_leaf] = leaf_remap[left_arr[is_leaf]]
+        left_arr[~is_leaf] = new_idx[left_arr[~is_leaf]]
+        right_arr[~is_leaf] = new_idx[right_arr[~is_leaf]]
 
-        level_arr = np.asarray(self._level, dtype=np.int64)[keep]
-        use_arr = np.asarray(self._use_count, dtype=np.int64)[keep]
-
-        self._kind = kind_arr[keep].tolist()
-        self._left = new_left.tolist()
-        self._right = new_right.tolist()
-        self._level = level_arr.tolist()
-        self._use_count = use_arr.tolist()
-        self._key = list(zip(self._kind, self._left, self._right))
-        self._alive = [True] * len(keep)
-        self._node_by_key = {k: i for i, k in enumerate(self._key)}
+        self._kind = kind_arr.tolist()
+        self._left = left_arr.tolist()
+        self._right = right_arr.tolist()
+        self._level = np.asarray(self._level, dtype=np.int64)[keep].tolist()
+        self._use_count = use_arr[keep].tolist()
+        self._node_by_key = {
+            k: i for i, k in enumerate(zip(self._kind, self._left, self._right))
+        }
         remap = new_idx.tolist()
         self._node_subs = {remap[i]: subs for i, subs in self._node_subs.items()}
         self._sub_root = {s: remap[i] for s, i in self._sub_root.items()}
-        self._leaves = new_leaves
-        self._leaf_index = {p.key(): i for i, p in enumerate(new_leaves)}
+        self._leaves = [self._leaves[i] for i in order.tolist()]
+        leaf_remap = leaf_remap.tolist()
+        self._leaf_index = {
+            key: leaf_remap[i] for key, i in self._leaf_index.items()
+            if leaf_remap[i] >= 0
+        }
         self._n_dead = 0
 
 

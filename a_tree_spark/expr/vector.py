@@ -43,7 +43,8 @@ Every caller hands the evaluator Arrow record batches: the matcher
 (engine/matcher.py) its projected event columns, and the fused page
 kernel (web/pipeline.py) one batch of the page attributes it derives.
 Both go through ``evaluate_arrow_roots``, the one chunk loop and the one
-column ingest (``arrow_columns``).
+column ingest (``arrow_columns``). The evaluator is the plan a Spark stage
+broadcasts: it keeps what evaluation reads and ships no forest.
 """
 
 from __future__ import annotations
@@ -348,21 +349,34 @@ def adaptive_budget(num_nodes: int) -> int:
 class BatchEvaluator:
     """Evaluates a CompiledForest over Arrow record batches.
 
-    The forest and this evaluator are both picklable state that ships to
-    executors via closure capture / broadcast; all heavy work happens in
-    numpy on Arrow-backed columns.
+    The evaluator is the picklable plan that ships to executors by
+    broadcast; all heavy work happens in numpy on Arrow-backed columns.
+    It keeps only what evaluation reads, not the forest it was planned
+    from: the leaf and node counts, the member groups' indexes, the
+    generic leaves' predicates, the columns it ingests, and the sweep
+    and root layouts. The per-process caches (sweep buffers, Arrow value
+    sets) are left out of the pickle, so a plan pickles to the same
+    bytes before and after it evaluates a batch.
     """
 
     def __init__(self, forest: CompiledForest):
-        self.forest = forest
-        self.memory_budget = adaptive_budget(forest.num_nodes)
-        self._plan_leaf_groups()
-        self._plan_levels()
-        self._plan_subscribers()
+        self.n_leaves = len(forest.leaves)
+        self.num_nodes = forest.num_nodes
+        self.memory_budget = adaptive_budget(self.num_nodes)
+        leaf_row = self._plan_leaf_groups(forest)
+        self._plan_columns(forest)
+        perm, roots = self._plan_levels(forest, leaf_row)
+        self._plan_subscribers(forest, perm, roots)
+
+    def __getstate__(self) -> dict:
+        state = self.__dict__.copy()
+        state.pop("_buf_cache", None)  # per-process, rebuilt on demand
+        state.pop("_value_set_cache", None)
+        return state
 
     # ------------------------------------------------------------ planning
 
-    def _plan_leaf_groups(self) -> None:
+    def _plan_leaf_groups(self, forest: CompiledForest) -> np.ndarray:
         """Group the equality and membership leaves per attribute for
         one-shot evaluation: every ``=`` / ``<>`` / ``in`` / ``not in``
         leaf of a scalar, and every ``one of`` / ``none of`` /
@@ -380,9 +394,12 @@ class BatchEvaluator:
 
         Every other leaf — null / empty checks, boolean leaves, range
         comparisons and FLOAT ``=`` / ``<>`` — evaluates per leaf,
-        still vectorized per batch, on every row.
+        still vectorized per batch, on every row. The plan keeps these
+        leaves' predicates (``generic_leaves``), and no predicate of a
+        grouped leaf.
+
+        Returns the leaf-matrix row of each leaf index.
         """
-        forest = self.forest
         member_groups: dict[int, list[int]] = {}
         generic: list[int] = []
         for leaf_idx, leaf in enumerate(forest.leaves):
@@ -394,30 +411,43 @@ class BatchEvaluator:
             _MemberGroup(forest, attr_index, leaf_idxs)
             for attr_index, leaf_idxs in member_groups.items()
         ]
-        self.generic_leaves = generic
-        # leaf-row layout of the per-batch leaf matrix: each member
-        # group's leaves take one contiguous block of rows, in the
-        # group's own order, so a group writes its block in place (no
-        # per-group matrix, no copy); every other leaf follows in leaf
-        # order. _leaf_row maps a leaf index to its row.
-        order: list[int] = []
-        for group in self.member_groups:
-            group.row_lo = len(order)
-            order.extend(group.leaf_idxs)
-        order.extend(generic)
-        self._leaf_row = np.empty(len(order), dtype=np.int64)
-        self._leaf_row[np.asarray(order, dtype=np.int64)] = np.arange(
-            len(order), dtype=np.int64
-        )
+        self.generic_leaves = [forest.leaves[i] for i in generic]
         # a list attribute's elements encode into its group's vocab
         # (list_column), so their codes are the group's vids
         self._list_groups = {
             g.attr_index: g for g in self.member_groups if g.is_list
         }
+        # leaf-row layout of the per-batch leaf matrix: each member
+        # group's leaves take one contiguous block of rows, in the
+        # group's own order, so a group writes its block in place (no
+        # per-group matrix, no copy); the generic leaves follow, in leaf
+        # order.
+        order: list[int] = []
+        for group in self.member_groups:
+            group.row_lo = len(order)
+            order.extend(group.leaf_idxs)
+        order.extend(generic)
+        leaf_row = np.empty(len(order), dtype=np.int64)
+        leaf_row[np.asarray(order, dtype=np.int64)] = np.arange(
+            len(order), dtype=np.int64
+        )
+        return leaf_row
 
-    def _plan_levels(self) -> None:
+    def _plan_columns(self, forest: CompiledForest) -> None:
+        """The (attr_index, name, kind) of every attribute a leaf reads,
+        in attribute order: the columns ``arrow_columns`` ingests (column
+        pruning at the Python layer too)."""
+        attributes = forest.attributes
+        self.columns = [
+            (i, attributes.definition(i).name, attributes.definition(i).kind)
+            for i in sorted({leaf.attr_index for leaf in forest.leaves})
+        ]
+
+    def _plan_levels(
+        self, forest: CompiledForest, leaf_row: np.ndarray
+    ) -> tuple[np.ndarray, list[int]]:
         """Level-contiguous node layout: the evaluator renumbers nodes
-        (``_perm``: forest id -> sweep slot) so that the leaf-node block
+        (``perm``: forest id -> sweep slot) so that the leaf-node block
         and every (height, kind) level group occupy CONTIGUOUS slots in
         the ``values`` buffer, roots-first within each block. Pay-off at
         1e5 subscriptions (the sweep is DRAM-bound at 32 workers):
@@ -433,8 +463,9 @@ class BatchEvaluator:
         The ordering is deterministic (sorted levels, roots-first then
         forest id). Root ids in the fused kernel's partials, and the
         n_subs the kernel reads for them from ``root_sub_counts``, index
-        this order, from the one plan per snapshot (planned_evaluator)."""
-        forest = self.forest
+        this order, from the one plan per snapshot (planned_evaluator).
+
+        Returns ``perm`` and the roots' forest ids in slot order."""
         is_root = set(forest.node_subs.keys())
 
         def block_order(nodes: list[int]) -> list[int]:
@@ -472,12 +503,7 @@ class BatchEvaluator:
         perm[np.asarray(new_order, dtype=np.int64)] = np.arange(
             len(new_order), dtype=np.int64
         )
-        self._perm = perm
         self.root_segments = root_segments
-        # roots in slot order — the canonical root indexing everywhere
-        self._roots_in_slot_order = [
-            i for i in new_order if i in is_root
-        ]
 
         self.levels: list[tuple[int, int, int, np.ndarray, np.ndarray]] = []
         for kind, lo, hi, nodes in level_blocks:
@@ -486,11 +512,15 @@ class BatchEvaluator:
             self.levels.append((kind, lo, hi, left, right))
         self.n_leaf_nodes = len(leaf_nodes)
         # leaf-matrix row of each leaf node (_plan_leaf_groups layout)
-        self.leaf_of_node = self._leaf_row[
+        self.leaf_of_node = leaf_row[
             np.array([forest.node_left[i] for i in leaf_nodes], dtype=np.int64)
         ]
+        # roots in slot order — the canonical root indexing everywhere
+        return perm, [i for i in new_order if i in is_root]
 
-    def _plan_subscribers(self) -> None:
+    def _plan_subscribers(
+        self, forest: CompiledForest, perm: np.ndarray, roots: list[int]
+    ) -> None:
         """CSR of DISTINCT expression roots -> subscriber ids. CSE means
         many subscriptions share one root (4.3x on the templated 100k
         workload), so match decode runs per distinct root and expands to
@@ -499,13 +529,12 @@ class BatchEvaluator:
         subs (~45% of the evaluation). Root order follows the sweep
         slot order from _plan_levels so decode segments index straight
         into this CSR."""
-        forest = self.forest
         root_nodes = []
         sub_chunks = []
         counts = []
-        for node_idx in self._roots_in_slot_order:
+        for node_idx in roots:
             subs = forest.node_subs[node_idx]
-            root_nodes.append(self._perm[node_idx])
+            root_nodes.append(perm[node_idx])
             sub_chunks.append(np.asarray(subs))
             counts.append(len(subs))
         self.root_nodes = np.array(root_nodes, dtype=np.int64)
@@ -516,32 +545,26 @@ class BatchEvaluator:
         self.root_sub_ids = (
             np.concatenate(sub_chunks) if sub_chunks else np.empty(0, dtype=np.int64)
         )
-        # flat per-subscription views (public: matcher sizing, tests)
-        self.sub_node_idxs = np.repeat(self.root_nodes, self.root_sub_counts)
+        # flat per-subscription view (public: matcher sizing, tests)
         self.sub_ids = self.root_sub_ids
 
     # ------------------------------------------------------------ columns
 
     def arrow_columns(self, batch) -> dict[int, object]:
         """Prepared column cache straight from an Arrow RecordBatch, for
-        the attributes the forest actually touches (column pruning at
-        the Python layer too). List attributes build through
-        ``list_column``, scalars through ``_scalar_from_arrow``."""
-        forest = self.forest
-        needed = {leaf.attr_index for leaf in forest.leaves}
+        the attributes the forest actually touches (``columns``). List
+        attributes build through ``list_column``, scalars through
+        ``_scalar_from_arrow``."""
         cache: dict[int, object] = {}
-        for attr_index in needed:
-            definition = forest.attributes.definition(attr_index)
-            arr = batch.column(batch.schema.get_field_index(definition.name))
-            if definition.kind.is_list:
-                cache[attr_index] = self.list_column(arr, attr_index)
+        for attr_index, name, kind in self.columns:
+            arr = batch.column(batch.schema.get_field_index(name))
+            if kind.is_list:
+                cache[attr_index] = self.list_column(arr, attr_index, kind)
             else:
-                cache[attr_index] = self._scalar_from_arrow(
-                    arr, definition.kind
-                )
+                cache[attr_index] = self._scalar_from_arrow(arr, kind)
         return cache
 
-    def list_column(self, arr, attr_index: int) -> _ListColumn:
+    def list_column(self, arr, attr_index: int, kind) -> _ListColumn:
         """Prepared list column from an Arrow ListArray's offsets and
         flattened values — the list-encoding path of ``arrow_columns``.
 
@@ -569,7 +592,6 @@ class BatchEvaluator:
         if attr_index not in self._list_groups:
             return _ListColumn(mask, lengths)  # no leaf reads the elements
         flat = pc.list_flatten(arr)
-        kind = self.forest.attributes.definition(attr_index).kind
         if kind is AttributeKind.STRING_LIST:
             if not (pa.types.is_string(flat.type) or pa.types.is_large_string(flat.type)):
                 flat = flat.cast(pa.string())
@@ -692,10 +714,10 @@ class BatchEvaluator:
 
     # ------------------------------------------------------------ leaves
 
-    def _eval_generic_leaf(self, leaf_idx: int, col, n: int) -> np.ndarray:
+    @staticmethod
+    def _eval_generic_leaf(leaf, col, n: int) -> np.ndarray:
         """One leaf outside every member group: a null or empty check, a
         boolean leaf, a range comparison, or a FLOAT ``=`` / ``<>``."""
-        leaf = self.forest.leaves[leaf_idx]
         op = leaf.op
         operand = leaf.operand
 
@@ -732,10 +754,9 @@ class BatchEvaluator:
         return _true_mask(result, col.mask)
 
     def _eval_leaves(self, cache: dict, n: int) -> np.ndarray:
-        """(n_leaves, n) TRUE matrix in leaf-row order (``_leaf_row``)."""
-        forest = self.forest
-        leaf_row = self._leaf_row
-        leaf_values = np.empty((len(forest.leaves), n), dtype=bool)
+        """(n_leaves, n) TRUE matrix in leaf-row order: the member
+        groups' blocks, then the generic leaves (``_plan_leaf_groups``)."""
+        leaf_values = np.empty((self.n_leaves, n), dtype=bool)
 
         for group in self.member_groups:
             group.evaluate_into(
@@ -743,17 +764,17 @@ class BatchEvaluator:
                 leaf_values[group.row_lo : group.row_lo + group.n_leaves],
             )
 
-        for leaf_idx in self.generic_leaves:
-            attr_index = self.forest.leaves[leaf_idx].attr_index
-            leaf_values[leaf_row[leaf_idx]] = self._eval_generic_leaf(
-                leaf_idx, cache[attr_index], n
+        first = self.n_leaves - len(self.generic_leaves)
+        for row, leaf in enumerate(self.generic_leaves, start=first):
+            leaf_values[row] = self._eval_generic_leaf(
+                leaf, cache[leaf.attr_index], n
             )
         return leaf_values
 
     # ------------------------------------------------------------ sweep
 
     def _chunk_rows(self, n_rows: int) -> int:
-        nodes = max(1, self.forest.num_nodes)
+        nodes = max(1, self.num_nodes)
         # packed sweep: nodes x n/8 bytes per buffer
         chunk = (self.memory_budget * 8) // nodes
         return int(max(1024, min(32768, chunk, max(n_rows, 1))))
@@ -772,7 +793,7 @@ class BatchEvaluator:
         if bufs is None:
             if len(cached) > 4:
                 cached.clear()
-            nn = max(self.forest.num_nodes, 1)
+            nn = max(self.num_nodes, 1)
             widest = max(
                 (hi - lo for _, lo, hi, _, _ in self.levels),
                 default=1,
@@ -908,10 +929,9 @@ class BatchEvaluator:
         )
         return out_rows, self.root_sub_ids[offsets + within]
 
-#: the evaluator planned for the most recent snapshot (see
-#: planned_evaluator); a module slot rather than an attribute of the
-#: forest, so pickling an evaluator never drags it along
-_latest_plan: BatchEvaluator | None = None
+#: the (snapshot, plan) pair of the most recent snapshot (see
+#: planned_evaluator); a module slot, because the plan keeps no forest
+_latest_plan: tuple[CompiledForest, BatchEvaluator] | None = None
 
 
 def planned_evaluator(forest: CompiledForest) -> BatchEvaluator:
@@ -919,14 +939,14 @@ def planned_evaluator(forest: CompiledForest) -> BatchEvaluator:
     once. ``ForestBuilder.compile()`` returns the same CompiledForest
     until the next insert/delete, so every consumer of one crawl step
     (root map, fused kernel, matcher, shard root counts) shares one plan
-    instead of re-planning the same snapshot. One slot: a new snapshot
-    replaces the previous plan, which live forests never return to.
+    instead of re-planning the same snapshot. One slot holds the
+    (snapshot, plan) pair: a new snapshot replaces it, and live forests
+    never return to an old one.
 
     The plan is shared, and a Spark stage broadcasts it as it is
-    (engine.matcher.broadcast_evaluator): it has no per-caller
-    setting."""
+    (engine.matcher.broadcast_evaluator): it has no per-caller setting,
+    and it ships no forest."""
     global _latest_plan
-    plan = _latest_plan
-    if plan is None or plan.forest is not forest:
-        plan = _latest_plan = BatchEvaluator(forest)
-    return plan
+    if _latest_plan is None or _latest_plan[0] is not forest:
+        _latest_plan = (forest, BatchEvaluator(forest))
+    return _latest_plan[1]

@@ -589,11 +589,10 @@ WHERE {dot} > 0 AND {dot} * {dot} >= {t!r} * {t!r} * ({norm_a}) * ({norm_b})
 # scales. The codebook SIZE is parameterized (VERDICT round 3: a fixed
 # <=16-centroid cap meant probing 2 lists reranked ~n/8 of the corpus
 # forever): production derives k ~ sqrt(n) with a 64-centroid floor,
-# and past the inline-literal practicality limit the assignment argmin
-# runs in an Arrow kernel against a broadcast numpy codebook — same
-# IEEE summation order as the SQL fold, zero shuffles on the table.
+# and the assignment argmin runs in an Arrow kernel against a broadcast
+# numpy codebook — same IEEE summation order as the oracle's SQL sum,
+# zero shuffles on the table.
 CENTROID_OFFSET = 3
-IVF_INLINE_MAX = 16      # above this, inline literals give way to Arrow
 IVF_MIN_CENTROIDS = 64
 N_PROBE = 2
 
@@ -631,19 +630,9 @@ def ivf_centroid_params(n_rows: int, n_centroids: int) -> tuple[int, int]:
     return stride, min(CENTROID_OFFSET, stride - 1)
 
 
-def _dist2_spark(a: str, b: str) -> str:
-    """Squared L2 as a loop HOF (see _dot_spark for why not unrolled)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, "
-        f"(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) "
-        f"* (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
 def _dist2_sql(a: str, b: str) -> str:
     """Oracle-side squared L2: flat left-assoc sum (same IEEE order as
-    the Spark HOF's left fold)."""
+    ``_numpy_dist2``'s dimension-ascending accumulation)."""
     terms = [
         f"(CAST({a}[{i + 1}] AS DOUBLE) - CAST({b}[{i + 1}] AS DOUBLE))"
         f" * (CAST({a}[{i + 1}] AS DOUBLE) - CAST({b}[{i + 1}] AS DOUBLE))"
@@ -654,13 +643,6 @@ def _dist2_sql(a: str, b: str) -> str:
 
 def _centroid_filter(stride: int, offset: int, col: str = "vec_id") -> str:
     return f"{col} % {stride} = {offset}"
-
-
-def _float_array_literal(values) -> str:
-    """Exact float32 array literal: repr() of a float32-derived Python
-    float is its shortest exact double form, and CAST .. AS FLOAT
-    round-trips it to the identical float32 bits."""
-    return "array(" + ", ".join(f"CAST({v!r} AS FLOAT)" for v in values) + ")"
 
 
 def _centroid_matrix(cent_rows):
@@ -676,9 +658,8 @@ def _centroid_matrix(cent_rows):
 def _numpy_dist2(X, C):
     """Squared L2 of every row of X against every row of C, accumulated
     dimension-ascending in float64 — EXACTLY the IEEE order of the SQL
-    left fold (``_dist2_spark``/``_dist2_sql``), so argmin decisions are
-    bit-identical across the Arrow kernel, the inline-literal path, and
-    the DuckDB oracle."""
+    left-assoc sum (``_dist2_sql``), so argmin decisions are
+    bit-identical across the Arrow kernel and the DuckDB oracle."""
     import numpy as np
 
     acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
@@ -792,7 +773,6 @@ def train_ivf_codebook(
 def ivf_topk(
     embeddings: DataFrame,
     k: int = DEFAULT_K,
-    n_centroids: int | None = None,
     codebook=None,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -800,32 +780,30 @@ def ivf_topk(
     (inverted lists), probe the sqrt(k) nearest lists per query
     (``ivf_nprobe``), exact dot-product rerank inside the probed lists.
 
-    ``n_centroids=None`` derives k ~ sqrt(n) (64 floor) from the corpus
-    row count — the production entry point always takes this path, so
-    inverted-list width shrinks as n grows instead of being pinned by a
-    capacity constant (VERDICT round 3). Scale shape (1e12 rows): the
-    codebook is materialized driver-side (k rows — a trained k-means
-    codebook at real scale); small codebooks (<= IVF_INLINE_MAX) inline
-    as literals so the assignment argmin is a pure Catalyst projection,
-    larger ones broadcast as a numpy matrix into ONE mapInArrow pass —
-    either way ZERO joins, windows, or shuffles touch the embedding
-    table (round 2 rode every vector through a Window.partitionBy
-    exchange). Probes come from the same codebook driver-side; the only
-    pre-rerank data movement is broadcasting N_QUERIES * sqrt(k) probe
-    rows into the assigned scan. ``n_rows`` skips the plan-time count
+    The codebook size derives k ~ sqrt(n) (64 floor) from the corpus
+    row count, so inverted-list width shrinks as n grows instead of
+    being pinned by a capacity constant (VERDICT round 3). Scale shape
+    (1e12 rows): the codebook is materialized driver-side (k rows — a
+    trained k-means codebook at real scale) and broadcast as a numpy
+    matrix into ONE mapInArrow pass whose argmin breaks ties to the
+    smallest centroid id — ZERO joins, windows, or shuffles touch the
+    embedding table (round 2 rode every vector through a
+    Window.partitionBy exchange). Probes come from the same codebook
+    driver-side; the only pre-rerank data movement is broadcasting
+    N_QUERIES * sqrt(k) probe rows into the assigned scan. ``n_rows`` skips the plan-time count
     job when the caller knows the corpus size (see ``lsh_topk``).
 
     ``codebook`` (a float64 (k, dim) numpy matrix, e.g. from
     ``train_ivf_codebook``) replaces the deterministic-subset quantizer
-    entirely; centroid ids become 0..k-1 and the assignment always
-    takes the Arrow path. The oracle gate never passes one (trained
-    means are not cross-engine reproducible — see train_ivf_codebook)."""
+    entirely; centroid ids become 0..k-1. The oracle gate never passes
+    one (trained means are not cross-engine reproducible — see
+    train_ivf_codebook)."""
     import numpy as np
+    import pyarrow as pa
 
     if codebook is not None:
         cids = np.arange(codebook.shape[0], dtype=np.int64)
         C = np.asarray(codebook, dtype=np.float64)
-        cent_rows = None
         q_rows = sorted(
             embeddings.where(F.col("vec_id") < N_QUERIES)
             .select("vec_id", "embedding")
@@ -835,9 +813,7 @@ def ivf_topk(
     else:
         if n_rows is None:
             n_rows = _table_rows(embeddings)
-        if n_centroids is None:
-            n_centroids = ivf_centroids(n_rows)
-        stride, offset = ivf_centroid_params(n_rows, n_centroids)
+        stride, offset = ivf_centroid_params(n_rows, ivf_centroids(n_rows))
         # centroid subset AND the query rows in ONE collect (one scan,
         # one driver round-trip instead of two sequential jobs)
         both = sorted(
@@ -849,52 +825,35 @@ def ivf_topk(
             .collect(),
             key=lambda r: r["vec_id"],
         )
-        cent_rows = [
-            r for r in both if r["vec_id"] % stride == offset
-        ]
+        cids, C = _centroid_matrix(
+            [r for r in both if r["vec_id"] % stride == offset]
+        )
         q_rows = [r for r in both if r["vec_id"] < N_QUERIES]
-        cids, C = _centroid_matrix(cent_rows)
 
-    if cent_rows is not None and len(cent_rows) <= IVF_INLINE_MAX:
-        structs = ", ".join(
-            f"named_struct('d2', "
-            f"{_dist2_spark('__emb__', _float_array_literal(r['embedding']))}, "
-            f"'cid', CAST({int(r['vec_id'])} AS BIGINT))"
-            for r in cent_rows
-        )
-        assigned = _spread(embeddings).select(
-            "vec_id",
-            "embedding",
-            F.expr(
-                f"array_min(array({structs.replace('__emb__', 'embedding')})).cid"
-            ).alias("cid"),
-        )
-    else:
-        import pyarrow as pa
+    dim = C.shape[1]
 
-        dim = C.shape[1]
+    def assign(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            emb = batch.column(1)
+            flat = emb.flatten().to_numpy(zero_copy_only=False)
+            X = flat.astype(np.float64).reshape(n, dim)
+            # cids ascend, and argmin takes the first minimum
+            best = np.argmin(_numpy_dist2(X, C), axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0),
+                    emb,
+                    pa.array(cids[best], type=pa.int64()),
+                ],
+                names=["vec_id", "embedding", "cid"],
+            )
 
-        def assign(batches):
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                emb = batch.column(1)
-                flat = emb.flatten().to_numpy(zero_copy_only=False)
-                X = flat.astype(np.float64).reshape(n, dim)
-                best = np.argmin(_numpy_dist2(X, C), axis=1)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column(0),
-                        emb,
-                        pa.array(cids[best], type=pa.int64()),
-                    ],
-                    names=["vec_id", "embedding", "cid"],
-                )
-
-        assigned = _spread(embeddings.select("vec_id", "embedding")).mapInArrow(
-            assign, schema="vec_id long, embedding array<float>, cid long"
-        )
+    assigned = _spread(embeddings.select("vec_id", "embedding")).mapInArrow(
+        assign, schema="vec_id long, embedding array<float>, cid long"
+    )
 
     # probes: nearest sqrt(k) centroids per query (ivf_nprobe),
     # computed driver-side in the same exact arithmetic
@@ -929,16 +888,13 @@ def ivf_topk(
 def ivf_topk_oracle(
     k: int = DEFAULT_K,
     table: str = "embeddings",
-    n_centroids: int | None = None,
     n_rows: int | None = None,
 ) -> str:
     """Oracle mirror; ``n_rows`` feeds the same sqrt-derivation the
     Spark side computes at runtime (driver gate runs at a known size)."""
     if n_rows is None:
-        raise ValueError("pass n_rows (and optionally n_centroids)")
-    if n_centroids is None:
-        n_centroids = ivf_centroids(n_rows)
-    stride, offset = ivf_centroid_params(n_rows, n_centroids)
+        raise ValueError("pass n_rows")
+    stride, offset = ivf_centroid_params(n_rows, ivf_centroids(n_rows))
     cents = (
         f"SELECT vec_id AS cid, embedding FROM {table}\n"
         f"    WHERE {_centroid_filter(stride, offset)}"

@@ -212,11 +212,11 @@ def test_access_pruning_selective_workload_with_planted_matches():
     assert planted <= set(got)
 
 
-def test_evaluate_arrow_matches_oracle_on_null_and_empty_lists():
-    """The Arrow path (the general matcher's hot path since round 3)
-    must agree with the single-event oracle on every row, including a
-    null list element, an empty list and a null list — also when the
-    string list's elements are typed null (``list<null>``)."""
+def _null_list_fixture():
+    """(forest, batches): five subscriptions over a string list, an
+    integer, a string, an integer list and a boolean, and one batch with
+    null list elements, empty and null lists, plus the same batch with
+    the string list's elements typed null (``list<null>``)."""
     import pyarrow as pa
 
     attrs = AttributeTable([
@@ -229,7 +229,6 @@ def test_evaluate_arrow_matches_oracle_on_null_and_empty_lists():
     builder.insert(3, "nums all of [1, 2] and flag")
     builder.insert(4, "tags is empty and x in [2, 10]")
     builder.insert(5, "not (tags all of ['a']) and s <> 'r'")
-    ev = BatchEvaluator(builder.compile())
 
     batch = pa.record_batch({
         # row 5 plants a null ELEMENT inside a member-grouped string
@@ -247,14 +246,28 @@ def test_evaluate_arrow_matches_oracle_on_null_and_empty_lists():
         0, "tags", pa.array([[None], None, [], [None], [], [None, None]])
     )
     assert null_tags.schema.field("tags").type == pa.list_(pa.null())
-    for b in (batch, null_tags):
-        want = sorted(
-            (r, sub)
-            for r, event in enumerate(b.to_pylist())
-            for sub in evaluate_event(ev.forest, event)
-        )
-        got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(b))))
-        assert got == want and len(got) > 0
+    return builder.compile(), (batch, null_tags)
+
+
+def _assert_equals_oracle(ev, forest, batch) -> None:
+    want = sorted(
+        (r, sub)
+        for r, event in enumerate(batch.to_pylist())
+        for sub in evaluate_event(forest, event)
+    )
+    got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
+    assert got == want and len(got) > 0
+
+
+def test_evaluate_arrow_matches_oracle_on_null_and_empty_lists():
+    """The Arrow path (the general matcher's hot path since round 3)
+    must agree with the single-event oracle on every row, including a
+    null list element, an empty list and a null list — also when the
+    string list's elements are typed null (``list<null>``)."""
+    forest, batches = _null_list_fixture()
+    ev = BatchEvaluator(forest)
+    for batch in batches:
+        _assert_equals_oracle(ev, forest, batch)
 
 
 @pytest.mark.parametrize("subs, n_groups, expected", [
@@ -274,7 +287,8 @@ def test_integer_list_elements_stay_exact_beside_a_null(subs, n_groups, expected
     builder = ForestBuilder(attrs)
     for sub_id, expression in subs.items():
         builder.insert(sub_id, expression)
-    ev = BatchEvaluator(builder.compile())
+    forest = builder.compile()
+    ev = BatchEvaluator(forest)
     assert len(ev.member_groups) == n_groups
     batch = pa.record_batch({
         "nums": pa.array([[2**53 + 1, None], [2**53 + 1]],
@@ -283,7 +297,7 @@ def test_integer_list_elements_stay_exact_beside_a_null(subs, n_groups, expected
     want = sorted(
         (r, sub)
         for r, event in enumerate(batch.to_pylist())
-        for sub in evaluate_event(ev.forest, event)
+        for sub in evaluate_event(forest, event)
     )
     assert want == expected
     got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
@@ -307,7 +321,8 @@ def test_integer_list_literal_outside_int64_never_matches():
         f"nums one of [{big}]",
     ], start=1):
         builder.insert(sub_id, expression)
-    ev = BatchEvaluator(builder.compile())
+    forest = builder.compile()
+    ev = BatchEvaluator(forest)
     batch = pa.record_batch({
         "nums": pa.array([[1], [2], [1, None], None, [], [None], [1, 2]],
                          type=pa.list_(pa.int64())),
@@ -315,7 +330,7 @@ def test_integer_list_literal_outside_int64_never_matches():
     want = sorted(
         (r, sub)
         for r, event in enumerate(batch.to_pylist())
-        for sub in evaluate_event(ev.forest, event)
+        for sub in evaluate_event(forest, event)
     )
     assert {sub for _, sub in want} == {1, 2, 3, 4}
     got = sorted(zip(*map(np.ndarray.tolist, ev.evaluate_arrow(batch))))
@@ -537,7 +552,7 @@ def test_equality_leaves_share_one_group_per_attribute(n):
     assert grouped == {
         "s": {"EQ"}, "c": {"EQ", "NE", "IN", "NOT_IN"}, "n": {"EQ", "IN", "NOT_IN"},
     }
-    generic = [forest.leaves[i] for i in ev.generic_leaves]
+    generic = ev.generic_leaves
     assert {leaf.attr_name for leaf in generic} == {"f"}
     assert all(isinstance(leaf.operand, Decimal) for leaf in generic)
 
@@ -627,12 +642,55 @@ def test_pickled_evaluator_carries_no_parse_memo():
     builder = ForestBuilder(attrs)
     builder.insert(1, "exchange_id = 1 and deals all of ['deal-1', 'deal-2']")
     builder.insert(2, "country in ['US', 'CA'] or price > 7")
-    ev = BatchEvaluator(builder.compile())
+    forest = builder.compile()
+    ev = BatchEvaluator(forest)
     before = len(pickle.dumps(ev))
     for i in range(1000):
         parse(f"price > {i} and segment_ids one of [{i}, {i + 1}]", attrs)
     assert len(pickle.dumps(ev)) == before
 
-    table = pickle.loads(pickle.dumps(ev)).forest.attributes
+    table = pickle.loads(pickle.dumps(forest.attributes))
     tree = parse("city = 'NY' and deals none of ['deal-3']", table)
     assert tree.optimize().left.predicate.attr_name == "city"
+
+
+def test_pickled_plan_ships_no_forest():
+    """The broadcast plan keeps only what evaluation reads: its pickle
+    holds no CompiledForest and no predicate of a member-group leaf
+    (only the generic leaves' ones), it pickles to the same bytes
+    before and after it evaluates a batch (its sweep buffers and value
+    sets stay in the process), and an unpickled plan equals the
+    single-event oracle."""
+    import io
+    import pickle
+
+    from a_tree_spark.expr.ast import Predicate
+    from a_tree_spark.expr.compiler import CompiledForest
+
+    forest, batches = _null_list_fixture()
+    ev = BatchEvaluator(forest)
+    assert not hasattr(ev, "forest")
+
+    reduced = []
+
+    class Recorder(pickle.Pickler):
+        def reducer_override(self, obj):
+            reduced.append(obj)
+            return NotImplemented
+
+    Recorder(io.BytesIO()).dump(ev)
+    assert reduced and not any(isinstance(o, CompiledForest) for o in reduced)
+    shipped = [o for o in reduced if isinstance(o, Predicate)]
+    grouped = [forest.leaves[i] for g in ev.member_groups for i in g.leaf_idxs]
+    assert grouped and ev.generic_leaves
+    assert sorted(map(id, shipped)) == sorted(map(id, ev.generic_leaves))
+    assert not any(p in grouped for p in shipped)
+
+    before = pickle.dumps(ev)
+    for batch in batches:
+        ev.evaluate_arrow(batch)
+    assert pickle.dumps(ev) == before
+
+    shipped_ev = pickle.loads(before)
+    for batch in batches:
+        _assert_equals_oracle(shipped_ev, forest, batch)

@@ -56,20 +56,18 @@ def matches(builder: ForestBuilder, event: dict) -> list:
 
 
 def check_refcount_invariant(builder: ForestBuilder) -> None:
-    """use_count of every live node == incoming DAG edges + root
-    subscriptions (the reference's refcount definition)."""
+    """use_count of every node == incoming DAG edges from live nodes +
+    root subscriptions (the reference's refcount definition). A node is
+    live while its use count is above zero, so a tombstone has no live
+    parent and no subscription."""
     expected = [0] * len(builder._kind)
-    for i, alive in enumerate(builder._alive):
-        if alive and builder._kind[i] != LEAF:
+    for i, uses in enumerate(builder._use_count):
+        if uses > 0 and builder._kind[i] != LEAF:
             expected[builder._left[i]] += 1
             expected[builder._right[i]] += 1
     for node_idx, subs in builder._node_subs.items():
         expected[node_idx] += len(subs)
-    for i, alive in enumerate(builder._alive):
-        if alive:
-            assert builder._use_count[i] == expected[i], i
-        else:
-            assert builder._use_count[i] == 0, i  # tombstone
+    assert builder._use_count == expected
 
 
 def test_delete_keeps_shared_expression():
@@ -104,7 +102,7 @@ def test_delete_keeps_multi_subscribed_expression():
     b.delete(2)
     assert matches(b, event) == []
     # refcount exactness: nothing should survive the last delete
-    assert not any(b._alive)
+    assert not any(b._use_count)
     check_refcount_invariant(b)
 
 
@@ -289,8 +287,8 @@ _EDGE_EVENTS = [
 
 class ForestBuilderMachine(RuleBasedStateMachine):
     """Random insert / re-insert / delete / compile runs on one live
-    ForestBuilder. After every step the refcounts and the key map are
-    exact; after every compile the snapshot equals a cold compile of the
+    ForestBuilder. After every step the refcounts, the key map and the
+    leaf index are exact; after every compile the snapshot equals a cold compile of the
     live expressions, and the planned evaluator equals the exact oracle
     row by row."""
 
@@ -385,12 +383,12 @@ class ForestBuilderMachine(RuleBasedStateMachine):
     def refcounts_and_keys_are_exact(self):
         b = self.builder
         check_refcount_invariant(b)
-        live = [i for i, alive in enumerate(b._alive) if alive]
+        live = [i for i, uses in enumerate(b._use_count) if uses > 0]
         assert len(live) == b.live_node_count == len(b._node_by_key)
-        assert b._node_by_key == {b._key[i]: i for i in live}
-        assert all(
-            b._key[i] == (b._kind[i], b._left[i], b._right[i]) for i in live
-        )
+        assert b._node_by_key == {
+            (b._kind[i], b._left[i], b._right[i]): i for i in live
+        }
+        assert b._leaf_index == {p.key(): i for i, p in enumerate(b._leaves)}
 
 
 TestForestBuilderMachine = ForestBuilderMachine.TestCase

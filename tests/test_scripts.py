@@ -1,7 +1,8 @@
 """The scripts: the A/B gain and no-regression rules of scripts/ab.py,
 the argument guards of scripts/bench_flows.py and
 scripts/submit_pipeline.py, the deployment job's crash and resume, and
-the library names the benchmark harness imports."""
+the library names the benchmark harness imports and the members its
+layer probe reads."""
 
 import argparse
 import ast
@@ -73,6 +74,40 @@ def test_benchmark_harness_imports_resolve():
     assert len(paths) > 2
     errors = {path: _harness_call_errors(path) for path in paths}
     assert not any(errors.values()), errors
+
+
+def test_benchmark_layer_probe_members_resolve():
+    """The import check above sees names and keywords only; the layer
+    probe (perfbench/layers.py::_vector_probe) also reads members of
+    the builder, the forest and a planned evaluator. Plan one on a tiny
+    forest and read each of them the way the probe does. Needs no Spark
+    session."""
+    import pickle
+
+    from a_tree_spark.engine.matcher import choose_access_pruning
+    from a_tree_spark.expr import AttributeDefinition as A, ForestBuilder
+    from a_tree_spark.expr.vector import BatchEvaluator
+    from tests.conftest import event_batch
+
+    builder = ForestBuilder([A.integer("x"), A.string_list("tags")])
+    builder.insert(1, "x > 2 and tags one of ['a']")
+    builder.insert(2, "x > 2 and tags one of ['a']")
+    builder.insert(3, "tags is empty or x = 1")
+    assert builder.nodes_created_total == 6
+    forest = builder.compile()
+    assert forest.num_nodes == 6
+
+    ev = BatchEvaluator(forest)
+    ev.access_pruning = choose_access_pruning(ev)
+    assert len(pickle.dumps(ev)) > 0
+    assert len(ev.sub_ids) == 3 and len(ev.root_nodes) == 2
+    batch = event_batch(builder.attributes, [
+        {"x": 3, "tags": ["a"]}, {"x": 1, "tags": []}, {"x": None, "tags": None},
+    ])
+    cache = ev.arrow_columns(batch)
+    rows, root_idx = ev.evaluate_prepared_roots(cache, batch.num_rows)
+    rows, subs = ev.expand_roots(rows, root_idx)
+    assert sorted(zip(rows.tolist(), subs.tolist())) == [(0, 1), (0, 2), (1, 3)]
 
 
 def test_ab_gain_needs_nine_tenths_of_pairs_and_gap_beyond_parent_iqr():

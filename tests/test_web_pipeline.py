@@ -801,7 +801,9 @@ def test_fused_rejects_unknown_emit(spark):
 def test_fused_group_contract(spark):
     """``group="unit_id"`` partials summed over units equal the
     ungrouped partials row for row; a float or string group column
-    raises at plan time."""
+    raises at plan time, and a null group value fails the job instead
+    of emitting a partial row: a whole null column, and one null page
+    among valid units."""
     from pyspark.sql import functions as F
 
     from a_tree_spark.web.pipeline import fused_match_pages
@@ -823,9 +825,14 @@ def test_fused_group_contract(spark):
     for bad in (F.col("unit_id").cast("double"), F.col("unit_id").cast("string")):
         with pytest.raises(TypeError, match="integer column"):
             fused_match_pages(pages.withColumn("unit_id", bad), forest, group="unit_id")
-    nulls = pages.withColumn("unit_id", F.lit(None).cast("int"))
-    with pytest.raises(Exception, match="nulls"):
-        fused_match_pages(nulls, forest, group="unit_id").collect()
+    first_page = F.monotonically_increasing_id() == 0
+    for null in (F.lit(True), first_page):
+        nulls = pages.withColumn(
+            "unit_id", F.when(null, F.lit(None)).otherwise(F.col("unit_id"))
+        )
+        assert nulls.where(F.col("unit_id").isNotNull()).count() < N_PAGES
+        with pytest.raises(Exception, match="nulls"):
+            fused_match_pages(nulls, forest, group="unit_id").collect()
 
 
 def test_fused_kernel_null_paths_equal_composable_and_oracle(spark):
