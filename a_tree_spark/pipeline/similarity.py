@@ -790,8 +790,9 @@ def ivf_topk(
     embedding table (round 2 rode every vector through a
     Window.partitionBy exchange). Probes come from the same codebook
     driver-side; the only pre-rerank data movement is broadcasting
-    N_QUERIES * sqrt(k) probe rows into the assigned scan. ``n_rows`` skips the plan-time count
-    job when the caller knows the corpus size (see ``lsh_topk``).
+    N_QUERIES * sqrt(k) probe rows into the assigned scan. ``n_rows``
+    skips the plan-time count job when the caller knows the corpus size
+    (see ``lsh_topk``).
 
     ``codebook`` (a float64 (k, dim) numpy matrix, e.g. from
     ``train_ivf_codebook``) replaces the deterministic-subset quantizer

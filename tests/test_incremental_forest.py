@@ -288,9 +288,9 @@ _EDGE_EVENTS = [
 class ForestBuilderMachine(RuleBasedStateMachine):
     """Random insert / re-insert / delete / compile runs on one live
     ForestBuilder. After every step the refcounts, the key map and the
-    leaf index are exact; after every compile the snapshot equals a cold compile of the
-    live expressions, and the planned evaluator equals the exact oracle
-    row by row."""
+    leaf index are exact; after every compile the snapshot equals a
+    cold compile of the live expressions, and the planned evaluator
+    equals the exact oracle row by row."""
 
     def __init__(self):
         super().__init__()
