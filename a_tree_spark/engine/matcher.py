@@ -34,10 +34,11 @@ from __future__ import annotations
 
 import dataclasses
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DecimalType, IntegralType
 
-from ..expr.compiler import CompiledForest, ForestBuilder
+from ..expr.compiler import AND, LEAF, CompiledForest, ForestBuilder
 from ..expr.schema import AttributeKind, AttributeTable
 from ..expr.sql import leaf_to_sql
 from ..expr.vector import (
@@ -217,39 +218,39 @@ def _match_codegen(
 
     # Reconstruct each subscription's expression from the DAG by node
     # (sub roots can be interior nodes); render SQL bottom-up.
+    kinds = forest.node_kind.tolist()
+    lefts = forest.node_left.tolist()
+    rights = forest.node_right.tolist()
     sql_cache: dict[int, str] = {}
 
     def node_sql(idx: int) -> str:
         cached = sql_cache.get(idx)
         if cached is not None:
             return cached
-        kind = forest.node_kind[idx]
-        if kind == 0:  # LEAF
-            text = to_sql_leaf(forest, idx)
+        if kinds[idx] == LEAF:
+            leaf = forest.leaves[lefts[idx]]
+            if leaf.attr_name in rounded:
+                leaf = dataclasses.replace(
+                    leaf, attr_name=rounded[leaf.attr_name]
+                )
+            text = leaf_to_sql(leaf, dialect="spark")
         else:
-            connective = "AND" if kind == 1 else "OR"
+            connective = "AND" if kinds[idx] == AND else "OR"
             text = (
-                f"({node_sql(forest.node_left[idx])} {connective} "
-                f"{node_sql(forest.node_right[idx])})"
+                f"({node_sql(lefts[idx])} {connective} "
+                f"{node_sql(rights[idx])})"
             )
         sql_cache[idx] = text
         return text
 
-    def to_sql_leaf(forest: CompiledForest, idx: int) -> str:
-        leaf = forest.leaves[forest.node_left[idx]]
-        if leaf.attr_name in rounded:
-            leaf = dataclasses.replace(leaf, attr_name=rounded[leaf.attr_name])
-        return leaf_to_sql(leaf, dialect="spark")
-
-    hits = []
-    for node_idx, subs in sorted(forest.node_subs.items()):
-        for sub in subs:
-            hits.append(
-                F.when(
-                    F.expr(node_sql(node_idx)),
-                    F.lit(sub).cast("bigint"),
-                )
-            )
+    # root order, then insertion order within a root
+    by_root = np.argsort(forest.sub_roots, kind="stable")
+    hits = [
+        F.when(F.expr(node_sql(root)), F.lit(sub).cast("bigint"))
+        for root, sub in zip(
+            forest.sub_roots[by_root].tolist(), forest.sub_ids[by_root].tolist()
+        )
+    ]
     carry = carry_cols or []
     if not hits:
         return events.select(

@@ -11,15 +11,17 @@ forest, is what ships to executors:
   per Arrow batch as a numpy column — the vectorized generalization of
   the reference's "evaluate each shared node once per event"
   (src/lib.rs:72-75).
-- ``node_kind/left/right``: interior AND/OR nodes in topological
-  (children-first) order; Kleene AND/OR become elementwise min/max over
-  tri-state codes FALSE=0 < UNKNOWN=1 < TRUE=2, exactly the reference's
-  success/failed/evaluated bitset triple (src/evaluation.rs:1-64)
-  generalized to row vectors.
-- ``node_subs``: node index -> subscription ids. Nodes can carry ids even
-  when interior (an expression may equal a shared subexpression,
-  src/atree.rs:111-119). Duplicate expressions under different ids share
-  one node (src/atree.rs:1001-1014).
+- ``node_kind/left/right/level``: int64 arrays over the nodes, in
+  topological (children-first) order; Kleene AND/OR become elementwise
+  min/max over tri-state codes FALSE=0 < UNKNOWN=1 < TRUE=2, exactly
+  the reference's success/failed/evaluated bitset triple
+  (src/evaluation.rs:1-64) generalized to row vectors.
+- ``sub_ids`` / ``sub_roots``: one entry per live subscription, in
+  insertion order: its id and its root node. A root can be interior (an
+  expression may equal a shared subexpression, src/atree.rs:111-119),
+  and duplicate expressions under different ids share one root
+  (src/atree.rs:1001-1014). The planner groups subscriptions by root
+  with one stable argsort.
 
 Node identity. The reference finds a shared node by a commutative 64-bit
 hash of the subtree (src/ast.rs:30-54) and orders children cheap-first
@@ -39,10 +41,12 @@ walks only the new expression (shared subtrees hit the key map and
 stop); delete decrements use counts and tombstones nodes that reach zero,
 cascading into children exactly like the reference's
 ``decrement_use_count``. Each fact is stored once: a node is live while
-its use count is above zero, and its key is read back from the kind and
-child arrays. ``compile()`` then snapshots the arrays — after
-inserts that is a plain shallow copy, after deletes a numpy index
-compaction — so a churning subscription set pays O(changed expression)
+its use count is above zero, its key is read back from the kind and
+child arrays, and a subscription's root is ``_sub_root`` alone (the
+root -> subscribers grouping is the planner's argsort).
+``compile()`` then snapshots the arrays as numpy — after inserts that
+is one copy per array, after deletes a numpy index compaction first —
+so a churning subscription set pays O(changed expression)
 per mutation instead of the O(total) reparse of a cold ``compile_forest``
 (~0.8 s at 1e5 subscriptions; the snapshot is ~ms).
 """
@@ -64,11 +68,12 @@ LEAF, AND, OR = 0, 1, 2
 class CompiledForest:
     attributes: AttributeTable
     leaves: list[Predicate]
-    node_kind: list[int]          # LEAF/AND/OR per node
-    node_left: list[int]          # leaf: index into leaves; and/or: lower child idx
-    node_right: list[int]         # leaf: -1; and/or: higher child idx
-    node_level: list[int]         # leaf: 0; interior: 1 + max(children)
-    node_subs: dict[int, list]    # node idx -> subscription ids
+    node_kind: np.ndarray         # int64 LEAF/AND/OR per node
+    node_left: np.ndarray         # leaf: index into leaves; and/or: lower child idx
+    node_right: np.ndarray        # leaf: -1; and/or: higher child idx
+    node_level: np.ndarray        # leaf: 0; interior: 1 + max(children)
+    sub_ids: np.ndarray           # live subscription ids, insertion order
+    sub_roots: np.ndarray         # int64 root node of each sub_ids entry
 
     @property
     def num_nodes(self) -> int:
@@ -77,22 +82,28 @@ class CompiledForest:
     def to_graphviz(self) -> str:
         """DOT dump of the compiled DAG (reference to_graphviz,
         src/atree.rs:341-427 — debug parity, not byte parity)."""
+        subs: dict[int, list] = {}
+        for sub, root in zip(self.sub_ids.tolist(), self.sub_roots.tolist()):
+            subs.setdefault(root, []).append(sub)
         lines = ["digraph forest {"]
-        for i in range(self.num_nodes):
-            if self.node_kind[i] == LEAF:
-                leaf = self.leaves[self.node_left[i]]
+        nodes = zip(
+            self.node_kind.tolist(), self.node_left.tolist(),
+            self.node_right.tolist(),
+        )
+        for i, (kind, left, right) in enumerate(nodes):
+            if kind == LEAF:
+                leaf = self.leaves[left]
                 label = f"{leaf.attr_name} {leaf.op.value}"
                 if leaf.operand is not None:
                     label += f" {leaf.operand!r}"
             else:
-                label = "and" if self.node_kind[i] == AND else "or"
-            subs = self.node_subs.get(i)
-            if subs:
-                label += f"\\nsubs={sorted(subs)}"
+                label = "and" if kind == AND else "or"
+            if i in subs:
+                label += f"\\nsubs={sorted(subs[i])}"
             lines.append(f'  n{i} [label="{label}"];')
-            if self.node_kind[i] != LEAF:
-                lines.append(f"  n{i} -> n{self.node_left[i]};")
-                lines.append(f"  n{i} -> n{self.node_right[i]};")
+            if kind != LEAF:
+                lines.append(f"  n{i} -> n{left};")
+                lines.append(f"  n{i} -> n{right};")
         lines.append("}")
         return "\n".join(lines)
 
@@ -123,7 +134,6 @@ class ForestBuilder:
         self._level: list[int] = []
         self._use_count: list[int] = []              # live while > 0
         self._node_by_key: dict[tuple, int] = {}     # key -> live node idx
-        self._node_subs: dict[int, list] = {}        # node idx -> sub ids
         self._sub_root: dict = {}                    # sub id -> node idx
         self._n_dead = 0
         self._forest: CompiledForest | None = None
@@ -159,9 +169,7 @@ class ForestBuilder:
             )
         if sub_id in self._sub_root:
             self.delete(sub_id)
-        root_idx = self._insert_node(expression)
-        self._node_subs.setdefault(root_idx, []).append(sub_id)
-        self._sub_root[sub_id] = root_idx
+        self._sub_root[sub_id] = self._insert_node(expression)
         self._forest = None
 
     def delete(self, sub_id) -> None:
@@ -173,30 +181,33 @@ class ForestBuilder:
         root_idx = self._sub_root.pop(sub_id, None)
         if root_idx is None:
             return
-        subs = self._node_subs.get(root_idx)
-        if subs is not None:
-            subs.remove(sub_id)
-            if not subs:
-                del self._node_subs[root_idx]
         self._release(root_idx)
         self._forest = None
 
     def compile(self) -> CompiledForest:
-        """Snapshot the live arena as a CompiledForest. After inserts
-        this is a shallow copy (~ms at 1e5 nodes); pending tombstones
-        first compact via numpy index remaps — still array work, never
-        a reparse. The snapshot is independent of later mutations."""
+        """Snapshot the live arena as a CompiledForest of int64 arrays.
+        After inserts this is one array copy per field (~ms at 1e5
+        nodes); pending tombstones first compact via numpy index remaps
+        — still array work, never a reparse. The snapshot is
+        independent of later mutations."""
         if self._forest is None:
             if self._n_dead:
                 self._compact()
+            sub_ids = list(self._sub_root)
             self._forest = CompiledForest(
                 attributes=self.attributes,
                 leaves=list(self._leaves),
-                node_kind=list(self._kind),
-                node_left=list(self._left),
-                node_right=list(self._right),
-                node_level=list(self._level),
-                node_subs={k: list(v) for k, v in self._node_subs.items()},
+                node_kind=np.array(self._kind, dtype=np.int64),
+                node_left=np.array(self._left, dtype=np.int64),
+                node_right=np.array(self._right, dtype=np.int64),
+                node_level=np.array(self._level, dtype=np.int64),
+                sub_ids=(
+                    np.array(sub_ids) if sub_ids
+                    else np.empty(0, dtype=np.int64)
+                ),
+                sub_roots=np.fromiter(
+                    self._sub_root.values(), np.int64, len(sub_ids)
+                ),
             )
         return self._forest
 
@@ -298,7 +309,6 @@ class ForestBuilder:
             k: i for i, k in enumerate(zip(self._kind, self._left, self._right))
         }
         remap = new_idx.tolist()
-        self._node_subs = {remap[i]: subs for i, subs in self._node_subs.items()}
         self._sub_root = {s: remap[i] for s, i in self._sub_root.items()}
         self._leaves = [self._leaves[i] for i in order.tolist()]
         leaf_remap = leaf_remap.tolist()

@@ -87,21 +87,25 @@ def evaluate_event(forest: CompiledForest, event: dict) -> list:
     """Return the sorted list of subscription ids whose expression is
     Kleene-TRUE on the event (reference search, src/atree.rs:255-311;
     match condition = Some(true), src/atree.rs:697-706)."""
-    values = [None] * forest.num_nodes
+    values = []
     names = forest.attributes.names()
-    for i in range(forest.num_nodes):
-        if forest.node_kind[i] == LEAF:
-            leaf = forest.leaves[forest.node_left[i]]
-            values[i] = evaluate_leaf(leaf, event.get(names[leaf.attr_index]))
-        elif forest.node_kind[i] == AND:
-            values[i] = min(values[forest.node_left[i]], values[forest.node_right[i]])
+    nodes = zip(
+        forest.node_kind.tolist(), forest.node_left.tolist(),
+        forest.node_right.tolist(),
+    )
+    for kind, left, right in nodes:
+        if kind == LEAF:
+            leaf = forest.leaves[left]
+            values.append(evaluate_leaf(leaf, event.get(names[leaf.attr_index])))
+        elif kind == AND:
+            values.append(min(values[left], values[right]))
         else:
-            values[i] = max(values[forest.node_left[i]], values[forest.node_right[i]])
-    matches = []
-    for node_idx, subs in forest.node_subs.items():
-        if values[node_idx] == TRUE:
-            matches.extend(subs)
-    return sorted(matches)
+            values.append(max(values[left], values[right]))
+    return sorted(
+        sub
+        for sub, root in zip(forest.sub_ids.tolist(), forest.sub_roots.tolist())
+        if values[root] == TRUE
+    )
 
 
 _SCALAR_KINDS = {

@@ -23,13 +23,12 @@ Execution strategy (SURVEY.md §4.8), measured on 32 concurrent workers:
   vectorized analog of the reference's access-predicate work-list
   (src/atree.rs:530-591): a leaf costs the occurrences of its listed
   values, not a pass over every row, so no leaf is deferred and every
-  forest runs one dense sweep. Scalar strings encode once per batch,
-  in Arrow, by per-batch dictionary (only unique strings cross into
-  Python); list elements, string or integer, flatten once per batch
-  into row ids and int64 vids of the group's vocabulary
-  (BatchEvaluator.list_column: none cross). Only null / empty checks,
-  boolean leaves, range comparisons and FLOAT (= / <>) evaluate per
-  leaf;
+  forest runs one dense sweep. A grouped column, a scalar string or
+  integer column or a list's flattened elements, codes once per batch
+  into int64 vids of its group's typed Arrow value set by one
+  ``pc.index_in`` (``_MemberGroup.vids``), so no value crosses into
+  Python. Only null / empty checks, boolean leaves, range comparisons
+  and FLOAT (= / <>) evaluate per leaf;
 - the interior sweep runs on PACKED bits (np.packbits) level by level
   with fancy-indexed bitwise AND/OR into persistent reusable buffers:
   packing cut memory traffic 8x and buffer reuse removed an
@@ -52,11 +51,12 @@ from __future__ import annotations
 import bisect
 from decimal import Decimal
 from fractions import Fraction
+from itertools import chain
 
 import numpy as np
 
 from .ast import Op
-from .compiler import AND, LEAF, CompiledForest
+from .compiler import AND, CompiledForest
 
 FALSE, UNKNOWN, TRUE = np.uint8(0), np.uint8(1), np.uint8(2)
 
@@ -73,25 +73,22 @@ def _true_mask(result: np.ndarray, null_mask: np.ndarray) -> np.ndarray:
 
 
 class _ScalarColumn:
-    """Null-separated numpy view of one scalar attribute column.
-
-    Non-string columns carry int64 or bool ``values``. String columns
-    carry an Arrow dictionary encoding instead: ``codes``, int64 codes
-    (-1 = null) into the batch-local ``uniques`` list. The member group
-    then maps the few uniques to its vids with ONE tiny python lookup
-    and gathers through the int64 codes, instead of object-array
-    comparisons per leaf (profiled: object-dtype EQ/isin/map were the
-    dense sweep's largest line items — guide §4.2, hand batches to
-    vectorized kernels, encode strings once).
+    """Null-separated numpy view of one scalar attribute column: the
+    per-row null ``mask``; int64 or bool ``values`` for the leaves that
+    compare values (None for a string column, which no such leaf
+    reads); and ``vids``, the column coded into its attribute's member
+    group value set (``_MemberGroup.vids``; None when no group reads
+    the attribute). Strings never become Python or object-dtype values
+    (profiled: object-dtype EQ/isin/map were the dense sweep's largest
+    line items — guide §4.2, hand batches to vectorized kernels).
     """
 
-    __slots__ = ("mask", "values", "codes", "uniques")
+    __slots__ = ("mask", "values", "vids")
 
-    def __init__(self, mask: np.ndarray, values, codes=None, uniques=None):
+    def __init__(self, mask: np.ndarray, values, vids=None):
         self.mask = mask
         self.values = values
-        self.codes = codes
-        self.uniques = uniques
+        self.vids = vids
 
 
 class _ListColumn:
@@ -100,8 +97,8 @@ class _ListColumn:
     per-row null ``mask`` and ``lengths``, and the elements aligned with
     ``row_ids``.
 
-    Elements, string or integer, arrive only as int64 ``vids`` of the
-    attribute's member-group vocabulary (-1 = in no literal list, or
+    Elements, string or integer, arrive only as int64 ``vids`` in the
+    attribute's member-group value set (-1 = in no literal list, or
     null), so no element becomes a Python object or a float. ``vids``
     stays None when no leaf reads the elements."""
 
@@ -169,18 +166,22 @@ class _MemberGroup:
     the ``one of`` / ``none of`` / ``all of`` / ``not all of`` leaves of
     a list. Every such leaf joins its attribute's group, however few.
 
-    vocab: literal value -> dense vid; CSR (vid_offsets, vid_leaves) maps
-    each vid to the group-leaf positions whose literal list contains it.
-    Evaluation gathers, for each batch value occurrence, one (leaf, row)
-    pair per leaf that lists the value — the batch analog of the
-    reference registering each predicate once in a global work-list and
-    evaluating it once per event (src/atree.rs:558-591). An ``in`` /
+    ``value_set``: the group's distinct literals as one typed Arrow
+    array (string, or int64 for an integer attribute), in
+    first-occurrence order, whose positions are the vids; CSR
+    (vid_offsets, vid_leaves) maps each vid to the group-leaf positions
+    whose literal list contains it. An integer literal outside int64 is
+    left out: it can never equal a value. Evaluation gathers, for each
+    batch value occurrence, one (leaf, row) pair per leaf that lists
+    the value — the batch analog of the reference registering each
+    predicate once in a global work-list and evaluating it once per
+    event (src/atree.rs:558-591). An ``in`` /
     ``one of`` leaf is TRUE on the rows it has a pair for. An ``all of``
     leaf is TRUE where its pair count equals the row's list length:
     every element is a member. Pairs count once per element occurrence
     (a vid maps to a leaf at most once), so ``['a', 'a']`` is within
     ``all of ['a']``; an empty list has no elements and is TRUE, and a
-    null element or one outside the vocabulary has no pair, so it is
+    null element or one outside the value set has no pair, so it is
     never a member. The negated ops flip the result; a null row is
     never TRUE.
 
@@ -193,67 +194,76 @@ class _MemberGroup:
     """
 
     __slots__ = (
-        "attr_index", "is_list", "leaf_idxs", "vocab", "vid_offsets",
+        "attr_index", "is_list", "leaf_idxs", "value_set", "vid_offsets",
         "vid_leaves", "n_leaves", "subset_lo", "subset_hi", "negated_lo",
-        "row_lo", "keys", "key_vids",
+        "row_lo",
     )
 
-    def __init__(self, forest, attr_index: int, leaf_idxs: list[int]):
+    def __init__(self, forest, attr_index: int, ranked: list[tuple[int, int]]):
+        """``ranked``: the group's (``_GROUP_RANK``, leaf index) pairs."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from .schema import AttributeKind
+
+        ranks, self.leaf_idxs = map(list, zip(*sorted(ranked)))
+        kind = forest.leaves[self.leaf_idxs[0]].attr_kind
         self.attr_index = attr_index
-        self.is_list = forest.leaves[leaf_idxs[0]].attr_kind.is_list
-        rank = {i: _GROUP_RANK[forest.leaves[i].op] for i in leaf_idxs}
-        self.leaf_idxs = sorted(leaf_idxs, key=rank.__getitem__)
-        self.n_leaves = len(leaf_idxs)
-        ranks = [rank[i] for i in self.leaf_idxs]
+        self.is_list = kind.is_list
+        self.n_leaves = len(self.leaf_idxs)
         self.subset_lo = bisect.bisect_left(ranks, 1)
         self.negated_lo = bisect.bisect_left(ranks, 2)
         self.subset_hi = bisect.bisect_left(ranks, 3)
         self.row_lo = 0  # set by the evaluator's leaf-row layout
         operands = [forest.leaves[i].operand for i in self.leaf_idxs]
         operands = [o if isinstance(o, tuple) else (o,) for o in operands]
-        values = [v for operand in operands for v in operand]
-        # vids in first-occurrence order
-        vocab = {v: vid for vid, v in enumerate(dict.fromkeys(values))}
-        vids = np.fromiter(map(vocab.__getitem__, values), np.int64, len(values))
+        values = list(chain.from_iterable(operands))
         positions = np.repeat(
             np.arange(self.n_leaves, dtype=np.int64),
             [len(operand) for operand in operands],
         )
-        # CSR by vid, leaves ascending; one entry per (vid, leaf) even
-        # for a repeated literal: the subset count relies on it
-        order = np.lexsort((positions, vids))
-        vids, positions = vids[order], positions[order]
+        if kind in (AttributeKind.STRING, AttributeKind.STRING_LIST):
+            value_type = pa.string()
+        else:
+            value_type = pa.int64()
+            fits = np.array(
+                [_INT64_MIN <= v <= _INT64_MAX for v in values], dtype=bool
+            )
+            values = [v for v, ok in zip(values, fits) if ok]
+            positions = positions[fits]
+        encoded = pc.dictionary_encode(pa.array(values, type=value_type))
+        self.value_set = encoded.dictionary
+        # CSR by vid, leaves ascending (positions ascend already, and
+        # Arrow's sort is stable); one entry per (vid, leaf) even for a
+        # repeated literal: the subset count relies on it
+        order = pc.array_sort_indices(encoded.indices).to_numpy()
+        vids = encoded.indices.to_numpy().astype(np.int64)[order]
+        positions = positions[order]
         keep = np.ones(len(vids), dtype=bool)
         keep[1:] = (vids[1:] != vids[:-1]) | (positions[1:] != positions[:-1])
         self.vid_leaves = positions[keep]
-        self.vid_offsets = np.concatenate(
-            [[0], np.cumsum(np.bincount(vids[keep], minlength=len(vocab)))]
-        )
-        self.vocab = vocab
-        # an integer scalar's literals sorted once, for _codes; one
-        # outside int64 can never equal a value, so it is left out
-        keys = [] if self.is_list else sorted(
-            v for v in vocab
-            if isinstance(v, int) and _INT64_MIN <= v <= _INT64_MAX
-        )
-        self.keys = np.array(keys, dtype=np.int64)
-        self.key_vids = np.array([vocab[k] for k in keys], dtype=np.int64)
+        self.vid_offsets = np.concatenate([
+            [0], np.cumsum(np.bincount(vids[keep], minlength=len(self.value_set)))
+        ])
 
-    def _codes(self, values: np.ndarray) -> np.ndarray:
-        """Map scalar integer values -> vids (-1 = in no literal list)
-        by searchsorted on the sorted keys (strings and list elements
-        arrive pre-coded)."""
-        if len(self.keys) == 0:
-            return np.full(len(values), -1, dtype=np.int64)
-        pos = np.minimum(np.searchsorted(self.keys, values), len(self.keys) - 1)
-        return np.where(self.keys[pos] == values, self.key_vids[pos], -1)
+    def vids(self, values) -> np.ndarray:
+        """int64 vid of every value of an Arrow array in ``value_set``
+        (-1 = in no literal list, or null): one ``pc.index_in``, for a
+        scalar column and a list's flattened elements alike. An array
+        typed otherwise than the set (an int32 or int16 column, a
+        ``large_string`` one, a ``list<null>``'s elements) is cast to
+        the set's type first."""
+        import pyarrow.compute as pc
 
-    def map_unique(self, unique_values: list) -> np.ndarray:
-        """vocab lookup for a (small) unique-value dictionary; -1 = not
-        in any literal list. String columns arrive as Arrow dictionary
-        indices, so only UNIQUE strings ever cross into Python."""
-        return np.array(
-            [self.vocab.get(u, -1) for u in unique_values], dtype=np.int64
+        if values.type != self.value_set.type:
+            values = values.cast(self.value_set.type)
+        return (
+            pc.fill_null(
+                pc.index_in(values, value_set=self.value_set, skip_nulls=True),
+                -1,
+            )
+            .to_numpy(zero_copy_only=False)
+            .astype(np.int64)
         )
 
     def evaluate_into(self, col, n: int, block: np.ndarray) -> None:
@@ -261,18 +271,11 @@ class _MemberGroup:
         ``block``, its (n_leaves, n) row range of the leaf matrix. The
         block is C-contiguous, so its flat view takes the pairs as one
         1-D scatter."""
-        lengths = None
         if self.is_list:
-            # elements arrive pre-coded (-1 = no vocab hit)
-            rows, lengths, vids = col.row_ids, col.lengths, col.vids
-        elif col.codes is not None:
-            # dictionary path: vocab lookup over the few uniques, gather
-            # through the int codes (trailing -1 = null)
-            rows = np.arange(n)
-            vids = np.append(self.map_unique(col.uniques), -1)[col.codes]
+            rows, lengths = col.row_ids, col.lengths
         else:
-            rows = np.arange(n)
-            vids = self._codes(col.values)
+            rows, lengths = np.arange(n), None
+        vids = col.vids
         block.fill(False)
         flat = block.reshape(-1)
         valid = vids >= 0
@@ -354,9 +357,9 @@ class BatchEvaluator:
     It keeps only what evaluation reads, not the forest it was planned
     from: the leaf and node counts, the member groups' indexes, the
     generic leaves' predicates, the columns it ingests, and the sweep
-    and root layouts. The per-process caches (sweep buffers, Arrow value
-    sets) are left out of the pickle, so a plan pickles to the same
-    bytes before and after it evaluates a batch.
+    and root layouts. The per-process sweep buffers are left out of the
+    pickle, so a plan pickles to the same bytes before and after it
+    evaluates a batch.
     """
 
     def __init__(self, forest: CompiledForest):
@@ -365,13 +368,12 @@ class BatchEvaluator:
         self.memory_budget = adaptive_budget(self.num_nodes)
         leaf_row = self._plan_leaf_groups(forest)
         self._plan_columns(forest)
-        perm, roots = self._plan_levels(forest, leaf_row)
-        self._plan_subscribers(forest, perm, roots)
+        perm = self._plan_levels(forest, leaf_row)
+        self._plan_subscribers(forest, perm)
 
     def __getstate__(self) -> dict:
         state = self.__dict__.copy()
         state.pop("_buf_cache", None)  # per-process, rebuilt on demand
-        state.pop("_value_set_cache", None)
         return state
 
     # ------------------------------------------------------------ planning
@@ -400,23 +402,24 @@ class BatchEvaluator:
 
         Returns the leaf-matrix row of each leaf index.
         """
-        member_groups: dict[int, list[int]] = {}
+        member_groups: dict[int, list[tuple[int, int]]] = {}
         generic: list[int] = []
         for leaf_idx, leaf in enumerate(forest.leaves):
-            if leaf.op in _GROUP_RANK and not isinstance(leaf.operand, Decimal):
-                member_groups.setdefault(leaf.attr_index, []).append(leaf_idx)
+            rank = _GROUP_RANK.get(leaf.op)
+            if rank is not None and not isinstance(leaf.operand, Decimal):
+                member_groups.setdefault(leaf.attr_index, []).append(
+                    (rank, leaf_idx)
+                )
             else:
                 generic.append(leaf_idx)
         self.member_groups = [
-            _MemberGroup(forest, attr_index, leaf_idxs)
-            for attr_index, leaf_idxs in member_groups.items()
+            _MemberGroup(forest, attr_index, ranked)
+            for attr_index, ranked in member_groups.items()
         ]
         self.generic_leaves = [forest.leaves[i] for i in generic]
-        # a list attribute's elements encode into its group's vocab
-        # (list_column), so their codes are the group's vids
-        self._list_groups = {
-            g.attr_index: g for g in self.member_groups if g.is_list
-        }
+        # arrow_columns codes a grouped attribute's column into its
+        # group's value set
+        self._group_of = {g.attr_index: g for g in self.member_groups}
         # leaf-row layout of the per-batch leaf matrix: each member
         # group's leaves take one contiguous block of rows, in the
         # group's own order, so a group writes its block in place (no
@@ -445,7 +448,7 @@ class BatchEvaluator:
 
     def _plan_levels(
         self, forest: CompiledForest, leaf_row: np.ndarray
-    ) -> tuple[np.ndarray, list[int]]:
+    ) -> np.ndarray:
         """Level-contiguous node layout: the evaluator renumbers nodes
         (``perm``: forest id -> sweep slot) so that the leaf-node block
         and every (height, kind) level group occupy CONTIGUOUS slots in
@@ -460,91 +463,65 @@ class BatchEvaluator:
           into a separate matched buffer (2 x 41 MB per 14k-row chunk at
           1e5 subs) disappears entirely.
 
-        The ordering is deterministic (sorted levels, roots-first then
-        forest id). Root ids in the fused kernel's partials, and the
-        n_subs the kernel reads for them from ``root_sub_counts``, index
-        this order, from the one plan per snapshot (planned_evaluator).
+        The slot order is one ``np.lexsort`` by (level, kind, not root,
+        forest id): leaves are level 0 and kind 0, so their block comes
+        first, and the sort is stable, so ties keep forest-id order. The
+        blocks are the runs of equal (level, kind), and each block's
+        children are one gather through ``perm``. Root ids in the fused
+        kernel's partials, and the n_subs the kernel reads for them from
+        ``root_sub_counts``, index this order, from the one plan per
+        snapshot (planned_evaluator).
 
-        Returns ``perm`` and the roots' forest ids in slot order."""
-        is_root = set(forest.node_subs.keys())
+        Returns ``perm``."""
+        n = forest.num_nodes
+        is_root = np.zeros(n, dtype=bool)
+        is_root[forest.sub_roots] = True
+        order = np.lexsort((~is_root, forest.node_kind, forest.node_level))
+        perm = np.empty(n, dtype=np.int64)
+        perm[order] = np.arange(n, dtype=np.int64)
 
-        def block_order(nodes: list[int]) -> list[int]:
-            return sorted(nodes, key=lambda i: (i not in is_root, i))
-
-        by_level: dict[int, dict[int, list[int]]] = {}
-        leaf_nodes = []
-        for i in range(forest.num_nodes):
-            kind = forest.node_kind[i]
-            if kind == LEAF:
-                leaf_nodes.append(i)
-            else:
-                by_level.setdefault(forest.node_level[i], {}).setdefault(
-                    kind, []
-                ).append(i)
-
-        leaf_nodes = block_order(leaf_nodes)
-        new_order = list(leaf_nodes)
-        root_segments: list[tuple[int, int]] = []
-        n_leaf_roots = sum(1 for i in leaf_nodes if i in is_root)
-        if n_leaf_roots:
-            root_segments.append((0, n_leaf_roots))
-        level_blocks: list[tuple[int, int, int, list[int]]] = []
-        for level in sorted(by_level):
-            for kind in sorted(by_level[level]):
-                nodes = block_order(by_level[level][kind])
-                lo = len(new_order)
-                new_order.extend(nodes)
-                level_blocks.append((kind, lo, len(new_order), nodes))
-                k_roots = sum(1 for i in nodes if i in is_root)
-                if k_roots:
-                    root_segments.append((lo, k_roots))
-
-        perm = np.empty(max(forest.num_nodes, 1), dtype=np.int64)
-        perm[np.asarray(new_order, dtype=np.int64)] = np.arange(
-            len(new_order), dtype=np.int64
-        )
-        self.root_segments = root_segments
-
-        self.levels: list[tuple[int, int, int, np.ndarray, np.ndarray]] = []
-        for kind, lo, hi, nodes in level_blocks:
-            left = perm[np.array([forest.node_left[i] for i in nodes], dtype=np.int64)]
-            right = perm[np.array([forest.node_right[i] for i in nodes], dtype=np.int64)]
-            self.levels.append((kind, lo, hi, left, right))
-        self.n_leaf_nodes = len(leaf_nodes)
-        # leaf-matrix row of each leaf node (_plan_leaf_groups layout)
-        self.leaf_of_node = leaf_row[
-            np.array([forest.node_left[i] for i in leaf_nodes], dtype=np.int64)
+        level, kind = forest.node_level[order], forest.node_kind[order]
+        cut = np.flatnonzero(
+            (level[1:] != level[:-1]) | (kind[1:] != kind[:-1])
+        ) + 1
+        starts, ends = np.r_[0, cut], np.r_[cut, n]
+        roots_before = np.r_[0, np.cumsum(is_root[order])]
+        n_roots = roots_before[ends] - roots_before[starts]
+        self.root_segments = [
+            (lo, k) for lo, k in zip(starts.tolist(), n_roots.tolist()) if k
         ]
-        # roots in slot order — the canonical root indexing everywhere
-        return perm, [i for i in new_order if i in is_root]
 
-    def _plan_subscribers(
-        self, forest: CompiledForest, perm: np.ndarray, roots: list[int]
-    ) -> None:
+        # the first block is the leaves' (empty only in an empty forest)
+        n_leaf = self.n_leaf_nodes = int(ends[0])
+        # leaf-matrix row of each leaf node (_plan_leaf_groups layout)
+        self.leaf_of_node = leaf_row[forest.node_left[order[:n_leaf]]]
+        interior = order[n_leaf:]
+        left = perm[forest.node_left[interior]]
+        right = perm[forest.node_right[interior]]
+        self.levels: list[tuple[int, int, int, np.ndarray, np.ndarray]] = [
+            (int(kind[lo]), lo, hi, left[lo - n_leaf : hi - n_leaf],
+             right[lo - n_leaf : hi - n_leaf])
+            for lo, hi in zip(starts[1:].tolist(), ends[1:].tolist())
+        ]
+        return perm
+
+    def _plan_subscribers(self, forest: CompiledForest, perm: np.ndarray) -> None:
         """CSR of DISTINCT expression roots -> subscriber ids. CSE means
         many subscriptions share one root (4.3x on the templated 100k
         workload), so match decode runs per distinct root and expands to
         sub ids afterwards — round 1 gathered and bit-decoded one node
         row PER SUBSCRIPTION, which was the single largest cost at 100k
-        subs (~45% of the evaluation). Root order follows the sweep
-        slot order from _plan_levels so decode segments index straight
-        into this CSR."""
-        root_nodes = []
-        sub_chunks = []
-        counts = []
-        for node_idx in roots:
-            subs = forest.node_subs[node_idx]
-            root_nodes.append(perm[node_idx])
-            sub_chunks.append(np.asarray(subs))
-            counts.append(len(subs))
-        self.root_nodes = np.array(root_nodes, dtype=np.int64)
-        self.root_sub_counts = np.array(counts, dtype=np.int64)
-        self.root_sub_offsets = np.concatenate(
-            [[0], np.cumsum(self.root_sub_counts)]
-        ).astype(np.int64)
-        self.root_sub_ids = (
-            np.concatenate(sub_chunks) if sub_chunks else np.empty(0, dtype=np.int64)
+        subs (~45% of the evaluation). Roots follow the sweep slot order
+        from _plan_levels, so decode segments index straight into this
+        CSR; a stable argsort keeps each root's subscribers in insertion
+        order."""
+        slot = perm[forest.sub_roots]
+        by_slot = np.argsort(slot, kind="stable")
+        self.root_nodes, self.root_sub_counts = np.unique(slot, return_counts=True)
+        self.root_sub_offsets = np.r_[0, np.cumsum(self.root_sub_counts)].astype(
+            np.int64
         )
+        self.root_sub_ids = forest.sub_ids[by_slot]
         # flat per-subscription view (public: matcher sizing, tests)
         self.sub_ids = self.root_sub_ids
 
@@ -554,34 +531,33 @@ class BatchEvaluator:
         """Prepared column cache straight from an Arrow RecordBatch, for
         the attributes the forest actually touches (``columns``). List
         attributes build through ``list_column``, scalars through
-        ``_scalar_from_arrow``."""
+        ``_scalar_from_arrow``; a grouped scalar column is coded into
+        its group's value set like a list's elements."""
         cache: dict[int, object] = {}
         for attr_index, name, kind in self.columns:
             arr = batch.column(batch.schema.get_field_index(name))
+            group = self._group_of.get(attr_index)
             if kind.is_list:
-                cache[attr_index] = self.list_column(arr, attr_index, kind)
-            else:
-                cache[attr_index] = self._scalar_from_arrow(arr, kind)
+                cache[attr_index] = self.list_column(arr, group)
+                continue
+            col = cache[attr_index] = self._scalar_from_arrow(arr, kind)
+            if group is not None:
+                col.vids = group.vids(arr)
         return cache
 
-    def list_column(self, arr, attr_index: int, kind) -> _ListColumn:
+    @staticmethod
+    def list_column(arr, group: _MemberGroup | None) -> _ListColumn:
         """Prepared list column from an Arrow ListArray's offsets and
         flattened values — the list-encoding path of ``arrow_columns``.
 
-        Elements encode ONCE per batch, in Arrow, into the attribute's
-        member-group vids (``pc.index_in`` over the group's vocab in vid
-        order; -1 = in no literal list, or a null element, which is
-        never a member), and no element becomes a Python object:
-        converting even a batch's unique tokens to Python was most of
-        the encoding cost. String elements not typed string (e.g.
-        ``list<null>``) are cast to string first, integer elements to
-        int64, so a null element never turns the batch's integers into
-        float64. With no group (only is empty / is not empty leaves),
-        the elements are not read."""
-        import pyarrow as pa
+        Elements code ONCE per batch, in Arrow, into the attribute's
+        member-group vids (``_MemberGroup.vids``; -1 = in no literal
+        list, or a null element, which is never a member), and no
+        element becomes a Python object: converting even a batch's
+        unique tokens to Python was most of the encoding cost. With no
+        group (only is empty / is not empty leaves), the elements are
+        not read."""
         import pyarrow.compute as pc
-
-        from .schema import AttributeKind
 
         mask = pc.is_null(arr).to_numpy(zero_copy_only=False)
         lengths = (
@@ -589,49 +565,9 @@ class BatchEvaluator:
             .to_numpy(zero_copy_only=False)
             .astype(np.int64)
         )
-        if attr_index not in self._list_groups:
+        if group is None:
             return _ListColumn(mask, lengths)  # no leaf reads the elements
-        flat = pc.list_flatten(arr)
-        if kind is AttributeKind.STRING_LIST:
-            if not (pa.types.is_string(flat.type) or pa.types.is_large_string(flat.type)):
-                flat = flat.cast(pa.string())
-        elif flat.type != pa.int64():
-            flat = flat.cast(pa.int64())
-        vids = (
-            pc.fill_null(
-                pc.index_in(
-                    flat,
-                    value_set=self._value_set(attr_index, flat.type),
-                    skip_nulls=True,
-                ),
-                -1,
-            )
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        return _ListColumn(mask, lengths, vids)
-
-    def _value_set(self, attr_index: int, value_type):
-        """A list attribute's group vocab as an Arrow array in vid
-        order, built once per process and element type. An integer
-        literal outside int64 can never equal an element: it keeps its
-        vid as a null, which ``list_column``'s ``skip_nulls`` lookup
-        never matches."""
-        import pyarrow as pa
-
-        cached = getattr(self, "_value_set_cache", None)
-        if cached is None:
-            cached = self._value_set_cache = {}
-        key = (attr_index, str(value_type))
-        value_set = cached.get(key)
-        if value_set is None:
-            values = list(self._list_groups[attr_index].vocab)
-            if pa.types.is_integer(value_type):
-                values = [
-                    v if _INT64_MIN <= v <= _INT64_MAX else None for v in values
-                ]
-            value_set = cached[key] = pa.array(values, type=value_type)
-        return value_set
+        return _ListColumn(mask, lengths, group.vids(pc.list_flatten(arr)))
 
     def _scalar_from_arrow(self, arr, kind) -> _ScalarColumn:
         import pyarrow as pa
@@ -641,17 +577,7 @@ class BatchEvaluator:
 
         mask = pc.is_null(arr).to_numpy(zero_copy_only=False)
         if kind is AttributeKind.STRING:
-            # dictionary-encode once per batch: only UNIQUE strings
-            # cross into Python; every leaf then compares int64 codes
-            enc = pc.dictionary_encode(arr)
-            codes = (
-                pc.fill_null(enc.indices, -1)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            return _ScalarColumn(
-                mask, None, codes=codes, uniques=enc.dictionary.to_pylist()
-            )
+            return _ScalarColumn(mask, None)  # only vids read a string
         if kind is AttributeKind.BOOLEAN and pa.types.is_boolean(arr.type):
             values = (
                 pc.fill_null(arr, False)

@@ -79,7 +79,7 @@ def test_leaf_negation_flips_operator(attributes):
 
 def _root(builder, sub_id):
     forest = builder.compile()
-    return next(node for node, subs in forest.node_subs.items() if sub_id in subs)
+    return forest.sub_roots[forest.sub_ids.tolist().index(sub_id)]
 
 
 def test_commutative_hash_equality(attributes):
@@ -101,8 +101,9 @@ forest = compile_forest(attrs, {
     1: "a and b", 2: "b and a", 3: "price = 5 or (c and ids one of [2, 1])",
     4: "not (a or price in [3, 1, 2])", 5: "price = 5",
 })
-print((forest.node_kind, forest.node_left, forest.node_right,
-       forest.node_level, sorted(forest.node_subs.items()),
+print((forest.node_kind.tolist(), forest.node_left.tolist(),
+       forest.node_right.tolist(), forest.node_level.tolist(),
+       forest.sub_ids.tolist(), forest.sub_roots.tolist(),
        [leaf.key() for leaf in forest.leaves]))
 """
 

@@ -299,7 +299,7 @@ def test_delete_one_of_two_ids_on_same_expression():
     matcher.insert(2, "private or exchange_id = 1")
     forest = matcher.compile()
     # both ids attach to ONE root node (src/atree.rs:1001-1014)
-    assert len(forest.node_subs) == 1
+    assert len(set(forest.sub_roots.tolist())) == 1
     assert matcher.search({"exchange_id": 1}) == [1, 2]
     matcher.delete(1)
     assert matcher.search({"exchange_id": 1}) == [2]
@@ -334,6 +334,15 @@ def test_event_type_checking():
         matcher.search({"exchange_id": "x"})
 
 
+def _subs_by_root(forest) -> list:
+    """Each root's subscription ids in insertion order, roots sorted by
+    those lists."""
+    subs: dict[int, list] = {}
+    for sub, root in zip(forest.sub_ids.tolist(), forest.sub_roots.tolist()):
+        subs.setdefault(root, []).append(sub)
+    return sorted(subs.values())
+
+
 def test_cse_shares_leaves_and_interior_nodes():
     # a node is identified by (op, child, child) once its children are
     # shared: "a and b" == "b and a", and/or stay distinct
@@ -345,11 +354,11 @@ def test_cse_shares_leaves_and_interior_nodes():
     matcher.insert(2, "b and a")
     forest = matcher.compile()
     assert forest.num_nodes == 3  # two leaves + one shared AND
-    assert sorted(forest.node_subs.values()) == [[1, 2]]
+    assert _subs_by_root(forest) == [[1, 2]]
     matcher.insert(3, "a or b")
     forest = matcher.compile()
     assert forest.num_nodes == 4  # a new OR over the same two leaves
-    assert sorted(forest.node_subs.values()) == [[1, 2], [3]]
+    assert _subs_by_root(forest) == [[1, 2], [3]]
     # sorted+deduped lists and normalized decimals give one leaf
     matcher.insert(4, "price in [3, 1, 2]")
     matcher.insert(5, "price in [2, 3, 1, 1]")
@@ -357,4 +366,4 @@ def test_cse_shares_leaves_and_interior_nodes():
     matcher.insert(7, "f = 5.00")
     forest = matcher.compile()
     assert len(forest.leaves) == forest.num_nodes - 2 == 4
-    assert sorted(forest.node_subs.values()) == [[1, 2], [3], [4, 5], [6, 7]]
+    assert _subs_by_root(forest) == [[1, 2], [3], [4, 5], [6, 7]]

@@ -532,13 +532,20 @@ def _equality_forest():
     return builder.compile()
 
 
+@pytest.mark.parametrize("int_type, str_type", [
+    ("int64", "string"), ("int32", "large_string"), ("int16", "large_string"),
+])
 @pytest.mark.parametrize("n", [1, 63, 64, 65, 4097])
-def test_equality_leaves_share_one_group_per_attribute(n):
+def test_equality_leaves_share_one_group_per_attribute(n, int_type, str_type):
     """Every non-FLOAT ``=`` / ``<>`` / ``in`` / ``not in`` leaf sits in
     its attribute's member group, a lone ``s = 'q'`` included, and only
     the FLOAT leaves evaluate per leaf. On null strings, a literal
-    absent from the batch dictionary and an all-null string column the
-    evaluator equals the single-event oracle."""
+    absent from the batch, an integer literal outside int64 and an
+    all-null string column the evaluator equals the single-event oracle,
+    also when the integer column is int32 or int16 (the fused kernel's
+    ``n_tokens`` is int32) and the string columns are ``large_string``:
+    every grouped column is coded into its group's int64 or string
+    value set."""
     import pyarrow as pa
 
     forest = _equality_forest()
@@ -567,7 +574,12 @@ def test_equality_leaves_share_one_group_per_attribute(n):
         }
         for _ in range(n)
     ])
-    all_null_s = batch.set_column(0, "s", pa.nulls(n, pa.string()))
+    for name, column_type in (("s", str_type), ("c", str_type), ("n", int_type)):
+        i = batch.schema.get_field_index(name)
+        batch = batch.set_column(
+            i, name, batch.column(i).cast(getattr(pa, column_type)())
+        )
+    all_null_s = batch.set_column(0, "s", pa.nulls(n, getattr(pa, str_type)()))
     for b in (batch, all_null_s):
         want = sorted(
             (r, sub)

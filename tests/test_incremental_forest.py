@@ -65,8 +65,8 @@ def check_refcount_invariant(builder: ForestBuilder) -> None:
         if uses > 0 and builder._kind[i] != LEAF:
             expected[builder._left[i]] += 1
             expected[builder._right[i]] += 1
-    for node_idx, subs in builder._node_subs.items():
-        expected[node_idx] += len(subs)
+    for node_idx in builder._sub_root.values():
+        expected[node_idx] += 1
     assert builder._use_count == expected
 
 
@@ -252,12 +252,15 @@ def _shapes(forest) -> list:
     over the set of its children's forms (child order carries no
     meaning)."""
     shapes: list = []
-    for i in range(forest.num_nodes):
-        if forest.node_kind[i] == LEAF:
-            shapes.append(forest.leaves[forest.node_left[i]].key())
+    nodes = zip(
+        forest.node_kind.tolist(), forest.node_left.tolist(),
+        forest.node_right.tolist(),
+    )
+    for kind, left, right in nodes:
+        if kind == LEAF:
+            shapes.append(forest.leaves[left].key())
         else:
-            children = (shapes[forest.node_left[i]], shapes[forest.node_right[i]])
-            shapes.append((forest.node_kind[i], frozenset(children)))
+            shapes.append((kind, frozenset((shapes[left], shapes[right]))))
     return shapes
 
 
@@ -272,8 +275,53 @@ def _sub_shapes(forest) -> dict:
     shapes = _shapes(forest)
     return {
         sub: shapes[node]
-        for node, subs in forest.node_subs.items() for sub in subs
+        for sub, node in zip(forest.sub_ids.tolist(), forest.sub_roots.tolist())
     }
+
+
+def _check_plan_layout(plan, forest, live, sub_root) -> None:
+    """The plan's slots follow (level, kind, not root, node id), and its
+    root CSR is the live subscriptions grouped by root, each root's in
+    insertion order (``live``, sub id -> root through ``sub_root``)."""
+    kind, level = forest.node_kind.tolist(), forest.node_level.tolist()
+    roots = set(sub_root.values())
+    order = sorted(
+        range(forest.num_nodes),
+        key=lambda i: (level[i], kind[i], i not in roots, i),
+    )
+    slot = {node: s for s, node in enumerate(order)}
+    n_leaf = kind.count(LEAF)
+    assert plan.n_leaf_nodes == n_leaf
+    grouped = [i for g in plan.member_groups for i in g.leaf_idxs]
+    rest = sorted(set(range(len(forest.leaves))) - set(grouped))
+    row = {leaf: r for r, leaf in enumerate(grouped + rest)}
+    assert plan.leaf_of_node.tolist() == [
+        row[forest.node_left[i]] for i in order[:n_leaf]
+    ]
+    lo = n_leaf
+    for block_kind, block_lo, hi, left, right in plan.levels:
+        nodes = order[block_lo:hi]
+        assert block_lo == lo < hi
+        assert {(level[i], kind[i]) for i in nodes} == {
+            (level[nodes[0]], block_kind)
+        }
+        assert left.tolist() == [slot[forest.node_left[i]] for i in nodes]
+        assert right.tolist() == [slot[forest.node_right[i]] for i in nodes]
+        lo = hi
+    assert lo == forest.num_nodes
+    root_slots = [s for s, node in enumerate(order) if node in roots]
+    assert [
+        seg_lo + j for seg_lo, k in plan.root_segments for j in range(k)
+    ] == root_slots
+
+    by_root: dict[int, list] = {}
+    for sub in live:
+        by_root.setdefault(slot[sub_root[sub]], []).append(sub)
+    assert plan.root_nodes.tolist() == sorted(by_root) == root_slots
+    offsets = plan.root_sub_offsets.tolist()
+    assert [
+        plan.root_sub_ids[a:b].tolist() for a, b in zip(offsets, offsets[1:])
+    ] == [by_root[s] for s in root_slots]
 
 
 # null lists, empty lists and null list elements in every checked batch
@@ -289,8 +337,9 @@ class ForestBuilderMachine(RuleBasedStateMachine):
     """Random insert / re-insert / delete / compile runs on one live
     ForestBuilder. After every step the refcounts, the key map and the
     leaf index are exact; after every compile the snapshot equals a
-    cold compile of the live expressions, and the planned evaluator
-    equals the exact oracle row by row."""
+    cold compile of the live expressions, the plan's slot layout and
+    root CSR equal a test-local reference sort, and the planned
+    evaluator equals the exact oracle row by row."""
 
     def __init__(self):
         super().__init__()
@@ -357,11 +406,10 @@ class ForestBuilderMachine(RuleBasedStateMachine):
         assert (plan is not self.plan) == (self.edited or self.plan is None)
         self.plan, self.edited = plan, False
 
-        leaf_nodes = [
-            forest.node_left[i] for i in range(forest.num_nodes)
-            if forest.node_kind[i] == LEAF
-        ]
-        assert sorted(leaf_nodes) == list(range(len(forest.leaves)))
+        leaf_nodes = forest.node_left[forest.node_kind == LEAF]
+        assert sorted(leaf_nodes.tolist()) == list(range(len(forest.leaves)))
+        assert forest.sub_ids.tolist() == list(self.live)
+        _check_plan_layout(plan, forest, self.live, self.builder._sub_root)
 
         cold = compile_forest(PROP_ATTRS, self.live)
         shapes = _shapes(forest)

@@ -1,8 +1,8 @@
 """The scripts: the A/B gain and no-regression rules of scripts/ab.py,
 the argument guards of scripts/bench_flows.py and
-scripts/submit_pipeline.py, the deployment job's crash and resume, and
-the library names the benchmark harness imports and the members its
-layer probe reads."""
+scripts/submit_pipeline.py, the deployment job's pinned stage
+fingerprints, crash and resume, and the library names the benchmark
+harness imports and the members its layer probe reads."""
 
 import argparse
 import ast
@@ -282,6 +282,36 @@ def test_submit_stage_fingerprint_covers_the_partial_layout(monkeypatch):
     assert sp.stage_fingerprint(forests, 12) == now
     monkeypatch.setattr(pipeline, "PARTIAL_COLUMNS", ("ckey", "n_matches"))
     assert sp.stage_fingerprint(forests, 12) != now
+
+
+@pytest.mark.parametrize("workload, n_subs, n_shards, expected", [
+    ("standing", 500, 3, "f58097b2bcd0404f"),
+    ("skewed", 2000, 1, "4a5b89ec29df81f7"),
+    ("diverse", 2000, 2, "b838c1e99344f053"),
+])
+def test_submit_stage_fingerprint_pins_the_slot_layout(
+    workload, n_subs, n_shards, expected
+):
+    """The plan's slot order and root CSR, sub order within a root
+    included, are what a checkpointed root id means: the stage
+    fingerprint of each build is pinned. Every shard first deletes its
+    first 50 sub ids and re-inserts them, so tombstones, a compaction
+    and re-inserted subscriptions are in the layout. The values do not
+    depend on PYTHONHASHSEED; a deliberate order change updates them
+    and says so."""
+    from a_tree_spark.web import pipeline
+
+    subs = getattr(pipeline, f"{workload}_page_subscriptions")(n_subs)
+    forests = pipeline.build_forests(
+        pipeline.shard_subscriptions(subs, n_shards)
+    )
+    for forest in forests:
+        moved = list(forest.sub_ids())[:50]
+        for sub_id in moved:
+            forest.delete(sub_id)
+        for sub_id in moved:
+            forest.insert(sub_id, subs[sub_id])
+    assert _load("submit_pipeline").stage_fingerprint(forests, 12) == expected
 
 
 class _Crash(Exception):

@@ -412,6 +412,36 @@ def test_sharded_root_guard_raises_on_overflow(spark):
         sharded_root_partials(pages, forests, level=31)
 
 
+def test_sharded_root_guard_raises_on_cumulative_offsets(spark):
+    """Every shard's root ids fit the packed ckey's root field, but the
+    cumulative shard offsets do not: level 28 leaves sub_width = 6 bits
+    (64 root ids), and two shards hold 40 distinct roots each. The
+    total-roots guard raises, and no Spark job has run."""
+    from pyspark.sql import functions as F
+
+    from a_tree_spark.expr import ForestBuilder
+    from a_tree_spark.web.pipeline import PAGE_ATTRIBUTES, sharded_root_partials
+
+    forests = []
+    for shard in range(2):
+        builder = ForestBuilder(PAGE_ATTRIBUTES)
+        for k in range(40):
+            builder.insert(shard * 40 + k, f"n_tokens > {k}")
+        forests.append(builder)
+    pages = synth_pages_df(spark, 50, partitions=1).withColumn(
+        "page_key", F.monotonically_increasing_id()
+    )
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup()
+    with pytest.raises(
+        ValueError,
+        match="total distinct roots 80 across 2 shards must fit in 6 bits "
+              "at level 28",
+    ):
+        sharded_root_partials(pages, forests, level=28)
+    assert tracker.getJobIdsForGroup() == jobs
+
+
 def test_flagship_bucketed_cell_join_exchange_free(spark, tmp_path):
     """VERDICT round 4 item 3: bucketing exercised in the FLAGSHIP path
     — the eventized crawl written cell_id-bucketed, a per-cell stats
