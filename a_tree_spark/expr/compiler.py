@@ -10,7 +10,8 @@ forest, is what ships to executors:
 - ``leaves``: unique Predicate list; each distinct leaf is evaluated ONCE
   per Arrow batch as a numpy column — the vectorized generalization of
   the reference's "evaluate each shared node once per event"
-  (src/lib.rs:72-75).
+  (src/lib.rs:72-75). The leaves are the first nodes, and a leaf's
+  index in ``leaves`` is its node id.
 - ``node_kind/left/right/level``: int64 arrays over the nodes, in
   topological (children-first) order; Kleene AND/OR become elementwise
   min/max over tri-state codes FALSE=0 < UNKNOWN=1 < TRUE=2, exactly
@@ -27,33 +28,35 @@ Node identity. The reference finds a shared node by a commutative 64-bit
 hash of the subtree (src/ast.rs:30-54) and orders children cheap-first
 for its short-circuiting evaluator (src/atree.rs:133-137). Here children
 are already shared when their parent is looked up, so a node is exactly
-identified by ``(kind, a, b)``: ``(LEAF, leaf index, -1)`` for a leaf and
-``(AND|OR, min child, max child)`` by node index for an interior node —
-plain hash-consing, commutative by construction, with no hash to collide.
-Child order carries no meaning: the packed sweep, ``evaluate_event`` and
-the generated SQL read both children symmetrically and never
-short-circuit.
+identified by ``(kind, a, b)``: ``(LEAF, predicate key, -1)`` for a leaf
+and ``(AND|OR, lower child slot, higher child slot)`` for an interior
+node — plain hash-consing, commutative by construction, with no hash to
+collide. Child order carries no meaning: the packed sweep,
+``evaluate_event`` and the generated SQL read both children
+symmetrically and never short-circuit.
 
 Insert/delete are INCREMENTAL (reference src/atree.rs:96-245 insert,
-:313-339,430-460 refcounted delete): the key -> node map, the refcounts,
-and the flat arrays live across mutations in ``ForestBuilder``. Insert
+:313-339,430-460 refcounted delete): the key -> slot map, the use
+counts and the node arrays live across mutations in ``ForestBuilder``,
+a slot arena like the reference's ``Slab`` (src/atree.rs:23,75). Insert
 walks only the new expression (shared subtrees hit the key map and
-stop); delete decrements use counts and tombstones nodes that reach zero,
-cascading into children exactly like the reference's
-``decrement_use_count``. Each fact is stored once: a node is live while
-its use count is above zero, its key is read back from the kind and
-child arrays, and a subscription's root is ``_sub_root`` alone (the
-root -> subscribers grouping is the planner's argsort).
-``compile()`` then snapshots the arrays as numpy — after inserts that
-is one copy per array, after deletes a numpy index compaction first —
-so a churning subscription set pays O(changed expression)
-per mutation instead of the O(total) reparse of a cold ``compile_forest``
-(~0.8 s at 1e5 subscriptions; the snapshot is ~ms).
+stop); delete decrements use counts, cascading into children exactly
+like the reference's ``decrement_use_count``, and a node that reaches
+zero frees its slot for the next new node. Each fact is stored once: a
+slot is live while its use count is above zero, its key is read back
+from its kind, children and predicate, and a subscription's root is
+``_sub_root`` alone (the root -> subscribers grouping is the planner's
+argsort). ``compile()`` snapshots the live slots with numpy alone — a
+stable sort by level gives the node ids, and one gather remaps the
+children and roots — and leaves the builder as it was, so a churning
+subscription set pays O(changed expression) per mutation instead of
+the O(total) reparse of a cold ``compile_forest`` (~0.8 s at 1e5
+subscriptions; the snapshot is ~ms).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 
@@ -69,11 +72,13 @@ class CompiledForest:
     attributes: AttributeTable
     leaves: list[Predicate]
     node_kind: np.ndarray         # int64 LEAF/AND/OR per node
-    node_left: np.ndarray         # leaf: index into leaves; and/or: lower child idx
-    node_right: np.ndarray        # leaf: -1; and/or: higher child idx
+    node_left: np.ndarray         # leaf: its id = index into leaves; and/or: a child id
+    node_right: np.ndarray        # leaf: -1; and/or: the other child id
     node_level: np.ndarray        # leaf: 0; interior: 1 + max(children)
     sub_ids: np.ndarray           # live subscription ids, insertion order
     sub_roots: np.ndarray         # int64 root node of each sub_ids entry
+    # the snapshot's one BatchEvaluator (vector.planned_evaluator)
+    _plan: object = field(default=None, init=False, repr=False, compare=False)
 
     @property
     def num_nodes(self) -> int:
@@ -112,30 +117,30 @@ class ForestBuilder:
     """Live incremental subscription registry (reference lifecycle API:
     new/insert/delete/compile, src/atree.rs:66-339).
 
-    The DAG state — interned leaves, the ``(kind, a, b)`` -> node map,
-    refcounts, flat node arrays — persists across mutations. A node
-    with a use count of zero is a tombstone until the next compaction.
-    ``nodes_created_total`` counts arena appends over the builder's
-    lifetime, letting tests pin that inserting k expressions into a live
-    forest touches O(k·expr) nodes, never O(total).
+    The DAG state — the ``(kind, a, b)`` -> slot map, use counts and
+    flat node arrays — persists across mutations in a slot arena: a
+    node whose use count reaches zero puts its slot on a free list, and
+    the next new node takes the most recently freed slot, so the arena
+    never grows past the live peak. ``nodes_created_total`` counts node
+    creations over the builder's lifetime, reused slots included,
+    letting tests pin that inserting k expressions into a live forest
+    touches O(k·expr) nodes, never O(total).
     """
 
     def __init__(self, attributes: AttributeTable | list | tuple):
         if not isinstance(attributes, AttributeTable):
             attributes = AttributeTable(attributes)
         self.attributes = attributes
-        # interned unique predicates (leaf evaluation units)
-        self._leaves: list[Predicate] = []
-        self._leaf_index: dict[tuple, int] = {}      # predicate key -> leaf idx
-        # flat node arena, append-only between compactions
+        # slot arena: a slot is live while its use count is above zero
         self._kind: list[int] = []
-        self._left: list[int] = []
-        self._right: list[int] = []
+        self._left: list[int] = []                   # leaf: -1; else a child slot
+        self._right: list[int] = []                  # leaf: -1; else a child slot
         self._level: list[int] = []
-        self._use_count: list[int] = []              # live while > 0
-        self._node_by_key: dict[tuple, int] = {}     # key -> live node idx
-        self._sub_root: dict = {}                    # sub id -> node idx
-        self._n_dead = 0
+        self._use_count: list[int] = []
+        self._predicate: list[Predicate | None] = []  # leaf's predicate
+        self._free: list[int] = []                   # dead slots, reused LIFO
+        self._node_by_key: dict[tuple, int] = {}     # key -> live slot
+        self._sub_root: dict = {}                    # sub id -> slot
         self._forest: CompiledForest | None = None
         self.nodes_created_total = 0
 
@@ -148,18 +153,19 @@ class ForestBuilder:
     @property
     def live_node_count(self) -> int:
         """Live DAG nodes right now, without compiling — arena length
-        minus tombstones. This is the capacity variable sharding
+        minus free slots. This is the capacity variable sharding
         decisions key on (web/pipeline.py choose_shards), available
         during insert streams at zero cost."""
-        return len(self._kind) - self._n_dead
+        return len(self._kind) - len(self._free)
 
     def insert(self, sub_id, expression: str | NnfNode) -> None:
         """Insert one expression in O(expression) (reference insert_root,
         src/atree.rs:110-181): shared subtrees hit the key map and stop
-        the walk; only novel nodes append to the arena. A re-insert under
-        an existing sub id replaces it (delete+insert). A tree that is
-        not in NNF (``parse()`` output without ``.optimize()``) is a
-        TypeError, raised before the forest changes."""
+        the walk; only novel nodes take a slot, a freed one first. A
+        re-insert under an existing sub id replaces it (delete+insert).
+        A tree that is not in NNF (``parse()`` output without
+        ``.optimize()``) is a TypeError, raised before the forest
+        changes."""
         if isinstance(expression, str):
             expression = parse(expression, self.attributes).optimize()
         elif not isinstance(expression, NnfNode):
@@ -175,69 +181,76 @@ class ForestBuilder:
     def delete(self, sub_id) -> None:
         """Refcounted cascade delete (reference decrement_use_count,
         src/atree.rs:313-339,430-460): the node loses one reference; at
-        zero it is tombstoned, its key unregistered, and its children
+        zero its key is unregistered, its slot freed, and its children
         released recursively. Shared nodes — and nodes other
         subscriptions still use as roots — survive."""
-        root_idx = self._sub_root.pop(sub_id, None)
-        if root_idx is None:
+        root = self._sub_root.pop(sub_id, None)
+        if root is None:
             return
-        self._release(root_idx)
+        self._release(root)
         self._forest = None
 
     def compile(self) -> CompiledForest:
-        """Snapshot the live arena as a CompiledForest of int64 arrays.
-        After inserts this is one array copy per field (~ms at 1e5
-        nodes); pending tombstones first compact via numpy index remaps
-        — still array work, never a reparse. The snapshot is
-        independent of later mutations."""
+        """Snapshot the live slots as a CompiledForest of int64 arrays,
+        in numpy alone: a stable sort of the live slots by level gives
+        each node its id (leaves first, children before parents; after
+        inserts alone slot order is creation order), and one gather
+        through that order remaps children and roots. Nothing of the
+        builder changes but its cached snapshot, which is returned
+        until the next insert/delete; the snapshot is independent of
+        later mutations."""
         if self._forest is None:
-            if self._n_dead:
-                self._compact()
+            live = np.flatnonzero(np.array(self._use_count, dtype=np.int64))
+            level = np.array(self._level, dtype=np.int64)[live]
+            by_level = np.argsort(level, kind="stable")
+            order = live[by_level]
+            node_id = np.empty(len(self._kind), dtype=np.int64)
+            node_id[order] = np.arange(len(order), dtype=np.int64)
+            kind = np.array(self._kind, dtype=np.int64)[order]
+            n_leaf = int(np.count_nonzero(kind == LEAF))
+            left = np.array(self._left, dtype=np.int64)[order]
+            right = np.array(self._right, dtype=np.int64)[order]
+            left[n_leaf:] = node_id[left[n_leaf:]]
+            right[n_leaf:] = node_id[right[n_leaf:]]
+            left[:n_leaf] = np.arange(n_leaf, dtype=np.int64)
             sub_ids = list(self._sub_root)
             self._forest = CompiledForest(
                 attributes=self.attributes,
-                leaves=list(self._leaves),
-                node_kind=np.array(self._kind, dtype=np.int64),
-                node_left=np.array(self._left, dtype=np.int64),
-                node_right=np.array(self._right, dtype=np.int64),
-                node_level=np.array(self._level, dtype=np.int64),
+                leaves=[self._predicate[s] for s in order[:n_leaf].tolist()],
+                node_kind=kind,
+                node_left=left,
+                node_right=right,
+                node_level=level[by_level],
                 sub_ids=(
                     np.array(sub_ids) if sub_ids
                     else np.empty(0, dtype=np.int64)
                 ),
-                sub_roots=np.fromiter(
+                sub_roots=node_id[np.fromiter(
                     self._sub_root.values(), np.int64, len(sub_ids)
-                ),
+                )],
             )
         return self._forest
 
     # ---------------------------------------------------------- internals
 
-    def _intern_leaf(self, predicate: Predicate) -> int:
-        key = predicate.key()
-        idx = self._leaf_index.get(key)
-        if idx is None:
-            idx = len(self._leaves)
-            self._leaf_index[key] = idx
-            self._leaves.append(predicate)
-        return idx
-
     def _insert_node(self, node: NnfNode) -> int:
-        """Returns the node's index; children-first recursion keeps
-        topological order (children always at lower indexes, so
-        snapshots and compactions stay topologically sorted). Every call
+        """Returns the node's slot; children are inserted first, so a
+        node's level is known when it takes its slot. Every call
         accounts exactly one incoming reference to the returned node —
         a shared hit increments its use count and stops (reference
         increment_use_count, src/atree.rs:184-190)."""
         if node.tag == "value":
-            kind, a, b = LEAF, self._intern_leaf(node.predicate), -1
+            predicate = node.predicate
+            kind, a, b = LEAF, -1, -1
+            key = (LEAF, predicate.key(), -1)
         else:
+            predicate = None
             a = self._insert_node(node.left)
             b = self._insert_node(node.right)
             if a > b:
                 a, b = b, a
             kind = AND if node.tag == "and" else OR
-        key = (kind, a, b)
+            key = (kind, a, b)
         existing = self._node_by_key.get(key)
         if existing is not None:
             self._use_count[existing] += 1
@@ -248,75 +261,43 @@ class ForestBuilder:
                 self._release(a)
                 self._release(b)
             return existing
-        idx = len(self._kind)
-        self._kind.append(kind)
-        self._left.append(a)
-        self._right.append(b)
-        self._level.append(
-            0 if kind == LEAF else 1 + max(self._level[a], self._level[b])
-        )
-        self._use_count.append(1)
+        level = 0 if kind == LEAF else 1 + max(self._level[a], self._level[b])
+        if self._free:
+            idx = self._free.pop()
+            self._kind[idx] = kind
+            self._left[idx] = a
+            self._right[idx] = b
+            self._level[idx] = level
+            self._use_count[idx] = 1
+            self._predicate[idx] = predicate
+        else:
+            idx = len(self._kind)
+            self._kind.append(kind)
+            self._left.append(a)
+            self._right.append(b)
+            self._level.append(level)
+            self._use_count.append(1)
+            self._predicate.append(predicate)
         self._node_by_key[key] = idx
         self.nodes_created_total += 1
         return idx
 
     def _release(self, idx: int) -> None:
-        """Drop one reference; tombstone + cascade at zero."""
+        """Drop one reference; at zero unregister the key, free the
+        slot and cascade into the children."""
         stack = [idx]
         while stack:
             i = stack.pop()
             self._use_count[i] -= 1
             if self._use_count[i] > 0:
                 continue
-            self._n_dead += 1
-            del self._node_by_key[(self._kind[i], self._left[i], self._right[i])]
-            if self._kind[i] != LEAF:
+            self._free.append(i)
+            if self._kind[i] == LEAF:
+                del self._node_by_key[(LEAF, self._predicate[i].key(), -1)]
+            else:
+                del self._node_by_key[(self._kind[i], self._left[i], self._right[i])]
                 stack.append(self._left[i])
                 stack.append(self._right[i])
-
-    def _compact(self) -> None:
-        """Squeeze tombstones out of the arena with numpy index remaps
-        (relative order — hence topological order, and each interior
-        node's child order — is preserved). Unreferenced leaf predicates
-        drop from ``leaves`` too, so the per-batch leaf evaluation never
-        pays for deleted expressions. A node is live while its use
-        count is above zero."""
-        use_arr = np.asarray(self._use_count, dtype=np.int64)
-        alive = use_arr > 0
-        new_idx = np.cumsum(alive, dtype=np.int64) - 1   # old -> new (alive only)
-        keep = np.flatnonzero(alive)
-
-        kind_arr = np.asarray(self._kind, dtype=np.int64)[keep]
-        left_arr = np.asarray(self._left, dtype=np.int64)[keep]
-        right_arr = np.asarray(self._right, dtype=np.int64)[keep]
-        is_leaf = kind_arr == LEAF
-
-        # surviving leaf predicates, in first-use order
-        order = np.sort(left_arr[is_leaf])
-        leaf_remap = np.full(len(self._leaves), -1, dtype=np.int64)
-        leaf_remap[order] = np.arange(len(order), dtype=np.int64)
-
-        left_arr[is_leaf] = leaf_remap[left_arr[is_leaf]]
-        left_arr[~is_leaf] = new_idx[left_arr[~is_leaf]]
-        right_arr[~is_leaf] = new_idx[right_arr[~is_leaf]]
-
-        self._kind = kind_arr.tolist()
-        self._left = left_arr.tolist()
-        self._right = right_arr.tolist()
-        self._level = np.asarray(self._level, dtype=np.int64)[keep].tolist()
-        self._use_count = use_arr[keep].tolist()
-        self._node_by_key = {
-            k: i for i, k in enumerate(zip(self._kind, self._left, self._right))
-        }
-        remap = new_idx.tolist()
-        self._sub_root = {s: remap[i] for s, i in self._sub_root.items()}
-        self._leaves = [self._leaves[i] for i in order.tolist()]
-        leaf_remap = leaf_remap.tolist()
-        self._leaf_index = {
-            key: leaf_remap[i] for key, i in self._leaf_index.items()
-            if leaf_remap[i] >= 0
-        }
-        self._n_dead = 0
 
 
 def compile_forest(attributes: AttributeTable, expressions: dict) -> CompiledForest:

@@ -855,24 +855,18 @@ class BatchEvaluator:
         )
         return out_rows, self.root_sub_ids[offsets + within]
 
-#: the (snapshot, plan) pair of the most recent snapshot (see
-#: planned_evaluator); a module slot, because the plan keeps no forest
-_latest_plan: tuple[CompiledForest, BatchEvaluator] | None = None
-
 
 def planned_evaluator(forest: CompiledForest) -> BatchEvaluator:
     """The BatchEvaluator planned for this compiled snapshot, planned
-    once. ``ForestBuilder.compile()`` returns the same CompiledForest
-    until the next insert/delete, so every consumer of one crawl step
-    (root map, fused kernel, matcher, shard root counts) shares one plan
-    instead of re-planning the same snapshot. One slot holds the
-    (snapshot, plan) pair: a new snapshot replaces it, and live forests
-    never return to an old one.
+    once and kept on the snapshot. ``ForestBuilder.compile()`` returns
+    the same CompiledForest until the next insert/delete, so every
+    consumer of one crawl step (root map, fused kernel, matcher, shard
+    root counts, the stage fingerprint) shares one plan per shard
+    instead of re-planning the same snapshot.
 
     The plan is shared, and a Spark stage broadcasts it as it is
     (engine.matcher.broadcast_evaluator): it has no per-caller setting,
     and it ships no forest."""
-    global _latest_plan
-    if _latest_plan is None or _latest_plan[0] is not forest:
-        _latest_plan = (forest, BatchEvaluator(forest))
-    return _latest_plan[1]
+    if forest._plan is None:
+        forest._plan = BatchEvaluator(forest)
+    return forest._plan

@@ -624,7 +624,10 @@ def bucketed_cell_history(
 #: packed sweep working set stays cache-friendly and per-run broadcast
 #: re-ship is cheap. BENCH/BASELINE.md round 5: the 24.4 MB 1e6-sub
 #: single forest swung 2.7x across windows while 4 x 6.35 MB shards ran
-#: within 3.5% at equal-or-better throughput.
+#: within 3.5% at equal-or-better throughput. The ~160 B/node basis
+#: predates the array plan, which pickles at 38-53 B/node (1.47 MB for
+#: the skewed generator's 27,710-node 10k forest); the value is kept
+#: from its 32-core runs until a re-measure there.
 SHARD_TARGET_NODES = 50_000
 
 #: throughput cap on the shard count: every shard is one more full
@@ -639,7 +642,10 @@ MAX_AUTO_SHARDS = 8
 #: (~96 MB pickled evaluator, >0.5 GB unpickled per python worker) is
 #: what OOMed the 128 GB box at k=2 x 1.9M nodes — at 10M+ distinct
 #: roots the shard count must grow past MAX_AUTO_SHARDS because
-#: executor memory, not throughput, binds.
+#: executor memory, not throughput, binds. The ~96 MB pickled basis
+#: predates the array plan (38-53 B/node pickled now); the value is
+#: kept from its 32-core runs until unpickled worker memory per node
+#: is re-measured there.
 MAX_NODES_PER_SHARD = 600_000
 
 

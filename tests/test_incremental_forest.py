@@ -57,8 +57,8 @@ def matches(builder: ForestBuilder, event: dict) -> list:
 
 def check_refcount_invariant(builder: ForestBuilder) -> None:
     """use_count of every node == incoming DAG edges from live nodes +
-    root subscriptions (the reference's refcount definition). A node is
-    live while its use count is above zero, so a tombstone has no live
+    root subscriptions (the reference's refcount definition). A slot is
+    live while its use count is above zero, so a freed slot has no live
     parent and no subscription."""
     expected = [0] * len(builder._kind)
     for i, uses in enumerate(builder._use_count):
@@ -132,7 +132,7 @@ def test_reinsert_same_sub_id_replaces():
 
 def test_compaction_drops_dead_leaves_and_preserves_matches():
     """Deleted expressions must not leave their predicates in the
-    per-batch leaf evaluation set after compile() compacts."""
+    per-batch leaf evaluation set: compile() snapshots live slots only."""
     b = ForestBuilder(ATTRS)
     for i in range(50):
         b.insert(i, f"exchange_id = {i} and not private")
@@ -163,6 +163,30 @@ def test_insert_rejects_a_tree_not_in_nnf():
     assert b.live_node_count == nodes
     assert list(b.sub_ids()) == [1]
     assert b.compile() is forest
+    check_refcount_invariant(b)
+
+
+def test_reinserts_reuse_freed_slots_without_compile():
+    """Freed slots are reused (the reference's Slab): 5 rounds of
+    deleting 400 live ids from a 10k forest and re-inserting the same
+    expressions, with no compile() in between, leave the arena at the
+    peak live node count — no slot is left behind as a tombstone."""
+    import random
+
+    standing = standing_page_subscriptions(10_000)
+    b = ForestBuilder(PAGE_ATTRIBUTES)
+    for sub_id, expression in standing.items():
+        b.insert(sub_id, expression)
+    peak = b.live_node_count
+    rng = random.Random(1)
+    for _ in range(5):
+        moved = rng.sample(list(b.sub_ids()), 400)
+        for sub_id in moved:
+            b.delete(sub_id)
+        for sub_id in moved:
+            b.insert(sub_id, standing[sub_id])
+            peak = max(peak, b.live_node_count)
+        assert len(b._kind) == peak
     check_refcount_invariant(b)
 
 
@@ -279,11 +303,13 @@ def _sub_shapes(forest) -> dict:
     }
 
 
-def _check_plan_layout(plan, forest, live, sub_root) -> None:
+def _check_plan_layout(plan, forest, live) -> None:
     """The plan's slots follow (level, kind, not root, node id), and its
     root CSR is the live subscriptions grouped by root, each root's in
-    insertion order (``live``, sub id -> root through ``sub_root``)."""
+    insertion order (``live``, sub id -> root through the snapshot's
+    ``sub_ids`` / ``sub_roots``)."""
     kind, level = forest.node_kind.tolist(), forest.node_level.tolist()
+    sub_root = dict(zip(forest.sub_ids.tolist(), forest.sub_roots.tolist()))
     roots = set(sub_root.values())
     order = sorted(
         range(forest.num_nodes),
@@ -333,13 +359,26 @@ _EDGE_EVENTS = [
 ]
 
 
+def _builder_fields(builder: ForestBuilder) -> dict:
+    """A copy of every builder field but the cached snapshot; dicts as
+    item lists, so their order counts."""
+    return {
+        name: (
+            list(value.items()) if isinstance(value, dict)
+            else list(value) if isinstance(value, list) else value
+        )
+        for name, value in vars(builder).items() if name != "_forest"
+    }
+
+
 class ForestBuilderMachine(RuleBasedStateMachine):
     """Random insert / re-insert / delete / compile runs on one live
     ForestBuilder. After every step the refcounts, the key map and the
-    leaf index are exact; after every compile the snapshot equals a
-    cold compile of the live expressions, the plan's slot layout and
-    root CSR equal a test-local reference sort, and the planned
-    evaluator equals the exact oracle row by row."""
+    free list are exact; compile() changes no builder field but its
+    snapshot cache; after every compile the snapshot equals a cold
+    compile of the live expressions, the plan's slot layout and root
+    CSR equal a test-local reference sort, and the planned evaluator
+    equals the exact oracle row by row."""
 
     def __init__(self):
         super().__init__()
@@ -401,15 +440,19 @@ class ForestBuilderMachine(RuleBasedStateMachine):
 
     @rule(events=st.lists(event_strategy, max_size=8))
     def compile(self, events):
+        before = _builder_fields(self.builder)
         forest = self.builder.compile()
+        assert _builder_fields(self.builder) == before
         plan = planned_evaluator(forest)
         assert (plan is not self.plan) == (self.edited or self.plan is None)
         self.plan, self.edited = plan, False
 
-        leaf_nodes = forest.node_left[forest.node_kind == LEAF]
-        assert sorted(leaf_nodes.tolist()) == list(range(len(forest.leaves)))
+        n_leaves = len(forest.leaves)
+        assert forest.node_kind[:n_leaves].tolist() == [LEAF] * n_leaves
+        assert forest.node_left[:n_leaves].tolist() == list(range(n_leaves))
+        assert LEAF not in forest.node_kind[n_leaves:].tolist()
         assert forest.sub_ids.tolist() == list(self.live)
-        _check_plan_layout(plan, forest, self.live, self.builder._sub_root)
+        _check_plan_layout(plan, forest, self.live)
 
         cold = compile_forest(PROP_ATTRS, self.live)
         shapes = _shapes(forest)
@@ -432,11 +475,15 @@ class ForestBuilderMachine(RuleBasedStateMachine):
         b = self.builder
         check_refcount_invariant(b)
         live = [i for i, uses in enumerate(b._use_count) if uses > 0]
+        free = [i for i, uses in enumerate(b._use_count) if uses == 0]
+        assert len(b._free) == len(set(b._free))
+        assert sorted(b._free) == free
         assert len(live) == b.live_node_count == len(b._node_by_key)
         assert b._node_by_key == {
-            (b._kind[i], b._left[i], b._right[i]): i for i in live
+            (LEAF, b._predicate[i].key(), -1) if b._kind[i] == LEAF
+            else (b._kind[i], b._left[i], b._right[i]): i
+            for i in live
         }
-        assert b._leaf_index == {p.key(): i for i, p in enumerate(b._leaves)}
 
 
 TestForestBuilderMachine = ForestBuilderMachine.TestCase

@@ -284,10 +284,57 @@ def test_submit_stage_fingerprint_covers_the_partial_layout(monkeypatch):
     assert sp.stage_fingerprint(forests, 12) != now
 
 
+def test_submit_stage_fingerprint_plans_each_shard_once(monkeypatch):
+    """The stage fingerprint and the per-shard consumers after it share
+    each shard snapshot's one plan: fingerprinting 3 shards and then
+    asking each for its plan plans 3 times, not 6."""
+    from a_tree_spark.expr.vector import BatchEvaluator, planned_evaluator
+    from a_tree_spark.web import pipeline
+
+    plans = []
+    init = BatchEvaluator.__init__
+
+    def counting_init(self, *args, **kwargs):
+        plans.append(args[0] if args else kwargs["forest"])
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(BatchEvaluator, "__init__", counting_init)
+
+    forests = pipeline.build_forests(
+        pipeline.shard_subscriptions(pipeline.standing_page_subscriptions(300), 3)
+    )
+    _load("submit_pipeline").stage_fingerprint(forests, 12)
+    for forest in forests:
+        planned_evaluator(forest.compile())
+    assert len(plans) == 3
+    assert all(p is forest.compile() for p, forest in zip(plans, forests))
+
+
 @pytest.mark.parametrize("workload, n_subs, n_shards, expected", [
-    ("standing", 500, 3, "f58097b2bcd0404f"),
-    ("skewed", 2000, 1, "4a5b89ec29df81f7"),
-    ("diverse", 2000, 2, "b838c1e99344f053"),
+    ("standing", 500, 3, "571796ba5dd9784d"),
+    ("skewed", 2000, 1, "07996c9267a1ab9c"),
+    ("diverse", 2000, 2, "71c166f1fec4875e"),
+])
+def test_submit_stage_fingerprint_pins_fresh_builds(
+    workload, n_subs, n_shards, expected
+):
+    """A build with no deletes lays its slots out in creation order:
+    the stage fingerprint of each fresh build is pinned, and no change
+    to how deletes free and reuse slots may move it. The values do not
+    depend on PYTHONHASHSEED."""
+    from a_tree_spark.web import pipeline
+
+    subs = getattr(pipeline, f"{workload}_page_subscriptions")(n_subs)
+    forests = pipeline.build_forests(
+        pipeline.shard_subscriptions(subs, n_shards)
+    )
+    assert _load("submit_pipeline").stage_fingerprint(forests, 12) == expected
+
+
+@pytest.mark.parametrize("workload, n_subs, n_shards, expected", [
+    ("standing", 500, 3, "d53496be3494bf62"),
+    ("skewed", 2000, 1, "f72c6ee670bfbab2"),
+    ("diverse", 2000, 2, "63c2e8568d58ce56"),
 ])
 def test_submit_stage_fingerprint_pins_the_slot_layout(
     workload, n_subs, n_shards, expected
@@ -295,7 +342,7 @@ def test_submit_stage_fingerprint_pins_the_slot_layout(
     """The plan's slot order and root CSR, sub order within a root
     included, are what a checkpointed root id means: the stage
     fingerprint of each build is pinned. Every shard first deletes its
-    first 50 sub ids and re-inserts them, so tombstones, a compaction
+    first 50 sub ids and re-inserts them, so freed slots, their reuse
     and re-inserted subscriptions are in the layout. The values do not
     depend on PYTHONHASHSEED; a deliberate order change updates them
     and says so."""

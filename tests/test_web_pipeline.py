@@ -770,7 +770,6 @@ def test_crawl_plans_one_evaluator_per_snapshot(spark, monkeypatch):
     from pyspark.sql import functions as F
 
     from a_tree_spark.engine.matcher import match_events
-    from a_tree_spark.expr import vector
     from a_tree_spark.expr.vector import BatchEvaluator, planned_evaluator
 
     plans = []
@@ -781,7 +780,6 @@ def test_crawl_plans_one_evaluator_per_snapshot(spark, monkeypatch):
         init(self, *args, **kwargs)
 
     monkeypatch.setattr(BatchEvaluator, "__init__", counting_init)
-    monkeypatch.setattr(vector, "_latest_plan", None)
 
     builder = build_page_forest(N_SUBS)
     pages = synth_pages_df(spark, N_PAGES, partitions=4).withColumn(
