@@ -9,6 +9,7 @@ full recompile — while producing match output identical to a cold
 compile of the surviving expression set.
 """
 
+import random
 import time
 from decimal import Decimal
 
@@ -171,8 +172,6 @@ def test_reinserts_reuse_freed_slots_without_compile():
     deleting 400 live ids from a 10k forest and re-inserting the same
     expressions, with no compile() in between, leave the arena at the
     peak live node count — no slot is left behind as a tombstone."""
-    import random
-
     standing = standing_page_subscriptions(10_000)
     b = ForestBuilder(PAGE_ATTRIBUTES)
     for sub_id, expression in standing.items():
